@@ -5,12 +5,18 @@ metrics").
 A validation run over an epoch-partitioned table writes, per partition:
 one manifest row ``(partition value, constraint_hash, n_rows,
 n_violations, n_warnings, pass, engine_version)`` — the lineage record —
-plus the violation rows, both as parquet appends keyed by the partition
-value.  On restart, partitions whose manifest row exists under the SAME
-constraint hash are anti-joined out of the input before any validation
-work runs, so a resumed job re-reads only incomplete partitions.
+plus the violation rows, sorted by ``order_by`` then rule sequence
+within each partition directory.  On restart, partitions whose manifest
+row exists under the SAME constraint hash are anti-joined out of the
+input before any validation work runs, so a resumed job re-reads only
+incomplete partitions.
 
 Scale notes:
+- a fresh run reads its input twice: once for the verdict counts
+  (collected, and written as the manifest last) and once for the
+  violation rows;
+- violations are hash-partitioned on the partition value and sorted
+  within each task, so no range-sampling job rescans the input;
 - the manifest is tiny (one row per partition) — it broadcasts;
 - completed-partition pruning happens BEFORE the scan filter, so
   Spark's partition pruning (`epoch IN (...)`) skips whole files:
@@ -35,6 +41,14 @@ from joi_spark.engine import validate
 ENGINE_VERSION = "0.1.0"
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop
+    configuration."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return p.getFileSystem(conf), p
+
+
 class CheckpointedRun:
     """Orchestrates validate → write-per-partition → resume."""
 
@@ -50,11 +64,18 @@ class CheckpointedRun:
 
     # -- resume bookkeeping -------------------------------------------
     def completed_partitions(self, spark: SparkSession) -> DataFrame | None:
-        """Manifest rows for THIS constraint hash, or None if fresh."""
-        try:
-            m = spark.read.parquet(self.manifest_path)
-        except Exception:
+        """Manifest rows for THIS constraint hash, or None if fresh.
+
+        Fresh means the manifest directory is missing or holds only
+        hidden entries (``_temporary`` left by a crash during the first
+        manifest write).  Any other read failure — a corrupt manifest
+        file, say — raises rather than silently re-validating."""
+        fs, path = _hadoop_path(spark, self.manifest_path)
+        if not fs.exists(path) or all(
+                st.getPath().getName().startswith(("_", "."))
+                for st in fs.listStatus(path)):
             return None
+        m = spark.read.parquet(self.manifest_path)
         return m.filter(F.col("constraint_hash") == self.hash)
 
     def pending(self, df: DataFrame) -> DataFrame:
@@ -66,12 +87,37 @@ class CheckpointedRun:
         keys = done.select(F.col(self.partition_col)).distinct()
         return df.join(F.broadcast(keys), [self.partition_col], "left_anti")
 
+    def _drop_violations(self, spark: SparkSession, values) -> None:
+        """Delete this hash's violation directories for the partition
+        ``values`` (cast to string, as Spark does for partition paths).
+        Dynamic overwrite replaces only partitions that receive rows, so
+        a partition that re-validates clean would otherwise keep the
+        rows of an earlier failing run."""
+        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+            .ExternalCatalogUtils
+        fs, root = _hadoop_path(spark, self.violations_path)
+        hash_dir = utils.getPartitionPathString("constraint_hash", self.hash)
+        for v in values:
+            part_dir = utils.getPartitionPathString(self.partition_col, v)
+            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
+                root, f"{hash_dir}/{part_dir}"), True)
+
     # -- one run ------------------------------------------------------
     def run(self, df: DataFrame, *, stats_columns=None,
             sketch_columns=None, **validate_kw) -> dict:
         """Validate all pending partitions; write violations (and any
         metrics manifests), THEN the manifest.  Returns a summary dict
         (partitions completed this run).
+
+        The input is read twice.  The first scan computes the verdicts,
+        one row per pending partition, and collects them: no rows means
+        nothing is pending.  The second scan produces the violation
+        rows, hash-partitioned on the partition value and sorted by
+        ``order_by`` then rule sequence within each task — no global
+        sort, so no range-sampling job rescans the input.  Trade-off:
+        one task sorts all violations of a partition value, spilling to
+        disk when they are large.  The manifest is written last, from
+        the collected verdict rows, so it needs no third scan.
 
         ``stats_columns`` additionally writes a per-partition
         :func:`~joi_spark.operators.stats.stats_manifest` (null frac,
@@ -87,19 +133,38 @@ class CheckpointedRun:
         DYNAMIC partition overwrite — a crash before the manifest
         write leaves the partition un-manifested, so resume
         re-validates it and the overwrite REPLACES (not appends) the
-        partial rows; no duplicates.  The constraint hash is part of
-        the PHYSICAL layout (``partitionBy(constraint_hash,
-        partition_col)``), so a run under a new hash only ever rewrites
-        its own hash's directories — prior-hash rows (and their
-        lineage) survive schema changes, and concurrent runs under
-        different hashes never clobber each other."""
-        pending = self.pending(df)
-        if pending.isEmpty():
-            return {"completed_now": 0, "resumed": True}
-        res = validate(pending, self.schema, **validate_kw)
-        viol = (res.violations(extra_cols=[self.partition_col])
-                .withColumn("constraint_hash", F.lit(self.hash)))
+        partial rows; no duplicates.  A partition that now validates
+        clean gets no rows to overwrite with, so its directory is
+        deleted first.  The constraint hash is part of the PHYSICAL
+        layout (``partitionBy(constraint_hash, partition_col)``), so a
+        run under a new hash only ever rewrites its own hash's
+        directories — prior-hash rows (and their lineage) survive
+        schema changes, and concurrent runs under different hashes
+        never clobber each other."""
         spark = df.sparkSession
+        pending = self.pending(df)
+        res = validate(pending, self.schema, **validate_kw)
+        jverd = (res.verdicts([self.partition_col])
+                 .withColumn("engine_version", F.lit(ENGINE_VERSION)))._jdf
+        # the verdict rows, collected once and held in the driver JVM as
+        # a local relation: reading them back and writing the manifest
+        # from them need no scan and no Python worker
+        verd = type(df)(spark._jsparkSession.createDataFrame(
+            jverd.collectAsList(), jverd.schema()), spark)
+        # the partition value as Spark renders it in a directory name
+        rows = verd.select(F.col(self.partition_col).cast("string"),
+                           "n_violations", "n_warnings").collect()
+        if not rows:
+            return {"completed_now": 0, "resumed": True}
+        self._drop_violations(spark, [r[0] for r in rows if not (
+            r["n_violations"] or r["n_warnings"])])
+        # the literal hash is added AFTER the sort: with it among the
+        # sort keys, the writer's own sort on its partition columns
+        # replaces this one and the order_by order is lost
+        viol = (res.violations(extra_cols=[self.partition_col], sort=False)
+                .repartition(self.partition_col)
+                .sortWithinPartitions(self.partition_col, *res.order_by, "seq")
+                .withColumn("constraint_hash", F.lit(self.hash)))
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                               "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -126,11 +191,8 @@ class CheckpointedRun:
                   .parquet(self.sketches_path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        verd = (res.verdicts([self.partition_col])
-                .withColumn("engine_version", F.lit(ENGINE_VERSION)))
-        verd.write.mode("append").parquet(self.manifest_path)
-        n = verd.count()
-        return {"completed_now": n, "resumed": False}
+        verd.coalesce(1).write.mode("append").parquet(self.manifest_path)
+        return {"completed_now": len(rows), "resumed": False}
 
     # -- outputs ------------------------------------------------------
     def manifest(self, spark: SparkSession) -> DataFrame:

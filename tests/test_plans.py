@@ -315,3 +315,35 @@ def test_minhash_index_side_has_no_exchange(spark, tmp_path):
     # exactly one Exchange: the probe (batch) side; the index side
     # reaches the join straight from the bucketed scan
     assert p.count("Exchange hashpartitioning") == 1
+
+
+def test_checkpoint_run_scans_input_twice(spark, tmp_path):
+    """A fresh CheckpointedRun.run reads its input exactly twice — once
+    for the verdicts, once for the violations — with no range-sampling
+    job and no extra emptiness probe."""
+    from joi_spark.checkpoint import CheckpointedRun
+    from joi_spark.sources.transcripts import seeded_transcripts
+    src = str(tmp_path / "in")
+    seeded_transcripts(spark, n_convs=100, turns_per_conv=10,
+                       n_epochs=4).write.parquet(src)
+    df = spark.read.parquet(src)
+    n = df.count()
+    schema = joi.object({
+        "role": joi.string().valid("system", "user", "assistant", "tool")
+                   .required(),
+        "text": joi.string().max(8192),
+    })
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint_scans", "fresh checkpointed run")
+    try:
+        CheckpointedRun(str(tmp_path / "root"), schema, "epoch").run(df)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("checkpoint_scans")
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    store = sc._jsc.sc().statusStore()
+    records = sum(store.lastStageAttempt(s).inputRecords() for s in stages)
+    assert records == 2 * n
+    assert len(jobs) <= 8

@@ -6,6 +6,7 @@ import shutil
 import tempfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 import joi_spark as joi
@@ -154,6 +155,98 @@ def test_checkpoint_new_hash_preserves_old_violations(spark, ckpt_dir):
     # hash A's lineage is intact — violations() still returns its rows
     assert run1.violations(spark).count() == n1
     assert run2.violations(spark).count() == df.count()
+
+
+@pytest.mark.parametrize("pc", ["epoch", "source"])
+def test_checkpoint_clean_rerun_drops_stale_violations(spark, ckpt_dir, pc):
+    """A partition that failed, lost its manifest row in a crash and then
+    re-validates clean must not keep its old violation rows: dynamic
+    overwrite only replaces partitions that receive rows.  ``source``
+    values need escaping in directory names, as Spark does it."""
+    df = (clean_transcripts(spark, n_convs=10, turns_per_conv=10, n_epochs=2)
+          .withColumn("source", F.format_string("web/a b:%d", "epoch")))
+
+    def breaking(epochs):
+        return df.withColumn("role", F.when(
+            F.col("epoch").isin(*epochs) & (F.col("turn_idx") == 1),
+            F.lit("moderator")).otherwise(F.col("role")))
+    fixed = F.col("epoch") == 0
+    run = CheckpointedRun(ckpt_dir, _schema(), pc)
+    run.run(breaking([0, 1]))
+    first = run.violations(spark).join(df.filter(fixed).select(pc).distinct(),
+                                       pc)
+    assert first.count() == 5
+    shutil.rmtree(run.manifest_path)        # crash before the manifest write
+    assert run.run(breaking([1]))["completed_now"] == 2
+    m = run.manifest(spark).join(df.filter(fixed).select(pc).distinct(),
+                                 pc).first()
+    assert m["pass"] and m["n_violations"] == 0
+    assert run.violations(spark).count() == 5       # epoch 1 only
+
+
+def test_checkpoint_corrupt_manifest_raises(spark, ckpt_dir):
+    """Only a manifest with no committed data means a fresh root; an
+    unreadable manifest raises instead of silently re-validating."""
+    import glob
+    import os
+    df = clean_transcripts(spark, n_convs=10, turns_per_conv=10, n_epochs=2)
+    run = CheckpointedRun(ckpt_dir, _schema(), "epoch")
+    # leftovers of a crash during the first manifest write: still fresh
+    os.makedirs(os.path.join(run.manifest_path, "_temporary", "0"))
+    assert run.run(df) == {"completed_now": 2, "resumed": False}
+    for f in glob.glob(os.path.join(run.manifest_path, "*.parquet")):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        run.run(df)
+
+
+@pytest.mark.parametrize("abort_early", [True, False])
+@pytest.mark.parametrize("shuffle_partitions", ["2", "7"])
+def test_checkpoint_violations_sorted_per_partition(spark, ckpt_dir,
+                                                    abort_early,
+                                                    shuffle_partitions):
+    """Each partition directory's files, read in name order, hold the
+    violations in (conv_id, turn_idx, seq) order, whatever the shuffle
+    width; rows break several rules, so seq order within a row counts."""
+    import glob
+    import os
+    import pyarrow.parquet as pq
+    df = clean_transcripts(spark, n_convs=60, turns_per_conv=10, n_epochs=3)
+    t = F.col("turn_idx")
+    dirty = (df.withColumn("role", F.when(t % 3 == 0, F.lit("moderator"))
+                                    .otherwise(F.col("role")))
+               .withColumn("text", F.when(t % 2 == 0, F.lit("x"))
+                                    .otherwise(F.col("text")))
+               .withColumn("tool", F.when(t % 4 == 1, F.lit(""))
+                                    .otherwise(F.col("tool")))
+               .repartition(5))
+    schema = joi.object({
+        "role": joi.string().valid("system", "user", "assistant", "tool")
+                   .required(),
+        "text": joi.string().min(3),
+        "tool": joi.string().min(1),
+    })
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+    try:
+        run = CheckpointedRun(ckpt_dir, schema, "epoch")
+        run.run(dirty, prefs={"abort_early": abort_early})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    dirs = sorted(glob.glob(os.path.join(
+        run.violations_path, f"constraint_hash={run.hash}", "epoch=*")))
+    assert len(dirs) == 3
+    total = 0
+    for d in dirs:
+        keys = []
+        for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+            tb = pq.ParquetFile(f).read(columns=["conv_id", "turn_idx",
+                                                 "seq"])
+            keys += zip(*(tb.column(c).to_pylist() for c in tb.column_names))
+        assert keys and keys == sorted(keys), d
+        total += len(keys)
+    assert total == run.violations(spark).count()
 
 
 def test_salted_sizes_requires_a_bound(skewed):
