@@ -15,6 +15,7 @@ guards and prunes unreferenced columns at the scan.
 
 from __future__ import annotations
 
+import operator
 import re
 
 from dataclasses import dataclass, field
@@ -68,16 +69,17 @@ class CompiledPlan:
     pre_drops: list[str] = field(default_factory=list)  # rename(override=True): replaced targets
     table_errors: list[str] = field(default_factory=list)  # schema-level verdicts
 
-    def ok_column(self) -> Column:
-        """Conjunction of all error-severity checks (warnings excluded);
-        balanced tree (deep linear folds overflow the JVM stack)."""
-        cols = [c.predicate for c in self.checks if c.severity == "error"]
-        if not cols:
-            return F.lit(True)
-        while len(cols) > 1:
-            cols = [cols[i] & cols[i + 1] if i + 1 < len(cols) else cols[i]
-                    for i in range(0, len(cols), 2)]
-        return cols[0]
+
+def _balanced(cols: list[Column], op, empty: Column) -> Column:
+    """Pairwise-balanced reduction — a linear fold of hundreds of
+    predicates builds a Column tree deep enough to overflow the JVM
+    stack during conversion; a balanced tree is O(log n) deep."""
+    if not cols:
+        return empty
+    while len(cols) > 1:
+        cols = [op(cols[i], cols[i + 1]) if i + 1 < len(cols) else cols[i]
+                for i in range(0, len(cols), 2)]
+    return cols[0]
 
 
 class CompileError(ValueError):
@@ -502,7 +504,7 @@ def value_predicate(schema: Schema, ctx: _Ctx) -> Callable[[Column], Column]:
             alts = [value_predicate(m, ctx)(col)
                     for m in (schema._terms.get("matches") or [])]
             if alts:
-                parts.append(_or_all(alts))
+                parts.append(_balanced(alts, operator.or_, F.lit(False)))
         for rule in schema._rules:
             if rule.name == "custom":
                 parts.append(rule.args["builder"](col, ctx))
@@ -821,8 +823,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         for rule in schema._rules:
             if rule.name not in ("length", "min", "max"):
                 continue
-            nk = _balanced_sum([F.col(f"{name}.{f.name}").isNotNull()
-                                .cast("int") for f in dtype.fields])
+            nk = _balanced([F.col(f"{name}.{f.name}").isNotNull()
+                            .cast("int") for f in dtype.fields],
+                           operator.add, F.lit(0))
             limit = rule.args["limit"]
             pred = {"length": nk == limit, "min": nk >= limit,
                     "max": nk <= limit}[rule.name]
@@ -993,8 +996,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             # fields count when non-null (Joi skips undefined values;
             # reference: lib/types/object.js:278-313)
             if isinstance(dtype, T.StructType):
-                nk = _balanced_sum([conv.getField(f.name).isNotNull()
-                                    .cast("int") for f in dtype.fields])
+                nk = _balanced([conv.getField(f.name).isNotNull()
+                                .cast("int") for f in dtype.fields],
+                               operator.add, F.lit(0))
             else:
                 nk = F.size(F.map_keys(conv))
             limit = local.resolve(rule.args["limit"])
@@ -1033,7 +1037,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         required = [s for s in allowed if s._flags.get("presence") == "required"]
         if allowed:
             preds = [value_predicate(s, local) for s in allowed]
-            ok_any = lambda x: _or_all([p(x) for p in preds])
+            ok_any = lambda x: _balanced([p(x) for p in preds],
+                                         operator.or_, F.lit(False))
             emit(F.forall(conv, ok_any), "array.includes", {}, guard=rule_guard)
         for s in forbidden:
             p = value_predicate(s, local)
@@ -1078,7 +1083,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             rxs = [p_["regex"] for p_ in pats]
 
             def _known_ok(k):
-                return _or_all([k.rlike(r) for r in rxs])
+                return _balanced([k.rlike(r) for r in rxs],
+                                 operator.or_, F.lit(False))
 
             emit(F.forall(F.map_keys(conv), _known_ok), "object.unknown", {},
                  guard=rule_guard)
@@ -1113,12 +1119,12 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                     and not m._invalids and not m._flags
                     and not m._terms)
 
+        any_ok = _balanced(preds, operator.or_, F.lit(False))
         if len(matches) >= 2 and all(_bare_base(m) for m in matches):
-            emit(_or_all(preds), "alternatives.types",
+            emit(any_ok, "alternatives.types",
                  {"types": [m.type for m in matches]}, guard=rule_guard)
         else:
-            emit(_or_all(preds), "alternatives.match", {},
-                 guard=rule_guard)
+            emit(any_ok, "alternatives.match", {}, guard=rule_guard)
 
     # external hooks: Arrow-batched post-validation
     # (reference: lib/base.js:152-157, lib/validator.js:51-86;
@@ -1185,25 +1191,6 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
 
     ctx.seq = local.seq
     _emit_output(schema, name, conv, plan, local, dtype)
-
-
-def _balanced_sum(cols: list[Column]) -> Column:
-    if not cols:
-        return F.lit(0)
-    while len(cols) > 1:
-        cols = [cols[i] + cols[i + 1] if i + 1 < len(cols) else cols[i]
-                for i in range(0, len(cols), 2)]
-    return cols[0]
-
-
-def _or_all(preds: list[Column]) -> Column:
-    if not preds:
-        return F.lit(False)
-    preds = list(preds)
-    while len(preds) > 1:
-        preds = [preds[i] | preds[i + 1] if i + 1 < len(preds) else preds[i]
-                 for i in range(0, len(preds), 2)]
-    return preds[0]
 
 
 def _emit_output(schema: Schema, name: str, conv: Column,
@@ -1566,11 +1553,13 @@ def _compile_dependency(dep: Dependency, ctx: _Ctx, plan: CompiledPlan,
                 "peersWithLabels": E.stringify([f'"{p}"' for p in peers[1:]], False)}
     elif dep.rel == "with":
         key_present = pres(dep.key)
-        pred = ~key_present | _and_all([pres(p) for p in peers])
+        pred = ~key_present | _balanced([pres(p) for p in peers],
+                                        operator.and_, F.lit(True))
         mctx = {"mainWithLabel": dep.key, "peerWithLabel": peers[0]}
     elif dep.rel == "without":
         key_present = pres(dep.key)
-        pred = ~key_present | _and_all([~pres(p) for p in peers])
+        pred = ~key_present | _balanced([~pres(p) for p in peers],
+                                        operator.and_, F.lit(True))
         mctx = {"mainWithLabel": dep.key, "peerWithLabel": peers[0]}
     else:
         raise CompileError(f"unknown dependency {dep.rel!r}")
@@ -1579,12 +1568,3 @@ def _compile_dependency(dep: Dependency, ctx: _Ctx, plan: CompiledPlan,
     plan.checks.append(Check(ctx.next_seq(), path, code,
                              F.coalesce(pred, F.lit(False)), F.lit(msg)))
 
-
-def _and_all(preds: list[Column]) -> Column:
-    if not preds:
-        return F.lit(True)
-    preds = list(preds)
-    while len(preds) > 1:
-        preds = [preds[i] & preds[i + 1] if i + 1 < len(preds) else preds[i]
-                 for i in range(0, len(preds), 2)]
-    return preds[0]

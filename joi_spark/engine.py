@@ -8,6 +8,11 @@ failing rows because they sit inside ``F.when(~pred, ...)`` — and (4)
 outputs: converted table, violations DataFrame (stable ``order_by``
 ordering), per-partition verdicts.
 
+One code path serves every schema width: balanced folds keep the
+expression trees O(log n) deep, and on Spark 4.1 hundreds of checks
+plan and run on the same path as five (BENCH.md §"Wide-schema
+robustness").
+
 Everything is a narrow projection until the caller aggregates
 (verdicts) or sorts (violations) — embarrassingly parallel at 10^12
 rows; no shuffle is introduced by validation itself.
@@ -15,28 +20,18 @@ rows; no shuffle is introduced by validation itself.
 
 from __future__ import annotations
 
-from typing import Sequence
+import operator
+from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
-from joi_spark.compiler import CompiledPlan, compile_table, DEFAULT_PREFS
+from joi_spark.compiler import (CompiledPlan, compile_table, DEFAULT_PREFS,
+                                _balanced)
 from joi_spark.dsl.base import Schema
 from joi_spark.dsl.manifest import manifest_hash
 
 VIOLATION_COLS = ("seq", "code", "path", "message", "severity")
-
-
-def _balanced(cols: list[Column], op, empty: Column) -> Column:
-    """Pairwise-balanced reduction — a linear fold of hundreds of
-    predicates builds a Column tree deep enough to overflow the JVM
-    stack during conversion; a balanced tree is O(log n) deep."""
-    if not cols:
-        return empty
-    while len(cols) > 1:
-        cols = [op(cols[i], cols[i + 1]) if i + 1 < len(cols) else cols[i]
-                for i in range(0, len(cols), 2)]
-    return cols[0]
 
 
 class ValidationResult:
@@ -74,25 +69,20 @@ class ValidationResult:
     def _ok_expr(self, severity: str = "error") -> Column:
         return _balanced([c.predicate for c in self.plan.checks
                           if c.severity == severity],
-                         lambda a, b: a & b, F.lit(True))
+                         operator.and_, F.lit(True))
 
-    def _violation_array(self, pred_for=None,
-                         slice_errors: bool | None = None) -> Column:
-        """``pred_for(i, check) -> Column`` substitutes materialized
-        boolean columns for the raw predicates (so expensive predicates
-        — regexes, from_json, external UDFs — evaluate once);
-        ``slice_errors`` overrides the abort_early first-error slicing
-        (verdict counting needs the full array)."""
-        entries = []
-        for i, c in enumerate(self.plan.checks):
-            pred = pred_for(i, c) if pred_for is not None else c.predicate
-            entries.append(
-                F.when(~pred,
-                       F.struct(F.lit(c.seq).alias("seq"),
-                                F.lit(c.code).alias("code"),
-                                F.lit(c.path).alias("path"),
-                                c.message.cast("string").alias("message"),
-                                F.lit(c.severity).alias("severity"))))
+    def _violation_array(self) -> Column:
+        """Per-row array of failed-check structs, built from the
+        ``__joi_c{i}`` booleans that :meth:`violations` materializes (so
+        expensive predicates — regexes, from_json, external UDFs —
+        evaluate once)."""
+        entries = [F.when(~F.col(f"__joi_c{i}"),
+                          F.struct(F.lit(c.seq).alias("seq"),
+                                   F.lit(c.code).alias("code"),
+                                   F.lit(c.path).alias("path"),
+                                   c.message.cast("string").alias("message"),
+                                   F.lit(c.severity).alias("severity")))
+                   for i, c in enumerate(self.plan.checks)]
         if entries:
             arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
         else:
@@ -101,7 +91,7 @@ class ValidationResult:
                 "message:string,severity:string>>")
         errors = F.filter(arr, lambda x: x["severity"] == F.lit("error"))
         warnings = F.filter(arr, lambda x: x["severity"] == F.lit("warn"))
-        if self.abort_early if slice_errors is None else slice_errors:
+        if self.abort_early:
             # report first failing rule per row, matching the
             # reference's per-value abortEarly order
             # (reference: lib/validator.js:308-311; SURVEY.md §4)
@@ -127,35 +117,26 @@ class ValidationResult:
         # materialize each check's boolean ONCE; the fail-filter and the
         # violation array both reference the materialized columns, so
         # expensive predicates (regex, from_json, external UDFs) are not
-        # re-evaluated per consumer.  ONLY below a width threshold:
-        # Catalyst's project-collapse/pushdown substitutes every alias
-        # back into its consumers, and with hundreds of checks the
-        # repeated tree copies blow up driver memory — wide plans use
-        # the raw predicates instead (each evaluated once per consumer,
-        # but the expression tree stays linear in check count).
+        # re-evaluated per consumer.  This holds at any width: on
+        # Spark 4.1 substituting the aliases into the collapsed
+        # projections stays within driver memory at 840 checks under
+        # get_spark defaults, and the balanced fail filter keeps the
+        # tree O(log n) deep.
         # collision-proof names: Spark's own default headerless-CSV
         # columns are _c0, _c1, ... — withColumns would silently
         # REPLACE a user column of that name, corrupting message
         # rendering and order_by
         checks = self.plan.checks
-        if len(checks) <= 64:
-            base = self._renamed.withColumns(
-                {f"__joi_c{i}": F.coalesce(c.predicate, F.lit(False))
-                 for i, c in enumerate(checks)})
-            fail = _balanced([~F.col(f"__joi_c{i}")
-                              for i, c in enumerate(checks)
-                              if c.severity == "error" or include_warnings],
-                             lambda a, b: a | b, F.lit(False))
-            arr = self._violation_array(lambda i, c: F.col(f"__joi_c{i}"))
-        else:
-            base = self._renamed
-            fail = _balanced([~c.predicate for c in checks
-                              if c.severity == "error" or include_warnings],
-                             lambda a, b: a | b, F.lit(False))
-            arr = self._violation_array()
+        base = self._renamed.withColumns(
+            {f"__joi_c{i}": F.coalesce(c.predicate, F.lit(False))
+             for i, c in enumerate(checks)})
+        fail = _balanced([~F.col(f"__joi_c{i}")
+                          for i, c in enumerate(checks)
+                          if c.severity == "error" or include_warnings],
+                         operator.or_, F.lit(False))
         v = (base
              .filter(fail)
-             .withColumn("_violations", arr)
+             .withColumn("_violations", self._violation_array())
              .withColumn("_v", F.explode("_violations")))
         if not include_warnings:
             v = v.filter(F.col("_v.severity") == "error")
@@ -228,7 +209,7 @@ class ValidationResult:
             for k in keys:
                 eq = _balanced([F.col(c) == F.lit(val)
                                 for c, val in zip(self.order_by, k)],
-                               lambda a, b: a & b, F.lit(True))
+                               operator.and_, F.lit(True))
                 got = self._renamed.filter(eq).limit(1).collect()
                 if got:
                     originals[k] = got[0]
@@ -309,40 +290,41 @@ class ValidationResult:
 
     converted = value
 
-    def verdicts(self, partition_by: Sequence[str]) -> DataFrame:
-        """Per-partition pass/fail manifest rows (north_rule output (a)).
+    def _verdict_agg(self, group: Callable[[DataFrame], GroupedData]
+                     ) -> DataFrame:
+        """Verdict aggregates ``(n_rows, n_violations, n_warnings, pass,
+        constraint_hash)`` per group; ``group`` turns the row frame into
+        grouped data (partition columns in batch, an event-time window
+        in streaming).
 
         Violation counts come from summing per-check failure ints — a
         plain partial-aggregating projection, no struct arrays; the
-        whole verdict is one codegen'd scan + tiny shuffle."""
-        mh = manifest_hash(self.schema)
-        if len(self.plan.checks) <= 64:
-            err_cnt = _balanced(
-                [(~c.predicate).cast("long") for c in self.plan.checks
-                 if c.severity == "error"], lambda a, b: a + b, F.lit(0))
-            warn_cnt = _balanced(
-                [(~c.predicate).cast("long") for c in self.plan.checks
-                 if c.severity != "error"], lambda a, b: a + b, F.lit(0))
-        else:
-            # wide plans: a 100s-of-terms sum breaks Janino codegen
-            # (no clean fallback); count failures from the violation
-            # array instead — array construction compiles fine at any
-            # width because element code is loop-shaped
-            arr = self._violation_array(slice_errors=False)
-            err_cnt = F.size(F.filter(
-                arr, lambda x: x["severity"] == F.lit("error"))).cast("long")
-            warn_cnt = F.size(F.filter(
-                arr, lambda x: x["severity"] == F.lit("warn"))).cast("long")
-        out = (self._renamed
-               .withColumn("_ec", err_cnt)
-               .withColumn("_wc", warn_cnt)
-               .groupBy(*partition_by)
-               .agg(F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("_ec").alias("n_violations"),
-                    F.sum("_wc").alias("n_warnings"),
-                    F.min((F.col("_ec") == 0).cast("int")).cast("boolean")
-                     .alias("pass"))
-               .withColumn("constraint_hash", F.lit(mh)))
+        whole verdict is one codegen'd scan + tiny shuffle.  With
+        hundreds of checks the unrolled sum outgrows Janino's 64 KB
+        method limit; Spark then runs that stage without whole-stage
+        codegen, with the same results and still faster than counting
+        from a per-row array."""
+        def fail_count(errors: bool) -> Column:
+            return _balanced([(~c.predicate).cast("long")
+                              for c in self.plan.checks
+                              if (c.severity == "error") == errors],
+                             operator.add, F.lit(0))
+
+        counted = (self._renamed
+                   .withColumn("_ec", fail_count(True))
+                   .withColumn("_wc", fail_count(False)))
+        return (group(counted)
+                .agg(F.count(F.lit(1)).alias("n_rows"),
+                     F.sum("_ec").alias("n_violations"),
+                     F.sum("_wc").alias("n_warnings"),
+                     F.min((F.col("_ec") == 0).cast("int")).cast("boolean")
+                      .alias("pass"))
+                .withColumn("constraint_hash",
+                            F.lit(manifest_hash(self.schema))))
+
+    def verdicts(self, partition_by: Sequence[str]) -> DataFrame:
+        """Per-partition pass/fail manifest rows (north_rule output (a))."""
+        out = self._verdict_agg(lambda df: df.groupBy(*partition_by))
         # order by the aggregated output's key columns, not the input
         # expressions (which no longer resolve after the agg when the
         # caller grouped on a derived Column)

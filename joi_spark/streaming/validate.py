@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from joi_spark.dsl.base import Schema
-from joi_spark.dsl.manifest import manifest_hash
 from joi_spark.engine import validate
 
 
@@ -48,27 +47,11 @@ def stream_verdicts(stream_df: DataFrame, schema: Schema, *,
     n_warnings, pass, constraint_hash)`` — pair with
     ``.writeStream.outputMode('append')`` (emits a window once the
     watermark passes it) or ``'update'``."""
-    from joi_spark.engine import _balanced
     res = validate(stream_df, schema, prefs=prefs, order_by=[])
-    # balanced reduction, not a linear fold — wide schemas (hundreds of
-    # checks) overflow the JVM stack on deep linear Column trees (same
-    # guard the batch engine applies in ValidationResult.verdicts)
-    err_cnt = _balanced([(~c.predicate).cast("long")
-                         for c in res.plan.checks if c.severity == "error"],
-                        lambda a, b: a + b, F.lit(0))
-    warn_cnt = _balanced([(~c.predicate).cast("long")
-                          for c in res.plan.checks if c.severity != "error"],
-                         lambda a, b: a + b, F.lit(0))
-    return (res.checked
-            .withColumn("_ec", err_cnt).withColumn("_wc", warn_cnt)
-            .withWatermark(event_time_col, watermark_delay)
-            .groupBy(F.window(event_time_col, window_duration).alias("window"))
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum("_ec").alias("n_violations"),
-                 F.sum("_wc").alias("n_warnings"),
-                 F.min((F.col("_ec") == 0).cast("int")).cast("boolean")
-                  .alias("pass"))
-            .withColumn("constraint_hash", F.lit(manifest_hash(schema))))
+    return res._verdict_agg(
+        lambda df: df.withWatermark(event_time_col, watermark_delay)
+                     .groupBy(F.window(event_time_col, window_duration)
+                               .alias("window")))
 
 
 def stream_stateful_sequence(stream_df: DataFrame, *,

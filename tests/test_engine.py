@@ -55,6 +55,40 @@ def test_verdicts(transcripts):
     assert len(hashes) == 1
 
 
+@pytest.mark.parametrize("n_checks", [21, 140])
+def test_verdicts_agree_with_violations(spark, n_checks):
+    """Per-partition verdict counts equal the error and warn rows of
+    violations(), for narrow and wide plans alike."""
+    n_cols = n_checks // 7
+    good = F.col("id") % 3 == 2       # partition 2 is clean
+    df = spark.range(0, 300).select(
+        F.col("id"), (F.col("id") % 3).alias("p"),
+        *[F.when(good, F.lit(1.0))
+           .otherwise((F.col("id") % (i + 5)) / 2).alias(f"c{i}")
+          for i in range(n_cols)])
+    # 7 checks per column: base, 2x infinity, unsafe, min, max (warn),
+    # integer
+    schema = joi.object({
+        f"c{i}": joi.number().min(1).max(1).warn().integer()
+        for i in range(n_cols)})
+    res = joi.validate(df, schema, order_by=["id"],
+                       prefs={"abort_early": False})
+    assert len(res.plan.checks) == n_checks
+    counts = {(r["p"], r["severity"]): r["count"] for r in
+              res.violations(extra_cols=["p"], sort=False)
+                 .groupBy("p", "severity").count().collect()}
+    verd = res.verdicts(["p"]).collect()
+    assert [r["p"] for r in verd] == [0, 1, 2]
+    for r in verd:
+        errs = counts.get((r["p"], "error"), 0)
+        assert r["n_rows"] == 100
+        assert r["n_violations"] == errs
+        assert r["n_warnings"] == counts.get((r["p"], "warn"), 0)
+        assert r["pass"] == (errs == 0)
+    assert [r["pass"] for r in verd] == [False, False, True]
+    assert all(r["n_warnings"] > 0 for r in verd[:2])
+
+
 def test_pass_on_clean(spark):
     from joi_spark.sources.transcripts import clean_transcripts
     df = clean_transcripts(spark, n_convs=5, turns_per_conv=6)

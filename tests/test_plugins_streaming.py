@@ -154,7 +154,12 @@ def test_stream_verdicts(spark, stream_dirs):
     from joi_spark.streaming import stream_verdicts
 
     batch = seeded_transcripts(spark, n_convs=12, turns_per_conv=10)
-    batch.write.mode("overwrite").parquet(src)
+    # one row a day later moves the watermark past every window of
+    # `batch`, so append mode emits them all; the late row's own window
+    # stays open and is never emitted
+    late = batch.limit(1).withColumn("ts",
+                                     F.col("ts") + F.expr("INTERVAL 1 DAY"))
+    batch.unionByName(late).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(batch.schema).parquet(src)
     schema = joi.object({
         "role": joi.string().valid("system", "user", "assistant", "tool")
@@ -169,8 +174,10 @@ def test_stream_verdicts(spark, stream_dirs):
             .trigger(availableNow=True).start())
     q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM verds").collect()
-    assert sum(r["n_rows"] for r in rows) > 0
-    assert any(r["n_violations"] > 0 for r in rows)
+    want = joi.validate(batch, schema).verdicts(["epoch"]).collect()
+    assert sum(r["n_rows"] for r in rows) == sum(r["n_rows"] for r in want)
+    assert sum(r["n_violations"] for r in rows) == \
+        sum(r["n_violations"] for r in want) > 0
 
 
 def test_stream_stateful_sequence(spark, stream_dirs):
