@@ -1486,71 +1486,16 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Order matters: the driver's correctness gate checks the FIRST 50
     # entries.  Gate coverage ROTATES each round (round-4 advice: don't
-    # cite pre-change verdicts as current verification): round 5
-    # front-loads (a) the 20 entries that sat past the round-4 gate
-    # window, then (b) the queries whose behavior or oracle changed
-    # this round (ngram_jaccard/dedup_clusters gained the
-    # max_shingle_freq=1000 default valve — ngram_jaccard is already
-    # in (a); window_dedup/dup_spans/cut_spans now share a persisted
-    # window index — also in (a)), then (c) the transcript-validation
-    # and stats families.  The tail 20 are unchanged since their green
-    # CORRECTNESS_r04 rows and are re-verified every round by
+    # cite pre-change verdicts as current verification): round 6
+    # front-loads the 21 entries that sat past the round-5 gate window
+    # (lang_id ... rename_convert), which include the value-context
+    # schemas (array_items, alternatives_or, alternatives_types) whose
+    # compile path changed.  The 21 entries past position 50 (the
+    # round-5 window's last 21, object_tail ... text_metrics) are
+    # re-verified every round by
     # tests/test_coverage_tail.py::test_rotation_tail_oracle_smoke.
     return {
-        # (a) past the round-4 gate window — gate these first
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash_pairs": q_simhash_pairs,
-        "cosine_topk": q_cosine_topk,
-        "lsh_topk": q_lsh_topk,
-        "ivf_topk": q_ivf_topk,
-        "embedding_near": q_embedding_near,
-        "semantic_dedup": q_semantic_dedup,
-        "window_dedup": q_window_dedup,
-        "dup_spans": q_dup_spans,
-        "cut_spans": q_cut_spans,
-        "lm_scores": q_lm_scores,
-        "tfidf_terms": q_tfidf_terms,
-        "mix_sample": q_mix_sample,
-        "multimodal_features": q_multimodal_features,
-        "frame_plan": q_frame_plan,
-        "token_stats": q_token_stats,
-        "pii_scrub": q_pii_scrub,
-        "hash_split": q_hash_split,
-        "session_stats": q_session_stats,
-        # (b) oracle/behavior changed this round
-        "dedup_clusters": q_dedup_clusters,
-        # (c) corpus + stats + index families
-        "corpus_report": q_corpus_report,
-        "chunk_documents": q_chunk_documents,
-        "contamination": q_contamination,
-        "repetition_signals": q_repetition_signals,
-        "quality_filter": q_quality_filter,
-        "dedup_corpus": q_dedup_corpus,
-        "string_formats": q_string_formats,
-        "generic_flags": q_generic_flags,
-        "object_tail": q_object_tail,
-        "pack_sequences": q_pack_sequences,
-        "stratified_sample": q_stratified_sample,
-        "weighted_topk": q_weighted_topk,
-        "js_drift": q_js_drift,
-        "vocab_topk": q_vocab_topk,
-        "ref_bloom": q_ref_bloom,
-        "hll_manifest": q_hll_manifest,
-        "quantile_drift": q_quantile_drift,
-        "stats_anomaly": q_stats_anomaly,
-        "incremental_dedup": q_incremental_dedup,
-        "ivf_index": q_ivf_index,
-        "enum_required": q_enum_required,
-        "string_rules": q_string_rules,
-        "pattern_message": q_pattern_message,
-        "number_rules": q_number_rules,
-        "date_rules": q_date_rules,
-        "when_conditional": q_when_conditional,
-        "converted_output": q_converted_output,
-        "abort_early_first": q_abort_early_first,
-        "text_metrics": q_text_metrics,
-        # ---- gate boundary: entries below are position 51+ ----
+        # past the round-5 gate window — gate these first
         "lang_id": q_lang_id,
         "fingerprint_dups": q_fingerprint_dups,
         "ds_unique": q_ds_unique,
@@ -1572,6 +1517,58 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "custom_rule": q_custom_rule,
         "deps_without": q_deps_without,
         "rename_convert": q_rename_convert,
+        # round-5 gate window
+        "ngram_jaccard": q_ngram_jaccard,
+        "minhash_lsh": q_minhash_lsh,
+        "simhash_pairs": q_simhash_pairs,
+        "cosine_topk": q_cosine_topk,
+        "lsh_topk": q_lsh_topk,
+        "ivf_topk": q_ivf_topk,
+        "embedding_near": q_embedding_near,
+        "semantic_dedup": q_semantic_dedup,
+        "window_dedup": q_window_dedup,
+        "dup_spans": q_dup_spans,
+        "cut_spans": q_cut_spans,
+        "lm_scores": q_lm_scores,
+        "tfidf_terms": q_tfidf_terms,
+        "mix_sample": q_mix_sample,
+        "multimodal_features": q_multimodal_features,
+        "frame_plan": q_frame_plan,
+        "token_stats": q_token_stats,
+        "pii_scrub": q_pii_scrub,
+        "hash_split": q_hash_split,
+        "session_stats": q_session_stats,
+        "dedup_clusters": q_dedup_clusters,
+        "corpus_report": q_corpus_report,
+        "chunk_documents": q_chunk_documents,
+        "contamination": q_contamination,
+        "repetition_signals": q_repetition_signals,
+        "quality_filter": q_quality_filter,
+        "dedup_corpus": q_dedup_corpus,
+        "string_formats": q_string_formats,
+        "generic_flags": q_generic_flags,
+        # ---- gate boundary: entries below are position 51+ ----
+        "object_tail": q_object_tail,
+        "pack_sequences": q_pack_sequences,
+        "stratified_sample": q_stratified_sample,
+        "weighted_topk": q_weighted_topk,
+        "js_drift": q_js_drift,
+        "vocab_topk": q_vocab_topk,
+        "ref_bloom": q_ref_bloom,
+        "hll_manifest": q_hll_manifest,
+        "quantile_drift": q_quantile_drift,
+        "stats_anomaly": q_stats_anomaly,
+        "incremental_dedup": q_incremental_dedup,
+        "ivf_index": q_ivf_index,
+        "enum_required": q_enum_required,
+        "string_rules": q_string_rules,
+        "pattern_message": q_pattern_message,
+        "number_rules": q_number_rules,
+        "date_rules": q_date_rules,
+        "when_conditional": q_when_conditional,
+        "converted_output": q_converted_output,
+        "abort_early_first": q_abort_early_first,
+        "text_metrics": q_text_metrics,
     }
 
 

@@ -8,6 +8,13 @@ order (coerce → empty → presence → valids → invalids → base → rules;
 reference: lib/validator.js:112-320), and (3) output shaping (defaults,
 failover, cast, strip; reference: lib/validator.js:351-430).
 
+There is one per-value check sequence, :func:`compile_column`.  A nested
+value — alternatives branch, array item/ordered/has element, map-pattern
+value, ``empty``, ``when(is=...)``, object ``assert`` — runs through the
+same sequence (the reference recurses into the full ``$_validate`` with
+the caller's prefs), and :func:`value_predicate` only folds its checks
+to pass/fail, so a value context cannot drift from the column check.
+
 Everything is built from ``pyspark.sql.functions`` — whole-stage-codegen
 eligible, no per-row Python.  Catalyst constant-folds the trivially-true
 guards and prunes unreferenced columns at the scan.
@@ -91,13 +98,15 @@ class CompileError(ValueError):
 class _Ctx:
     def __init__(self, columns: list[str], conversions: dict[str, Column],
                  prefs: dict, context: dict,
-                 shared: dict | None = None):
+                 shared: dict | None = None,
+                 dtypes: dict[str, T.DataType] | None = None):
         self.columns = columns
         self.conversions = conversions   # converted sibling exprs (shadow
                                          # semantics, lib/validator.js:414-418)
         self.prefs = prefs
         self.context = context
         self.shared = shared or {}       # id → schema for link() resolution
+        self.dtypes = {} if dtypes is None else dtypes  # after conversion
         self.seq = 0
 
     def next_seq(self) -> int:
@@ -117,6 +126,14 @@ class _Ctx:
                 base = F.col(v.key)
             return v.apply(base)
         return F.lit(v)
+
+    def dtype_of(self, v: Ref) -> T.DataType:
+        """Spark type of ``resolve(v)``: the context value's, else the
+        referenced column's after conversion (adjust/map are taken as
+        type-preserving)."""
+        if v.kind == "global":
+            return T._infer_type(self.context.get(v.key))
+        return self.dtypes.get(v.key, T.NullType())
 
     def display(self, v) -> Any:
         return v.display if isinstance(v, Ref) else v
@@ -460,136 +477,54 @@ def _binary_rule(rule: Rule, col: Column, ctx: _Ctx) -> list[tuple[Column, str, 
 
 # ---------------------------------------------------------------------------
 
-def value_predicate(schema: Schema, ctx: _Ctx) -> Callable[[Column], Column]:
-    """Build ``lambda col -> boolean Column``: does a VALUE match the schema?
+def value_predicate(schema: Schema, ctx: _Ctx,
+                    dtype: T.DataType) -> Callable[[Column], Column]:
+    """Build ``lambda col -> boolean Column``: does a VALUE of Spark type
+    ``dtype`` match the schema?
 
-    Used by empty-matching, assert, when(is=...), alternatives matches, and
-    array items/has — anywhere the reference recurses into a sub-validate
-    whose outcome is only pass/fail (no per-rule reporting).
+    Used by empty-matching, assert, when(is=...), alternatives matches,
+    array items/ordered/has and map-pattern values — everywhere the
+    reference recurses into a full ``$_validate`` of a nested value
+    with the caller's prefs and keeps only pass/fail.  There is no
+    second matcher: the value goes through :func:`compile_column`
+    into a throwaway plan, and the result is the AND of its guarded
+    error-severity checks, so a value context accepts exactly what a
+    column check accepts.  The throwaway ``_Ctx`` keeps the caller's
+    seq counter, conversions and outputs untouched.
     """
     def pred(col: Column) -> Column:
-        parts: list[Column] = []
-        presence = schema._flags.get("presence")
-        if presence == "required":
-            parts.append(col.isNotNull())
-        if presence == "forbidden":
-            parts.append(col.isNull())
-        if schema._valids:
-            isin = F.lit(False)
-            non_null_vals = [v for v in schema._valids.values if v is not None]
-            if non_null_vals:
-                if schema._flags.get("insensitive") and all(
-                        isinstance(v, str) for v in non_null_vals):
-                    isin = F.lower(col).isin(*[v.lower() for v in non_null_vals])
-                else:
-                    isin = col.isin(*non_null_vals)
-            if None in schema._valids.values:
-                isin = isin | col.isNull()
-            for r in schema._valids.refs:
-                isin = isin | (col == ctx.resolve(r))
-            if schema._flags.get("only", bool(schema._valids)):
-                parts.append(isin)
-        if schema._invalids:
-            bad = F.lit(False)
-            if schema._invalids.values:
-                nn = [v for v in schema._invalids.values if v is not None]
-                if nn:
-                    bad = col.isin(*nn)
-                if None in schema._invalids.values:
-                    bad = bad | col.isNull()
-            for r in schema._invalids.refs:
-                bad = bad | (col == ctx.resolve(r))
-            parts.append(~bad)
-        if schema.type == "alternatives":
-            alts = [value_predicate(m, ctx)(col)
-                    for m in (schema._terms.get("matches") or [])]
-            if alts:
-                parts.append(_balanced(alts, operator.or_, F.lit(False)))
-        for rule in schema._rules:
-            if rule.name == "custom":
-                parts.append(rule.args["builder"](col, ctx))
-        if schema.kind == "string":
-            parts.append(col.cast("string") != F.lit(""))
-            for rule in schema._rules:
-                if rule.name == "custom":
-                    continue
-                for p, _, _ in _string_rule(rule, col.cast("string"), ctx, "", {}):
-                    parts.append(p)
-        elif schema.kind == "number":
-            c = col.try_cast("double")
-            # cast failure (non-numeric string) = number.base failure;
-            # isnan(NULL) is false in Spark, so check the cast explicitly
-            parts.append(col.isNull() | c.isNotNull())
-            parts.append(~F.isnan(F.coalesce(c, F.lit(0.0))))
-            for rule in schema._rules:
-                if rule.name == "custom":
-                    continue
-                for p, _, _ in _number_rule(rule, c, ctx):
-                    parts.append(p)
-        elif schema.kind == "date":
-            # base check mirrors _coerce's date block: a branch value
-            # that parses under no accepted format is a date.base
-            # failure in the reference ($_match recurses into the full
-            # validate), so a bare date() branch must DISCRIMINATE
-            # here, not pass vacuously (round-5 parity fix)
-            s = col.cast("string")
-            fmt = schema._flags.get("format")
-            if fmt == "unix":
-                c = F.timestamp_seconds(s.try_cast("long"))
-            elif fmt == "javascript":
-                c = F.timestamp_millis(s.try_cast("long"))
-            elif fmt == "iso":
-                c = F.when(s.rlike(RX.ISO_DATE), s.try_cast("timestamp"))
-            else:
-                c = F.coalesce(s.try_cast("timestamp"),
-                               F.timestamp_millis(s.try_cast("long")))
-            parts.append(col.isNull() | c.isNotNull())
-            for rule in schema._rules:
-                if rule.name == "custom":
-                    continue
-                for p, _, _ in _date_rule(rule, c, ctx):
-                    parts.append(p)
-        elif schema.kind == "boolean":
-            # mirror _coerce's boolean block (true/false + declared
-            # truthy/falsy, insensitive by default): anything else is
-            # a boolean.base failure in the reference
-            truthy = [str(v) for v in (schema._terms.get("truthy") or [])]
-            falsy = [str(v) for v in (schema._terms.get("falsy") or [])]
-            insensitive = schema._flags.get("insensitive", True)
-            s = col.cast("string")
-            probe = F.lower(s) if insensitive else s
-            extra = truthy + falsy
-            vals = ["true", "false"] + \
-                ([v.lower() for v in extra] if insensitive else extra)
-            parts.append(col.isNull() | probe.isin(*vals))
-        out = F.lit(True)
-        for p in parts:
-            out = out & p
-        # guard: a NULL value vacuously matches unless presence requires it
-        if presence != "required":
-            out = F.when(col.isNull(), F.lit(None not in schema._invalids.values)).otherwise(out)
-        return F.coalesce(out, F.lit(False))
+        plan = CompiledPlan()
+        scratch = _Ctx(ctx.columns, dict(ctx.conversions), ctx.prefs,
+                       ctx.context, ctx.shared, dict(ctx.dtypes))
+        compile_column(schema, "", dtype, scratch, plan, col=col)
+        return _balanced([c.predicate for c in plan.checks
+                          if c.severity == "error"],
+                         operator.and_, F.lit(True))
     return pred
 
 
 # ---------------------------------------------------------------------------
 
 def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
-            label: str) -> tuple[Column, list[tuple[Column, str, dict]]]:
+            label: str
+            ) -> tuple[Column, T.DataType | None, list[tuple[Column, str, dict]]]:
     """Conversion pass (reference: lib/validator.js:144-158 + per-type
-    coerce blocks).  Returns (converted expr, base-type failure checks)."""
+    coerce blocks).  Returns (converted expr, its Spark type, base-type
+    failure checks); the type is None when no value of ``dtype`` can
+    ever have the schema's type — the base check is then ``lit(False)``
+    and nothing after it can fire."""
     checks: list[tuple[Column, str, dict]] = []
     convert = ctx.prefs["convert"]
     t = schema.kind
 
     if t == "string":
-        conv = col if _is_string_like(dtype) else col.cast("string")
         if not _is_string_like(dtype):
             # static typing: non-string columns fail string.base in strict
             # mode; in convert mode Joi does NOT coerce non-strings either
             # (string has no coerce from number) → string.base
             checks.append((F.lit(False), "string.base", {}))
-            return conv, checks
+            return col.cast("string"), None, checks
+        conv = col
         if convert:
             for rule in schema._rules:
                 a = rule.args
@@ -609,7 +544,7 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
                     conv = F.substring(conv, F.lit(1), limit.cast("int")) \
                         if isinstance(mx.args["limit"], Ref) else \
                         F.substring(conv, 1, int(mx.args["limit"]))
-        return conv, checks
+        return conv, dtype, checks
 
     if t == "number":
         if isinstance(dtype, (T.DoubleType, T.FloatType)):
@@ -619,35 +554,33 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
             if not schema._flags.get("unsafe"):
                 checks.append((F.abs(col) <= F.lit(float(MAX_SAFE_INTEGER)),
                                "number.unsafe", {}))
-            return col, checks
+            return col, dtype, checks
         if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType,
                               T.ByteType, T.DecimalType)):
             if not schema._flags.get("unsafe") and isinstance(dtype, (T.LongType, T.DecimalType)):
                 checks.append((F.abs(col) <= F.lit(MAX_SAFE_INTEGER),
                                "number.unsafe", {}))
-            return col, checks
-        if _is_string_like(dtype):
-            if convert:
-                conv = col.try_cast("double")
-                checks.append((conv.isNotNull() | col.isNull(), "number.base", {}))
-                checks.append((~F.coalesce(F.isnan(conv), F.lit(False)),
-                               "number.base", {}))
-                if not schema._flags.get("unsafe"):
-                    checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)), F.lit(True)),
-                                   "number.unsafe", {}))
-                # precision rounding in convert mode
-                # (reference: lib/types/number.js:81-87)
-                prec = schema.get_rule("precision")
-                if prec:
-                    conv = F.round(conv, prec.args["limit"])
-                return conv, checks
-            checks.append((F.lit(False), "number.base", {}))
-            return col, checks
-        raise CompileError(f"number() on unsupported column type {dtype}")
+            return col, dtype, checks
+        if _is_string_like(dtype) and convert:
+            conv = col.try_cast("double")
+            checks.append((conv.isNotNull() | col.isNull(), "number.base", {}))
+            checks.append((~F.coalesce(F.isnan(conv), F.lit(False)),
+                           "number.base", {}))
+            if not schema._flags.get("unsafe"):
+                checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)), F.lit(True)),
+                               "number.unsafe", {}))
+            # precision rounding in convert mode
+            # (reference: lib/types/number.js:81-87)
+            prec = schema.get_rule("precision")
+            if prec:
+                conv = F.round(conv, prec.args["limit"])
+            return conv, T.DoubleType(), checks
+        checks.append((F.lit(False), "number.base", {}))
+        return col, None, checks
 
     if t == "boolean":
         if isinstance(dtype, T.BooleanType):
-            return col, checks
+            return col, dtype, checks
         if _is_string_like(dtype) and convert:
             truthy = [str(v) for v in (schema._terms.get("truthy") or [])]
             falsy = [str(v) for v in (schema._terms.get("falsy") or [])]
@@ -662,13 +595,13 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
             if f_set:
                 conv = conv.when(probe.isin(*f_set), F.lit(False))
             checks.append((conv.isNotNull() | col.isNull(), "boolean.base", {}))
-            return conv, checks
-        checks.append((F.lit(isinstance(dtype, T.BooleanType)), "boolean.base", {}))
-        return col, checks
+            return conv, T.BooleanType(), checks
+        checks.append((F.lit(False), "boolean.base", {}))
+        return col, None, checks
 
     if t == "date":
         if isinstance(dtype, (T.TimestampType, T.DateType)):
-            return col.cast("timestamp"), checks
+            return col.cast("timestamp"), T.TimestampType(), checks
         fmt = schema._flags.get("format")
         if convert:
             if fmt == "unix":
@@ -687,18 +620,19 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
                     F.timestamp_millis(col.cast("string").try_cast("long")))
                 code = "date.base"
             checks.append((conv.isNotNull() | col.isNull(), code, {}))
-            return conv, checks
+            return conv, T.TimestampType(), checks
         checks.append((F.lit(False), "date.strict" if fmt == "iso" else "date.base", {}))
-        return col, checks
+        return col, None, checks
 
     if t == "array":
         if isinstance(dtype, T.ArrayType):
-            return col, checks
+            return col, dtype, checks
         single = schema._flags.get("single")
         if _is_string_like(dtype) and convert:
             # JSON-string coerce (reference: lib/types/array.js:31-62);
             # element type unknown → array<string>
-            parsed = F.from_json(col, T.ArrayType(T.StringType()))
+            parsed_type = T.ArrayType(T.StringType())
+            parsed = F.from_json(col, parsed_type)
             if single:
                 # values that don't parse as JSON arrays wrap as
                 # [value] (reference: lib/types/array.js:410-418 +
@@ -707,20 +641,20 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
                         .when(F.trim(col).startswith("[") & parsed.isNotNull(),
                               parsed) \
                         .otherwise(F.array(col))
-                return conv, checks
+                return conv, parsed_type, checks
             checks.append((parsed.isNotNull() | col.isNull(),
                            "array.base", {}))
-            return parsed, checks
+            return parsed, parsed_type, checks
         if single:
             # scalar column + single(): every non-null value becomes a
             # one-element array before item/length rules run
-            return F.when(col.isNotNull(), F.array(col)), checks
+            return F.when(col.isNotNull(), F.array(col)), T.ArrayType(dtype), checks
         checks.append((F.lit(False), "array.base", {}))
-        return col, checks
+        return col, None, checks
 
     if t == "binary":
         if isinstance(dtype, T.BinaryType):
-            return col, checks
+            return col, dtype, checks
         if _is_string_like(dtype) and convert:
             # encoding flag selects the string→bytes decode
             # (reference: lib/types/binary.js:18-24 Buffer.from(value,
@@ -730,34 +664,40 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
                 conv = F.try_to_binary(col, F.lit(enc))
                 checks.append((conv.isNotNull() | col.isNull(),
                                "binary.base", {}))
-                return conv, checks
-            return col.cast("binary"), checks
-        checks.append((F.lit(isinstance(dtype, T.BinaryType)), "binary.base", {}))
-        return col, checks
+                return conv, T.BinaryType(), checks
+            return col.cast("binary"), T.BinaryType(), checks
+        checks.append((F.lit(False), "binary.base", {}))
+        return col, None, checks
 
     if t == "object":
         if isinstance(dtype, (T.StructType, T.MapType)):
-            return col, checks
+            return col, dtype, checks
         if _is_string_like(dtype) and convert:
             # JSON-string coerce (reference: lib/types/object.js:49-64);
             # field types unknown → canonical map<string,string>
-            conv = F.from_json(col, T.MapType(T.StringType(), T.StringType()))
+            parsed_type = T.MapType(T.StringType(), T.StringType())
+            conv = F.from_json(col, parsed_type)
             checks.append((conv.isNotNull() | col.isNull(),
                            "object.base", {"type": "object"}))
-            return conv, checks
+            return conv, parsed_type, checks
         checks.append((F.lit(False), "object.base", {"type": "object"}))
-        return col, checks
+        return col, None, checks
 
     # any passthrough
-    return col, checks
+    return col, dtype, checks
 
 
 # ---------------------------------------------------------------------------
 
 def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
-                   plan: CompiledPlan, *, cond: Column | None = None) -> None:
-    """Emit conversion + checks for one column.  ``cond`` guards every
-    check (used by when/conditional schemas)."""
+                   plan: CompiledPlan, *, cond: Column | None = None,
+                   col: Column | None = None) -> None:
+    """Emit conversion + checks for one value of Spark type ``dtype``:
+    the column ``name`` unless ``col`` gives the value expression (a
+    struct field, an array element, a map value — see
+    :func:`value_predicate`).  ``cond`` guards every check (used by
+    when/conditional schemas)."""
+    col = F.col(name) if col is None else col
     if isinstance(schema, ObjectSchema) and isinstance(dtype, T.StructType) \
             and schema._terms.get("keys"):
         # struct column: the reference's nested object().keys()
@@ -769,7 +709,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             msg = E.render_static("any.required", {"label": label},
                                   overrides=schema._messages)
             plan.checks.append(Check(ctx.next_seq(), name, "any.required",
-                                     F.coalesce(F.col(name).isNotNull(),
+                                     F.coalesce(col.isNotNull(),
                                                 F.lit(False)),
                                      F.lit(msg)))
         fields = {f.name: f.dataType for f in dtype.fields}
@@ -777,7 +717,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         # a required child fires only when the parent struct is present
         # (reference: lib/types/object.js:114-142 validates keys of the
         # resolved object value; a null parent never recurses)
-        parent_ok = F.col(name).isNotNull()
+        parent_ok = col.isNotNull()
         child_cond = parent_ok if cond is None else (cond & parent_ok)
         for k, sub in schema._terms["keys"].items():
             if k not in fields:
@@ -794,7 +734,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                                              F.lit(msg)))
                 continue
             compile_column(sub, f"{name}.{k}", fields[k], ctx, plan,
-                           cond=child_cond)
+                           cond=child_cond, col=col.getField(k))
         # pattern keys + unknown policy over the REMAINING struct
         # fields (reference: lib/types/object.js:340-370, 970-1077);
         # a field counts as present when it is non-null (Joi skips
@@ -808,13 +748,14 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                         if _re3.search(p["regex"], f.name)), None)
             if pat is not None:
                 compile_column(pat["rule"], f"{name}.{f.name}",
-                               f.dataType, ctx, plan, cond=child_cond)
+                               f.dataType, ctx, plan, cond=child_cond,
+                               col=col.getField(f.name))
             elif schema._flags.get("unknown") is False:
                 label = f"{name}.{f.name}"
                 msg = E.render_static("object.unknown", {"label": label},
                                       overrides=schema._messages)
                 present = F.coalesce(child_cond, F.lit(False)) & \
-                    F.col(label).isNotNull()
+                    col.getField(f.name).isNotNull()
                 plan.checks.append(Check(ctx.next_seq(), label,
                                          "object.unknown", ~present,
                                          F.lit(msg)))
@@ -823,7 +764,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         for rule in schema._rules:
             if rule.name not in ("length", "min", "max"):
                 continue
-            nk = _balanced([F.col(f"{name}.{f.name}").isNotNull()
+            nk = _balanced([col.getField(f.name).isNotNull()
                             .cast("int") for f in dtype.fields],
                            operator.add, F.lit(0))
             limit = rule.args["limit"]
@@ -849,14 +790,13 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         target = ctx.shared.get(target_id)
         if target is None:
             raise CompileError(f"link('#{target_id}') has no shared() target")
-        compile_column(target, name, dtype, ctx, plan, cond=cond)
+        compile_column(target, name, dtype, ctx, plan, cond=cond, col=col)
         return
-    col = F.col(name)
     label = _label(schema, name)
     overrides = schema._messages
     prefs = {**ctx.prefs, **(schema._preferences or {})}
     local = _Ctx(ctx.columns, ctx.conversions, prefs, ctx.context,
-                 shared=ctx.shared)
+                 ctx.shared, ctx.dtypes)
     local.seq = ctx.seq
 
     error_flag = schema._flags.get("error")
@@ -892,16 +832,17 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         plan.checks.append(Check(ctx.next_seq(), name, code, okc, msg, severity))
 
     # 1. coerce --------------------------------------------------------
-    conv, base_checks = _coerce(schema, col, dtype, local, label)
+    conv, conv_dtype, base_checks = _coerce(schema, col, dtype, local, label)
 
     # 2. empty (reference: lib/validator.js:162-165)
     empty = schema._flags.get("empty")
     if empty is not None:
-        empty_pred = value_predicate(empty, local) if isinstance(empty, Schema) \
-            else (lambda c: c == F.lit(empty))
+        empty_pred = value_predicate(empty, local, conv_dtype or dtype) \
+            if isinstance(empty, Schema) else (lambda c: c == F.lit(empty))
         conv = F.when(empty_pred(conv), F.lit(None)).otherwise(conv)
 
     ctx.conversions[name] = conv
+    ctx.dtypes[name] = conv_dtype or dtype
     present = conv.isNotNull()
 
     # 3. presence (reference: lib/validator.js:170-190)
@@ -921,6 +862,12 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         # sequential-abort semantics within the base validate
         emit(pred, code, mctx, guard=col.isNotNull() & base_ok)
         base_ok = base_ok & F.coalesce(pred, F.lit(True))
+    if conv_dtype is None:
+        # the value can never have this type: only the base error can
+        # fire, and later rules would not even type-check against it
+        ctx.seq = local.seq
+        _emit_output(schema, name, conv, plan, local, dtype)
+        return
 
     # 4. valids (reference: lib/validator.js:196-214)
     valid_match = None
@@ -981,7 +928,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                                                  F.lit(True))
 
     # 7. rules in chain order (reference: lib/validator.js:260-320)
-    compile_vp = lambda s: value_predicate(s, local)
+    element = lambda s: value_predicate(s, local, conv_dtype.elementType)
     kind = schema.kind
     for rule in schema._rules:
         if rule.convert_only and prefs["convert"]:
@@ -1015,7 +962,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         elif kind == "date":
             triples = _date_rule(rule, conv, local)
         elif kind == "array":
-            triples = _array_rule(rule, conv, local, compile_vp)
+            triples = _array_rule(rule, conv, local, element)
         elif kind == "binary":
             triples = _binary_rule(rule, conv, local)
         else:
@@ -1036,16 +983,15 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                      if s._flags.get("presence") == "forbidden"]
         required = [s for s in allowed if s._flags.get("presence") == "required"]
         if allowed:
-            preds = [value_predicate(s, local) for s in allowed]
+            preds = [element(s) for s in allowed]
             ok_any = lambda x: _balanced([p(x) for p in preds],
                                          operator.or_, F.lit(False))
             emit(F.forall(conv, ok_any), "array.includes", {}, guard=rule_guard)
         for s in forbidden:
-            p = value_predicate(s, local)
-            emit(~F.exists(conv, p), "array.excludes", {}, guard=rule_guard)
+            emit(~F.exists(conv, element(s)), "array.excludes", {},
+                 guard=rule_guard)
         for s in required:
-            p = value_predicate(s, local)
-            emit(F.exists(conv, p), "array.includesRequiredUnknowns",
+            emit(F.exists(conv, element(s)), "array.includesRequiredUnknowns",
                  {"unknownMisses": 1}, guard=rule_guard)
     if schema.type == "array" and schema._terms.get("ordered"):
         # positional schemas (reference: lib/types/array.js:391-408):
@@ -1053,7 +999,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         # ordered list fail array.orderedLength unless items() allows them
         ordered = schema._terms["ordered"]
         for i, s_i in enumerate(ordered):
-            p = value_predicate(s_i, local)(F.element_at(conv, i + 1))
+            p = element(s_i)(F.element_at(conv, i + 1))
             emit(p, "array.includes", {},
                  guard=rule_guard & (F.size(conv) > i))
         if not schema._terms.get("items"):
@@ -1077,7 +1023,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         for pat in pats:
             ok = F.forall(F.map_entries(conv),
                           _pattern_ok(pat["regex"],
-                                      value_predicate(pat["rule"], local)))
+                                      value_predicate(pat["rule"], local,
+                                                      conv_dtype.valueType)))
             emit(ok, "object.pattern.match", {}, guard=rule_guard)
         if pats and schema._flags.get("unknown") is False:
             rxs = [p_["regex"] for p_ in pats]
@@ -1090,24 +1037,32 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                  guard=rule_guard)
 
     # alternatives: first-match-wins degenerates to OR for pass/fail
-    # (reference: lib/types/alternatives.js:33-91).  Error taxonomy
-    # follows the reference's no-match classifier (:63-90): when every
-    # branch is a BARE base type a failing value can only have
-    # accumulated `<type>.base` errors, which the reference collapses
-    # to 'alternatives.types' with the type list; any branch carrying
-    # rules/valids can produce non-base errors, and multi-branch
-    # mixed failures render the 'alternatives.match' catch-all (same
-    # template text).  Both are static properties of the SCHEMA, so
+    # (reference: lib/types/alternatives.js:33-91).  A lone branch
+    # reports its own errors (:66-69), so it compiles in place.  With
+    # two or more, error taxonomy follows the reference's no-match
+    # classifier (:63-90): when every branch is a BARE base type a
+    # failing value can only have accumulated `<type>.base` errors,
+    # which the reference collapses to 'alternatives.types' with the
+    # type list; any branch carrying rules/valids can produce non-base
+    # errors, and mixed failures render the 'alternatives.match'
+    # catch-all (same template text).  Both are static properties of the SCHEMA, so
     # the per-row classification is exact here, not approximated.
-    if schema.type == "alternatives" and not schema._terms.get("matches"):
+    matches = schema._terms.get("matches") or []
+    if schema.type == "alternatives" and not matches:
         # no branches -> nothing can match: any PRESENT value fails
         # with 'alternatives.base' (reference :34-63 — the loop body
         # never runs, errors stay empty, base fires); null/undefined
         # still passes (presence guard)
         emit(F.lit(False), "alternatives.base", {}, guard=rule_guard)
-    if schema.type == "alternatives" and schema._terms.get("matches"):
-        matches = schema._terms["matches"]
-        preds = [value_predicate(m, local)(conv) for m in matches]
+    if schema.type == "alternatives" and len(matches) == 1:
+        n = len(plan.checks)
+        compile_column(matches[0], name, dtype, ctx, plan, col=conv,
+                       cond=rule_guard if cond is None else cond & rule_guard)
+        # the nested call restores ctx.seq on exit; later checks of
+        # this column must not reuse the branch's numbers
+        ctx.seq = max([ctx.seq] + [c.seq for c in plan.checks[n:]])
+    if schema.type == "alternatives" and len(matches) >= 2:
+        preds = [value_predicate(m, local, conv_dtype)(conv) for m in matches]
 
         def _bare_base(m):
             # kinds whose only per-row branch failure is `<type>.base`
@@ -1120,7 +1075,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                     and not m._terms)
 
         any_ok = _balanced(preds, operator.or_, F.lit(False))
-        if len(matches) >= 2 and all(_bare_base(m) for m in matches):
+        if all(_bare_base(m) for m in matches):
             emit(any_ok, "alternatives.types",
                  {"types": [m.type for m in matches]}, guard=rule_guard)
         else:
@@ -1143,7 +1098,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
 
         def _is_pred(isv):
             if isinstance(isv, Schema):
-                return value_predicate(isv, local)(ref_col)
+                return value_predicate(isv, local,
+                                       local.dtype_of(w["ref"]))(ref_col)
             if isinstance(isv, Ref):
                 return ref_col.eqNullSafe(local.resolve(isv))
             return ref_col.eqNullSafe(F.lit(isv))
@@ -1168,7 +1124,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                 sub_cond = branch if cond is None else (cond & branch)
                 if case.get("then") is not None:
                     compile_column(case["then"], name, dtype, ctx, plan,
-                                   cond=sub_cond)
+                                   cond=sub_cond, col=col)
                 if case.get("otherwise") is not None:
                     if i != last:
                         raise CompileError(
@@ -1179,7 +1135,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             if final_otherwise is not None:
                 sub_cond = ~matched if cond is None else (cond & ~matched)
                 compile_column(final_otherwise, name, dtype, ctx, plan,
-                               cond=sub_cond)
+                               cond=sub_cond, col=col)
             continue
         is_pred = _is_pred(w["is"])
         for branch, branch_cond in (("then", is_pred), ("otherwise", ~is_pred)):
@@ -1187,7 +1143,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             if sub is None:
                 continue
             sub_cond = branch_cond if cond is None else (cond & branch_cond)
-            compile_column(sub, name, dtype, ctx, plan, cond=sub_cond)
+            compile_column(sub, name, dtype, ctx, plan, cond=sub_cond,
+                           col=col)
 
     ctx.seq = local.seq
     _emit_output(schema, name, conv, plan, local, dtype)
@@ -1378,6 +1335,7 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
         if frm in columns:
             _apply_one(frm, r["to"], r)
     ctx.columns = columns
+    ctx.dtypes = dict(dtypes)
 
     keys: dict[str, Schema] = dict(schema._terms.get("keys") or {})
 
@@ -1450,8 +1408,8 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # asserts (reference: lib/types/object.js:205-231)
     for a in schema._terms.get("asserts") or []:
         ref: Ref = a["ref"]
-        target = ctx.conversions.get(ref.key, F.col(ref.key))
-        pred = value_predicate(a["schema"], ctx)(target)
+        pred = value_predicate(a["schema"], ctx,
+                               ctx.dtype_of(ref))(ctx.resolve(ref))
         subject_label = a["message"] or ref.key
         msg = E.render_static(
             "object.assert",

@@ -310,8 +310,12 @@ class ValidationResult:
                               if (c.severity == "error") == errors],
                              operator.add, F.lit(0))
 
+        errors = fail_count(True)
+        if self.abort_early:
+            # violations() keeps only the first error per row
+            errors = F.least(errors, F.lit(1))
         counted = (self._renamed
-                   .withColumn("_ec", fail_count(True))
+                   .withColumn("_ec", errors)
                    .withColumn("_wc", fail_count(False)))
         return (group(counted)
                 .agg(F.count(F.lit(1)).alias("n_rows"),

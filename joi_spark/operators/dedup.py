@@ -254,25 +254,6 @@ def decontaminate(df: DataFrame, benchmark: DataFrame,
 
 # --- tier 4: MinHash + LSH -------------------------------------------------
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3,
-                       num_perm: int = 64) -> DataFrame:
-    """MinHash signature per document: sig[p] = min over shingles of
-    xxhash64(p, shingle) — ``num_perm`` independent partial-aggregating
-    mins in ONE groupBy (map-side combine ⇒ shuffle carries one row per
-    doc).  Returns ``(id, sig array<bigint>)``."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    idx = df.repartition(par, id_col) \
-            .select(F.col(id_col).alias("_id"),
-                    F.explode(shingles(F.col(text_col), n)).alias("_sh"))
-    mins = [F.min(F.xxhash64(F.lit(p), F.col("_sh"))).alias(f"_m{p}")
-            for p in range(num_perm)]
-    sig = idx.groupBy("_id").agg(*mins)
-    return sig.select(F.col("_id").alias(id_col),
-                      F.array(*[F.col(f"_m{p}") for p in range(num_perm)])
-                       .alias("sig"))
-
-
 def _sub_block(df: DataFrame, id_col: str, keys: list[str],
                cap: int) -> tuple[DataFrame, list[str]]:
     """Quadratic-blowup valve for bucket-keyed candidate joins (the

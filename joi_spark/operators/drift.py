@@ -237,19 +237,6 @@ def ks_statistic(df: DataFrame, column: str, *, epoch_col: str = "epoch",
                               column, "ks", _ks)
 
 
-def drift_report(df: DataFrame, columns: list[str], *,
-                 epoch_col: str = "epoch", baseline_epoch=None,
-                 psi_threshold: float = 0.25) -> DataFrame:
-    """PSI for each column vs baseline epoch + pass/fail verdict —
-    feeds the per-partition metrics manifest."""
-    out = None
-    for c in columns:
-        p = psi(df, c, epoch_col=epoch_col, baseline_epoch=baseline_epoch)
-        out = p if out is None else out.unionAll(p)
-    return out.withColumn("pass", F.col("psi") < psi_threshold) \
-              .orderBy("column", "epoch")
-
-
 def baseline_fractions(df: DataFrame, column: str, *,
                        bins: tuple[float, float, int] | None = None,
                        top_k: int = 1000) -> DataFrame:

@@ -55,10 +55,15 @@ def test_verdicts(transcripts):
     assert len(hashes) == 1
 
 
-@pytest.mark.parametrize("n_checks", [21, 140])
-def test_verdicts_agree_with_violations(spark, n_checks):
+@pytest.mark.parametrize("n_checks,abort_early", [
+    pytest.param(21, False, id="21"),
+    pytest.param(140, False, id="140"),
+    pytest.param(21, True, id="21-abort_early"),
+    pytest.param(140, True, id="140-abort_early")])
+def test_verdicts_agree_with_violations(spark, n_checks, abort_early):
     """Per-partition verdict counts equal the error and warn rows of
-    violations(), for narrow and wide plans alike."""
+    violations(), for narrow and wide plans alike; under abort_early
+    both count at most one error per row."""
     n_cols = n_checks // 7
     good = F.col("id") % 3 == 2       # partition 2 is clean
     df = spark.range(0, 300).select(
@@ -72,7 +77,7 @@ def test_verdicts_agree_with_violations(spark, n_checks):
         f"c{i}": joi.number().min(1).max(1).warn().integer()
         for i in range(n_cols)})
     res = joi.validate(df, schema, order_by=["id"],
-                       prefs={"abort_early": False})
+                       prefs={"abort_early": abort_early})
     assert len(res.plan.checks) == n_checks
     counts = {(r["p"], r["severity"]): r["count"] for r in
               res.violations(extra_cols=["p"], sort=False)

@@ -885,6 +885,49 @@ def test_alternatives_empty_fails_present_values(spark):
     ])
 
 
+def test_alternatives_single_branch_reports_branch_error(spark):
+    """A lone branch's own errors surface, not alternatives.match
+    (reference: lib/types/alternatives.js:66-69)."""
+    run_cases(spark, joi.alternatives(joi.number().max(5)), "string", [
+        ("base", "x", [("number.base", '"v" must be a number')]),
+        ("rule", "7", [("number.max",
+            '"v" must be less than or equal to 5')]),
+        ("ok", "4", []),
+        ("absent", None, []),
+    ])
+
+
+_PARITY_CASES = [
+    ("allow", joi.string().allow("zz"), "hello"),
+    ("allow_empty", joi.string().allow(""), ""),
+    ("trim", joi.string().trim(), " a "),
+    ("lowercase", joi.string().lowercase(), "AB"),
+    ("truncate", joi.string().max(3).truncate(), "abcdef"),
+    ("boolean", joi.boolean(), "true"),
+    ("date", joi.date(), "2024-01-02"),
+]
+
+
+@pytest.mark.parametrize("convert", [True, False])
+@pytest.mark.parametrize("schema,value", [c[1:] for c in _PARITY_CASES],
+                         ids=[c[0] for c in _PARITY_CASES])
+def test_value_context_matches_column_check(spark, schema, value, convert):
+    """The reference validates a nested value with the same full
+    $_validate as a key (lib/types/array.js:119-352,
+    lib/types/alternatives.js:33-91), so an array element or an
+    alternatives branch passes exactly when the column check does."""
+    df = spark.createDataFrame([(value, [value])], "v string, a array<string>")
+
+    def ok(keys):
+        res = joi.validate(df, joi.object(keys), prefs={"convert": convert})
+        return res.checked.select("_ok").first()[0]
+
+    column = ok({"v": schema})
+    assert ok({"a": joi.array().items(schema)}) == column
+    assert ok({"v": joi.alternatives(schema,
+                                     joi.number().min(10 ** 9))}) == column
+
+
 # --- bulk IP vectors (test/types/string.js:1935-2110) ----------------------
 
 _REF_VALID_IPS = [
