@@ -1854,7 +1854,12 @@ def oracle_sql() -> dict[str, str]:
                    'error' AS severity
             FROM events
             WHERE event_type IS NOT NULL
-              AND try_cast(event_type AS DOUBLE) IS NULL
+              -- NULL casts, NaN, ±inf and |x| > 2^53-1 all fail the
+              -- number branch (number.base / .infinity / .unsafe)
+              AND NOT coalesce(
+                  isfinite(try_cast(event_type AS DOUBLE))
+                  AND abs(try_cast(event_type AS DOUBLE))
+                      <= 9007199254740991, false)
               AND lower(event_type) NOT IN ('true', 'false')
         """,
         "custom_rule": """

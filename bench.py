@@ -1,4 +1,5 @@
-"""Benchmark harness — prints ONE JSON line for the driver.
+"""Benchmark harness — prints one full JSON line, then a compact
+(≤1 KB) JSON summary line (see :func:`compact_line`).
 
 Two workloads:
 1. the ``__spark_entry__.queries()`` suite at ``$SPARK_GRAFT_SF_DIR``
@@ -216,6 +217,19 @@ def bench_once(cpus: str, sf_dir: str, *, with_queries: bool = True,
             "transcript": transcript}
 
 
+def compact_line(out: dict) -> str:
+    """The summary repeated in at most 1 KB: headline fields plus the 5
+    slowest warm queries.  Printed last, so a reader that keeps only
+    the tail of the output (the full line carries every per-query
+    time twice) still gets one whole JSON line."""
+    slowest = sorted(out["queries"].items(), key=lambda kv: -kv[1])[:5]
+    return json.dumps({
+        **{k: out[k] for k in ("metric", "value", "unit", "sf",
+                               "validated_turns_per_sec")},
+        "slowest_queries": dict(slowest),
+    })
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -353,7 +367,7 @@ def main() -> None:
 
     res = bench_once(cpus, sf_dir)
     total = round(sum(res["queries"].values()) + res["transcript"]["sec"], 3)
-    print(json.dumps({
+    out = {
         "metric": "total_sec",
         "value": total,
         "unit": "sec",
@@ -362,7 +376,9 @@ def main() -> None:
         "sf": sf,
         "validated_turns_per_sec": res["transcript"]["turns_per_sec"],
         "transcript": res["transcript"],
-    }))
+    }
+    print(json.dumps(out))
+    print(compact_line(out))
 
 
 if __name__ == "__main__":

@@ -24,14 +24,25 @@ Scale notes (the design constraints at 100 TB):
 - MinHash signatures are 64 independent min-aggregates — partial
   aggregation (map-side combine) keeps the shuffle tiny: one row per
   (doc, 64 longs) regardless of document length.
+- Candidate generation is built from one copy of each step:
+  :func:`_shingle_index` (corpus → (id, shingle)),
+  :func:`_minhash_artifacts` (signatures + bands), :func:`_bucket_pairs`
+  (the bucket self-join with its valve) and :func:`_jaccard` (the exact
+  verification tail); every tier composes them.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from joi_spark.operators.text import fingerprint, tokens
+
+# Default cap of every quadratic-blowup valve (hot shingles, bucket and
+# cluster sizes).  None of the oracle workloads comes near it (largest
+# bucket at sf0.1: 291 rows).
+_VALVE = 1000
 
 
 # --- tier 1: exact ---------------------------------------------------------
@@ -100,19 +111,18 @@ def shingles(col: Column, n: int = 3) -> Column:
 
 
 def _shingle_index(df: DataFrame, id_col: str, text_col: str, n: int,
-                   max_shingle_freq: int | None) -> DataFrame:
-    """Inverted index (id, shingle) with optional document-frequency
-    pruning of hot shingles.
+                   max_shingle_freq: int | None = None) -> DataFrame:
+    """Inverted index ``(_id, _sh)`` with optional document-frequency
+    pruning of hot shingles — the one place a corpus is exploded into
+    shingles (n-gram Jaccard, MinHash, the MinHash index and the
+    training side of :func:`contamination` all read it).
 
-    The explode amplifies rows ~50×, so the index is explicitly
-    repartitioned on the shingle: input partitioning (often one small
-    file) says nothing about post-explode compute, and hashing on the
-    join key here pre-aligns the self-join's shuffle."""
+    The explode amplifies rows ~50×, so the (small) doc table is
+    repartitioned on the id BEFORE the explode: input partitioning
+    (often one small file) says nothing about post-explode compute, and
+    a post-explode repartition would leave the amplification on the
+    input's (possibly single) partition."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    # repartition the (small) doc table BEFORE the explode so shingle
-    # construction itself parallelizes — post-explode repartition would
-    # leave the 50× amplification on the input's (possibly single)
-    # partition
     idx = (df.repartition(par, id_col)
              .select(F.col(id_col).alias("_id"),
                      F.explode(shingles(F.col(text_col), n)).alias("_sh")))
@@ -138,12 +148,99 @@ def _prune_hot_shingles(idx: DataFrame, max_shingle_freq: int) -> DataFrame:
     return idx.join(keep, "_sh", "left_semi")
 
 
+def _jaccard(common: DataFrame, sizes: DataFrame,
+             threshold: float) -> DataFrame:
+    """Exact-Jaccard tail: ``common`` ``(_ida, _idb, _common)`` shared
+    shingle counts plus ``sizes`` ``(id, n)`` set sizes →
+    ``(id_a, id_b, jaccard)`` at ``jaccard ≥ threshold``.
+
+    One copy for the exact tier, in-memory MinHash and the incremental
+    index: a pair is scored by the same expression on every path, so
+    their oracle rows cannot drift apart."""
+    na = sizes.select(F.col("id").alias("_ida"), F.col("n").alias("_na"))
+    nb = sizes.select(F.col("id").alias("_idb"), F.col("n").alias("_nb"))
+    jac = F.col("_common") / (F.col("_na") + F.col("_nb") - F.col("_common"))
+    return (common.join(na, "_ida").join(nb, "_idb")
+                  .select(F.col("_ida").alias("id_a"),
+                          F.col("_idb").alias("id_b"), jac.alias("jaccard"))
+                  .filter(F.col("jaccard") >= threshold))
+
+
+def _verify_pairs(cands: DataFrame, shingles: DataFrame, sizes: DataFrame,
+                  threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs ``(_ida, _idb)`` from hashed
+    shingle sets ``(id, shash)``: each side's shingles join on the
+    candidate ids, the shared count joins on ``(_idb, shash)``."""
+    ca = (cands.join(shingles.withColumnRenamed("id", "_ida"), "_ida")
+               .select("_ida", "_idb", "shash"))
+    cb = shingles.select(F.col("id").alias("_idb"), "shash")
+    common = (ca.join(cb, ["_idb", "shash"])
+                .groupBy("_ida", "_idb")
+                .agg(F.count(F.lit(1)).alias("_common")))
+    return _jaccard(common, sizes, threshold)
+
+
+def _bucket_pairs(df: DataFrame, id_col: str, keys: list[str],
+                  cap: int | None = _VALVE,
+                  persist: bool = True) -> DataFrame:
+    """Candidate pairs of rows sharing a bucket — ``(_ida, _idb,
+    <c>_a..., <c>_b...)`` with ``_ida < _idb``, where every column of
+    ``df`` other than the id and ``keys`` rides along as a per-side
+    payload.  A pair sharing k buckets appears k times; multi-table
+    tiers dedupe it themselves.
+
+    The one bucket self-join behind MinHash bands, SimHash chunks,
+    random-projection buckets and SemDeDup clusters, so the valve and
+    the persist decision cannot differ between tiers.  ``persist``
+    (each caller's ``persist_index``) materializes ``df`` once for its
+    three readers: the hot-bucket count and both join sides.
+
+    Valve: a boilerplate signature shared by m rows puts all m in one
+    bucket and the self-join emits m² pairs no matter how the shuffle
+    is split.  Buckets above ``cap`` (default 1000, as
+    ``max_shingle_freq``; None disables it) are deterministically
+    sub-blocked (salt = ``xxhash64(id) mod ceil(size/cap)``) and pairs
+    generate only WITHIN a sub-block — about ``size·cap/2`` pairs
+    instead of ``size²/2``, at a recall cost: a true pair split across
+    sub-blocks is missed in that bucket (with OR-amplified tables or
+    bands it can still collide elsewhere).  Only the over-cap buckets
+    join back (at most n/cap of them); everything else takes
+    ``_sub = 0`` via the left join.  No broadcast hint: the hot side's
+    size is only known at runtime, so AQE decides — broadcast when the
+    tail is small, shuffle (never OOM) when every bucket is over cap.
+    """
+    if persist:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if cap is not None:
+        hot = (df.groupBy(*keys)
+                 .agg(F.count(F.lit(1)).alias("_bsz"))
+                 .filter(F.col("_bsz") > cap))
+        nsub = F.ceil(F.col("_bsz") / F.lit(cap))
+        df = (df.join(hot, keys, "left")
+                .withColumn("_sub",
+                            F.when(F.col("_bsz").isNull(), F.lit(0))
+                             .otherwise(F.pmod(F.xxhash64(F.col(id_col)),
+                                               nsub)))
+                .drop("_bsz"))
+        keys = [*keys, "_sub"]
+    payload = [c for c in df.columns if c != id_col and c not in keys]
+
+    def side(s: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(f"_id{s}"), *keys,
+                         *[F.col(c).alias(f"{c}_{s}") for c in payload])
+
+    return (side("a").join(side("b"), keys)
+                     .filter(F.col("_ida") < F.col("_idb"))
+                     .select("_ida", "_idb",
+                             *[f"{c}_{s}" for s in "ab" for c in payload]))
+
+
 # --- tier 3: exact n-gram Jaccard ------------------------------------------
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.8,
-                        max_shingle_freq: int | None = 1000,
+                        max_shingle_freq: int | None = _VALVE,
                         persist_index: bool = True) -> DataFrame:
     """Exact Jaccard similarity over word-``n``-gram shingle sets for
     every pair sharing ≥1 shingle — ``(id_a, id_b, jaccard)``,
@@ -152,27 +249,29 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     Inverted-index self-join: shuffle keyed on the shingle string, pair
     counts partial-aggregate.  Cost is Σ df(shingle)² — bounded by
     ``max_shingle_freq`` pruning, NOT O(N²) in documents.  The cap
-    DEFAULTS to a finite 1000 (matching the ``_sub_block`` valves of
-    the MinHash/SimHash tiers): one boilerplate stop-phrase shared by
-    millions of docs would otherwise make the default plan quadratic.
-    Recall trade: a pair whose ONLY shared shingles are hotter than
-    the cap is missed — such shingles carry no dedup signal (they
-    occur in >cap docs), so near-dup pairs at ``threshold`` ≥ 0.5
-    are unaffected in practice.  ``max_shingle_freq=None`` restores
-    the exhaustive enumeration for small corpora.
+    DEFAULTS to a finite 1000 (the same default as the bucket valves
+    of the MinHash/SimHash/embedding tiers): one boilerplate
+    stop-phrase shared by millions of docs would otherwise make the
+    default plan quadratic.  Recall trade: a pair whose ONLY shared
+    shingles are hotter than the cap is missed — such shingles carry
+    no dedup signal (they occur in >cap docs), so near-dup pairs at
+    ``threshold`` ≥ 0.5 are unaffected in practice.
+    ``max_shingle_freq=None`` restores the exhaustive enumeration for
+    small corpora.  This self-join stays its own: it needs per-pair
+    shared counts, not distinct pairs, and its valve is the prune.
 
     The exploded index feeds three consumers (both self-join sides +
     the per-doc set sizes); ``persist_index`` caches it so shingling
     — the dominant cost — runs once (same tradeoff as
     :func:`minhash_lsh_pairs`).
     """
-    from pyspark import StorageLevel
-    idx = _shingle_index(df, id_col, text_col, n, None)
+    idx = _shingle_index(df, id_col, text_col, n)
     if persist_index:
         idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
     # set sizes from the UNPRUNED index (pruning drops hot shingles
     # from candidate generation only; Jaccard is over full sets)
-    sizes = idx.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
+    sizes = idx.groupBy(F.col("_id").alias("id")) \
+               .agg(F.count(F.lit(1)).alias("n"))
     if max_shingle_freq is not None:
         idx = _prune_hot_shingles(idx, max_shingle_freq)
     a = idx.select(F.col("_id").alias("_ida"), "_sh")
@@ -181,18 +280,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                 .filter(F.col("_ida") < F.col("_idb"))
                 .groupBy("_ida", "_idb")
                 .agg(F.count(F.lit(1)).alias("_common")))
-    out = (common
-           .join(sizes.withColumnRenamed("_id", "_ida")
-                      .withColumnRenamed("_n", "_na"), "_ida")
-           .join(sizes.withColumnRenamed("_id", "_idb")
-                      .withColumnRenamed("_n", "_nb"), "_idb")
-           .withColumn("jaccard",
-                       F.col("_common") /
-                       (F.col("_na") + F.col("_nb") - F.col("_common")))
-           .filter(F.col("jaccard") >= threshold)
-           .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"),
-                   "jaccard"))
-    return out
+    return _jaccard(common, sizes, threshold)
 
 
 # --- benchmark decontamination ---------------------------------------------
@@ -218,7 +306,7 @@ def contamination(df: DataFrame, benchmark: DataFrame,
     Contrast with :func:`ngram_jaccard_pairs`' self-join, which must
     shuffle on the shingle.
     """
-    corpus_idx = _shingle_index(df, id_col, text_col, n, None)
+    corpus_idx = _shingle_index(df, id_col, text_col, n)
     bench_idx = benchmark.select(
         F.col(bench_id_col).alias("_bid"),
         F.explode(shingles(F.col(bench_text_col), n)).alias("_sh"))
@@ -254,39 +342,44 @@ def decontaminate(df: DataFrame, benchmark: DataFrame,
 
 # --- tier 4: MinHash + LSH -------------------------------------------------
 
-def _sub_block(df: DataFrame, id_col: str, keys: list[str],
-               cap: int) -> tuple[DataFrame, list[str]]:
-    """Quadratic-blowup valve for bucket-keyed candidate joins (the
-    :func:`semantic_dedup` ``max_cluster_size`` pattern, generalized).
+def _minhash_artifacts(df: DataFrame, id_col: str, text_col: str,
+                       n: int, num_perm: int, bands: int,
+                       persist: bool = False):
+    """``(bands (id, band, bh), sizes (id, n), shingles (id, shash))``
+    of a corpus or batch from one shingle pass.
 
-    A boilerplate signature shared by m documents puts all m in one
-    band/chunk bucket and the self-join emits m² candidate pairs no
-    matter how the shuffle is split.  Buckets above ``cap`` are
-    deterministically sub-blocked (salt = ``xxhash64(id) mod
-    ceil(size/cap)``) and pairs generate only WITHIN a sub-block —
-    pair count bounded by ``size·cap`` instead of ``size²``, at a
-    documented recall cost (a true pair split across sub-blocks is
-    missed in that bucket; with OR-amplified tables/bands it can still
-    collide elsewhere).
-
-    Only the OVER-cap buckets join back (at most n/cap of them, and
-    in any real corpus far fewer); everything else takes ``_sub = 0``
-    via the left join.  No broadcast HINT: the hot side's size is only
-    known at runtime, so the choice is left to AQE — broadcast when the
-    tail really is small, shuffle (never OOM) on an adversarial corpus
-    where every bucket is just over cap.
-    """
-    hot = (df.groupBy(*keys)
-             .agg(F.count(F.lit(1)).alias("_bsz"))
-             .filter(F.col("_bsz") > cap))
-    nsub = F.ceil(F.col("_bsz") / F.lit(cap))
-    out = (df.join(hot, keys, "left")
-             .withColumn("_sub",
-                         F.when(F.col("_bsz").isNull(), F.lit(0))
-                          .otherwise(F.pmod(F.xxhash64(F.col(id_col)),
-                                            nsub)))
-             .drop("_bsz"))
-    return out, [*keys, "_sub"]
+    The one MinHash signature/band builder: :func:`minhash_lsh_pairs`
+    (in memory), :func:`build_minhash_index` /
+    :func:`append_minhash_index` (persisted) and
+    :func:`incremental_minhash_pairs` (batch side) all band through it,
+    so the band hashes an index stored are the ones a later in-memory
+    run or batch computes — two hand-kept copies could drift and
+    silently stop colliding.  Signatures hash the shingle string (the
+    stored band format); verification uses the 8-byte ``shash``.
+    ``persist`` caches the exploded index, which feeds both the
+    signature aggregation and the shingle set."""
+    r = num_perm // bands
+    idx = _shingle_index(df, id_col, text_col, n)
+    if persist:
+        idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE aggregation produces both the signature mins and the shingle
+    # set size (shingles() is already distinct per doc)
+    mins = [F.min(F.xxhash64(F.lit(p), F.col("_sh"))).alias(f"_m{p}")
+            for p in range(num_perm)]
+    sigs = idx.groupBy(F.col("_id").alias("id")) \
+              .agg(F.count(F.lit(1)).alias("n"), *mins)
+    banded = (sigs.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.xxhash64(*[F.col(f"_m{b * r + i}") for i in range(r)])
+                      .alias("bh"))
+            for b in range(bands)])).alias("_b"))
+        .select("id", F.col("_b.band").alias("band"),
+                F.col("_b.bh").alias("bh")))
+    shing = idx.select(F.col("_id").alias("id"),
+                       F.xxhash64("_sh").alias("shash"))
+    return banded, sigs.select("id", "n"), shing
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -295,84 +388,41 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       threshold: float = 0.8,
                       verify: bool = True,
                       persist_index: bool = True,
-                      max_bucket_size: int | None = None) -> DataFrame:
+                      max_bucket_size: int | None = _VALVE) -> DataFrame:
     """MinHash banding: split the signature into ``bands`` rows of
     ``num_perm/bands`` values, bucket-join docs sharing any band hash,
     then (optionally) verify candidates with exact Jaccard.
 
-    Candidate generation is an equi-join on (band_id, band_hash) — the
+    Candidate generation is an equi-join on (band, band_hash) — the
     sub-quadratic scale path.  With r = num_perm/bands = 4, a pair at
     similarity s collides with prob 1-(1-s^4)^16 (≈1 for s ≥ 0.8).
-    Returns ``(id_a, id_b, jaccard)`` like :func:`ngram_jaccard_pairs`.
+    Returns ``(id_a, id_b, jaccard)`` like :func:`ngram_jaccard_pairs`
+    (``(id_a, id_b)`` with ``verify=False``).  Signatures, bands and
+    hashed shingles come from :func:`_minhash_artifacts`, the builder
+    the persisted index uses; verification counts shared shingle hashes
+    like :func:`incremental_minhash_pairs`.
+
+    ``max_bucket_size`` (default 1000, None = uncapped) sub-blocks
+    over-cap band buckets (see :func:`_bucket_pairs`).
 
     The shingle inverted index is built ONCE and feeds all three
-    consumers — signatures, set sizes (``groupBy(_id).count()``), and
-    the candidate-verification join; shingling (tokenize + n-gram
-    assembly + explode) is the dominant cost at corpus scale, so it
-    must not be recomputed per stage.  ``persist_index=True`` caches
-    the exploded index (MEMORY_AND_DISK) so it is materialized once;
-    at extreme scale where the index exceeds cluster cache capacity,
-    pass False to trade one extra scan for zero cache footprint.
+    consumers — signatures, set sizes, and the candidate-verification
+    join; shingling (tokenize + n-gram assembly + explode) is the
+    dominant cost at corpus scale, so it must not be recomputed per
+    stage.  ``persist_index=True`` caches the exploded index and the
+    band table (MEMORY_AND_DISK) so each is materialized once; at
+    extreme scale where the index exceeds cluster cache capacity, pass
+    False to trade extra scans for zero cache footprint.
     """
-    from pyspark import StorageLevel
-    r = num_perm // bands
-    par = df.sparkSession.sparkContext.defaultParallelism
-    idx = df.repartition(par, id_col) \
-            .select(F.col(id_col).alias("_id"),
-                    F.explode(shingles(F.col(text_col), n)).alias("_sh"))
-    if persist_index:
-        idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE aggregation produces both the signature mins and the shingle
-    # set size (shingles() is already distinct per doc)
-    mins = [F.min(F.xxhash64(F.lit(p), F.col("_sh"))).alias(f"_m{p}")
-            for p in range(num_perm)]
-    sigs = idx.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"), *mins)
-    banded = sigs.select(
-        "_id", "_n",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col(f"_m{b * r + i}") for i in range(r)])
-                      .alias("bh"))
-            for b in range(bands)])).alias("_b"))
-    banded = banded.select("_id", F.col("_b.band").alias("_band"),
-                           F.col("_b.bh").alias("_bh"))
-    band_keys = ["_band", "_bh"]
-    if max_bucket_size is not None:
-        if persist_index:
-            # the valve consumes banded THREE ways (hot-bucket agg +
-            # both join sides); without a persist the full signature
-            # aggregation re-runs for each — exactly on the degenerate
-            # corpora the valve exists for
-            banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        banded, band_keys = _sub_block(banded, "_id", band_keys,
-                                       max_bucket_size)
-    a = banded.select(F.col("_id").alias("_ida"), *band_keys)
-    b = banded.select(F.col("_id").alias("_idb"), *band_keys)
-    cands = (a.join(b, band_keys)
-               .filter(F.col("_ida") < F.col("_idb"))
-               .select("_ida", "_idb").distinct())
+    banded, sizes, shing = _minhash_artifacts(df, id_col, text_col, n,
+                                              num_perm, bands,
+                                              persist=persist_index)
+    cands = _bucket_pairs(banded, "id", ["band", "bh"], max_bucket_size,
+                          persist_index).distinct()
     if not verify:
         return cands.select(F.col("_ida").alias("id_a"),
                             F.col("_idb").alias("id_b"))
-    sizes = sigs.select("_id", "_n")
-    ca = cands.join(idx.withColumnRenamed("_id", "_ida"), "_ida") \
-              .select("_ida", "_idb", "_sh")
-    cb = idx.select(F.col("_id").alias("_idb"), F.col("_sh"))
-    common = (ca.join(cb, ["_idb", "_sh"])
-                .groupBy("_ida", "_idb")
-                .agg(F.count(F.lit(1)).alias("_common")))
-    out = (common
-           .join(sizes.withColumnRenamed("_id", "_ida")
-                      .withColumnRenamed("_n", "_na"), "_ida")
-           .join(sizes.withColumnRenamed("_id", "_idb")
-                      .withColumnRenamed("_n", "_nb"), "_idb")
-           .withColumn("jaccard",
-                       F.col("_common") /
-                       (F.col("_na") + F.col("_nb") - F.col("_common")))
-           .filter(F.col("jaccard") >= threshold)
-           .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"),
-                   "jaccard"))
-    return out
+    return _verify_pairs(cands, shing, sizes, threshold)
 
 
 # --- tier 5: SimHash -------------------------------------------------------
@@ -432,16 +482,20 @@ def simhash_chunks(df: DataFrame, id_col: str = "doc_id",
 def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        max_hamming: int = 8,
-                       max_bucket_size: int | None = None) -> DataFrame:
+                       max_bucket_size: int | None = _VALVE) -> DataFrame:
     """Near-duplicate pairs by SimHash: candidates share ≥1 of 4
     16-bit chunks (pigeonhole: any pair within Hamming distance 3 MUST
     share a chunk; ``max_hamming`` up to ~8 still has high recall),
     verified by exact Hamming distance over the full signature.
     Equi-join on (chunk_id, chunk_value) — sub-quadratic.
 
-    ``max_bucket_size`` sub-blocks over-cap chunk buckets (see
-    :func:`_sub_block`) — the valve for boilerplate corpora where one
-    chunk value is shared by a quadratic-blowup-sized population."""
+    ``max_bucket_size`` (default 1000, None = uncapped) sub-blocks
+    over-cap chunk buckets (see :func:`_bucket_pairs`) — the valve for
+    boilerplate corpora where one chunk value is shared by a
+    quadratic-blowup-sized population.  The chunk table is always
+    persisted (the signature aggregation would otherwise run once per
+    reader).  The four chunks ride through the join as payload, so the
+    Hamming check needs no join back."""
     sigs = simhash_chunks(df, id_col, text_col)
     chunks = sigs.select(
         F.col(id_col).alias("_id"), "c0", "c1", "c2", "c3",
@@ -451,29 +505,14 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     chunks = chunks.select("_id", "c0", "c1", "c2", "c3",
                            F.col("_c.ci").alias("_ci"),
                            F.col("_c.cv").alias("_cv"))
-    chunk_keys = ["_ci", "_cv"]
-    if max_bucket_size is not None:
-        from pyspark import StorageLevel
-        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-        chunks, chunk_keys = _sub_block(chunks, "_id", chunk_keys,
-                                        max_bucket_size)
-    a = chunks.select(F.col("_id").alias("_ida"),
-                      *[F.col(f"c{c}").alias(f"a{c}") for c in range(4)],
-                      *chunk_keys)
-    b = chunks.select(F.col("_id").alias("_idb"),
-                      *[F.col(f"c{c}").alias(f"b{c}") for c in range(4)],
-                      *chunk_keys)
-    ham = sum(F.bit_count(F.col(f"a{c}").bitwiseXOR(F.col(f"b{c}")))
+    ham = sum(F.bit_count(F.col(f"c{c}_a").bitwiseXOR(F.col(f"c{c}_b")))
               for c in range(4))
-    return (a.join(b, chunk_keys)
-             .filter(F.col("_ida") < F.col("_idb"))
-             .select("_ida", "_idb", *[F.col(f"a{c}") for c in range(4)],
-                     *[F.col(f"b{c}") for c in range(4)])
-             .distinct()
-             .withColumn("hamming", ham.cast("int"))
-             .filter(F.col("hamming") <= max_hamming)
-             .select(F.col("_ida").alias("id_a"),
-                     F.col("_idb").alias("id_b"), "hamming"))
+    return (_bucket_pairs(chunks, "_id", ["_ci", "_cv"], max_bucket_size)
+              .distinct()
+              .withColumn("hamming", ham.cast("int"))
+              .filter(F.col("hamming") <= max_hamming)
+              .select(F.col("_ida").alias("id_a"),
+                      F.col("_idb").alias("id_b"), "hamming"))
 
 
 # --- embedding near-duplicates --------------------------------------------
@@ -495,13 +534,14 @@ def embedding_near_pairs(df: DataFrame, id_col: str = "vec_id",
     equi-join on (table, bucket) — the 100-TB-safe plan.  Collision
     probability for a pair at angle θ is 1-(1-(1-θ/π)^n_bits)^n_tables
     — ≈0.9998 at cosine 0.95 with the defaults; raise ``n_tables``
-    for higher recall at lower thresholds.
+    for higher recall at lower thresholds.  Buckets above 1000 rows
+    are sub-blocked by :func:`_bucket_pairs`' default valve (a corpus
+    of near-identical vectors fills one bucket per table).
 
-    ``exact=True`` is the all-pairs O(n²) crossJoin baseline — ONLY
-    for verification / recall measurement at small scale, never the
-    production path.
+    ``exact=True`` is the uncapped all-pairs O(n²) crossJoin baseline
+    — ONLY for verification / recall measurement at small scale, never
+    the production path.
     """
-    from pyspark import StorageLevel
     from joi_spark.operators.similarity import (dot_pandas_udf, norm_expr,
                                                 rp_bucket_table, vector_dim)
     dim = vector_dim(df, vec_col, dim)
@@ -520,21 +560,16 @@ def embedding_near_pairs(df: DataFrame, id_col: str = "vec_id",
         pairs = a.repartition(par).crossJoin(b) \
                  .filter(F.col("_ida") < F.col("_idb"))
     else:
-        # bucket table persisted: both join sides read the SAME
-        # materialization (n·n_tables skinny rows) instead of
-        # recomputing every hyperplane projection twice;
-        # persist_index=False for callers that manage cache pressure
-        # themselves (repeated invocations accumulate cache entries)
+        # the bucket table is persisted by _bucket_pairs (with
+        # persist_index): its readers share one materialization of the
+        # n·n_tables skinny rows instead of recomputing every
+        # hyperplane projection; persist_index=False for callers that
+        # manage cache pressure themselves
         bt = rp_bucket_table(df, id_col, vec_col, n_bits=n_bits,
                              n_tables=n_tables, dim=dim)
-        if persist_index:
-            bt = bt.persist(StorageLevel.MEMORY_AND_DISK)
-        ba = bt.withColumnRenamed(id_col, "_ida")
-        bb = bt.withColumnRenamed(id_col, "_idb")
-        pairs = (ba.join(bb, ["table", "bucket"])
-                   .filter(F.col("_ida") < F.col("_idb"))
-                   .select("_ida", "_idb").distinct()
-                   .join(a, "_ida").join(b, "_idb"))
+        pairs = (_bucket_pairs(bt, id_col, ["table", "bucket"],
+                               persist=persist_index)
+                   .distinct().join(a, "_ida").join(b, "_idb"))
     # Arrow-batched dot (see similarity.dot_pandas_udf for why not the
     # SQL form: the threshold filter would be pushed into the join
     # condition and evaluated outside codegen)
@@ -560,22 +595,37 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     Min-label propagation with pointer jumping: labels start as the
     node id; each round every node takes the min of its own label,
     its neighbors' labels, AND its current label's label (path
-    halving), until a round changes nothing.  The jump step makes
-    convergence O(log diameter) instead of O(diameter) — a
-    million-node duplicate chain resolves in ~20 rounds, not a
-    million.  Each round is two equi-joins + one partial-aggregating
-    groupBy, the standard Spark CC shape.  ``localCheckpoint``
-    truncates lineage every round so the plan does not grow
-    superlinearly with iterations — at 10^12-row scale an uncut
-    25-round lineage would overwhelm the optimizer long before the
-    data hurts.
+    halving), until a round changes nothing.  Rounds depend on how ids
+    lie along a path: a path whose ids increase along it
+    (``test_dedup_clusters_long_path_worst_case``) converges in
+    O(log n) rounds, but with shuffled ids the jump rarely helps — a
+    64-node path needs 29 rounds and 1024-node ones 194–370.  Raises
+    ``RuntimeError`` when ``max_iters`` rounds pass and labels are
+    still changing; unconverged labels are never returned.  Each round
+    is two equi-joins + one partial-aggregating groupBy, the standard
+    Spark CC shape.
+
+    Every round's labels are cut into a fresh relation: a local
+    checkpoint (truncates the lineage) re-wrapped as a new DataFrame
+    over the checkpointed rows; the edges are checkpointed once.
+    ``localCheckpoint`` alone keeps the origin plan's size estimate,
+    which every join multiplies: the estimate's digit count doubled per
+    round and past ~20 rounds the driver stalled in statistics
+    arithmetic.  The fresh relation starts from the default estimate
+    each round (AQE still plans the joins from runtime sizes).
 
     The per-round convergence probe is a driver-side count — inherent
     to any fixpoint loop and proportional to rounds, not rows.  The
     probe costs NO extra join: each round carries the pre-step label
     alongside the new one, so change detection is a map-side filter
-    over the already-checkpointed round output (round-5: this removed
-    one shuffle join per round)."""
+    over the already-checkpointed round output."""
+    spark = pairs.sparkSession
+
+    def cut(df: DataFrame) -> DataFrame:
+        cp = df.localCheckpoint(eager=True)
+        return DataFrame(spark._jsparkSession.createDataFrame(
+            cp._jdf.rdd(), cp._jdf.schema()), spark)
+
     edges = (pairs.select(F.col(id_a).alias("src"),
                           F.col(id_b).alias("dst"))
                   .union(pairs.select(F.col(id_b).alias("src"),
@@ -598,18 +648,19 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
         # halves remaining path length every round
         parents = stepped.select(F.col("id").alias("cluster_id"),
                                  F.col("cluster_id").alias("_pp"))
-        nxt = (stepped.join(parents, "cluster_id", "left")
-                      .select("id", "_old",
-                              F.least("cluster_id",
-                                      F.coalesce("_pp", "cluster_id"))
-                               .alias("cluster_id"))
-                      .localCheckpoint(eager=False))
+        nxt = cut(stepped.join(parents, "cluster_id", "left")
+                         .select("id", "_old",
+                                 F.least("cluster_id",
+                                         F.coalesce("_pp", "cluster_id"))
+                                  .alias("cluster_id")))
         changed = (nxt.filter(F.col("cluster_id") != F.col("_old"))
                       .limit(1).count())
         labels = nxt.select("id", "cluster_id")
         if changed == 0:
-            break
-    return labels.select("id", "cluster_id")
+            return labels
+    raise RuntimeError(
+        f"dedup_clusters: labels still changing after max_iters="
+        f"{max_iters} rounds; raise max_iters")
 
 
 def cluster_canonical(df: DataFrame, clusters: DataFrame,
@@ -651,32 +702,6 @@ def cluster_canonical(df: DataFrame, clusters: DataFrame,
 # plain parquet files at the same path - correct, just re-shuffled.
 # At production scale the catalog is persistent (Hive/Glue/Iceberg),
 # so the degradation never happens there.
-
-def _minhash_artifacts(df: DataFrame, id_col: str, text_col: str,
-                       n: int, num_perm: int, bands: int):
-    """(bands_df, sizes_df, shingles_df) for one corpus or batch -
-    single shingle pass, same aggregation shape as minhash_lsh_pairs."""
-    r = num_perm // bands
-    par = df.sparkSession.sparkContext.defaultParallelism
-    idx = df.repartition(par, id_col) \
-            .select(F.col(id_col).alias("id"),
-                    F.explode(shingles(F.col(text_col), n)).alias("_sh"))
-    idx = idx.select("id", F.xxhash64("_sh").alias("shash"),
-                     F.col("_sh"))
-    mins = [F.min(F.xxhash64(F.lit(p), F.col("_sh"))).alias(f"_m{p}")
-            for p in range(num_perm)]
-    sigs = idx.groupBy("id").agg(F.count(F.lit(1)).alias("n"), *mins)
-    banded = (sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col(f"_m{b * r + i}") for i in range(r)])
-                      .alias("bh"))
-            for b in range(bands)])).alias("_b"))
-        .select("id", F.col("_b.band").alias("band"),
-                F.col("_b.bh").alias("bh")))
-    return banded, sigs.select("id", "n"), idx.select("id", "shash")
-
 
 # (artifact name, bucket columns, sort columns) for the bucketed writes
 _INDEX_LAYOUT = {
@@ -858,7 +883,6 @@ def incremental_minhash_pairs(new_df: DataFrame, index_path: str, *,
     overlap, sizes from the index - identical semantics to
     :func:`minhash_lsh_pairs` with ``verify=True``.
     """
-    from pyspark import StorageLevel
     spark = new_df.sparkSession
     nb, ns, nsh = _minhash_artifacts(new_df, id_col, text_col,
                                      n, num_perm, bands)
@@ -889,35 +913,17 @@ def incremental_minhash_pairs(new_df: DataFrame, index_path: str, *,
                .select(F.least("_ida", "_idb").alias("_ida"),
                        F.greatest("_ida", "_idb").alias("_idb"))
                .distinct())
-    all_sh = ish.unionByName(nsh)
-    all_sz = isz.unionByName(ns)
-    ca = cands.join(all_sh.withColumnRenamed("id", "_ida"), "_ida") \
-              .select("_ida", "_idb", "shash")
-    cb = all_sh.select(F.col("id").alias("_idb"), "shash")
-    common = (ca.join(cb, ["_idb", "shash"])
-                .groupBy("_ida", "_idb")
-                .agg(F.count(F.lit(1)).alias("_common")))
-    out = (common
-           .join(all_sz.select(F.col("id").alias("_ida"),
-                               F.col("n").alias("_na")), "_ida")
-           .join(all_sz.select(F.col("id").alias("_idb"),
-                               F.col("n").alias("_nb")), "_idb")
-           .withColumn("jaccard",
-                       F.col("_common") /
-                       (F.col("_na") + F.col("_nb") - F.col("_common")))
-           .filter(F.col("jaccard") >= threshold))
-    is_new = new_ids.select(F.col("id").alias("_ida"),
+    out = _verify_pairs(cands, ish.unionByName(nsh), isz.unionByName(ns),
+                        threshold)
+    is_new = new_ids.select(F.col("id").alias("id_a"),
                             F.lit(True).alias("_new_a"))
-    is_new_b = new_ids.select(F.col("id").alias("_idb"),
+    is_new_b = new_ids.select(F.col("id").alias("id_b"),
                               F.lit(True).alias("_new_b"))
-    out = (out.join(is_new, "_ida", "left").join(is_new_b, "_idb", "left")
-              .withColumn("scope",
-                          F.when(F.coalesce("_new_a", F.lit(False))
-                                 & F.coalesce("_new_b", F.lit(False)),
-                                 "new_new").otherwise("new_corpus")))
-    return out.select(F.col("_ida").alias("id_a"),
-                      F.col("_idb").alias("id_b"),
-                      "jaccard", "scope")
+    scope = F.when(F.coalesce("_new_a", F.lit(False))
+                   & F.coalesce("_new_b", F.lit(False)),
+                   "new_new").otherwise("new_corpus")
+    return (out.join(is_new, "id_a", "left").join(is_new_b, "id_b", "left")
+               .select("id_a", "id_b", "jaccard", scope.alias("scope")))
 
 
 # --- semantic dedup (SemDeDup-style) ---------------------------------------
@@ -927,7 +933,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                    threshold: float = 0.95, n_lists: int = 16,
                    dim: int | None = None, seed: int = 0,
                    persist_index: bool = True,
-                   max_cluster_size: int | None = None) -> DataFrame:
+                   max_cluster_size: int | None = _VALVE) -> DataFrame:
     """Cluster-then-threshold semantic dedup (SemDeDup, Abbas et al.
     2023, arXiv:2303.09540): assign every embedding to its nearest
     coarse-quantizer centroid, then drop any item that has a
@@ -948,16 +954,16 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     cluster boundary for a single-join plan — the paper's trade.
 
     ``max_cluster_size`` is the quadratic-blowup valve (the analogue
-    of ``max_shingle_freq``): a degenerate corpus can collapse into
-    one cluster, making the within-cluster pair join O(n²) no matter
-    how the shuffle is split.  With a cap set, clusters above it are
-    deterministically sub-blocked (salt = ``xxhash64(id) mod
-    ceil(size/cap)``) and pairs generate only WITHIN a sub-block —
-    pair count bounded by ``size·cap`` instead of ``size²``, at a
-    documented recall cost (a dup pair split across sub-blocks is
-    missed; collision probability ``1/n_sub`` per pair).
+    of ``max_shingle_freq``; default 1000, None = uncapped): a
+    degenerate corpus can collapse into one cluster, making the
+    within-cluster pair join O(n²) no matter how the shuffle is split.
+    Clusters above the cap are sub-blocked by :func:`_bucket_pairs` —
+    pairs generate only WITHIN a sub-block, about ``size·cap/2`` of
+    them instead of ``size²/2``, at a documented recall cost (a dup
+    pair split across sub-blocks is missed; it shares a sub-block with
+    probability ``1/n_sub``).  Vectors and norms ride through the join
+    as payload, so cosine scoring needs no join back.
     """
-    from pyspark import StorageLevel
     from joi_spark.operators.similarity import (_ivf_probe_pandas_udf,
                                                 dot_pandas_udf,
                                                 ivf_centroids, norm_expr,
@@ -971,34 +977,18 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
         norm_expr(vec_col, dim).alias("_nrm"),
         _ivf_probe_pandas_udf(cents, 1)(F.col(vec_col))[0]
         .alias("list_id"))
-    if persist_index:
-        # both pair sides + the final keep join read the same
-        # materialization; persist_index=False for callers managing
-        # cache pressure themselves
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    join_keys = ["list_id"]
-    if max_cluster_size is not None:
-        # same valve as the LSH tiers — ONE implementation
-        # (:func:`_sub_block`): under-cap clusters take _sub = 0,
-        # over-cap ones salt by ceil(size/cap)
-        assigned, join_keys = _sub_block(assigned, id_col, join_keys,
-                                         max_cluster_size)
-    a = assigned.select(F.col(id_col).alias("_ida"), *join_keys,
-                        F.col(vec_col).alias("_va"),
-                        F.col("_nrm").alias("_na"))
-    b = assigned.select(F.col(id_col).alias("_idb"), *join_keys,
-                        F.col(vec_col).alias("_vb"),
-                        F.col("_nrm").alias("_nb"))
+    # with persist_index, _bucket_pairs caches `assigned`; the final
+    # keep join below reads that same cached relation
+    pairs = _bucket_pairs(assigned, id_col, ["list_id"], max_cluster_size,
+                          persist_index)
     # Arrow-batched dot kept OUT of the join condition (see
     # embedding_near_pairs for the measured reason)
-    cs = dot_pandas_udf()(F.col("_va"), F.col("_vb")) \
-        / (F.col("_na") * F.col("_nb"))
-    dup = (a.join(b, join_keys)
-            .filter(F.col("_ida") < F.col("_idb"))
-            .withColumn("_cs", cs)
-            .filter(F.col("_cs") >= threshold)
-            .groupBy(F.col("_idb").alias(id_col))
-            .agg(F.min("_ida").alias("dup_of")))
+    cs = dot_pandas_udf()(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")) \
+        / (F.col("_nrm_a") * F.col("_nrm_b"))
+    dup = (pairs.withColumn("_cs", cs)
+                .filter(F.col("_cs") >= threshold)
+                .groupBy(F.col("_idb").alias(id_col))
+                .agg(F.min("_ida").alias("dup_of")))
     return (assigned.select(id_col, "list_id").join(dup, id_col, "left")
                     .select(id_col, "list_id",
                             F.col("dup_of").isNull().alias("keep"),
@@ -1027,7 +1017,7 @@ def _window_index(df: DataFrame, id_col: str, text_col: str, n: int,
     ).otherwise(F.array().cast("array<string>"))
     # fan out before the window-hash explode — a single-file input
     # otherwise computes every md5 on one core (same rationale as
-    # _minhash_artifacts; at production scale the input arrives
+    # _shingle_index; at production scale the input arrives
     # pre-split and this is a cheap doc-once shuffle)
     par = df.sparkSession.sparkContext.defaultParallelism
     pos = (df.repartition(par, id_col)
@@ -1035,7 +1025,6 @@ def _window_index(df: DataFrame, id_col: str, text_col: str, n: int,
                      F.posexplode_outer(wins).alias("_p", "_w"))
              .select("id", (F.col("_p") + 1).alias("_i"), "_w"))
     if persist:
-        from pyspark import StorageLevel
         pos = pos.persist(StorageLevel.MEMORY_AND_DISK)
     return pos
 

@@ -511,3 +511,30 @@ def test_rotation_tail_oracle_smoke(spark):
     assert len(tail) == len(entry_mod.queries()) - 50 >= 20
     failures = check_queries(spark, "/root/testdata/sf0.001", set(tail))
     assert failures == 0
+
+
+def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
+    """NaN, ±inf and unsafe-range numeric strings fail the number
+    branch in the engine (number.base / .infinity / .unsafe), so
+    alternatives(number, boolean) reports them; the DuckDB oracle of
+    the ``alternatives_types`` query must agree row for row."""
+    duckdb = pytest.importorskip("duckdb")
+    import sys
+    sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parents[1]))
+    import __spark_entry__ as entry_mod
+    vals = ["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "1.5", " 2 ",
+            "true", "FALSE", "view", None]
+    spark.createDataFrame(list(enumerate(vals)),
+                          "event_id bigint, event_type string") \
+         .coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+    cols = ["event_id", "code", "message", "severity"]
+    got = entry_mod.queries()["alternatives_types"](spark, str(tmp_path))
+    got = sorted(tuple(r) for r in got.select(*cols).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"'{tmp_path}/events.parquet/*.parquet'")
+    want = con.execute(entry_mod.oracle_sql()["alternatives_types"]).df()
+    want = sorted(want[cols].itertuples(index=False, name=None))
+    assert got == want
+    assert sorted(vals[r[0]] for r in got) == \
+        sorted(["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "view"])

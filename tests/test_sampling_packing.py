@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import hashlib
 import math
+import random
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -186,6 +188,51 @@ def test_dedup_clusters_long_path_worst_case(spark):
     got = DD.dedup_clusters(pairs).collect()
     assert all(r["cluster_id"] == 0 for r in got)
     assert len(got) == 31
+
+
+def _shuffled_path(spark, n):
+    ids = random.Random(0).sample(range(n), n)
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    return edges, spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+
+
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dedup_clusters_shuffled_path_matches_union_find(spark):
+    """A 64-node path with shuffled ids needs 29 rounds (pointer
+    jumping barely helps when ids do not increase along the path).
+    Each round starts from a fresh relation, so the planner's size
+    estimate does not compound: before, it doubled in digits per
+    round and past ~20 rounds the driver hung in statistics
+    arithmetic."""
+    edges, pairs = _shuffled_path(spark, 64)
+    t0 = time.time()
+    got = {r["id"]: r["cluster_id"]
+           for r in DD.dedup_clusters(pairs, max_iters=40).collect()}
+    assert time.time() - t0 < 180
+    assert got == _union_find(edges)
+
+
+def test_dedup_clusters_raises_when_not_converged(spark):
+    """The default 25 rounds are not enough for the shuffled 64-node
+    path: the loop raises instead of returning unconverged labels."""
+    _, pairs = _shuffled_path(spark, 64)
+    with pytest.raises(RuntimeError, match="max_iters=25"):
+        DD.dedup_clusters(pairs)
 
 
 def test_cluster_canonical_keeps_min_and_unclustered(spark):

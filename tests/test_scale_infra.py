@@ -348,6 +348,31 @@ def test_bench_fixture_stays_clean_past_a_million_convs(spark):
     assert res.violations().count() == 0
 
 
+def test_bench_compact_line_fits_1kb():
+    """bench.py prints a compact summary after the full result line so
+    a tail-limited reader still gets whole JSON: at the suite's 71
+    queries it stays ≤ 1 KB and keeps the 5 slowest warm queries."""
+    import json
+    import sys
+    sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parents[1]))
+    import bench as B
+    queries = {f"query_with_a_long_name_{i:02d}": round(0.1 + i * 0.137, 3)
+               for i in range(71)}
+    out = {"metric": "total_sec", "value": 123.456, "unit": "sec",
+           "queries": queries, "queries_cold": dict(queries), "sf": 0.1,
+           "validated_turns_per_sec": 2651786,
+           "transcript": {"turns": 8000001, "sec": 3.017}}
+    line = B.compact_line(out)
+    assert len(line.encode()) <= 1024
+    got = json.loads(line)
+    assert {k: got[k] for k in ("metric", "value", "unit", "sf",
+                                "validated_turns_per_sec")} == \
+        {k: out[k] for k in ("metric", "value", "unit", "sf",
+                             "validated_turns_per_sec")}
+    assert list(got["slowest_queries"]) == \
+        [f"query_with_a_long_name_{i:02d}" for i in (70, 69, 68, 67, 66)]
+
+
 def test_query_outputs_stable_under_shuffle_partitioning(spark):
     """Canonical outputs must not depend on the shuffle partition
     count (tie-breaks, heap merges, and hash-aggregate orders all

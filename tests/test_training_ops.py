@@ -893,17 +893,96 @@ def test_simhash_bucket_valve(spark):
     assert capped < full / 3
 
 
-def test_minhash_valve_preserves_under_cap_recall(docs):
-    """Buckets under the cap are untouched — with a cap far above any
-    bucket size the valve is a no-op and results match exactly."""
-    base = {(r["id_a"], r["id_b"]) for r in
-            DD.minhash_lsh_pairs(docs, threshold=0.5,
-                                 persist_index=False).collect()}
-    valved = {(r["id_a"], r["id_b"]) for r in
-              DD.minhash_lsh_pairs(docs, threshold=0.5,
-                                   persist_index=False,
-                                   max_bucket_size=1000).collect()}
-    assert valved == base
+# (capped call at default arguments, uncapped reference) per tier
+_VALVE_TIERS = {
+    "minhash": (lambda d, v: DD.minhash_lsh_pairs(d, threshold=0.5),
+                lambda d, v: DD.minhash_lsh_pairs(d, threshold=0.5,
+                                                  max_bucket_size=None)),
+    "simhash": (lambda d, v: DD.simhash_near_pairs(d),
+                lambda d, v: DD.simhash_near_pairs(d,
+                                                   max_bucket_size=None)),
+    "semantic": (lambda d, v: DD.semantic_dedup(v, threshold=0.9,
+                                                n_lists=4),
+                 lambda d, v: DD.semantic_dedup(v, threshold=0.9, n_lists=4,
+                                                max_cluster_size=None)),
+    "embedding": (lambda d, v: DD.embedding_near_pairs(v, threshold=0.9),
+                  lambda d, v: DD.embedding_near_pairs(v, threshold=0.9,
+                                                       exact=True)),
+}
+
+
+@pytest.mark.parametrize("tier", list(_VALVE_TIERS))
+def test_bucket_valve_preserves_under_cap_recall(docs, vecs, tier):
+    """Buckets under the cap are untouched — on an input far below the
+    default cap the valve is a no-op and every tier's default output
+    equals its uncapped run (the exact all-pairs baseline for
+    embeddings)."""
+    capped, uncapped = _VALVE_TIERS[tier]
+    got = sorted(tuple(r) for r in capped(docs, vecs).collect())
+    want = sorted(tuple(r) for r in uncapped(docs, vecs).collect())
+    assert got == want
+    assert got                     # every tier finds its near-dups
+
+
+def test_bucket_pairs_hot_key_bounded_by_cap(spark):
+    """10^4 rows on one bucket key: the self-join emits ~m·cap/2 pairs
+    inside deterministic sub-blocks instead of m²/2 (5·10^7)."""
+    m, cap = 10_000, 1000
+    df = spark.range(m).select(F.col("id"), F.lit(7).alias("k"))
+    pairs = DD._bucket_pairs(df, "id", ["k"], cap, persist=False)
+    assert 0 < pairs.count() <= m * cap
+    assert pairs.filter("_ida >= _idb").count() == 0
+
+
+def _hot_docs(spark, m):
+    return spark.range(m).select(
+        F.col("id").alias("doc_id"),
+        F.lit("the same boilerplate sentence shared by every single "
+              "document in this degenerate corpus").alias("text"))
+
+
+def _hot_vecs(spark, m):
+    return spark.range(m).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.lit(x) for x in (1.0, 0.5, 0.0, 0.25)])
+         .cast("array<float>").alias("embedding"))
+
+
+# m > 2·cap + 1, so the uncapped m(m-1)/2 candidates exceed m·cap
+_HOT_M = 2500
+
+
+@pytest.mark.parametrize("tier", ["minhash", "simhash", "embedding"])
+def test_default_valve_bounds_hot_bucket_pairs(spark, tier):
+    """Every row identical → one bucket per band/chunk/table holds all
+    m rows.  At DEFAULT arguments the candidate count stays ≤ m·cap
+    (cap = 1000); identical rows pass every verification, so the
+    output count is the candidate count."""
+    m = _HOT_M
+    if tier == "minhash":
+        out = DD.minhash_lsh_pairs(_hot_docs(spark, m), verify=False)
+    elif tier == "simhash":
+        out = DD.simhash_near_pairs(_hot_docs(spark, m))
+    else:
+        out = DD.embedding_near_pairs(_hot_vecs(spark, m), threshold=0.9)
+    n = out.count()
+    assert 0 < n <= m * 1000 < m * (m - 1) // 2
+
+
+def test_default_valve_bounds_hot_semantic_cluster(spark):
+    """All vectors identical → one SemDeDup cluster of m.  With the
+    default cap each sub-block keeps its own minimum id and every
+    other member points at it, so the sub-blocks — and the candidate
+    pairs inside them — are read off the output: ≤ m·cap pairs."""
+    m = _HOT_M
+    out = DD.semantic_dedup(_hot_vecs(spark, m), threshold=0.9,
+                            n_lists=4).collect()
+    blocks = {}
+    for r in out:
+        root = r["vec_id"] if r["keep"] else r["dup_of"]
+        blocks[root] = blocks.get(root, 0) + 1
+    assert len(out) == m and len(blocks) > 1
+    assert sum(s * (s - 1) // 2 for s in blocks.values()) <= m * 1000
 
 
 def test_minhash_index_reader_falls_back_to_plain_parquet(spark, tmp_path):
