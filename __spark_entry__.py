@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import joi_spark as joi
+from joi_spark.functions import regexes as RX
 from joi_spark.operators import corpus as CP
 from joi_spark.operators import dataset as DS
 from joi_spark.operators import dedup as DD
@@ -1854,10 +1855,11 @@ def oracle_sql() -> dict[str, str]:
                    'error' AS severity
             FROM events
             WHERE event_type IS NOT NULL
-              -- NULL casts, NaN, ±inf and |x| > 2^53-1 all fail the
-              -- number branch (number.base / .infinity / .unsafe)
+              -- the number branch parses only the engine's numeric
+              -- grammar (DuckDB's own cast also takes '1_000');
+              -- overflow to ±inf and |x| > 2^53-1 fail number.unsafe
               AND NOT coalesce(
-                  isfinite(try_cast(event_type AS DOUBLE))
+                  regexp_matches(event_type, '""" + RX.NUMBER + """')
                   AND abs(try_cast(event_type AS DOUBLE))
                       <= 9007199254740991, false)
               AND lower(event_type) NOT IN ('true', 'false')
@@ -1919,12 +1921,16 @@ def oracle_sql() -> dict[str, str]:
                 FROM toks)),
             sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
             -- candidate generation drops shingles hotter than the
-            -- max_shingle_freq=1000 default valve (sizes stay unpruned)
+            -- max_shingle_freq=1000 default valve; a candidate's shared
+            -- count and the sizes stay over the unpruned sets
             shp AS (SELECT sh.doc_id, sh.s FROM sh
                     JOIN (SELECT s FROM sh GROUP BY s
                           HAVING count(*) <= 1000) hot USING (s)),
-            common AS (SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS c
-                       FROM shp a JOIN shp b ON a.s = b.s AND a.doc_id < b.doc_id
+            cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
+                     FROM shp a JOIN shp b ON a.s = b.s AND a.doc_id < b.doc_id),
+            common AS (SELECT ida, idb, count(*) AS c
+                       FROM cand JOIN sh a ON a.doc_id = ida
+                       JOIN sh b ON b.doc_id = idb AND b.s = a.s
                        GROUP BY 1, 2),
             j AS (SELECT ida, idb, c / (sa.n + sb.n - c) AS jac
                   FROM common
@@ -2310,14 +2316,16 @@ def oracle_sql() -> dict[str, str]:
                 FROM toks)),
             sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
             -- same max_shingle_freq=1000 candidate valve as the
-            -- ngram_jaccard oracle (sizes stay unpruned)
+            -- ngram_jaccard oracle (shared counts and sizes unpruned)
             shp AS (SELECT sh.doc_id, sh.s FROM sh
                     JOIN (SELECT s FROM sh GROUP BY s
                           HAVING count(*) <= 1000) hot USING (s)),
-            common AS (SELECT a.doc_id AS ida, b.doc_id AS idb,
-                              count(*) AS c
-                       FROM shp a JOIN shp b
-                         ON a.s = b.s AND a.doc_id < b.doc_id
+            cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
+                     FROM shp a JOIN shp b
+                       ON a.s = b.s AND a.doc_id < b.doc_id),
+            common AS (SELECT ida, idb, count(*) AS c
+                       FROM cand JOIN sh a ON a.doc_id = ida
+                       JOIN sh b ON b.doc_id = idb AND b.s = a.s
                        GROUP BY 1, 2),
             p AS (SELECT ida, idb
                   FROM common

@@ -14,6 +14,10 @@ value, ``empty``, ``when(is=...)``, object ``assert`` — runs through the
 same sequence (the reference recurses into the full ``$_validate`` with
 the caller's prefs), and :func:`value_predicate` only folds its checks
 to pass/fail, so a value context cannot drift from the column check.
+A struct object's keys — children, pattern and unknown fields,
+dependencies — are one step of that sequence, and a declared key with
+no column or struct field runs it on a typed null.  ``Check.seq``
+numbers the checks of the whole plan in compile order.
 
 Everything is built from ``pyspark.sql.functions`` — whole-stage-codegen
 eligible, no per-row Python.  Catalyst constant-folds the trivially-true
@@ -114,16 +118,19 @@ class _Ctx:
         return self.seq
 
     def resolve(self, v):
-        """Limit/value → Column (refs see converted siblings);
-        ref adjust/map transforms apply after resolution
-        (reference: lib/ref.js:150-161)."""
+        """Limit/value → Column (refs see converted siblings; a key
+        that is neither declared nor a column resolves to null, as a
+        missing key does in the reference); ref adjust/map transforms
+        apply after resolution (reference: lib/ref.js:150-161)."""
         if isinstance(v, Ref):
             if v.kind == "global":
                 base = F.lit(self.context.get(v.key))
             elif v.key in self.conversions:
                 base = self.conversions[v.key]
-            else:
+            elif v.key.split(".")[0] in self.columns:
                 base = F.col(v.key)
+            else:
+                base = F.lit(None)
             return v.apply(base)
         return F.lit(v)
 
@@ -562,10 +569,11 @@ def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
                                "number.unsafe", {}))
             return col, dtype, checks
         if _is_string_like(dtype) and convert:
-            conv = col.try_cast("double")
+            # only the reference's numeric-string grammar parses
+            # (lib/types/number.js:28-63); '1d', '1_000', '0x10', 'NaN'
+            # and 'Infinity' stay strings and fail number.base
+            conv = F.when(col.rlike(RX.NUMBER), col.try_cast("double"))
             checks.append((conv.isNotNull() | col.isNull(), "number.base", {}))
-            checks.append((~F.coalesce(F.isnan(conv), F.lit(False)),
-                           "number.base", {}))
             if not schema._flags.get("unsafe"):
                 checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)), F.lit(True)),
                                "number.unsafe", {}))
@@ -696,92 +704,14 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     the column ``name`` unless ``col`` gives the value expression (a
     struct field, an array element, a map value — see
     :func:`value_predicate`).  ``cond`` guards every check (used by
-    when/conditional schemas)."""
-    col = F.col(name) if col is None else col
-    if isinstance(schema, ObjectSchema) and isinstance(dtype, T.StructType) \
-            and schema._terms.get("keys"):
-        # struct column: the reference's nested object().keys()
-        # (lib/types/object.js:114-142) — fields address as dotted paths,
-        # which Spark resolves without any flattening projection
-        presence = schema._flags.get("presence")
-        if presence == "required":
-            label = _label(schema, name)
-            msg = E.render_static("any.required", {"label": label},
-                                  overrides=schema._messages)
-            plan.checks.append(Check(ctx.next_seq(), name, "any.required",
-                                     F.coalesce(col.isNotNull(),
-                                                F.lit(False)),
-                                     F.lit(msg)))
-        fields = {f.name: f.dataType for f in dtype.fields}
-        # children of an ABSENT (null) parent are skipped entirely —
-        # a required child fires only when the parent struct is present
-        # (reference: lib/types/object.js:114-142 validates keys of the
-        # resolved object value; a null parent never recurses)
-        parent_ok = col.isNotNull()
-        child_cond = parent_ok if cond is None else (cond & parent_ok)
-        for k, sub in schema._terms["keys"].items():
-            if k not in fields:
-                if sub._flags.get("presence") == "required":
-                    label = _label(sub, f"{name}.{k}")
-                    msg = E.render_static("any.required", {"label": label},
-                                          overrides=sub._messages)
-                    # statically-missing field: fails exactly where the
-                    # parent is present
-                    plan.checks.append(Check(ctx.next_seq(), f"{name}.{k}",
-                                             "any.required",
-                                             ~F.coalesce(child_cond,
-                                                         F.lit(False)),
-                                             F.lit(msg)))
-                continue
-            compile_column(sub, f"{name}.{k}", fields[k], ctx, plan,
-                           cond=child_cond, col=col.getField(k))
-        # pattern keys + unknown policy over the REMAINING struct
-        # fields (reference: lib/types/object.js:340-370, 970-1077);
-        # a field counts as present when it is non-null (Joi skips
-        # undefined values)
-        import re as _re3
-        pats = schema._terms.get("patterns") or []
-        for f in dtype.fields:
-            if f.name in schema._terms["keys"]:
-                continue
-            pat = next((p for p in pats
-                        if _re3.search(p["regex"], f.name)), None)
-            if pat is not None:
-                compile_column(pat["rule"], f"{name}.{f.name}",
-                               f.dataType, ctx, plan, cond=child_cond,
-                               col=col.getField(f.name))
-            elif schema._flags.get("unknown") is False:
-                label = f"{name}.{f.name}"
-                msg = E.render_static("object.unknown", {"label": label},
-                                      overrides=schema._messages)
-                present = F.coalesce(child_cond, F.lit(False)) & \
-                    col.getField(f.name).isNotNull()
-                plan.checks.append(Check(ctx.next_seq(), label,
-                                         "object.unknown", ~present,
-                                         F.lit(msg)))
-        # per-row key-count rules: count of non-null fields
-        # (reference: lib/types/object.js:278-313 counts present keys)
-        for rule in schema._rules:
-            if rule.name not in ("length", "min", "max"):
-                continue
-            nk = _balanced([col.getField(f.name).isNotNull()
-                            .cast("int") for f in dtype.fields],
-                           operator.add, F.lit(0))
-            limit = rule.args["limit"]
-            pred = {"length": nk == limit, "min": nk >= limit,
-                    "max": nk <= limit}[rule.name]
-            label = _label(schema, name)
-            msg = E.render_static(f"object.{rule.name}",
-                                  {"label": label, "limit": limit},
-                                  overrides=schema._messages)
-            ok = F.when(~F.coalesce(child_cond, F.lit(False)),
-                        F.lit(True)).otherwise(
-                F.coalesce(pred, F.lit(False)))
-            plan.checks.append(Check(ctx.next_seq(), name,
-                                     f"object.{rule.name}", ok,
-                                     F.lit(msg)))
-        return
+    when/conditional schemas).
 
+    A struct value's ``keys()`` children, pattern fields, unknown
+    fields and dependencies are one more step of this sequence, and a
+    declared key with no column or field compiles here on a typed null
+    (:func:`_compile_absent`): every check of a value comes from
+    ``emit``, numbered by the one plan-wide ``seq`` counter."""
+    col = F.col(name) if col is None else col
     if schema.type == "link":
         # late-bound schema reuse (reference: lib/types/link.js:35-59):
         # resolve against object().shared(...) registrations and compile
@@ -797,14 +727,13 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     prefs = {**ctx.prefs, **(schema._preferences or {})}
     local = _Ctx(ctx.columns, ctx.conversions, prefs, ctx.context,
                  ctx.shared, ctx.dtypes)
-    local.seq = ctx.seq
 
     error_flag = schema._flags.get("error")
 
     def emit(pred: Column, code: str, mctx: dict, *, guard: Column | None = None,
              severity: str = "error", message_override: str | None = None,
              value_col: Column | None = None,
-             dynamic_message: Column | None = None):
+             dynamic_message: Column | None = None, path: str | None = None):
         mctx = {"label": label, **mctx}
         ov = dict(overrides)
         if message_override:
@@ -829,7 +758,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             g = cond if g is None else (g & cond)
         if g is not None:
             okc = F.when(~F.coalesce(g, F.lit(False)), F.lit(True)).otherwise(okc)
-        plan.checks.append(Check(ctx.next_seq(), name, code, okc, msg, severity))
+        plan.checks.append(Check(ctx.next_seq(), path or name, code, okc, msg,
+                                 severity))
 
     # 1. coerce --------------------------------------------------------
     conv, conv_dtype, base_checks = _coerce(schema, col, dtype, local, label)
@@ -865,7 +795,6 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     if conv_dtype is None:
         # the value can never have this type: only the base error can
         # fire, and later rules would not even type-check against it
-        ctx.seq = local.seq
         _emit_output(schema, name, conv, plan, local, dtype)
         return
 
@@ -892,7 +821,6 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             # only-mode: matching values skip rules; failing values report
             # just any.only (reference: lib/validator.js:196-214) — no
             # further checks compile for this column
-            ctx.seq = local.seq
             _emit_output(schema, name, conv, plan, local, dtype)
             return
 
@@ -926,6 +854,43 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             emit(conv != F.lit(""), "string.empty", {}, guard=rule_guard)
             rule_guard = rule_guard & F.coalesce(conv != F.lit(""),
                                                  F.lit(True))
+    if schema.kind == "object" and isinstance(conv_dtype, T.StructType):
+        # object keys of a struct value (reference: lib/types/object.js:
+        # 114-142): children recurse by dotted path only where the
+        # parent is present, then pattern fields, unknown fields
+        # (present = non-null, as Joi skips undefined; checked only
+        # once keys or patterns are declared) and dependencies
+        fields = {f.name: f.dataType for f in conv_dtype.fields}
+        keys = schema._terms.get("keys") or {}
+        child_cond = rule_guard if cond is None else (cond & rule_guard)
+        for k, sub in keys.items():
+            if k in fields:
+                compile_column(sub, f"{name}.{k}", fields[k], ctx, plan,
+                               cond=child_cond, col=conv.getField(k))
+            else:
+                _compile_absent(sub, f"{name}.{k}", ctx, plan, child_cond)
+        pats = schema._terms.get("patterns") or []
+        for f, ftype in fields.items():
+            if f in keys:
+                continue
+            pat = next((p for p in pats if re.search(p["regex"], f)), None)
+            if pat is not None:
+                compile_column(pat["rule"], f"{name}.{f}", ftype, ctx, plan,
+                               cond=child_cond, col=conv.getField(f))
+            elif schema._flags.get("unknown") is False and (keys or pats):
+                emit(conv.getField(f).isNull(), "object.unknown",
+                     {"label": f"{name}.{f}"}, guard=rule_guard,
+                     path=f"{name}.{f}")
+
+        def field_present(k: str) -> Column:
+            if k not in fields:
+                return F.lit(False)
+            return ctx.conversions.get(f"{name}.{k}",
+                                       conv.getField(k)).isNotNull()
+
+        for dep in schema._terms.get("dependencies") or []:
+            for pred, code, mctx in _dependency_preds(dep, field_present):
+                emit(pred, code, mctx, guard=rule_guard)
 
     # 7. rules in chain order (reference: lib/validator.js:260-320)
     element = lambda s: value_predicate(s, local, conv_dtype.elementType)
@@ -1055,12 +1020,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         # still passes (presence guard)
         emit(F.lit(False), "alternatives.base", {}, guard=rule_guard)
     if schema.type == "alternatives" and len(matches) == 1:
-        n = len(plan.checks)
         compile_column(matches[0], name, dtype, ctx, plan, col=conv,
                        cond=rule_guard if cond is None else cond & rule_guard)
-        # the nested call restores ctx.seq on exit; later checks of
-        # this column must not reuse the branch's numbers
-        ctx.seq = max([ctx.seq] + [c.seq for c in plan.checks[n:]])
     if schema.type == "alternatives" and len(matches) >= 2:
         preds = [value_predicate(m, local, conv_dtype)(conv) for m in matches]
 
@@ -1146,8 +1107,26 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             compile_column(sub, name, dtype, ctx, plan, cond=sub_cond,
                            col=col)
 
-    ctx.seq = local.seq
     _emit_output(schema, name, conv, plan, local, dtype)
+
+
+# the Spark type of a declared key that has no column or struct field:
+# the one its schema expects, else string (every coerce starts from one)
+_ABSENT_DTYPES = {"number": T.DoubleType(), "boolean": T.BooleanType(),
+                  "date": T.TimestampType(), "binary": T.BinaryType(),
+                  "array": T.ArrayType(T.StringType()),
+                  "object": T.MapType(T.StringType(), T.StringType())}
+
+
+def _compile_absent(schema: Schema, name: str, ctx: _Ctx,
+                    plan: CompiledPlan, cond: Column | None = None) -> None:
+    """A declared key that is never present: the value is a typed null
+    run through :func:`compile_column`, so presence (``required``, the
+    ``presence`` pref, ``when``, ``error()``) decides as for any other
+    value and every value rule is vacuous."""
+    dtype = _ABSENT_DTYPES.get(schema.kind, T.StringType())
+    compile_column(schema, name, dtype, ctx, plan, cond=cond,
+                   col=F.lit(None).cast(dtype))
 
 
 def _emit_output(schema: Schema, name: str, conv: Column,
@@ -1267,7 +1246,6 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # - alias=True → SOURCE column is kept alongside the target
     #   (object.js:960-962: "if (!rename.options.alias) delete");
     # - multiple=False + two renames to one target → .multiple error.
-    import re as _re2
     columns = list(df.columns)
     renamed_targets: set[str] = set()
 
@@ -1328,7 +1306,7 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
         if r.get("regex"):
             # regex rename (reference: lib/types/object.js:898-938):
             # every matching column renames via pattern substitution
-            rx = _re2.compile(frm)
+            rx = re.compile(frm)
             for c in [c for c in columns if rx.search(c)]:
                 _apply_one(c, rx.sub(r["to"], c), r)
             continue
@@ -1342,10 +1320,9 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # pattern keys: unknown columns whose NAME matches the regex
     # validate against the pattern rule (reference:
     # lib/types/object.js:340-370,972-1041)
-    import re as _re
     pattern_cols: dict[str, Schema] = {}
     for pat in schema._terms.get("patterns") or []:
-        rx = _re.compile(pat["regex"])
+        rx = re.compile(pat["regex"])
         for c in columns:
             if c not in keys and c not in pattern_cols and rx.search(c):
                 pattern_cols[c] = pat["rule"]
@@ -1383,27 +1360,26 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # declaration order (reference topo-sorts keys: lib/types/object.js:598-625)
     order = _topo_order(keys)
     for k in order:
-        s = keys[k]
-        if k not in columns:
-            # missing column ≙ key never present: presence-required fails
-            # for every row; other rules vacuous
-            presence = s._flags.get("presence", merged_prefs.get("presence"))
-            if presence == "required":
-                label = _label(s, k)
-                msg = E.render_static("any.required", {"label": label},
-                                      overrides=s._messages)
-                plan.checks.append(Check(ctx.next_seq(), k, "any.required",
-                                         F.lit(False), F.lit(msg)))
-            continue
-        compile_column(s, k, dtypes[k], ctx, plan)
+        if k in columns:
+            compile_column(keys[k], k, dtypes[k], ctx, plan)
+        else:
+            _compile_absent(keys[k], k, ctx, plan)
 
     for c, rule_schema in pattern_cols.items():
         compile_column(rule_schema, c, dtypes[c], ctx, plan)
 
     # dependencies (reference: lib/types/object.js:724-872)
-    main_label = _label(schema, "")
+    def column_present(k: str) -> Column:
+        return ctx.conversions.get(k, F.col(k)).isNotNull()
+
     for dep in schema._terms.get("dependencies") or []:
-        _compile_dependency(dep, ctx, plan, main_label, schema._messages)
+        for pred, code, mctx in _dependency_preds(dep, column_present):
+            msg = E.render_static(code, {"label": main_label, **mctx},
+                                  overrides=schema._messages)
+            plan.checks.append(Check(ctx.next_seq(),
+                                     dep.key or ",".join(dep.peers), code,
+                                     F.coalesce(pred, F.lit(False)),
+                                     F.lit(msg)))
 
     # asserts (reference: lib/types/object.js:205-231)
     for a in schema._terms.get("asserts") or []:
@@ -1456,73 +1432,39 @@ def _topo_order(keys: dict[str, Schema]) -> list[str]:
     return out
 
 
-def _compile_dependency(dep: Dependency, ctx: _Ctx, plan: CompiledPlan,
-                        main_label: str, overrides: dict) -> None:
-    """and/or/xor/oxor/nand/with/without over column presence
-    (reference: lib/types/object.js:724-872)."""
-    def pres(k: str) -> Column:
-        return ctx.conversions.get(k, F.col(k)).isNotNull()
-
+def _dependency_preds(dep: Dependency, present: Callable[[str], Column]
+                      ) -> list[tuple[Column, str, dict]]:
+    """and/or/xor/oxor/nand/with/without over key presence as
+    ``(ok predicate, code, message context)`` — the one dependency
+    compiler, for table columns and struct fields alike (reference:
+    lib/types/object.js:724-872)."""
     peers = dep.peers
-    labels = [f'"{p}"' for p in peers]
-    peers_with_labels = ", ".join(labels)
-    n_present = None
-    for p in peers:
-        c = pres(p).cast("int")
-        n_present = c if n_present is None else (n_present + c)
-
-    code = f"object.{dep.rel}"
+    labels = E.stringify([f'"{p}"' for p in peers], False)
+    n_present = _balanced([present(p).cast("int") for p in peers],
+                          operator.add, F.lit(0))
     if dep.rel == "and":
-        pred = (n_present == 0) | (n_present == len(peers))
-        # message context (present/missing) varies per row; for the
-        # table-level realization we render the static peer list
-        msg = E.render_static(
-            "object.and",
-            {"label": main_label,
-             "presentWithLabels": E.stringify(labels, False),
-             "missingWithLabels": E.stringify(labels, False)},
-            overrides=overrides)
-        plan.checks.append(Check(ctx.next_seq(), ",".join(peers), code,
-                                 F.coalesce(pred, F.lit(False)), F.lit(msg)))
-        return
+        # present/missing vary per row; the static peer list renders
+        return [((n_present == 0) | (n_present == len(peers)), "object.and",
+                 {"presentWithLabels": labels, "missingWithLabels": labels})]
     if dep.rel == "or":
-        pred = n_present >= 1
-        code = "object.missing"
-        mctx = {"label": main_label,
-                "peersWithLabels": E.stringify(labels, False)}
-    elif dep.rel == "xor":
+        return [(n_present >= 1, "object.missing",
+                 {"peersWithLabels": labels})]
+    if dep.rel == "xor":
         # n=0 → object.missing, n>1 → object.xor — two distinct codes
         # (reference: lib/types/object.js:851-872)
-        mctx = {"label": main_label,
-                "peersWithLabels": E.stringify(labels, False)}
-        miss_msg = E.render_static("object.missing", mctx, overrides=overrides)
-        plan.checks.append(Check(ctx.next_seq(), ",".join(peers),
-                                 "object.missing",
-                                 F.coalesce(n_present >= 1, F.lit(False)),
-                                 F.lit(miss_msg)))
-        pred = n_present <= 1
-    elif dep.rel == "oxor":
-        pred = n_present <= 1
-        mctx = {"label": main_label,
-                "peersWithLabels": E.stringify(labels, False)}
-    elif dep.rel == "nand":
-        pred = n_present < len(peers)
-        mctx = {"mainWithLabel": peers[0],
-                "peersWithLabels": E.stringify([f'"{p}"' for p in peers[1:]], False)}
-    elif dep.rel == "with":
-        key_present = pres(dep.key)
-        pred = ~key_present | _balanced([pres(p) for p in peers],
-                                        operator.and_, F.lit(True))
-        mctx = {"mainWithLabel": dep.key, "peerWithLabel": peers[0]}
-    elif dep.rel == "without":
-        key_present = pres(dep.key)
-        pred = ~key_present | _balanced([~pres(p) for p in peers],
-                                        operator.and_, F.lit(True))
-        mctx = {"mainWithLabel": dep.key, "peerWithLabel": peers[0]}
-    else:
-        raise CompileError(f"unknown dependency {dep.rel!r}")
-    msg = E.render_static(code, mctx, overrides=overrides)
-    path = dep.key or ",".join(peers)
-    plan.checks.append(Check(ctx.next_seq(), path, code,
-                             F.coalesce(pred, F.lit(False)), F.lit(msg)))
-
+        return [(n_present >= 1, "object.missing", {"peersWithLabels": labels}),
+                (n_present <= 1, "object.xor", {"peersWithLabels": labels})]
+    if dep.rel == "oxor":
+        return [(n_present <= 1, "object.oxor", {"peersWithLabels": labels})]
+    if dep.rel == "nand":
+        return [(n_present < len(peers), "object.nand",
+                 {"mainWithLabel": peers[0],
+                  "peersWithLabels": E.stringify(
+                      [f'"{p}"' for p in peers[1:]], False)})]
+    if dep.rel in ("with", "without"):
+        want = present if dep.rel == "with" else (lambda p: ~present(p))
+        ok = ~present(dep.key) | _balanced([want(p) for p in peers],
+                                           operator.and_, F.lit(True))
+        return [(ok, f"object.{dep.rel}",
+                 {"mainWithLabel": dep.key, "peerWithLabel": peers[0]})]
+    raise CompileError(f"unknown dependency {dep.rel!r}")

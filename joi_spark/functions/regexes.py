@@ -19,6 +19,14 @@ TOKEN = r"^\w+$"
 # reference: lib/types/string/index.js:34 (hexRegex, case-insensitive)
 HEX = r"(?i)^[a-f0-9]+$"
 
+# numeric strings the number coerce parses — reference:
+# lib/types/number.js:28-63 (numberRx, case-insensitive).  Written so
+# Java and RE2 (the DuckDB oracle) accept the same strings: the
+# whitespace class names \x0B, which Java's \s has and RE2's lacks,
+# and \z ends the input where Java's $ would also match before a
+# final line terminator.
+NUMBER = r"(?i)^[\s\x0B]*[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:e[+-]?\d+)?[\s\x0B]*\z"
+
 # base64 variants keyed (padding_required, url_safe)
 # reference: lib/types/string/index.js:14-25 (RFC 4648 §4/§5)
 BASE64 = {

@@ -131,20 +131,23 @@ def _shingle_index(df: DataFrame, id_col: str, text_col: str, n: int,
     return idx
 
 
-def _prune_hot_shingles(idx: DataFrame, max_shingle_freq: int) -> DataFrame:
-    """Drop shingles whose document frequency exceeds the cap — via a
-    partial-aggregated ``groupBy`` + semi-join, NOT a window.
+def _shingle_freq(idx: DataFrame) -> DataFrame:
+    """Document frequency ``(_sh, _df)`` of each shingle — via a
+    partial-aggregated ``groupBy``, NOT a window.
 
     A ``count().over(Window.partitionBy("_sh"))`` would land EVERY copy
     of a hot shingle (the one stop-phrase shared by millions of docs —
-    the exact key this cap exists to defuse) in a single task while
+    the exact key the cap exists to defuse) in a single task while
     computing the frequency that is supposed to prune it.  The groupBy
     map-side combines the hot key to one row per input partition, and
-    the semi-join back is an equi-join AQE can skew-split."""
-    keep = (idx.groupBy("_sh")
-               .agg(F.count(F.lit(1)).alias("_df"))
-               .filter(F.col("_df") <= max_shingle_freq)
-               .select("_sh"))
+    the joins back are equi-joins AQE can skew-split."""
+    return idx.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
+
+
+def _prune_hot_shingles(idx: DataFrame, max_shingle_freq: int) -> DataFrame:
+    """Drop shingles whose document frequency exceeds the cap."""
+    keep = (_shingle_freq(idx).filter(F.col("_df") <= max_shingle_freq)
+                              .select("_sh"))
     return idx.join(keep, "_sh", "left_semi")
 
 
@@ -257,8 +260,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     no dedup signal (they occur in >cap docs), so near-dup pairs at
     ``threshold`` ≥ 0.5 are unaffected in practice.
     ``max_shingle_freq=None`` restores the exhaustive enumeration for
-    small corpora.  This self-join stays its own: it needs per-pair
-    shared counts, not distinct pairs, and its valve is the prune.
+    small corpora.  The prune only chooses the candidates: a
+    candidate's shared count is the pruned join's count plus the size
+    of the intersection of its two docs' hot-shingle sets (one array
+    per doc, joined on the candidate ids), so a reported pair has
+    exactly the Jaccard the uncapped run gives it; with no cap there
+    are no hot shingles and those joins are empty.  This self-join
+    stays its own: it needs per-pair shared counts, not distinct
+    pairs, and its valve is the prune.
 
     The exploded index feeds three consumers (both self-join sides +
     the per-doc set sizes); ``persist_index`` caches it so shingling
@@ -272,14 +281,29 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     # from candidate generation only; Jaccard is over full sets)
     sizes = idx.groupBy(F.col("_id").alias("id")) \
                .agg(F.count(F.lit(1)).alias("n"))
-    if max_shingle_freq is not None:
-        idx = _prune_hot_shingles(idx, max_shingle_freq)
-    a = idx.select(F.col("_id").alias("_ida"), "_sh")
-    b = idx.select(F.col("_id").alias("_idb"), "_sh")
+    # shingles hotter than the cap (none without one) leave candidate
+    # generation only: a candidate's shared count still holds them
+    hot = (idx.select("_sh").filter(F.lit(False))
+           if max_shingle_freq is None else
+           _shingle_freq(idx).filter(F.col("_df") > max_shingle_freq)
+                             .select("_sh"))
+    kept = idx.join(hot, "_sh", "left_anti")
+    a = kept.select(F.col("_id").alias("_ida"), "_sh")
+    b = kept.select(F.col("_id").alias("_idb"), "_sh")
     common = (a.join(b, "_sh")
                 .filter(F.col("_ida") < F.col("_idb"))
                 .groupBy("_ida", "_idb")
                 .agg(F.count(F.lit(1)).alias("_common")))
+    held = (idx.join(hot, "_sh", "left_semi")
+               .groupBy("_id").agg(F.collect_set("_sh").alias("_hs")))
+    ha = held.select(F.col("_id").alias("_ida"), F.col("_hs").alias("_ha"))
+    hb = held.select(F.col("_id").alias("_idb"), F.col("_hs").alias("_hb"))
+    none = F.array().cast("array<string>")   # size(NULL) is -1, not NULL
+    shared_hot = F.size(F.array_intersect(F.coalesce("_ha", none),
+                                          F.coalesce("_hb", none)))
+    common = (common.join(ha, "_ida", "left").join(hb, "_idb", "left")
+                    .select("_ida", "_idb",
+                            (F.col("_common") + shared_hot).alias("_common")))
     return _jaccard(common, sizes, threshold)
 
 

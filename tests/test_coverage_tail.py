@@ -514,8 +514,9 @@ def test_rotation_tail_oracle_smoke(spark):
 
 
 def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
-    """NaN, ±inf and unsafe-range numeric strings fail the number
-    branch in the engine (number.base / .infinity / .unsafe), so
+    """NaN, ±inf, unsafe-range numbers and strings outside the numeric
+    grammar ('1_000' DuckDB's cast takes, '1d'/'1f' Spark's cast takes)
+    fail the number branch in the engine (number.base / .unsafe), so
     alternatives(number, boolean) reports them; the DuckDB oracle of
     the ``alternatives_types`` query must agree row for row."""
     duckdb = pytest.importorskip("duckdb")
@@ -523,7 +524,7 @@ def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entry_mod
     vals = ["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "1.5", " 2 ",
-            "true", "FALSE", "view", None]
+            "true", "FALSE", "view", None, "1_000", "1d", "1f", "0x10"]
     spark.createDataFrame(list(enumerate(vals)),
                           "event_id bigint, event_type string") \
          .coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
@@ -537,4 +538,5 @@ def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
     want = sorted(want[cols].itertuples(index=False, name=None))
     assert got == want
     assert sorted(vals[r[0]] for r in got) == \
-        sorted(["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "view"])
+        sorted(["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "view",
+                "1_000", "1d", "1f", "0x10"])

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 import joi_spark as joi
 
 
@@ -180,3 +182,117 @@ def test_nested_struct_key_count(spark):
     got = [(r["id"], r["code"], r["message"])
            for r in res.violations().collect()]
     assert got == [(2, "object.min", '"s" must have at least 2 keys')]
+
+
+def _meta_frame(spark):
+    return spark.createDataFrame(
+        [(1, "a", "x", ("p", "q")), (2, "b", "", ("p", None)),
+         (3, "a", "y", None), (4, "b", "z", (None, None))],
+        "id bigint, kind string, flat string, "
+        "meta struct<a:string, b:string>")
+
+
+def test_check_seq_is_plan_wide(spark):
+    """``seq`` numbers every check of the plan in compile order, so a
+    row's violations across columns list in key order."""
+    df = spark.createDataFrame([("ab", 9.0, "z")],
+                               "s string, n double, t string")
+    plan = joi.validate(df, joi.object({
+        "s": joi.string().min(3).required(),
+        "n": joi.number().min(2).max(5),
+        "t": joi.string().valid("x", "y"),
+    })).plan
+    seqs = [c.seq for c in plan.checks]
+    assert seqs == sorted(set(seqs))
+    res = joi.validate(_meta_frame(spark), joi.object({
+        "flat": joi.string(),
+        "meta": joi.object({"a": joi.string(), "b": joi.string().required()}),
+    }), order_by=["id"], prefs={"abort_early": False})
+    got = [(r["id"], r["path"], r["code"])
+           for r in res.violations().collect()]
+    assert got == [(2, "flat", "string.empty"), (2, "meta.b", "any.required"),
+                   (4, "meta.b", "any.required")]
+
+
+def test_struct_dependencies(spark):
+    """Object dependencies on a struct column count present fields;
+    a null parent skips them."""
+    res = joi.validate(_meta_frame(spark), joi.object({
+        "meta": joi.object({"a": joi.string(), "b": joi.string()})
+                   .xor("a", "b"),
+    }), order_by=["id"], prefs={"abort_early": False})
+    got = [(r["id"], r["path"], r["code"], r["message"])
+           for r in res.violations().collect()]
+    assert got == [
+        (1, "meta", "object.xor",
+         '"meta" contains a conflict between exclusive peers "a", "b"'),
+        (4, "meta", "object.missing",
+         '"meta" must contain at least one of "a", "b"'),
+    ]
+
+
+@pytest.mark.parametrize("case", ["strip", "when", "presence", "error",
+                                  "message"])
+def test_struct_keys_parity(spark, case):
+    """``object().keys({...})`` on a struct column runs the same
+    per-value sequence as ``object()``: apart from the children's own
+    checks, violations and the converted table are the same."""
+    shape, prefs = {
+        "strip": (lambda o: o.strip(), {}),
+        "when": (lambda o: o.when("kind", is_="a", then=joi.forbidden()), {}),
+        "presence": (lambda o: o, {"presence": "required"}),
+        "error": (lambda o: o.required().error("BAD"), {}),
+        "message": (lambda o: o.min(2).message("TWO"), {}),
+    }[case]
+    df = _meta_frame(spark)
+
+    def run(meta):
+        res = joi.validate(df, joi.object({"kind": joi.string(),
+                                           "flat": joi.string(),
+                                           "meta": shape(meta)}),
+                           order_by=["id"],
+                           prefs={"abort_early": False, **prefs})
+        viols = [(r["id"], r["path"], r["code"], r["message"])
+                 for r in res.violations().collect()
+                 if not r["path"].startswith("meta.")]
+        return viols, res.value.columns, res.value.orderBy("id").collect()
+
+    bare = run(joi.object())
+    assert bare[0], "the probe must fail some row"
+    assert run(joi.object({"a": joi.string(), "b": joi.string()})) == bare
+
+
+def test_absent_keys_run_the_sequence(spark):
+    """A declared key with no column or struct field is a typed null
+    run through the same sequence: ``when`` and ``error()`` apply."""
+    res = joi.validate(_meta_frame(spark), joi.object({
+        "kind": joi.string(),
+        "meta": joi.object({
+            "c": joi.string().when("kind", is_="a", then=joi.required()),
+        }),
+        "gone": joi.number().required().error("BAD"),
+    }), order_by=["id"], prefs={"abort_early": False})
+    got = [(r["id"], r["path"], r["message"])
+           for r in res.violations().collect()]
+    assert got == [(1, "meta.c", '"meta.c" is required'), (1, "gone", "BAD"),
+                   (2, "gone", "BAD"), (3, "gone", "BAD"), (4, "gone", "BAD")]
+
+
+def test_absent_key_ref_to_undeclared_absent_column(spark):
+    """A ref to a key that is neither declared nor a column resolves
+    to null, so ``when`` on it takes ``otherwise`` for a missing key
+    and for a present one alike."""
+    present = joi.any_().required()
+    res = joi.validate(_meta_frame(spark), joi.object({
+        "gone": joi.string().when("nowhere", is_=present,
+                                  then=joi.forbidden(),
+                                  otherwise=joi.required()),
+        "flat": joi.string().allow("").when("nowhere", is_=present,
+                                            then=joi.required(),
+                                            otherwise=joi.forbidden()),
+    }).unknown(True), order_by=["id"], prefs={"abort_early": False})
+    got = [(r["id"], r["path"], r["code"])
+           for r in res.violations().collect()]
+    assert got == [(i, p, c) for i in (1, 2, 3, 4)
+                   for p, c in (("gone", "any.required"),
+                                ("flat", "any.unknown"))]

@@ -41,14 +41,27 @@ def test_violations_messages_built_after_filter(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     schema = joi.object({"o_orderstatus": joi.string().valid("O", "F")})
     res = joi.validate(df, schema, order_by=["o_orderkey"])
-    p = _plan(res.violations())
-    lines = p.splitlines()
+    lines = _plan(res.violations()).splitlines()
+    viol = next(i for i, l in enumerate(lines) if "AS _violations" in l)
     gen = next(i for i, l in enumerate(lines) if "Generate explode" in l)
-    filt = next(i for i, l in enumerate(lines) if l.strip().startswith("+- Filter")
-                or l.strip().startswith(":- Filter"))
-    assert gen < filt or True  # explode above filter in tree print order
+    filt = next(i for i, l in enumerate(lines)
+                if l.lstrip(" +-:").startswith("Filter"))
+    assert _is_ancestor(lines, viol, filt), "structs built before the filter"
+    assert _is_ancestor(lines, gen, filt), "explode before the filter"
+    # the filter itself must not render them either (Catalyst inlines a
+    # filter on the built array into the scan)
+    assert not any('"o_orderstatus" must be one of' in l
+                   for l in lines[filt:])
     # and the final scan carries the filter
     assert "FileScan" in lines[-1]
+
+
+def _is_ancestor(lines: list[str], i: int, j: int) -> bool:
+    """Is node ``i`` an ancestor of node ``j`` in a printed plan tree?
+    Every line from ``i`` down to ``j`` must sit deeper than ``i``."""
+    def depth(k):
+        return len(lines[k]) - len(lines[k].lstrip(" +-:"))
+    return i < j and all(depth(k) > depth(i) for k in range(i + 1, j + 1))
 
 
 def test_verdicts_partial_aggregation(spark):

@@ -233,6 +233,15 @@ def test_number_string_coercion(spark):
             '"v" must be larger than or equal to 3')]),
         ("coerce.not_number", "abc", [("number.base",
             '"v" must be a number')]),
+        # only the reference's numeric grammar parses
+        # (lib/types/number.js:28-63), not every string Spark's cast takes
+        ("coerce.suffix_d", "1d", [("number.base", '"v" must be a number')]),
+        ("coerce.underscore", "1_000", [("number.base",
+            '"v" must be a number')]),
+        ("coerce.infinity", "Infinity", [("number.base",
+            '"v" must be a number')]),
+        ("coerce.padded", " 5 ", []),
+        ("coerce.exponent", "1e1", []),
     ])
 
 
