@@ -33,6 +33,10 @@ from joi_spark.dsl.types import (AnySchema, ArraySchema, BinarySchema,
                                  StringSchema)
 from joi_spark.engine import (TableValidationError, ValidationResult,
                               assert_table, validate)
+# imported here, not inside a function: loading the submodule binds
+# ``joi_spark.extend`` to it, and this import then rebinds the name to
+# the function (reference: lib/extend.js:11-135)
+from joi_spark.extend import extend
 
 __version__ = "0.1.0"
 
@@ -87,12 +91,6 @@ def link(target: str) -> "LinkSchema":
     """Reuse a shared schema by id (reference: lib/types/link.js)."""
     from joi_spark.dsl.objects import LinkSchema
     return LinkSchema(target)
-
-
-def extend(name, base=None, rules=None, messages=None):
-    """Register a custom schema type (reference: lib/extend.js:11-135)."""
-    from joi_spark.extend import extend as _extend
-    return _extend(name, base=base, rules=rules, messages=messages)
 
 
 def is_schema(v) -> bool:

@@ -9,7 +9,13 @@ regression here is a performance bug even if results stay correct.
 
 from __future__ import annotations
 
+import datetime
+import json
+import re
+from pathlib import Path
+
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import joi_spark as joi
 from joi_spark.operators import dataset as DS
@@ -362,3 +368,301 @@ def test_checkpoint_run_scans_input_twice(spark, tmp_path):
     records = sum(store.lastStageAttempt(s).inputRecords() for s in stages)
     assert records == 2 * n
     assert len(jobs) <= 8
+
+
+# --- compiled-check golden ------------------------------------------------
+#
+# Every check, conversion and output the compiler emits for a catalogue
+# of schemas, rendered with ``str()`` and pinned in
+# ``goldens/compiled_checks.json``.  A refactor of the compiler must
+# leave this file unchanged; a deliberate change of what compiles
+# regenerates it with ``python -m tests.test_plans`` from the repo root.
+
+GOLDEN = Path(__file__).parent / "goldens" / "compiled_checks.json"
+
+# higher-order lambda variables are named ``<arg>_<counter>`` by a
+# process-wide counter, and a pandas UDF call prints JVM object hashes
+_LAMBDA_VAR = re.compile(r"\b([a-z]+)_\d+\b")
+_JVM_HASH = re.compile(r"@[0-9a-f]+\b")
+
+
+def _norm(c) -> str:
+    return _JVM_HASH.sub("@H", _LAMBDA_VAR.sub(r"\1_N", str(c)))
+
+
+def _golden_external(values):
+    return values.map(lambda v: None)
+
+
+def _frame(**cols) -> T.StructType:
+    return T.StructType([T.StructField(k, v) for k, v in cols.items()])
+
+
+def _golden_catalogue() -> list[tuple[str, object, T.StructType]]:
+    """``(name, table schema, frame schema)``: one table per kind that
+    together call every rule method of the DSL, each value shape a
+    coerce handles, and the perfbench schemas."""
+    S, L, D, I = T.StringType(), T.LongType(), T.DoubleType(), T.IntegerType()
+    B, TS, BIN = T.BooleanType(), T.TimestampType(), T.BinaryType()
+    lim = joi.ref("lim")
+    goldenver = joi.extend(
+        "goldenver", base=joi.string,
+        rules={"version": {
+            "validate": lambda col, ctx: col.rlike(r"^\d+\.\d+\.\d+$"),
+            "message": '"{{#label}}" must be a semantic version'}})
+    goldennum = joi.extend(
+        "goldennum", base=joi.number,
+        rules={"even": {"validate": lambda col, ctx: col % 2 == 0,
+                        "message": '"{{#label}}" must be even'}})
+    string = {
+        "sa": joi.string().min(2).max(lim).pattern("^a", "alpha")
+                 .alphanum().lowercase().trim().normalize("NFD")
+                 .replace("x", "y").replace(re.compile("q+"), "Q")
+                 .truncate(),
+        "sb": joi.string().length(4, "utf8").regex(r"b$", invert=True)
+                 .token().uppercase().trim(False)
+                 .base64(padding_required=False, url_safe=True)
+                 .rule(message="sb is not base64"),
+        "sc": joi.string().pattern("c", "cee", invert=True).data_uri()
+                 .hex(byte_aligned=True).warn(),
+        "sd": joi.string().email(tlds={"allow": ["com", "org"]})
+                 .max(30, "utf8").truncate().case("upper"),
+        "se": joi.string().domain(minDomainSegments=2,
+                                  tlds={"deny": ["test"]}).hex(),
+        "sf": joi.string().hostname().data_uri(padding_required=False)
+                 .base64(),
+        "sg": joi.string().ip(version="ipv4", cidr="required"),
+        "sh": joi.string().ip().uri(allow_query_square_brackets=True),
+        "si": joi.string().uri(scheme=["http", "https"]),
+        "sj": joi.string().uri(relative_only=True, allow_relative=True),
+        "sk": joi.string().guid(version="uuidv4").credit_card(),
+        "sl": joi.string().uuid().isoDate().iso_duration(),
+        "sm": joi.string().valid("A", "b", None, joi.ref("sa"))
+                 .insensitive(),
+        "sn": joi.string().invalid("bad", None, joi.ref("sb")).allow(""),
+        "so": joi.string().invalid("X").insensitive().empty("")
+                 .default("d").label("Oh"),
+        "sp": joi.string().required().min(1)
+                 .messages({"string.min": "{{#label}} too short"}),
+        "sq": joi.string().error("nope").max(3).normalize(),
+        "sr": joi.string().forbidden().strip(),
+        "ss": joi.string().raw().cast("string").lowercase(),
+        "st": joi.string().failover("f").max(2).trim(),
+        "su": joi.string().custom(lambda c, ctx: c != "z",
+                                  message="su must not be z")
+                 .external(_golden_external),
+        "sv": joi.string().when("lim", is_=joi.number().min(3),
+                                then=joi.string().max(5),
+                                otherwise=joi.string().min(1)),
+        "sw": joi.string().when("lim", switch=[
+            {"is": 1, "then": joi.string().max(1)},
+            {"is": 2, "then": joi.string().max(2),
+             "otherwise": joi.string().max(9)}]),
+        "sx": joi.string().strict().trim().lowercase().replace("a", "b")
+                 .normalize("NFKC"),
+        "sy": joi.string().empty(joi.string().max(0)).allow(None),
+        "sz": joi.string().min(1).concat(joi.string().max(9)),
+        "sint": joi.string().max(3),
+        "gone": joi.string().default("g"),
+    }
+    number = {
+        "nd": joi.number().min(0).max(lim).greater(-1).less(100).integer()
+                 .multiple(2).precision(2),
+        "ne": joi.number().port().positive().unsafe(),
+        "nl": joi.number().negative().multiple(lim).precision(1),
+        "ni": joi.number().sign("positive").valid(1, 2, joi.ref("nl")),
+        "ns": joi.number().min(1).precision(2),
+        "nt": joi.number().unsafe().integer().invalid(3),
+        "nb": joi.number().min(1),
+        "nc": joi.number().max(5).cast("string"),
+        "nf": joi.number().less(lim).warn().default(0),
+    }
+    date = {
+        "dt": joi.date().min("now").max("2030-01-01").greater(lim)
+                 .less(datetime.datetime(2040, 1, 1)),
+        "dd": joi.date().max("2030-01-01").cast("number"),
+        "ds": joi.date().iso().min("2000-01-01"),
+        "du": joi.date().timestamp("unix").cast("string"),
+        "dj": joi.date().timestamp(),
+        "dp": joi.date().less("now").custom(lambda c, ctx: c.isNotNull()),
+        "dl": joi.date().format("javascript"),
+        "di": joi.date().iso(),
+        "db": joi.date(),
+    }
+    boolean = {
+        "b": joi.boolean().cast("number").custom(lambda c, ctx: c | ~c),
+        "bs": joi.boolean().truthy("Y", "yes").falsy("N", 0),
+        "bt": joi.boolean().truthy("on").falsy("off").insensitive(False),
+        "bu": joi.boolean(),
+        "bi": joi.boolean().valid(True),
+    }
+    array = {
+        "a": joi.array().items(joi.string().min(1), joi.number().forbidden(),
+                               joi.string().required().max(3))
+                .min(1).max(lim).length(3),
+        "ab": joi.array().unique(ignore_undefined=True)
+                 .sort(order="descending").sparse(False)
+                 .has(joi.string().label("hasA")),
+        "ac": joi.array().has(joi.string().min(2)).sort().cast("set"),
+        "ast": joi.array().unique("k").sort(by="v")
+                  .items(joi.object({"k": joi.string(), "v": joi.number()})),
+        "an": joi.array().unique(lambda x, y: x == y)
+                 .ordered(joi.number().min(0), joi.number().max(9)),
+        "ao": joi.array().ordered(joi.number()).items(joi.number())
+                 .custom(lambda c, ctx: F.size(c) < 10),
+        "as": joi.array().min(1),
+        "asg": joi.array().single(),
+        "al": joi.array().single().max(1),
+        "ax": joi.array(),
+    }
+    binary = {
+        "bn": joi.binary().min(1).max(lim).length(4)
+                 .custom(lambda c, ctx: c.isNotNull()),
+        "b64": joi.binary().encoding("base64").max(3),
+        "bhx": joi.binary().encoding("hex"),
+        "butf": joi.binary().encoding("utf8").min(1),
+        "bl": joi.binary(),
+    }
+    obj = (joi.object({
+        "o": joi.object({"a": joi.string().min(1).trim(),
+                         "b": joi.number().max(5),
+                         "missing": joi.string().required()})
+                .pattern("^x", joi.string().max(2)).unknown(False)
+                .and_("a", "b").or_("a", "c").xor("a", "b").oxor("b", "c")
+                .nand("a", "b").with_("a", "b").without("b", "c")
+                .min(1).max(3).length(2),
+        "o2": joi.object().keys({"a": joi.string()}).cast("map")
+                 .custom(lambda c, ctx: c.isNotNull()),
+        "om": joi.object().pattern("^k", joi.number().min(0))
+                 .unknown(False).min(1).max(lim).length(2),
+        "os": joi.object().min(1),
+        "ol": joi.object(),
+        "lk": joi.link("#sid"),
+        "ren": joi.string(),
+    }).shared(joi.string().id("sid").max(4))
+        .rename("src", "ren").rename("old", "ren", multiple=True)
+        .pattern("^pp", joi.string().min(1))
+        .assert_("lim", joi.number().min(0), "lim is positive")
+        .and_("o", "om").with_("o", "os").min(1).max(99).length(50)
+        .unknown(False).messages({"object.length": "wrong width"}))
+    st = T.StructType([T.StructField(k, v) for k, v in
+                       (("a", S), ("b", L), ("c", S), ("xa", S))])
+    alternatives = {
+        "t": joi.alternatives(joi.number(), joi.boolean(), joi.date()),
+        "m": joi.alternatives(joi.string().max(2), joi.number())
+                .custom(lambda c, ctx: c != "zz"),
+        "one": joi.alternatives(joi.string().min(1)),
+        "none": joi.alternatives(),
+        "cond": joi.alternatives().conditional(
+            "vn", is_=1, then=joi.string().max(1),
+            otherwise=joi.string().min(3)),
+        "vn": joi.any_().valid(1, 2).required(),
+        "any": joi.any_().forbidden().custom(lambda c, ctx: c.isNull()),
+    }
+    plugin = {
+        "v": goldenver().version().min(3),
+        "w": goldennum().even().min(0).rule(warn=True),
+    }
+    return [
+        ("string", joi.object(string), _frame(
+            lim=L, **{k: S for k in string if k not in ("sint", "gone")},
+            sint=L)),
+        ("number", joi.object(number), _frame(
+            lim=D, nd=D, ne=D, nl=L, ni=I, ns=S, nt=S, nb=B,
+            nc=T.DecimalType(10, 2), nf=D)),
+        ("date", joi.object(date), _frame(
+            lim=TS, dt=TS, dd=T.DateType(), ds=S, du=S, dj=S, dp=TS, dl=L,
+            di=L, db=S)),
+        ("boolean", joi.object(boolean), _frame(
+            b=B, bs=S, bt=S, bu=I, bi=B)),
+        ("array", joi.object(array), _frame(
+            lim=L, a=T.ArrayType(S), ab=T.ArrayType(S), ac=T.ArrayType(S),
+            ast=T.ArrayType(T.StructType([T.StructField("k", S),
+                                          T.StructField("v", L)])),
+            an=T.ArrayType(L), ao=T.ArrayType(L), **{"as": S}, asg=S,
+            al=L, ax=L)),
+        ("binary", joi.object(binary), _frame(
+            lim=L, bn=BIN, b64=S, bhx=S, butf=S, bl=L)),
+        ("object", obj, _frame(
+            lim=L, o=st, o2=st, om=T.MapType(S, L), os=S, ol=L, lk=S,
+            src=S, old=S, pp=S)),
+        ("alternatives", joi.object(alternatives), _frame(
+            t=S, m=S, one=S, none=S, cond=S, vn=L, any=S)),
+        ("plugin", joi.object(plugin), _frame(v=S, w=L)),
+    ]
+
+
+def _perfbench_catalogue() -> list[tuple[str, object, T.StructType]]:
+    """The benchmark's schemas over its generators' column types."""
+    import sys
+    from pyspark.sql.pandas.types import from_arrow_schema
+    sys.path.insert(0, str(Path(__file__).parent.parent / "perfbench"))
+    import gen
+    import workloads
+    return [("transcript_schema", workloads.transcript_schema(),
+             from_arrow_schema(gen.transcripts(0, 20, 0.1)[0].schema)),
+            ("wide_schema", workloads.wide_schema(),
+             from_arrow_schema(gen.wide(0, 20)[0].schema))]
+
+
+def _compiled_checks(spark) -> dict:
+    from joi_spark.compiler import compile_table
+    out = {}
+    for name, schema, fields in _golden_catalogue() + _perfbench_catalogue():
+        df = spark.createDataFrame([], fields)
+        for convert in (True, False):
+            plan = compile_table(schema, df, prefs={"convert": convert})
+            out[f"{name}/convert={convert}"] = {
+                "checks": [[c.seq, c.path, c.code, c.severity,
+                            _norm(c.predicate), _norm(c.message)]
+                           for c in plan.checks],
+                "conversions": {k: _norm(v)
+                                for k, v in plan.conversions.items()},
+                "outputs": {k: _norm(v) for k, v in plan.outputs.items()},
+                "drops": plan.drops,
+                "table_errors": plan.table_errors,
+            }
+    return out
+
+
+def _catalogue_rules() -> dict[str, set[str]]:
+    """Rule names per kind over every schema in the catalogue, nested
+    ones included."""
+    from joi_spark.dsl.base import Schema
+    seen: dict[str, set[str]] = {}
+
+    def walk(v):
+        if isinstance(v, Schema):
+            seen.setdefault(v.kind, set()).update(r.name for r in v._rules)
+            for r in v._rules:
+                walk(r.args)
+            walk(v._terms)
+            walk(v._flags.get("empty"))
+        elif isinstance(v, dict):
+            for x in v.values():
+                walk(x)
+        elif isinstance(v, (list, tuple)):
+            for x in v:
+                walk(x)
+
+    walk([s for _, s, _ in _golden_catalogue()])
+    return seen
+
+
+def test_compiled_checks_match_golden(spark):
+    from joi_spark.compiler import _RULES
+    golden = json.loads(GOLDEN.read_text())
+    got = json.loads(json.dumps(_compiled_checks(spark)))
+    assert sorted(got) == sorted(golden)
+    for key in golden:
+        assert got[key] == golden[key], key
+    used = _catalogue_rules()
+    for kind, table in _RULES.items():
+        assert set(table) <= used.get(kind, set()), kind
+
+
+if __name__ == "__main__":
+    from joi_spark.session import get_spark
+    GOLDEN.parent.mkdir(exist_ok=True)
+    GOLDEN.write_text(json.dumps(_compiled_checks(get_spark("local[2]")),
+                                 indent=1, sort_keys=True) + "\n")
