@@ -33,10 +33,9 @@ from joi_spark.dsl.types import (AnySchema, ArraySchema, BinarySchema,
                                  StringSchema)
 from joi_spark.engine import (TableValidationError, ValidationResult,
                               assert_table, validate)
-# imported here, not inside a function: loading the submodule binds
-# ``joi_spark.extend`` to it, and this import then rebinds the name to
-# the function (reference: lib/extend.js:11-135)
-from joi_spark.extend import extend
+# at load time: importing the submodule later would rebind
+# ``joi_spark.extend`` from this function to the module
+from joi_spark.extend import extend  # reference: lib/extend.js:11-135
 
 __version__ = "0.1.0"
 

@@ -19,6 +19,11 @@ dependencies — are one step of that sequence, and a declared key with
 no column or struct field runs it on a typed null.  ``Check.seq``
 numbers the checks of the whole plan in compile order.
 
+Each kind has one coerce and one rule table merged over ``any``'s
+(which holds ``custom``), as lib/extend.js:11-135 merges each type's
+rules and coerce down the prototype chain.  A table entry is a rule's
+check and, for a rule that converts in convert mode, its convert form.
+
 Everything is built from ``pyspark.sql.functions`` — whole-stage-codegen
 eligible, no per-row Python.  Catalyst constant-folds the trivially-true
 guards and prunes unreferenced columns at the scan.
@@ -26,18 +31,19 @@ guards and prunes unreferenced columns at the scan.
 
 from __future__ import annotations
 
+import functools
 import operator
 import re
 
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from joi_spark import errors as E
-from joi_spark.dsl.base import Rule, Schema
+from joi_spark.dsl.base import Schema, Values
 from joi_spark.dsl.objects import Dependency, ObjectSchema
 from joi_spark.dsl.ref import Ref
 from joi_spark.functions import regexes as RX
@@ -151,20 +157,62 @@ def _label(schema: Schema, path: str) -> str:
     return schema._flags.get("label") or path or "value"
 
 
-def _is_string_like(dtype: T.DataType) -> bool:
-    return isinstance(dtype, T.StringType)
+# --- rule tables: ``check(value, args, ctx, dtype)`` returns the rule's
+# ``(ok predicate, code, message context)`` triples, where ``dtype`` is
+# the value's Spark type after coercion --------------------------------
+
+_Triple = tuple[Column, str, dict]
 
 
-# --- string rule predicates -------------------------------------------------
+class _RuleDef(NamedTuple):
+    check: Callable[[Column, dict, _Ctx, T.DataType], list[_Triple]]
+    # convert mode applies this to the value instead of checking the
+    # rule (reference: ``convert: true`` rules, lib/validator.js:269-273)
+    convert: Callable[[Column, dict], Column] | None = None
 
-def _domain_option_preds(dom: Column, opts: dict) -> list[Column]:
-    """Compile domain validation options (reference:
+
+# the limit comparison of every limit rule, on Columns and Python ints
+_CMP = {"min": operator.ge, "max": operator.le, "length": operator.eq,
+        "greater": operator.gt, "less": operator.lt}
+
+
+def _date_limit(limit, ctx: _Ctx) -> tuple[Column, Any]:
+    if limit == "now":
+        return F.current_timestamp(), "now"
+    if isinstance(limit, Ref):
+        return ctx.resolve(limit), limit.display
+    return F.lit(limit).cast("timestamp"), limit
+
+
+def _limit_rules(kind: str, measure: Callable[[Column, dict, T.DataType], Column],
+                 names=("min", "max", "length"),
+                 limit=lambda a, ctx: (ctx.resolve(a["limit"]),
+                                       ctx.display(a["limit"])),
+                 mctx=lambda a: {}) -> dict[str, _RuleDef]:
+    """The rules ``names``, each comparing ``measure(value, args, dtype)``
+    with the rule's ``limit`` under code ``<kind>.<name>``."""
+    def check(name, col, a, ctx, dtype):
+        bound, shown = limit(a, ctx)
+        return [(_CMP[name](measure(col, a, dtype), bound),
+                 f"{kind}.{name}", {"limit": shown, **mctx(a)})]
+    return {name: _RuleDef(functools.partial(check, name)) for name in names}
+
+
+def _rx(regex: str, code: str) -> _RuleDef:
+    """A rule that is one regex match."""
+    return _RuleDef(lambda col, a, ctx, t: [(col.rlike(regex), code, {})])
+
+
+# --- string rules (reference: lib/types/string/index.js) ----------------
+
+def _domain(col, a, ctx, t):
+    """Domain regex and options (reference:
     lib/types/string/index.js:775-813 addressOptions; applied by
     @hapi/address domain.isValid): ``minDomainSegments`` and
     ``tlds: {allow, deny}``.  Unknown options RAISE instead of being
     silently ignored (VERDICT round 1, missing item 1)."""
-    opts = dict(opts or {})
-    preds: list[Column] = []
+    opts = dict(a.get("options") or {})
+    preds = [col.rlike(RX.DOMAIN)]
     min_seg = opts.pop("minDomainSegments", None)
     tlds = opts.pop("tlds", None)
     allow_unicode = opts.pop("allowUnicode", None)
@@ -174,16 +222,14 @@ def _domain_option_preds(dom: Column, opts: dict) -> list[Column]:
             "regexes are ASCII/punycode-practical (documented divergence)")
     if opts:
         raise CompileError(f"unsupported domain options: {sorted(opts)}")
-    segs = F.split(dom, r"\.")
+    segs = F.split(col, r"\.")
     if min_seg is not None:
         preds.append(F.size(segs) >= int(min_seg))
-    if tlds is None or tlds is False:
-        return preds
     if tlds is True:
         tlds = {"allow": True}
-    if not isinstance(tlds, dict):
+    if tlds not in (None, False) and not isinstance(tlds, dict):
         raise CompileError("tlds must be a dict, True, or False")
-    t = dict(tlds)
+    t = dict(tlds or {})
     allow = t.pop("allow", None)
     deny = t.pop("deny", None)
     if t:
@@ -199,287 +245,268 @@ def _domain_option_preds(dom: Column, opts: dict) -> list[Column]:
         preds.append(tld.isin(*[str(x).lower() for x in allow]))
     if deny:
         preds.append(~tld.isin(*[str(x).lower() for x in deny]))
-    return preds
+    return [(functools.reduce(operator.and_, preds), "string.domain", {})]
 
 
-def _string_rule(rule: Rule, col: Column, ctx: _Ctx, label: str,
-                 overrides: dict) -> list[tuple[Column, str, dict]]:
-    """Return [(ok_predicate, code, message_ctx)] for one string rule."""
-    a = rule.args
-    out: list[tuple[Column, str, dict]] = []
-    name = rule.name
+def _pattern(col, a, ctx, t):
+    regex, invert = a["regex"], a.get("invert", False)
+    pred = ~col.rlike(regex) if invert else col.rlike(regex)
+    code = f"string.pattern.{'invert.' if invert else ''}"
+    if a.get("name"):
+        return [(pred, code + "name", {"name": a["name"], "regex": f"/{regex}/"})]
+    return [(pred, code + "base", {"regex": f"/{regex}/"})]
 
-    def length_col(encoding):
-        return F.octet_length(col) if encoding == "utf8" else F.length(col)
 
-    if name in ("min", "max", "length"):
-        limit = ctx.resolve(a["limit"])
-        lc = length_col(a.get("encoding"))
-        pred = {"min": lc >= limit, "max": lc <= limit, "length": lc == limit}[name]
-        out.append((pred, f"string.{name}",
-                    {"limit": ctx.display(a["limit"]), "encoding": a.get("encoding")}))
-    elif name == "pattern":
-        regex, invert = a["regex"], a.get("invert", False)
-        pred = col.rlike(regex)
-        if invert:
-            pred = ~pred
-        if a.get("name"):
-            code = f"string.pattern.{'invert.' if invert else ''}name"
-            out.append((pred, code, {"name": a["name"], "regex": f"/{regex}/"}))
-        else:
-            code = f"string.pattern.{'invert.' if invert else ''}base"
-            out.append((pred, code, {"regex": f"/{regex}/"}))
-    elif name == "alphanum":
-        out.append((col.rlike(RX.ALPHANUM), "string.alphanum", {}))
-    elif name == "token":
-        out.append((col.rlike(RX.TOKEN), "string.token", {}))
-    elif name == "case":
-        direction = a["direction"]
-        pred = col == (F.lower(col) if direction == "lower" else F.upper(col))
-        out.append((pred, f"string.{direction}case", {}))
-    elif name == "trim":
-        if a.get("enabled", True):
-            out.append((col == F.trim(col), "string.trim", {}))
-    elif name == "normalize":
-        # checked via pandas UDF only when not in convert mode; in convert
-        # mode the conversion pass normalizes and the check is vacuous
-        from joi_spark.functions.udfs import unicode_normalized_check
-        out.append((unicode_normalized_check(a["form"])(col),
-                    "string.normalize", {"form": a["form"]}))
-    elif name == "base64":
-        key = (a.get("paddingRequired", True), a.get("urlSafe", False))
-        out.append((col.rlike(RX.BASE64[key]), "string.base64", {}))
-    elif name == "dataUri":
-        # outer format, then base64 payload when flagged base64
-        # (reference: lib/types/string/index.js:238-269)
-        fmt_ok = col.rlike(RX.DATA_URI_FORMAT)
-        b64 = F.regexp_extract(col, RX.DATA_URI_FORMAT, 2) == F.lit("base64")
-        payload = F.regexp_extract(col, RX.DATA_URI_FORMAT, 3)
-        pay_ok = F.when(b64, payload.rlike(
-            RX.DATA_URI_BASE64[a.get("paddingRequired", True)])).otherwise(F.lit(True))
-        out.append((fmt_ok & pay_ok, "string.dataUri", {}))
-    elif name == "hex":
-        out.append((col.rlike(RX.HEX), "string.hex", {}))
-        if a.get("byteAligned"):
-            out.append((F.length(col) % 2 == 0, "string.hexAlign", {}))
-    elif name == "email":
-        # exact address-grammar path (reference: lib/types/string/
-        # index.js:291-318): hybrid C-regex prefilter + per-row grammar
-        # on the residue, Arrow-batched (functions/udfs.py email_check)
-        a = {**a, **(a.get("options") or {})}
-        known = {"minDomainSegments", "tlds", "allowUnicode",
-                 "multiple", "separator", "options"}
-        if set(a) - known:
-            raise CompileError(
-                f"unsupported email options: {sorted(set(a) - known)}")
-        from .functions.udfs import email_check
-        try:
-            pred = email_check(col, {k: a[k] for k in known - {"options"}
-                                     if k in a})
-        except ValueError as e:
-            raise CompileError(str(e)) from e
-        out.append((pred, "string.email", {}))
-    elif name == "domain":
-        pred = col.rlike(RX.DOMAIN)
-        for p in _domain_option_preds(col, a.get("options")):
-            pred = pred & p
-        out.append((pred, "string.domain", {}))
-    elif name == "hostname":
-        pred = (F.length(col) <= 255) & (col.rlike(RX.HOSTNAME) | col.rlike(RX.ip_regex(["ipv4", "ipv6"], "forbidden")))
-        out.append((pred, "string.hostname", {}))
-    elif name == "ip":
-        versions = a.get("version")
-        cidr = a.get("cidr", "optional")
-        regex = RX.ip_regex(versions, cidr)
-        if versions:
-            out.append((col.rlike(regex), "string.ipVersion",
-                        {"version": list(versions), "cidr": cidr}))
-        else:
-            out.append((col.rlike(regex), "string.ip", {"cidr": cidr}))
-    elif name == "uri":
-        scheme = a.get("scheme")
-        regex = RX.uri_regex(scheme,
-                             allow_relative=a.get("allowRelative", False),
-                             relative_only=a.get("relativeOnly", False),
-                             allow_query_square_brackets=a.get("allowQuerySquareBrackets", False))
-        code = "string.uri"
-        mctx: dict = {}
-        if a.get("relativeOnly"):
-            code = "string.uriRelativeOnly"
-        elif scheme:
-            code = "string.uriCustomScheme"
-            mctx = {"scheme": scheme if isinstance(scheme, str) else ", ".join(scheme)}
-        out.append((col.rlike(regex), code, mctx))
-    elif name == "guid":
-        regex = RX.guid_regex(a.get("version"))
-        first, last = F.substring(col, 1, 1), F.substring(col, -1, 1)
-        braces_ok = (
-            (first == F.lit("{")) & (last == F.lit("}"))
-            | (first == F.lit("[")) & (last == F.lit("]"))
-            | (first == F.lit("(")) & (last == F.lit(")"))
-            | ~first.isin("{", "[", "(") & ~last.isin("}", "]", ")"))
-        out.append((col.rlike(regex) & braces_ok, "string.guid", {}))
-    elif name == "creditCard":
-        # Luhn via higher-order aggregate over reversed digit array —
-        # stays in codegen, no UDF (reference: lib/types/string/index.js:211-236)
-        digits = F.reverse(F.split(col, ""))
-        luhn_sum = F.aggregate(
-            F.filter(F.transform(digits, lambda d, i:
-                                 F.when(i % 2 == 1,
-                                        F.when(d.cast("int") * 2 > 9,
-                                               d.cast("int") * 2 - 9)
-                                        .otherwise(d.cast("int") * 2))
-                                 .otherwise(d.cast("int"))),
-                     lambda x: x.isNotNull()),
-            F.lit(0), lambda acc, x: acc + x)
-        pred = col.rlike(r"^\d+$") & (luhn_sum % 10 == 0) & (F.length(col) > 0)
-        out.append((pred, "string.creditCard", {}))
-    elif name == "isoDate":
-        out.append((col.rlike(RX.ISO_DATE), "string.isoDate", {}))
-    elif name == "isoDuration":
-        out.append((col.rlike(RX.ISO_DURATION), "string.isoDuration", {}))
-    elif name == "replace":
-        pass  # convert-only, no check form
+def _case(col, a):
+    return F.lower(col) if a["direction"] == "lower" else F.upper(col)
+
+
+def _udfs():
+    # the pandas-UDF module, imported on first use (it loads pandas)
+    from joi_spark.functions import udfs
+    return udfs
+
+
+def _data_uri(col, a, ctx, t):
+    # outer format, then base64 payload when flagged base64
+    # (reference: lib/types/string/index.js:238-269)
+    fmt_ok = col.rlike(RX.DATA_URI_FORMAT)
+    b64 = F.regexp_extract(col, RX.DATA_URI_FORMAT, 2) == F.lit("base64")
+    payload = F.regexp_extract(col, RX.DATA_URI_FORMAT, 3)
+    pay_ok = F.when(b64, payload.rlike(
+        RX.DATA_URI_BASE64[a.get("paddingRequired", True)])).otherwise(F.lit(True))
+    return [(fmt_ok & pay_ok, "string.dataUri", {})]
+
+
+def _email(col, a, ctx, t):
+    # exact address-grammar path (reference: lib/types/string/
+    # index.js:291-318): hybrid C-regex prefilter + per-row grammar
+    # on the residue, Arrow-batched (functions/udfs.py email_check)
+    a = {**a, **(a.get("options") or {})}
+    known = {"minDomainSegments", "tlds", "allowUnicode",
+             "multiple", "separator", "options"}
+    if set(a) - known:
+        raise CompileError(
+            f"unsupported email options: {sorted(set(a) - known)}")
+    try:
+        pred = _udfs().email_check(col, {k: a[k] for k in known - {"options"}
+                                 if k in a})
+    except ValueError as e:
+        raise CompileError(str(e)) from e
+    return [(pred, "string.email", {})]
+
+
+def _ip(col, a, ctx, t):
+    versions, cidr = a.get("version"), a.get("cidr", "optional")
+    pred = col.rlike(RX.ip_regex(versions, cidr))
+    if versions:
+        return [(pred, "string.ipVersion", {"version": list(versions), "cidr": cidr})]
+    return [(pred, "string.ip", {"cidr": cidr})]
+
+
+def _uri(col, a, ctx, t):
+    scheme = a.get("scheme")
+    regex = RX.uri_regex(scheme,
+                         allow_relative=a.get("allowRelative", False),
+                         relative_only=a.get("relativeOnly", False),
+                         allow_query_square_brackets=a.get("allowQuerySquareBrackets", False))
+    if a.get("relativeOnly"):
+        return [(col.rlike(regex), "string.uriRelativeOnly", {})]
+    if scheme:
+        shown = scheme if isinstance(scheme, str) else ", ".join(scheme)
+        return [(col.rlike(regex), "string.uriCustomScheme", {"scheme": shown})]
+    return [(col.rlike(regex), "string.uri", {})]
+
+
+def _guid(col, a, ctx, t):
+    first, last = F.substring(col, 1, 1), F.substring(col, -1, 1)
+    braces_ok = (
+        (first == F.lit("{")) & (last == F.lit("}"))
+        | (first == F.lit("[")) & (last == F.lit("]"))
+        | (first == F.lit("(")) & (last == F.lit(")"))
+        | ~first.isin("{", "[", "(") & ~last.isin("}", "]", ")"))
+    return [(col.rlike(RX.guid_regex(a.get("version"))) & braces_ok,
+             "string.guid", {})]
+
+
+def _credit_card(col, a, ctx, t):
+    # Luhn via higher-order aggregate over reversed digit array —
+    # stays in codegen, no UDF (reference: lib/types/string/index.js:211-236)
+    digits = F.reverse(F.split(col, ""))
+    luhn_sum = F.aggregate(
+        F.filter(F.transform(digits, lambda d, i:
+                             F.when(i % 2 == 1,
+                                    F.when(d.cast("int") * 2 > 9,
+                                           d.cast("int") * 2 - 9)
+                                    .otherwise(d.cast("int") * 2))
+                             .otherwise(d.cast("int"))),
+                 lambda x: x.isNotNull()),
+        F.lit(0), lambda acc, x: acc + x)
+    pred = col.rlike(r"^\d+$") & (luhn_sum % 10 == 0) & (F.length(col) > 0)
+    return [(pred, "string.creditCard", {})]
+
+
+_STRING_RULES = {
+    **_limit_rules("string", lambda col, a, t: F.octet_length(col)
+                   if a.get("encoding") == "utf8" else F.length(col),
+                   mctx=lambda a: {"encoding": a.get("encoding")}),
+    "pattern": _RuleDef(_pattern),
+    "alphanum": _rx(RX.ALPHANUM, "string.alphanum"),
+    "token": _rx(RX.TOKEN, "string.token"),
+    "case": _RuleDef(lambda col, a, ctx, t: [
+        (col == _case(col, a), f"string.{a['direction']}case", {})], _case),
+    "trim": _RuleDef(lambda col, a, ctx, t: [
+        (col == F.trim(col), "string.trim", {})] if a.get("enabled", True)
+        else [], lambda col, a: F.trim(col) if a.get("enabled", True) else col),
+    "normalize": _RuleDef(lambda col, a, ctx, t: [
+        (_udfs().unicode_normalized_check(a["form"])(col), "string.normalize",
+         {"form": a["form"]})],
+        lambda col, a: _udfs().unicode_normalize_expr(col, a["form"])),
+    "replace": _RuleDef(lambda *_: [], lambda col, a: F.regexp_replace(
+        col, a["pattern"], a["replacement"])),
+    "base64": _RuleDef(lambda col, a, ctx, t: [(col.rlike(RX.BASE64[
+        a.get("paddingRequired", True), a.get("urlSafe", False)]),
+        "string.base64", {})]),
+    "dataUri": _RuleDef(_data_uri),
+    "hex": _RuleDef(lambda col, a, ctx, t: [(col.rlike(RX.HEX), "string.hex", {})]
+                    + ([(F.length(col) % 2 == 0, "string.hexAlign", {})]
+                       if a.get("byteAligned") else [])),
+    "email": _RuleDef(_email),
+    "domain": _RuleDef(_domain),
+    "hostname": _RuleDef(lambda col, a, ctx, t: [(
+        (F.length(col) <= 255) & (col.rlike(RX.HOSTNAME) | col.rlike(
+            RX.ip_regex(["ipv4", "ipv6"], "forbidden"))), "string.hostname", {})]),
+    "ip": _RuleDef(_ip),
+    "uri": _RuleDef(_uri),
+    "guid": _RuleDef(_guid),
+    "creditCard": _RuleDef(_credit_card),
+    "isoDate": _rx(RX.ISO_DATE, "string.isoDate"),
+    "isoDuration": _rx(RX.ISO_DURATION, "string.isoDuration"),
+}
+
+
+# --- number rules (reference: lib/types/number.js) ----------------------
+
+_NUMBER_RULES = {
+    **_limit_rules("number", lambda col, a, t: col,
+                   ("min", "max", "greater", "less")),
+    "integer": _RuleDef(lambda col, a, ctx, t: [
+        (col == F.floor(col), "number.integer", {})]),
+    "multiple": _RuleDef(lambda col, a, ctx, t: [
+        (col % ctx.resolve(a["base"]) == 0, "number.multiple",
+         {"multiple": ctx.display(a["base"])})]),
+    "port": _RuleDef(lambda col, a, ctx, t: [
+        ((col >= 0) & (col <= 65535) & (col == F.floor(col)),
+         "number.port", {})]),
+    "sign": _RuleDef(lambda col, a, ctx, t: [
+        (col > 0, "number.positive", {}) if a["sign"] == "positive"
+        else (col < 0, "number.negative", {})]),
+    # convert mode rounds (reference: lib/types/number.js:81-87)
+    "precision": _RuleDef(lambda col, a, ctx, t: [
+        (col == F.round(col, a["limit"]), "number.precision",
+         {"limit": a["limit"]})],
+        lambda col, a: F.round(col, a["limit"])),
+}
+
+
+# --- array rules (reference: lib/types/array.js) -------------------------
+
+def _unique(col, a, ctx, t):
+    # comparator / path / ignoreUndefined options
+    # (reference: lib/types/array.js:468-558)
+    path = a.get("path")
+    comp = a.get("comparator")
+    if comp is not None:
+        # comparator(a, b) -> boolean Column (True = equal/dup);
+        # pairwise nested higher-order exists — fine for in-row
+        # arrays (bounded length), never used on the corpus axis
+        idxs = F.sequence(F.lit(1), F.size(col))
+        dup = F.exists(idxs, lambda i: F.exists(
+            idxs, lambda j: (j > i) & F.coalesce(
+                comp(F.element_at(col, i), F.element_at(col, j)),
+                F.lit(False))))
+        return [(~dup, "array.unique", {})]
+    vals = col
+    if path:
+        def getter(x):
+            for part in path:
+                x = x.getField(part)
+            return x
+        vals = F.transform(col, getter)
+    if a.get("ignoreUndefined", False):
+        vals = F.filter(vals, lambda x: x.isNotNull())
+    return [(F.size(vals) == F.size(F.array_distinct(vals)),
+             "array.unique", {})]
+
+
+def _sort(col, a, ctx, t):
+    order = a.get("order", "ascending")
+    by = a.get("by")
+    sign = 1 if order == "ascending" else -1
+    if by or order == "descending":
+        # comparator form: sort by a struct field path (reference:
+        # lib/types/array.js:740-813) with nulls ALWAYS last
+        # regardless of order (internals.compare: undefined → 1)
+        def cmp(x, y):
+            xv, yv = x, y
+            for part in (by or []):
+                xv, yv = xv.getField(part), yv.getField(part)
+            return (F.when(xv.isNull() & yv.isNull(), 0)
+                     .when(xv.isNull(), 1)
+                     .when(yv.isNull(), -1)
+                     .when(xv < yv, -sign)
+                     .when(xv > yv, sign)
+                     .otherwise(0))
+        sorted_ = F.array_sort(col, cmp)
     else:
-        raise CompileError(f"unknown string rule {name!r}")
-    return out
+        sorted_ = F.array_sort(col)
+    return [(col.eqNullSafe(sorted_), "array.sort",
+             {"order": order, "by": ".".join(by) if by else "value"})]
 
 
-# --- number rule predicates ---------------------------------------------
-
-def _number_rule(rule: Rule, col: Column, ctx: _Ctx) -> list[tuple[Column, str, dict]]:
-    a = rule.args
-    name = rule.name
-    if name in ("min", "max", "greater", "less"):
-        limit = ctx.resolve(a["limit"])
-        pred = {"min": col >= limit, "max": col <= limit,
-                "greater": col > limit, "less": col < limit}[name]
-        return [(pred, f"number.{name}", {"limit": ctx.display(a["limit"])})]
-    if name == "integer":
-        return [(col == F.floor(col), "number.integer", {})]
-    if name == "multiple":
-        base = ctx.resolve(a["base"])
-        return [(col % base == 0, "number.multiple",
-                 {"multiple": ctx.display(a["base"])})]
-    if name == "port":
-        return [((col >= 0) & (col <= 65535) & (col == F.floor(col)),
-                 "number.port", {})]
-    if name == "sign":
-        if a["sign"] == "positive":
-            return [(col > 0, "number.positive", {})]
-        return [(col < 0, "number.negative", {})]
-    if name == "precision":
-        limit = a["limit"]
-        return [(col == F.round(col, limit), "number.precision",
-                 {"limit": limit})]
-    raise CompileError(f"unknown number rule {name!r}")
+def _has(col, a, ctx, t):
+    # labeled has-schema reports array.hasKnown with the label
+    # (reference: lib/types/array.js:105-114)
+    found = F.exists(col, value_predicate(a["schema"], ctx, t.elementType))
+    label = a["schema"]._flags.get("label")
+    return [(found, "array.hasKnown", {"patternLabel": label}) if label
+            else (found, "array.hasUnknown", {})]
 
 
-# --- date rule predicates --------------------------------------------------
-
-def _date_limit(limit, ctx: _Ctx) -> tuple[Column, Any]:
-    if limit == "now":
-        return F.current_timestamp(), "now"
-    if isinstance(limit, Ref):
-        return ctx.resolve(limit), limit.display
-    return F.lit(limit).cast("timestamp"), limit
+_ARRAY_RULES = {
+    **_limit_rules("array", lambda col, a, t: F.size(col)),
+    "unique": _RuleDef(_unique),
+    "sort": _RuleDef(_sort),
+    "has": _RuleDef(_has),
+}
 
 
-def _date_rule(rule: Rule, col: Column, ctx: _Ctx) -> list[tuple[Column, str, dict]]:
-    a = rule.args
-    name = rule.name
-    if name in ("min", "max", "greater", "less"):
-        limit_col, display = _date_limit(a["date"], ctx)
-        pred = {"min": col >= limit_col, "max": col <= limit_col,
-                "greater": col > limit_col, "less": col < limit_col}[name]
-        return [(pred, f"date.{name}", {"limit": display})]
-    raise CompileError(f"unknown date rule {name!r}")
+def _key_count(col, a, dtype):
+    # a struct field counts when non-null, as Joi skips undefined values
+    # (reference: lib/types/object.js:278-313)
+    if isinstance(dtype, T.StructType):
+        return _balanced([col.getField(f.name).isNotNull().cast("int")
+                          for f in dtype.fields], operator.add, F.lit(0))
+    return F.size(F.map_keys(col))
 
 
-# --- array rule predicates (ArrayType columns) -----------------------------
+# plugin rules (joi_spark.extend) and Schema.custom:
+# builder(col, ctx) -> boolean Column (reference: lib/extend.js:58-104
+# custom validate, vectorized)
+_ANY_RULES = {"custom": _RuleDef(lambda col, a, ctx, t: [
+    (a["builder"](col, ctx), a.get("code", "any.custom"), {})])}
 
-def _array_rule(rule: Rule, col: Column, ctx: _Ctx,
-                compile_value_pred) -> list[tuple[Column, str, dict]]:
-    a = rule.args
-    name = rule.name
-    if name in ("min", "max", "length"):
-        limit = ctx.resolve(a["limit"])
-        sz = F.size(col)
-        pred = {"min": sz >= limit, "max": sz <= limit, "length": sz == limit}[name]
-        return [(pred, f"array.{name}", {"limit": ctx.display(a["limit"])})]
-    if name == "unique":
-        # comparator / path / ignoreUndefined options
-        # (reference: lib/types/array.js:468-558)
-        path = a.get("path")
-        comp = a.get("comparator")
-        ignore_undef = a.get("ignoreUndefined", False)
-        if comp is not None:
-            # comparator(a, b) -> boolean Column (True = equal/dup);
-            # pairwise nested higher-order exists — fine for in-row
-            # arrays (bounded length), never used on the corpus axis
-            idxs = F.sequence(F.lit(1), F.size(col))
-            dup = F.exists(idxs, lambda i: F.exists(
-                idxs, lambda j: (j > i) & F.coalesce(
-                    comp(F.element_at(col, i), F.element_at(col, j)),
-                    F.lit(False))))
-            return [(~dup, "array.unique", {})]
-        vals = col
-        if path:
-            def getter(x):
-                v = x
-                for part in path:
-                    v = v.getField(part)
-                return v
-            vals = F.transform(col, getter)
-        if ignore_undef:
-            vals = F.filter(vals, lambda x: x.isNotNull())
-        return [(F.size(vals) == F.size(F.array_distinct(vals)),
-                 "array.unique", {})]
-    if name == "sort":
-        order = a.get("order", "ascending")
-        by = a.get("by")
-        sign = 1 if order == "ascending" else -1
-        if by or order == "descending":
-            # comparator form: sort by a struct field path (reference:
-            # lib/types/array.js:740-813) with nulls ALWAYS last
-            # regardless of order (internals.compare: undefined → 1)
-            def cmp(x, y):
-                xv, yv = x, y
-                for part in (by or []):
-                    xv, yv = xv.getField(part), yv.getField(part)
-                return (F.when(xv.isNull() & yv.isNull(), 0)
-                         .when(xv.isNull(), 1)
-                         .when(yv.isNull(), -1)
-                         .when(xv < yv, -sign)
-                         .when(xv > yv, sign)
-                         .otherwise(0))
-            sorted_ = F.array_sort(col, cmp)
-        else:
-            sorted_ = F.array_sort(col)
-        by_disp = ".".join(by) if by else "value"
-        return [(col.eqNullSafe(sorted_), "array.sort",
-                 {"order": order, "by": by_disp})]
-    if name == "has":
-        # labeled has-schema reports array.hasKnown with the label
-        # (reference: lib/types/array.js:105-114)
-        pred_fn = compile_value_pred(a["schema"])
-        has_label = a["schema"]._flags.get("label")
-        if has_label:
-            return [(F.exists(col, pred_fn), "array.hasKnown",
-                     {"patternLabel": has_label})]
-        return [(F.exists(col, pred_fn), "array.hasUnknown", {})]
-    raise CompileError(f"unknown array rule {name!r}")
-
-
-# --- binary rules ----------------------------------------------------------
-
-def _binary_rule(rule: Rule, col: Column, ctx: _Ctx) -> list[tuple[Column, str, dict]]:
-    a = rule.args
-    limit = ctx.resolve(a["limit"])
-    lc = F.length(col)   # bytes for BinaryType
-    pred = {"min": lc >= limit, "max": lc <= limit, "length": lc == limit}[rule.name]
-    code = {"min": "binary.min", "max": "binary.max", "length": "binary.length"}[rule.name]
-    return [(pred, code, {"limit": ctx.display(a["limit"])})]
+_RULES = {kind: {**_ANY_RULES, **table} for kind, table in {
+    "any": {}, "boolean": {}, "alternatives": {},
+    "string": _STRING_RULES,
+    "number": _NUMBER_RULES,
+    "date": _limit_rules("date", lambda col, a, t: col,
+                         ("min", "max", "greater", "less"),
+                         limit=lambda a, ctx: _date_limit(a["date"], ctx)),
+    "array": _ARRAY_RULES,
+    "binary": _limit_rules("binary", lambda col, a, t: F.length(col)),
+    "object": _limit_rules("object", _key_count),
+}.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -510,189 +537,173 @@ def value_predicate(schema: Schema, ctx: _Ctx,
     return pred
 
 
-# ---------------------------------------------------------------------------
+# --- coerce per kind (reference: each type's ``coerce`` and base
+# ``validate``; lib/validator.js:144-158): ``coerce(schema, value, dtype,
+# convert)`` returns (converted value, its Spark type, base checks); the
+# type is None when no value of ``dtype`` can ever have the kind -------
 
-def _coerce(schema: Schema, col: Column, dtype: T.DataType, ctx: _Ctx,
-            label: str
-            ) -> tuple[Column, T.DataType | None, list[tuple[Column, str, dict]]]:
-    """Conversion pass (reference: lib/validator.js:144-158 + per-type
-    coerce blocks).  Returns (converted expr, its Spark type, base-type
-    failure checks); the type is None when no value of ``dtype`` can
-    ever have the schema's type — the base check is then ``lit(False)``
-    and nothing after it can fire."""
-    checks: list[tuple[Column, str, dict]] = []
-    convert = ctx.prefs["convert"]
-    t = schema.kind
+# message context of a base error, by code
+_BASE_CTX = {"object.base": {"type": "object"}}
+# the never-matches code by format flag, else ``<kind>.base``
+_STRICT_CODES = {"iso": "date.strict"}
 
-    if t == "string":
-        if not _is_string_like(dtype):
-            # static typing: non-string columns fail string.base in strict
-            # mode; in convert mode Joi does NOT coerce non-strings either
-            # (string has no coerce from number) → string.base
-            checks.append((F.lit(False), "string.base", {}))
-            return col.cast("string"), None, checks
-        conv = col
-        if convert:
-            for rule in schema._rules:
-                a = rule.args
-                if rule.name == "normalize":
-                    from joi_spark.functions.udfs import unicode_normalize_expr
-                    conv = unicode_normalize_expr(conv, a["form"])
-                elif rule.name == "case":
-                    conv = F.lower(conv) if a["direction"] == "lower" else F.upper(conv)
-                elif rule.name == "trim" and a.get("enabled", True):
-                    conv = F.trim(conv)
-                elif rule.name == "replace":
-                    conv = F.regexp_replace(conv, a["pattern"], a["replacement"])
-            if schema._flags.get("truncate"):
-                mx = schema.get_rule("max")
-                if mx:
-                    limit = ctx.resolve(mx.args["limit"])
-                    conv = F.substring(conv, F.lit(1), limit.cast("int")) \
-                        if isinstance(mx.args["limit"], Ref) else \
-                        F.substring(conv, 1, int(mx.args["limit"]))
-        return conv, dtype, checks
 
-    if t == "number":
-        if isinstance(dtype, (T.DoubleType, T.FloatType)):
-            checks.append((~F.isnan(col), "number.base", {}))
-            checks.append((col != float("inf"), "number.infinity", {}))
-            checks.append((col != float("-inf"), "number.infinity", {}))
-            if not schema._flags.get("unsafe"):
-                checks.append((F.abs(col) <= F.lit(float(MAX_SAFE_INTEGER)),
-                               "number.unsafe", {}))
-            return col, dtype, checks
-        if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType,
-                              T.ByteType, T.DecimalType)):
-            if not schema._flags.get("unsafe") and isinstance(dtype, (T.LongType, T.DecimalType)):
-                checks.append((F.abs(col) <= F.lit(MAX_SAFE_INTEGER),
-                               "number.unsafe", {}))
-            return col, dtype, checks
-        if _is_string_like(dtype) and convert:
-            # only the reference's numeric-string grammar parses
-            # (lib/types/number.js:28-63); '1d', '1_000', '0x10', 'NaN'
-            # and 'Infinity' stay strings and fail number.base
-            conv = F.when(col.rlike(RX.NUMBER), col.try_cast("double"))
-            checks.append((conv.isNotNull() | col.isNull(), "number.base", {}))
-            if not schema._flags.get("unsafe"):
-                checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)), F.lit(True)),
-                               "number.unsafe", {}))
-            # precision rounding in convert mode
-            # (reference: lib/types/number.js:81-87)
-            prec = schema.get_rule("precision")
-            if prec:
-                conv = F.round(conv, prec.args["limit"])
-            return conv, T.DoubleType(), checks
-        checks.append((F.lit(False), "number.base", {}))
+def _parsed(conv: Column, col: Column, code: str) -> _Triple:
+    """Base check of a parse: a non-null input parses to non-null."""
+    return conv.isNotNull() | col.isNull(), code, _BASE_CTX.get(code, {})
+
+
+def _coerce_number(schema, col, dtype, convert):
+    checks: list[_Triple] = []
+    safe = not schema._flags.get("unsafe")
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        checks = [(~F.isnan(col), "number.base", {}),
+                  (col != float("inf"), "number.infinity", {}),
+                  (col != float("-inf"), "number.infinity", {})]
+        if safe:
+            checks.append((F.abs(col) <= F.lit(float(MAX_SAFE_INTEGER)),
+                           "number.unsafe", {}))
+        return col, dtype, checks
+    if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType,
+                          T.ByteType, T.DecimalType)):
+        if safe and isinstance(dtype, (T.LongType, T.DecimalType)):
+            checks.append((F.abs(col) <= F.lit(MAX_SAFE_INTEGER),
+                           "number.unsafe", {}))
+        return col, dtype, checks
+    if not (isinstance(dtype, T.StringType) and convert):
         return col, None, checks
+    # only the reference's numeric-string grammar parses
+    # (lib/types/number.js:28-63); '1d', '1_000', '0x10', 'NaN'
+    # and 'Infinity' stay strings and fail number.base
+    conv = F.when(col.rlike(RX.NUMBER), col.try_cast("double"))
+    checks.append(_parsed(conv, col, "number.base"))
+    if safe:
+        checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)),
+                                  F.lit(True)), "number.unsafe", {}))
+    return conv, T.DoubleType(), checks
 
-    if t == "boolean":
-        if isinstance(dtype, T.BooleanType):
-            return col, dtype, checks
-        if _is_string_like(dtype) and convert:
-            truthy = [str(v) for v in (schema._terms.get("truthy") or [])]
-            falsy = [str(v) for v in (schema._terms.get("falsy") or [])]
-            insensitive = schema._flags.get("insensitive", True)
-            probe = F.lower(col) if insensitive else col
-            t_set = [v.lower() for v in truthy] if insensitive else truthy
-            f_set = [v.lower() for v in falsy] if insensitive else falsy
-            conv = (F.when(probe == "true", F.lit(True))
-                    .when(probe == "false", F.lit(False)))
-            if t_set:
-                conv = conv.when(probe.isin(*t_set), F.lit(True))
-            if f_set:
-                conv = conv.when(probe.isin(*f_set), F.lit(False))
-            checks.append((conv.isNotNull() | col.isNull(), "boolean.base", {}))
-            return conv, T.BooleanType(), checks
-        checks.append((F.lit(False), "boolean.base", {}))
-        return col, None, checks
 
-    if t == "date":
-        if isinstance(dtype, (T.TimestampType, T.DateType)):
-            return col.cast("timestamp"), T.TimestampType(), checks
-        fmt = schema._flags.get("format")
-        if convert:
-            if fmt == "unix":
-                conv = F.timestamp_seconds(col.cast("string").try_cast("long"))
-                code = "date.timestamp.unix"
-            elif fmt == "javascript":
-                conv = F.timestamp_millis(col.cast("string").try_cast("long"))
-                code = "date.timestamp.javascript"
-            elif fmt == "iso":
-                conv = F.when(col.cast("string").rlike(RX.ISO_DATE),
-                              col.cast("string").try_cast("timestamp"))
-                code = "date.isoDate"
-            else:
-                conv = F.coalesce(
-                    col.cast("string").try_cast("timestamp"),
-                    F.timestamp_millis(col.cast("string").try_cast("long")))
-                code = "date.base"
-            checks.append((conv.isNotNull() | col.isNull(), code, {}))
-            return conv, T.TimestampType(), checks
-        checks.append((F.lit(False), "date.strict" if fmt == "iso" else "date.base", {}))
-        return col, None, checks
+def _coerce_boolean(schema, col, dtype, convert):
+    if isinstance(dtype, T.BooleanType):
+        return col, dtype, []
+    if not (isinstance(dtype, T.StringType) and convert):
+        return col, None, []
+    truthy = [str(v) for v in (schema._terms.get("truthy") or [])]
+    falsy = [str(v) for v in (schema._terms.get("falsy") or [])]
+    insensitive = schema._flags.get("insensitive", True)
+    probe = F.lower(col) if insensitive else col
+    t_set = [v.lower() for v in truthy] if insensitive else truthy
+    f_set = [v.lower() for v in falsy] if insensitive else falsy
+    conv = (F.when(probe == "true", F.lit(True))
+            .when(probe == "false", F.lit(False)))
+    if t_set:
+        conv = conv.when(probe.isin(*t_set), F.lit(True))
+    if f_set:
+        conv = conv.when(probe.isin(*f_set), F.lit(False))
+    return conv, T.BooleanType(), [_parsed(conv, col, "boolean.base")]
 
-    if t == "array":
-        if isinstance(dtype, T.ArrayType):
-            return col, dtype, checks
-        single = schema._flags.get("single")
-        if _is_string_like(dtype) and convert:
-            # JSON-string coerce (reference: lib/types/array.js:31-62);
-            # element type unknown → array<string>
-            parsed_type = T.ArrayType(T.StringType())
-            parsed = F.from_json(col, parsed_type)
-            if single:
-                # values that don't parse as JSON arrays wrap as
-                # [value] (reference: lib/types/array.js:410-418 +
-                # validate wrap) — never a base failure
-                conv = F.when(col.isNull(), F.lit(None).cast("array<string>")) \
-                        .when(F.trim(col).startswith("[") & parsed.isNotNull(),
-                              parsed) \
-                        .otherwise(F.array(col))
-                return conv, parsed_type, checks
-            checks.append((parsed.isNotNull() | col.isNull(),
-                           "array.base", {}))
-            return parsed, parsed_type, checks
-        if single:
-            # scalar column + single(): every non-null value becomes a
-            # one-element array before item/length rules run
-            return F.when(col.isNotNull(), F.array(col)), T.ArrayType(dtype), checks
-        checks.append((F.lit(False), "array.base", {}))
-        return col, None, checks
 
-    if t == "binary":
-        if isinstance(dtype, T.BinaryType):
-            return col, dtype, checks
-        if _is_string_like(dtype) and convert:
-            # encoding flag selects the string→bytes decode
-            # (reference: lib/types/binary.js:18-24 Buffer.from(value,
-            # encoding)); default utf8 = plain cast
-            enc = schema._flags.get("encoding")
-            if enc in ("base64", "hex"):
-                conv = F.try_to_binary(col, F.lit(enc))
-                checks.append((conv.isNotNull() | col.isNull(),
-                               "binary.base", {}))
-                return conv, T.BinaryType(), checks
-            return col.cast("binary"), T.BinaryType(), checks
-        checks.append((F.lit(False), "binary.base", {}))
-        return col, None, checks
+# string → timestamp and its base code, by format flag
+_DATE_PARSE = {
+    "unix": (lambda s: F.timestamp_seconds(s.try_cast("long")),
+             "date.timestamp.unix"),
+    "javascript": (lambda s: F.timestamp_millis(s.try_cast("long")),
+                   "date.timestamp.javascript"),
+    "iso": (lambda s: F.when(s.rlike(RX.ISO_DATE), s.try_cast("timestamp")),
+            "date.isoDate"),
+    None: (lambda s: F.coalesce(s.try_cast("timestamp"),
+                                F.timestamp_millis(s.try_cast("long"))),
+           "date.base"),
+}
 
-    if t == "object":
-        if isinstance(dtype, (T.StructType, T.MapType)):
-            return col, dtype, checks
-        if _is_string_like(dtype) and convert:
-            # JSON-string coerce (reference: lib/types/object.js:49-64);
-            # field types unknown → canonical map<string,string>
-            parsed_type = T.MapType(T.StringType(), T.StringType())
-            conv = F.from_json(col, parsed_type)
-            checks.append((conv.isNotNull() | col.isNull(),
-                           "object.base", {"type": "object"}))
-            return conv, parsed_type, checks
-        checks.append((F.lit(False), "object.base", {"type": "object"}))
-        return col, None, checks
 
-    # any passthrough
-    return col, dtype, checks
+def _coerce_date(schema, col, dtype, convert):
+    if isinstance(dtype, (T.TimestampType, T.DateType)):
+        return col.cast("timestamp"), T.TimestampType(), []
+    if not convert:
+        return col, None, []
+    parse, code = _DATE_PARSE.get(schema._flags.get("format"),
+                                  _DATE_PARSE[None])
+    conv = parse(col.cast("string"))
+    return conv, T.TimestampType(), [_parsed(conv, col, code)]
+
+
+def _coerce_array(schema, col, dtype, convert):
+    if isinstance(dtype, T.ArrayType):
+        return col, dtype, []
+    single = schema._flags.get("single")
+    if isinstance(dtype, T.StringType) and convert:
+        # JSON-string coerce (reference: lib/types/array.js:31-62);
+        # element type unknown → array<string>
+        parsed_type = T.ArrayType(T.StringType())
+        parsed = F.from_json(col, parsed_type)
+        if not single:
+            return parsed, parsed_type, [_parsed(parsed, col, "array.base")]
+        # values that don't parse as JSON arrays wrap as [value]
+        # (reference: lib/types/array.js:410-418 + validate wrap) —
+        # never a base failure
+        return (F.when(col.isNull(), F.lit(None).cast("array<string>"))
+                .when(F.trim(col).startswith("[") & parsed.isNotNull(), parsed)
+                .otherwise(F.array(col)), parsed_type, [])
+    if single:
+        # scalar column + single(): every non-null value becomes a
+        # one-element array before item/length rules run
+        return F.when(col.isNotNull(), F.array(col)), T.ArrayType(dtype), []
+    return col, None, []
+
+
+def _coerce_binary(schema, col, dtype, convert):
+    if isinstance(dtype, T.BinaryType):
+        return col, dtype, []
+    if not (isinstance(dtype, T.StringType) and convert):
+        return col, None, []
+    # encoding flag selects the string→bytes decode (reference:
+    # lib/types/binary.js:18-24 Buffer.from(value, encoding)); default
+    # utf8 = plain cast
+    enc = schema._flags.get("encoding")
+    if enc not in ("base64", "hex"):
+        return col.cast("binary"), T.BinaryType(), []
+    conv = F.try_to_binary(col, F.lit(enc))
+    return conv, T.BinaryType(), [_parsed(conv, col, "binary.base")]
+
+
+def _coerce_object(schema, col, dtype, convert):
+    if isinstance(dtype, (T.StructType, T.MapType)):
+        return col, dtype, []
+    if not (isinstance(dtype, T.StringType) and convert):
+        return col, None, []
+    # JSON-string coerce (reference: lib/types/object.js:49-64); field
+    # types unknown → canonical map<string,string>
+    parsed_type = T.MapType(T.StringType(), T.StringType())
+    conv = F.from_json(col, parsed_type)
+    return conv, parsed_type, [_parsed(conv, col, "object.base")]
+
+
+_COERCE = {"any": lambda schema, col, dtype, convert: (col, dtype, []),
+           # Joi's string has no coerce from other types: a non-string
+           # fails string.base in either mode
+           "string": lambda schema, col, dtype, convert: (col, dtype, [])
+           if isinstance(dtype, T.StringType) else (col.cast("string"), None, []),
+           "number": _coerce_number,
+           "boolean": _coerce_boolean, "date": _coerce_date,
+           "array": _coerce_array, "binary": _coerce_binary,
+           "object": _coerce_object}
+
+
+def _value_match(values: Values, conv: Column, insensitive: bool | None,
+                 ctx: _Ctx) -> Column:
+    """Does ``conv`` equal one of the non-null literals (ignoring case
+    when ``insensitive`` and all are strings) or a ref?  ``None`` in
+    ``values`` is the caller's to handle."""
+    match = F.lit(False)
+    literals = [v for v in values.values if v is not None]
+    if literals and insensitive and all(isinstance(v, str) for v in literals):
+        match = F.lower(conv).isin(*[v.lower() for v in literals])
+    elif literals:
+        match = conv.isin(*literals)
+    for r in values.refs:
+        match = match | conv.eqNullSafe(ctx.resolve(r))
+    return match
 
 
 # ---------------------------------------------------------------------------
@@ -725,6 +736,12 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     label = _label(schema, name)
     overrides = schema._messages
     prefs = {**ctx.prefs, **(schema._preferences or {})}
+    convert = prefs["convert"]
+    table = _RULES[schema.kind]
+    for rule in schema._rules:
+        if rule.name not in table:
+            raise CompileError(
+                f"unknown rule {rule.name!r} for type {schema.type!r}")
     local = _Ctx(ctx.columns, ctx.conversions, prefs, ctx.context,
                  ctx.shared, ctx.dtypes)
 
@@ -761,8 +778,24 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         plan.checks.append(Check(ctx.next_seq(), path or name, code, okc, msg,
                                  severity))
 
-    # 1. coerce --------------------------------------------------------
-    conv, conv_dtype, base_checks = _coerce(schema, col, dtype, local, label)
+    # 1. coerce, then in convert mode the rules' convert forms in chain
+    # order on a value read from a string (reference: the string type's
+    # coerce, lib/types/string/index.js)
+    conv, conv_dtype, base_checks = _COERCE.get(schema.kind, _COERCE["any"])(
+        schema, col, dtype, convert)
+    if conv_dtype is None:
+        code = _STRICT_CODES.get(schema._flags.get("format"),
+                                 f"{schema.kind}.base")
+        base_checks = [(F.lit(False), code, _BASE_CTX.get(code, {}))]
+    elif convert and isinstance(dtype, T.StringType):
+        for rule in schema._rules:
+            if table[rule.name].convert:
+                conv = table[rule.name].convert(conv, rule.args)
+        mx = schema.get_rule("max") if schema._flags.get("truncate") else None
+        if mx:
+            lim = mx.args["limit"]
+            conv = F.substring(conv, F.lit(1), local.resolve(lim).cast("int")) \
+                if isinstance(lim, Ref) else F.substring(conv, 1, int(lim))
 
     # 2. empty (reference: lib/validator.js:162-165)
     empty = schema._flags.get("empty")
@@ -800,16 +833,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
 
     # 4. valids (reference: lib/validator.js:196-214)
     valid_match = None
+    insensitive = schema._flags.get("insensitive")
     if schema._valids:
-        vm = F.lit(False)
-        non_null = [v for v in schema._valids.values if v is not None]
-        if non_null:
-            if schema._flags.get("insensitive") and all(isinstance(v, str) for v in non_null):
-                vm = F.lower(conv).isin(*[v.lower() for v in non_null])
-            else:
-                vm = conv.isin(*non_null)
-        for r in schema._valids.refs:
-            vm = vm | conv.eqNullSafe(local.resolve(r))
+        vm = _value_match(schema._valids, conv, insensitive, local)
         if None in schema._valids.values:
             vm = vm | conv.isNull()
         valid_match = F.coalesce(vm, F.lit(False))
@@ -829,15 +855,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
 
     # 5. invalids (reference: lib/validator.js:218-227)
     if schema._invalids:
-        bad = F.lit(False)
-        nn = [v for v in schema._invalids.values if v is not None]
-        if nn:
-            if schema._flags.get("insensitive") and all(isinstance(v, str) for v in nn):
-                bad = F.lower(conv).isin(*[v.lower() for v in nn])
-            else:
-                bad = conv.isin(*nn)
-        for r in schema._invalids.refs:
-            bad = bad | conv.eqNullSafe(local.resolve(r))
+        bad = _value_match(schema._invalids, conv, insensitive, local)
         guard = rule_guard
         if None in schema._invalids.values:
             bad = bad | conv.isNull()
@@ -877,7 +895,8 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             if pat is not None:
                 compile_column(pat["rule"], f"{name}.{f}", ftype, ctx, plan,
                                cond=child_cond, col=conv.getField(f))
-            elif schema._flags.get("unknown") is False and (keys or pats):
+            elif schema._flags.get("unknown") is False and (
+                    "keys" in schema._terms or pats):
                 emit(conv.getField(f).isNull(), "object.unknown",
                      {"label": f"{name}.{f}"}, guard=rule_guard,
                      path=f"{name}.{f}")
@@ -892,54 +911,20 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             for pred, code, mctx in _dependency_preds(dep, field_present):
                 emit(pred, code, mctx, guard=rule_guard)
 
-    # 7. rules in chain order (reference: lib/validator.js:260-320)
-    element = lambda s: value_predicate(s, local, conv_dtype.elementType)
-    kind = schema.kind
+    # 7. rules in chain order (reference: lib/validator.js:260-320); a
+    # rule with a convert form was applied in step 1 in convert mode
     for rule in schema._rules:
-        if rule.convert_only and prefs["convert"]:
-            continue  # handled by conversion (reference: lib/validator.js:269-273)
-        if rule.name == "custom":
-            # plugin rule: builder(col, ctx) -> boolean Column
-            # (reference: lib/extend.js:58-104 custom validate, vectorized)
-            pred = rule.args["builder"](conv, local)
-            triples = [(pred, rule.args.get("code", "any.custom"), {})]
-        elif kind == "object" and rule.name in ("length", "min", "max"):
-            # per-row key count over a map/struct column — struct
-            # fields count when non-null (Joi skips undefined values;
-            # reference: lib/types/object.js:278-313)
-            if isinstance(dtype, T.StructType):
-                nk = _balanced([conv.getField(f.name).isNotNull()
-                                .cast("int") for f in dtype.fields],
-                               operator.add, F.lit(0))
-            else:
-                nk = F.size(F.map_keys(conv))
-            limit = local.resolve(rule.args["limit"])
-            pred = {"length": nk == limit, "min": nk >= limit,
-                    "max": nk <= limit}[rule.name]
-            triples = [(pred, f"object.{rule.name}",
-                        {"limit": local.display(rule.args["limit"])})]
-        elif kind == "string":
-            triples = _string_rule(rule, conv, local, label, overrides)
-        elif kind == "number":
-            if rule.name == "precision" and prefs["convert"]:
-                continue  # rounding applied in coercion
-            triples = _number_rule(rule, conv, local)
-        elif kind == "date":
-            triples = _date_rule(rule, conv, local)
-        elif kind == "array":
-            triples = _array_rule(rule, conv, local, element)
-        elif kind == "binary":
-            triples = _binary_rule(rule, conv, local)
-        else:
-            raise CompileError(
-                f"rule {rule.name!r} not supported on type {schema.type!r}")
-        for pred, code, mctx in triples:
+        if convert and table[rule.name].convert:
+            continue
+        for pred, code, mctx in table[rule.name].check(conv, rule.args, local,
+                                                       conv_dtype):
             emit(pred, code, mctx,
                  guard=rule_guard,
                  severity="warn" if rule.warn else "error",
                  message_override=rule.message, value_col=conv)
 
     # array items via higher-order forall (reference: lib/types/array.js:119-352)
+    element = lambda s: value_predicate(s, local, conv_dtype.elementType)
     if schema.type == "array" and schema._terms.get("items"):
         item_schemas = schema._terms["items"]
         allowed = [s for s in item_schemas
@@ -1047,8 +1032,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     # prefs.externals=False skips them entirely, validator.js:401-403)
     for ext in (schema._terms.get("externals") or []
                 if ctx.prefs.get("externals", True) else []):
-        from joi_spark.functions.udfs import external_message_udf
-        msg_col = external_message_udf(ext["method"])(conv)
+        msg_col = _udfs().external_message_udf(ext["method"])(conv)
         emit(msg_col.isNull(), ext.get("code", "external.check"), {},
              guard=rule_guard, severity="error",
              value_col=conv, dynamic_message=msg_col)
@@ -1248,23 +1232,20 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # - multiple=False + two renames to one target → .multiple error.
     columns = list(df.columns)
     renamed_targets: set[str] = set()
+    main_label = _label(schema, "")
+
+    def table_error(code: str, mctx: dict, overrides=schema._messages) -> None:
+        plan.table_errors.append(E.render_static(
+            code, {"label": main_label, **mctx}, overrides=overrides) or "")
 
     def _apply_one(c: str, to: str, opts: dict) -> None:
         if c == to:
             return
         if to in renamed_targets and not opts.get("multiple"):
-            plan.table_errors.append(E.render_static(
-                "object.rename.multiple",
-                {"label": _label(schema, "") or "value", "from": c,
-                 "to": to}, overrides=schema._messages) or "")
-            return
+            return table_error("object.rename.multiple", {"from": c, "to": to})
         if to in columns and not opts.get("override") \
                 and to not in renamed_targets:
-            plan.table_errors.append(E.render_static(
-                "object.rename.override",
-                {"label": _label(schema, "") or "value", "from": c,
-                 "to": to}, overrides=schema._messages) or "")
-            return
+            return table_error("object.rename.override", {"from": c, "to": to})
         if to in renamed_targets:
             # multiple=True, second source to the same target: the
             # reference's semantics are LAST WINS (object.js:955-958 —
@@ -1329,18 +1310,11 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
 
     # key-count rules — static table-level verdicts (columns are fixed)
     # (reference: lib/types/object.js:278-313)
-    n_cols = len(columns)
-    main_label = _label(schema, "")
     for rule in schema._rules:
         if rule.name in ("length", "min", "max"):
             limit = rule.args["limit"]
-            ok = {"length": n_cols == limit, "min": n_cols >= limit,
-                  "max": n_cols <= limit}[rule.name]
-            if not ok:
-                plan.table_errors.append(E.render_static(
-                    f"object.{rule.name}",
-                    {"label": main_label or "value", "limit": limit},
-                    overrides=schema._messages) or "")
+            if not _CMP[rule.name](len(columns), limit):
+                table_error(f"object.{rule.name}", {"limit": limit})
 
     # unknown-column policy (reference: lib/types/object.js:970-1077) —
     # a TABLE-level verdict, not per-row
@@ -1348,13 +1322,12 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     renamed_to = {to for _, to in plan.renames}
     known = set(keys) | renamed_to | set(pattern_cols)
     unknown_cols = [c for c in columns if c not in known]
-    if keys and not allow_unknown and unknown_cols:
+    if "keys" in schema._terms and not allow_unknown and unknown_cols:
         if merged_prefs.get("strip_unknown"):
             plan.drops.extend(unknown_cols)
         else:
             for c in unknown_cols:
-                plan.table_errors.append(
-                    E.render_static("object.unknown", {"label": c}) or "")
+                table_error("object.unknown", {"label": c}, None)
 
     # two passes so refs resolve against converted siblings regardless of
     # declaration order (reference topo-sorts keys: lib/types/object.js:598-625)
@@ -1372,28 +1345,24 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     def column_present(k: str) -> Column:
         return ctx.conversions.get(k, F.col(k)).isNotNull()
 
+    def table_check(path: str, code: str, pred: Column, mctx: dict) -> None:
+        msg = E.render_static(code, {"label": main_label, **mctx},
+                              overrides=schema._messages)
+        plan.checks.append(Check(ctx.next_seq(), path, code,
+                                 F.coalesce(pred, F.lit(False)), F.lit(msg)))
+
     for dep in schema._terms.get("dependencies") or []:
         for pred, code, mctx in _dependency_preds(dep, column_present):
-            msg = E.render_static(code, {"label": main_label, **mctx},
-                                  overrides=schema._messages)
-            plan.checks.append(Check(ctx.next_seq(),
-                                     dep.key or ",".join(dep.peers), code,
-                                     F.coalesce(pred, F.lit(False)),
-                                     F.lit(msg)))
+            table_check(dep.key or ",".join(dep.peers), code, pred, mctx)
 
     # asserts (reference: lib/types/object.js:205-231)
     for a in schema._terms.get("asserts") or []:
         ref: Ref = a["ref"]
         pred = value_predicate(a["schema"], ctx,
                                ctx.dtype_of(ref))(ctx.resolve(ref))
-        subject_label = a["message"] or ref.key
-        msg = E.render_static(
-            "object.assert",
-            {"label": main_label, "ref": ref.key,
-             "message": a["message"] or "pass the assertion test"},
-            overrides=schema._messages)
-        plan.checks.append(Check(ctx.next_seq(), ref.key, "object.assert",
-                                 F.coalesce(pred, F.lit(False)), F.lit(msg)))
+        table_check(ref.key, "object.assert", pred, {
+            "ref": ref.key,
+            "message": a["message"] or "pass the assertion test"})
     return plan
 
 

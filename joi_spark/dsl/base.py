@@ -22,25 +22,19 @@ from joi_spark.dsl.ref import Ref
 class Rule:
     """One entry in the ordered rule chain (reference: lib/base.js:590-678)."""
 
-    __slots__ = ("name", "args", "warn", "message", "keep", "convert_only")
+    __slots__ = ("name", "args", "warn", "message", "keep")
 
     def __init__(self, name: str, args: dict | None = None, *, warn: bool = False,
-                 message: str | None = None, keep: bool = False,
-                 convert_only: bool = False):
+                 message: str | None = None, keep: bool = False):
         self.name = name
         self.args = dict(args or {})
         self.warn = warn
         self.message = message
         self.keep = keep
-        # rule handled entirely by the conversion pass in convert mode
-        # (reference: lib/validator.js:269-273)
-        self.convert_only = convert_only
 
     def clone(self) -> "Rule":
-        r = Rule(self.name, copy.deepcopy(self.args), warn=self.warn,
-                 message=self.message, keep=self.keep,
-                 convert_only=self.convert_only)
-        return r
+        return Rule(self.name, copy.deepcopy(self.args), warn=self.warn,
+                    message=self.message, keep=self.keep)
 
     def describe(self) -> dict:
         d: dict[str, Any] = {"name": self.name}
@@ -550,7 +544,7 @@ class Schema:
             d["metas"] = list(self._meta)
         terms = {}
         for k, v in self._terms.items():
-            if v:
+            if v or k == "keys":    # keys {} allows no key at all
                 terms[k] = _describe_value(v)
         if terms:
             d["terms"] = terms

@@ -70,15 +70,10 @@ def build(desc: dict) -> Schema:
         s._flags[name] = _build_value(value)
 
     for rd in desc.get("rules") or []:
-        rule = Rule(rd["name"], _build_value(rd.get("args") or {}),
-                    warn=rd.get("warn", False), message=rd.get("message"),
-                    keep=rd.get("keep", False))
-        # re-derive convert_only the same way the DSL methods do
-        if rd["name"] in ("case", "normalize", "replace"):
-            rule.convert_only = True
-        if rd["name"] == "trim" and rule.args.get("enabled", True):
-            rule.convert_only = True
-        s._rules.append(rule)
+        s._rules.append(Rule(rd["name"], _build_value(rd.get("args") or {}),
+                             warn=rd.get("warn", False),
+                             message=rd.get("message"),
+                             keep=rd.get("keep", False)))
 
     for v in desc.get("allow") or []:
         s._valids.add(_build_value(v))

@@ -42,20 +42,23 @@ class ObjectSchema(Schema):
 
     # -- keys (reference: lib/types/object.js:253-276) -----------------
     def keys(self, keys: dict[str, Schema] | None = None) -> "ObjectSchema":
+        """``keys()`` allows any key, ``keys({})`` none, and a non-empty
+        dict adds to the declared keys."""
+        from joi_spark.dsl.compile_literal import compile_literal
         n = self.clone()
-        existing = dict(n._terms.get("keys") or {})
-        if keys is not None:
-            for k, v in keys.items():
-                if not isinstance(v, Schema):
-                    from joi_spark.dsl.compile_literal import compile_literal
-                    v = compile_literal(v)
-                existing[k] = v
-        n._terms["keys"] = existing
+        if keys is None:
+            n._terms.pop("keys", None)
+            return n
+        declared = dict(n._terms.get("keys") or {}) if keys else {}
+        for k, v in keys.items():
+            declared[k] = v if isinstance(v, Schema) else compile_literal(v)
+        n._terms["keys"] = declared
         return n
 
-    def append(self, keys: dict[str, Schema]) -> "ObjectSchema":
-        # reference: lib/types/object.js:191-203
-        return self.keys(keys)
+    def append(self, keys: dict[str, Schema] | None) -> "ObjectSchema":
+        # reference: lib/types/object.js:191-203 — nothing to append is
+        # a no-op
+        return self.keys(keys) if keys else self
 
     # -- dependencies ----------------------------------------------------
     def _dep(self, rel: str, key: str | None, peers) -> "ObjectSchema":

@@ -64,7 +64,7 @@ class StringSchema(Schema):
         # reference: lib/types/string/index.js:191-209
         if direction not in ("upper", "lower"):
             raise ValueError("direction must be 'upper' or 'lower'")
-        return self._add_rule("case", {"direction": direction}, convert_only=True)
+        return self._add_rule("case", {"direction": direction})
 
     def lowercase(self):
         return self.case("lower")
@@ -74,21 +74,20 @@ class StringSchema(Schema):
 
     def trim(self, enabled: bool = True):
         # reference: lib/types/string/index.js:642-660
-        return self._add_rule("trim", {"enabled": enabled}, convert_only=enabled)
+        return self._add_rule("trim", {"enabled": enabled})
 
     def normalize(self, form: str = "NFC"):
         # reference: lib/types/string/index.js:558-574
         if form not in ("NFC", "NFD", "NFKC", "NFKD"):
             raise ValueError(f"invalid normalization form {form!r}")
-        return self._add_rule("normalize", {"form": form}, convert_only=True)
+        return self._add_rule("normalize", {"form": form})
 
     def replace(self, pattern: str | re.Pattern, replacement: str):
         # coerce-only substitution (reference: lib/types/string/index.js:606-625)
         if isinstance(pattern, re.Pattern):
             pattern = pattern.pattern
         return self._add_rule("replace", {"pattern": pattern,
-                                          "replacement": replacement},
-                              convert_only=True)
+                                          "replacement": replacement})
 
     def truncate(self, enabled: bool = True):
         # reference: lib/types/string/index.js:662-669
@@ -155,7 +154,7 @@ class StringSchema(Schema):
 
     def iso_date(self):
         # reference: lib/types/string/index.js:479-493
-        return self._add_rule("isoDate", convert_only=False)
+        return self._add_rule("isoDate")
 
     isoDate = iso_date
 

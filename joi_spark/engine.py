@@ -25,6 +25,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from joi_spark.compiler import (CompiledPlan, compile_table, DEFAULT_PREFS,
                                 _balanced)
@@ -275,18 +276,54 @@ class ValidationResult:
 
     @property
     def value(self) -> DataFrame:
-        """The converted table — analogue of ``result.value``."""
+        """The converted table — analogue of ``result.value``.  A struct
+        field's output and strip apply inside its top-level column
+        (``withField`` / ``dropFields``); a declared key the input lacks
+        is added only when its schema gives it a value."""
         df = self.checked
-        keep = [c for c in df.columns if c not in ("_violations", "_ok")]
-        cols: list[Column] = []
-        for c in keep:
-            if c in self.plan.drops:
+        cols = {c: F.col(c) for c in df.columns if c not in ("_violations", "_ok")}
+        plain = dict(cols)
+
+        def split(path: str) -> tuple[str, str]:
+            return (path, "") if path in cols else path.partition(".")[::2]
+
+        for path in sorted(self.plan.outputs, key=lambda p: p.count(".")):
+            (top, field), out = split(path), self.plan.outputs[path]
+            if path in self.plan.drops or not (
+                    path in cols or self._keeps(path, df.schema)):
                 continue
-            if c in self.plan.outputs:
-                cols.append(self.plan.outputs[c].alias(c))
-            else:
-                cols.append(F.col(c))
-        return df.select(*cols)
+            if not field:
+                cols[top] = out
+            elif top in cols:
+                cols[top] = cols[top].withField(field, out)
+        for path in self.plan.drops:
+            top, field = split(path)
+            if not field:
+                cols.pop(top, None)
+            elif top in cols:
+                cols[top] = cols[top].dropFields(field)
+        return df.select(*[v if v is plain.get(c) else v.alias(c)
+                           for c, v in cols.items()])
+
+    def _keeps(self, path: str, frame: T.StructType) -> bool:
+        """Is the output of a struct field or a missing key part of the
+        table: the field exists or its declared schema gives it a value
+        (default, failover), and no enclosing object casts (to a map)?"""
+        dtype, schema = frame, self.schema
+        for i, part in enumerate(path.split(".")):
+            if i and schema is not None and "cast" in schema._flags:
+                return False
+            if schema is not None:
+                schema = (schema._terms.get("keys") or {}).get(part)
+            dtype = dtype[part].dataType if isinstance(dtype, T.StructType) \
+                and part in dtype.names else None
+        if dtype is not None:
+            return True
+        # a missing key gets a value from a default or failover, unless
+        # prefs.no_defaults left its output the bare (null) conversion
+        gives = schema is not None and not {"default", "failover"}.isdisjoint(
+            schema._flags)
+        return gives and self.plan.outputs[path] is not self.plan.conversions[path]
 
     converted = value
 

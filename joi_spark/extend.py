@@ -6,7 +6,10 @@ re-imagining: a rule's ``validate`` receives the COLUMN (plus compile
 context and the rule args) and returns a boolean ``Column`` expression —
 JVM-vectorized by construction.  For logic Spark expressions can't say,
 the builder may return a pandas-UDF call (the documented escape hatch);
-per-row Python UDFs are deliberately not part of the surface.
+per-row Python UDFs are deliberately not part of the surface.  A plugin
+rule is a ``custom`` rule: the compiler's ``any`` rule table holds it and
+every kind's table is merged over that one, so plugin and built-in rules
+go through the same lookup.
 
     semver = joi_spark.extend.extend(
         "semver", base=joi_spark.string,

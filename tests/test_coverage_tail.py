@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import joi_spark as joi
-from joi_spark.compiler import CompileError
+from joi_spark.compiler import CompileError, compile_table
 
 
 # --- string domain/email options ------------------------------------------
@@ -540,3 +540,14 @@ def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
     assert sorted(vals[r[0]] for r in got) == \
         sorted(["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "view",
                 "1_000", "1d", "1f", "0x10"])
+
+
+@pytest.mark.parametrize("kind", ["any", "string", "number", "boolean",
+                                  "date", "array", "binary", "object",
+                                  "alternatives"])
+def test_unknown_rule_raises_compile_error(spark, kind):
+    df = spark.createDataFrame([("x",)], "v string")
+    schema = joi.object({"v": joi.build({"type": kind,
+                                         "rules": [{"name": "nope"}]})})
+    with pytest.raises(CompileError, match="'nope'"):
+        compile_table(schema, df)

@@ -416,3 +416,44 @@ def test_annotate_nested_struct_and_array_markers(spark):
     # row 2: the whole struct is null -> -- missing -- on the column
     out2 = res.annotate(rows=2)
     assert '"meta" [1]: -- missing --' in out2
+
+
+def test_value_applies_struct_field_outputs_and_missing_defaults(spark):
+    """Output shaping of a struct field lands inside its column, and a
+    declared key the input lacks is added when its schema gives it a
+    value."""
+    df = spark.createDataFrame([(1, ("p", None)), (2, None)],
+                               "id bigint, meta struct<a:string,b:string>")
+    schema = joi.object({
+        "id": joi.number(),
+        "meta": joi.object({"a": joi.string().strip(),
+                            "b": joi.string().default("d")}),
+        "gone": joi.string().default("g"),
+        "absent": joi.string(),
+    })
+    res = joi.validate(df, schema, order_by=["id"])
+    out = res.value.orderBy("id")
+    assert out.columns == ["id", "meta", "gone"]
+    rows = out.collect()
+    assert rows[0]["meta"].asDict() == {"b": "d"}
+    assert rows[0]["gone"] == "g"
+    assert rows[1]["meta"] is None
+    assert rows[1]["gone"] == "g"
+    bare = joi.validate(df, schema, order_by=["id"], prefs={"no_defaults": True})
+    assert bare.value.columns == ["id", "meta"]
+
+
+def test_keys_empty_dict_allows_no_keys(spark):
+    """``keys({})`` declares that no key is allowed; ``keys()`` allows
+    any key."""
+    df = spark.createDataFrame([(1, ("v",))], "id bigint, s struct<x:string>")
+    none_allowed = joi.object({"s": joi.object().keys({}).unknown(False)})
+    rows = joi.validate(df, none_allowed, order_by=["id"]).violations().collect()
+    assert [(r["path"], r["code"]) for r in rows] == [("s.x", "object.unknown")]
+    any_allowed = joi.object({"s": joi.object().keys().unknown(False)})
+    assert joi.validate(df, any_allowed,
+                        order_by=["id"]).violations().count() == 0
+    res = joi.validate(df, joi.object({}).unknown(False), order_by=["id"])
+    assert res.table_errors == ['"id" is not allowed', '"s" is not allowed']
+    assert joi.build(joi.object().keys({}).describe())._terms["keys"] == {}
+    assert "keys" not in joi.build(joi.object().keys().describe())._terms
