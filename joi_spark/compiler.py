@@ -14,10 +14,12 @@ value, ``empty``, ``when(is=...)``, object ``assert`` — runs through the
 same sequence (the reference recurses into the full ``$_validate`` with
 the caller's prefs), and :func:`value_predicate` only folds its checks
 to pass/fail, so a value context cannot drift from the column check.
-A struct object's keys — children, pattern and unknown fields,
-dependencies — are one step of that sequence, and a declared key with
-no column or struct field runs it on a typed null.  ``Check.seq``
-numbers the checks of the whole plan in compile order.
+An object's keys — children, pattern and unknown keys, dependencies,
+asserts — are one step, :func:`_object_keys`, for the table's columns
+and a struct's fields alike; a declared key with no column or struct
+field runs the sequence on a typed null, and refs resolve against the
+object that holds the key.  ``Check.seq`` numbers the checks of the
+whole plan in compile order.
 
 Each kind has one coerce and one rule table merged over ``any``'s
 (which holds ``custom``), as lib/extend.js:11-135 merges each type's
@@ -31,6 +33,7 @@ guards and prunes unreferenced columns at the scan.
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import operator
 import re
@@ -105,48 +108,60 @@ class CompileError(ValueError):
 
 # ---------------------------------------------------------------------------
 
+@dataclass
 class _Ctx:
-    def __init__(self, columns: list[str], conversions: dict[str, Column],
-                 prefs: dict, context: dict,
-                 shared: dict | None = None,
-                 dtypes: dict[str, T.DataType] | None = None):
-        self.columns = columns
-        self.conversions = conversions   # converted sibling exprs (shadow
-                                         # semantics, lib/validator.js:414-418)
-        self.prefs = prefs
-        self.context = context
-        self.shared = shared or {}       # id → schema for link() resolution
-        self.dtypes = {} if dtypes is None else dtypes  # after conversion
-        self.seq = 0
+    # converted values and their Spark types by dotted path (shadow
+    # semantics, lib/validator.js:414-418); a table column not yet
+    # compiled has its input type and no conversion
+    conversions: dict[str, Column]
+    prefs: dict
+    context: dict
+    shared: dict = field(default_factory=dict)  # id → schema for link()
+    dtypes: dict[str, T.DataType] = field(default_factory=dict)
+    parent: tuple[str, ...] = ()   # path of the enclosing object
 
-    def next_seq(self) -> int:
-        self.seq += 1
-        return self.seq
+    def _reach(self, v: Ref) -> tuple[Column, T.DataType]:
+        """The converted value a value ref names, and its type: the key
+        ``v.path`` of the enclosing object, of an ancestor of it
+        (``'...b'``) or of the root (``'/b'``) (reference:
+        lib/ref.js:276-296).  A key that no value has is a typed null,
+        as a missing key is undefined in the reference."""
+        up = len(self.parent) if v.ancestor == "root" else (v.ancestor or 1) - 1
+        if up > len(self.parent):
+            return F.lit(None), T.NullType()
+        path = [*self.parent[:len(self.parent) - up], *v.path]
+        for i in range(len(path), 0, -1):
+            key = ".".join(path[:i])
+            if key not in self.dtypes:
+                continue
+            col, dtype = self.conversions.get(key, F.col(key)), self.dtypes[key]
+            for part in path[i:]:
+                if isinstance(dtype, T.MapType):
+                    dtype = dtype.valueType
+                elif isinstance(dtype, T.StructType) and part in dtype.names:
+                    dtype = dtype[part].dataType
+                else:
+                    return F.lit(None), T.NullType()
+                col = col.getField(part)
+            return col, dtype
+        return F.lit(None), T.NullType()
 
     def resolve(self, v):
-        """Limit/value → Column (refs see converted siblings; a key
-        that is neither declared nor a column resolves to null, as a
-        missing key does in the reference); ref adjust/map transforms
-        apply after resolution (reference: lib/ref.js:150-161)."""
-        if isinstance(v, Ref):
-            if v.kind == "global":
-                base = F.lit(self.context.get(v.key))
-            elif v.key in self.conversions:
-                base = self.conversions[v.key]
-            elif v.key.split(".")[0] in self.columns:
-                base = F.col(v.key)
-            else:
-                base = F.lit(None)
-            return v.apply(base)
-        return F.lit(v)
+        """Limit/value → Column (refs see converted values); ref
+        adjust/map transforms apply after resolution (reference:
+        lib/ref.js:150-161)."""
+        if not isinstance(v, Ref):
+            return F.lit(v)
+        if v.kind == "global":
+            return v.apply(F.lit(self.context.get(v.key)))
+        return v.apply(self._reach(v)[0])
 
     def dtype_of(self, v: Ref) -> T.DataType:
-        """Spark type of ``resolve(v)``: the context value's, else the
-        referenced column's after conversion (adjust/map are taken as
+        """Spark type of ``resolve(v)`` (adjust/map are taken as
         type-preserving)."""
         if v.kind == "global":
             return T._infer_type(self.context.get(v.key))
-        return self.dtypes.get(v.key, T.NullType())
+        return self._reach(v)[1]
 
     def display(self, v) -> Any:
         return v.display if isinstance(v, Ref) else v
@@ -523,13 +538,13 @@ def value_predicate(schema: Schema, ctx: _Ctx,
     second matcher: the value goes through :func:`compile_column`
     into a throwaway plan, and the result is the AND of its guarded
     error-severity checks, so a value context accepts exactly what a
-    column check accepts.  The throwaway ``_Ctx`` keeps the caller's
-    seq counter, conversions and outputs untouched.
+    column check accepts.  The throwaway plan and ``_Ctx`` keep the
+    caller's checks, conversions and outputs untouched.
     """
     def pred(col: Column) -> Column:
         plan = CompiledPlan()
-        scratch = _Ctx(ctx.columns, dict(ctx.conversions), ctx.prefs,
-                       ctx.context, ctx.shared, dict(ctx.dtypes))
+        scratch = dataclasses.replace(ctx, conversions=dict(ctx.conversions),
+                                      dtypes=dict(ctx.dtypes))
         compile_column(schema, "", dtype, scratch, plan, col=col)
         return _balanced([c.predicate for c in plan.checks
                           if c.severity == "error"],
@@ -590,7 +605,7 @@ def _coerce_boolean(schema, col, dtype, convert):
         return col, None, []
     truthy = [str(v) for v in (schema._terms.get("truthy") or [])]
     falsy = [str(v) for v in (schema._terms.get("falsy") or [])]
-    insensitive = schema._flags.get("insensitive", True)
+    insensitive = not schema._flags.get("sensitive")
     probe = F.lower(col) if insensitive else col
     t_set = [v.lower() for v in truthy] if insensitive else truthy
     f_set = [v.lower() for v in falsy] if insensitive else falsy
@@ -706,45 +721,14 @@ def _value_match(values: Values, conv: Column, insensitive: bool | None,
     return match
 
 
-# ---------------------------------------------------------------------------
-
-def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
-                   plan: CompiledPlan, *, cond: Column | None = None,
-                   col: Column | None = None) -> None:
-    """Emit conversion + checks for one value of Spark type ``dtype``:
-    the column ``name`` unless ``col`` gives the value expression (a
-    struct field, an array element, a map value — see
-    :func:`value_predicate`).  ``cond`` guards every check (used by
-    when/conditional schemas).
-
-    A struct value's ``keys()`` children, pattern fields, unknown
-    fields and dependencies are one more step of this sequence, and a
-    declared key with no column or field compiles here on a typed null
-    (:func:`_compile_absent`): every check of a value comes from
-    ``emit``, numbered by the one plan-wide ``seq`` counter."""
-    col = F.col(name) if col is None else col
-    if schema.type == "link":
-        # late-bound schema reuse (reference: lib/types/link.js:35-59):
-        # resolve against object().shared(...) registrations and compile
-        # the target in place (depth 1 — flat table columns can't recurse)
-        target_id = schema._flags.get("link_target")
-        target = ctx.shared.get(target_id)
-        if target is None:
-            raise CompileError(f"link('#{target_id}') has no shared() target")
-        compile_column(target, name, dtype, ctx, plan, cond=cond, col=col)
-        return
+def _emitter(schema: Schema, name: str, col: Column, plan: CompiledPlan,
+             cond: Column | None) -> Callable[..., None]:
+    """``emit(pred, code, mctx, ...)`` appends one check of ``schema``'s
+    value ``col`` at ``name`` to ``plan``: its message under the
+    schema's label, ``error()`` and ``messages()``, its predicate
+    passing where ``cond`` or ``guard`` does not hold."""
     label = _label(schema, name)
     overrides = schema._messages
-    prefs = {**ctx.prefs, **(schema._preferences or {})}
-    convert = prefs["convert"]
-    table = _RULES[schema.kind]
-    for rule in schema._rules:
-        if rule.name not in table:
-            raise CompileError(
-                f"unknown rule {rule.name!r} for type {schema.type!r}")
-    local = _Ctx(ctx.columns, ctx.conversions, prefs, ctx.context,
-                 ctx.shared, ctx.dtypes)
-
     error_flag = schema._flags.get("error")
 
     def emit(pred: Column, code: str, mctx: dict, *, guard: Column | None = None,
@@ -775,19 +759,62 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             g = cond if g is None else (g & cond)
         if g is not None:
             okc = F.when(~F.coalesce(g, F.lit(False)), F.lit(True)).otherwise(okc)
-        plan.checks.append(Check(ctx.next_seq(), path or name, code, okc, msg,
-                                 severity))
+        # seq numbers the checks of the whole plan in compile order
+        plan.checks.append(Check(len(plan.checks) + 1, path or name, code,
+                                 okc, msg, severity))
+    return emit
+
+
+# ---------------------------------------------------------------------------
+
+def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
+                   plan: CompiledPlan, *, cond: Column | None = None,
+                   col: Column | None = None) -> None:
+    """Emit conversion + checks for one value of Spark type ``dtype``:
+    the column ``name`` unless ``col`` gives the value expression (a
+    struct field, an array element, a map value — see
+    :func:`value_predicate`).  ``cond`` guards every check (used by
+    when/conditional schemas).
+
+    A struct value's keys step (:func:`_object_keys`) is one more step
+    of this sequence, and a declared key with no column or field
+    compiles here on a typed null (:func:`_compile_absent`): every
+    check of a value comes from ``emit``."""
+    col = F.col(name) if col is None else col
+    if schema.type == "link":
+        # late-bound schema reuse (reference: lib/types/link.js:35-59):
+        # resolve against object().shared(...) registrations and compile
+        # the target in place (depth 1 — flat table columns can't recurse)
+        target_id = schema._flags.get("link_target")
+        target = ctx.shared.get(target_id)
+        if target is None:
+            raise CompileError(f"link('#{target_id}') has no shared() target")
+        compile_column(target, name, dtype, ctx, plan, cond=cond, col=col)
+        return
+    prefs = {**ctx.prefs, **(schema._preferences or {})}
+    convert = prefs["convert"]
+    table = _RULES[schema.kind]
+    for rule in schema._rules:
+        if rule.name not in table:
+            raise CompileError(
+                f"unknown rule {rule.name!r} for type {schema.type!r}")
+    if schema._terms.get("renames"):
+        raise CompileError("rename() applies to the table's columns only, "
+                           "not to a nested object")
+    local = dataclasses.replace(ctx, prefs=prefs)
+    emit = _emitter(schema, name, col, plan, cond)
 
     # 1. coerce, then in convert mode the rules' convert forms in chain
-    # order on a value read from a string (reference: the string type's
-    # coerce, lib/types/string/index.js)
+    # order (reference: the string type's coerce, lib/types/string/
+    # index.js; number's base validate rounds, lib/types/number.js:81-87);
+    # an integer column is not rounded
     conv, conv_dtype, base_checks = _COERCE.get(schema.kind, _COERCE["any"])(
         schema, col, dtype, convert)
     if conv_dtype is None:
         code = _STRICT_CODES.get(schema._flags.get("format"),
                                  f"{schema.kind}.base")
         base_checks = [(F.lit(False), code, _BASE_CTX.get(code, {}))]
-    elif convert and isinstance(dtype, T.StringType):
+    elif convert and not isinstance(dtype, T.IntegralType):
         for rule in schema._rules:
             if table[rule.name].convert:
                 conv = table[rule.name].convert(conv, rule.args)
@@ -873,43 +900,11 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             rule_guard = rule_guard & F.coalesce(conv != F.lit(""),
                                                  F.lit(True))
     if schema.kind == "object" and isinstance(conv_dtype, T.StructType):
-        # object keys of a struct value (reference: lib/types/object.js:
-        # 114-142): children recurse by dotted path only where the
-        # parent is present, then pattern fields, unknown fields
-        # (present = non-null, as Joi skips undefined; checked only
-        # once keys or patterns are declared) and dependencies
-        fields = {f.name: f.dataType for f in conv_dtype.fields}
-        keys = schema._terms.get("keys") or {}
-        child_cond = rule_guard if cond is None else (cond & rule_guard)
-        for k, sub in keys.items():
-            if k in fields:
-                compile_column(sub, f"{name}.{k}", fields[k], ctx, plan,
-                               cond=child_cond, col=conv.getField(k))
-            else:
-                _compile_absent(sub, f"{name}.{k}", ctx, plan, child_cond)
-        pats = schema._terms.get("patterns") or []
-        for f, ftype in fields.items():
-            if f in keys:
-                continue
-            pat = next((p for p in pats if re.search(p["regex"], f)), None)
-            if pat is not None:
-                compile_column(pat["rule"], f"{name}.{f}", ftype, ctx, plan,
-                               cond=child_cond, col=conv.getField(f))
-            elif schema._flags.get("unknown") is False and (
-                    "keys" in schema._terms or pats):
-                emit(conv.getField(f).isNull(), "object.unknown",
-                     {"label": f"{name}.{f}"}, guard=rule_guard,
-                     path=f"{name}.{f}")
-
-        def field_present(k: str) -> Column:
-            if k not in fields:
-                return F.lit(False)
-            return ctx.conversions.get(f"{name}.{k}",
-                                       conv.getField(k)).isNotNull()
-
-        for dep in schema._terms.get("dependencies") or []:
-            for pred, code, mctx in _dependency_preds(dep, field_present):
-                emit(pred, code, mctx, guard=rule_guard)
+        # children recurse only where the object is present
+        _object_keys(schema, name, {f.name: f.dataType for f in conv_dtype.fields},
+                     conv.getField, local, plan,
+                     functools.partial(emit, guard=rule_guard),
+                     rule_guard if cond is None else (cond & rule_guard))
 
     # 7. rules in chain order (reference: lib/validator.js:260-320); a
     # rule with a convert form was applied in step 1 in convert mode
@@ -1113,6 +1108,68 @@ def _compile_absent(schema: Schema, name: str, ctx: _Ctx,
                    col=F.lit(None).cast(dtype))
 
 
+def _object_keys(schema: Schema, path: str | None, fields: dict[str, T.DataType],
+                 get: Callable[[str], Column], ctx: _Ctx, plan: CompiledPlan,
+                 emit: Callable[..., None], cond: Column | None) -> None:
+    """The keys step of an object whose ``fields`` (name → Spark type)
+    ``get`` reads: a struct value at ``path``, or the table (``path``
+    None, ``get`` = ``F.col``), whose unknown columns are static table
+    errors where a struct's unknown fields are per-row checks.  In
+    order (reference: lib/types/object.js:114-142): children in ref
+    order, pattern fields (the first matching pattern wins), unknown
+    fields (the ``unknown`` flag, else ``prefs.allow_unknown``, once
+    keys or patterns are declared), dependencies, asserts.  Children,
+    dependencies and asserts resolve refs against this object's keys;
+    an object-level check reports at the object, or on the table at
+    the key it names."""
+    def sub(k: str) -> str:
+        return k if path is None else f"{path}.{k}"
+
+    child = dataclasses.replace(
+        ctx, parent=() if path is None else tuple(path.split(".")))
+    keys = schema._terms.get("keys") or {}
+    for k in _topo_order(keys):
+        if k in fields:
+            compile_column(keys[k], sub(k), fields[k], child, plan,
+                           cond=cond, col=get(k))
+        else:
+            _compile_absent(keys[k], sub(k), child, plan, cond)
+    pats = schema._terms.get("patterns") or []
+    closed = ("keys" in schema._terms or pats) and not schema._flags.get(
+        "unknown", ctx.prefs["allow_unknown"])
+    for f, ftype in fields.items():
+        if f in keys:
+            continue
+        pat = next((p for p in pats if re.search(p["regex"], f)), None)
+        if pat is not None:
+            compile_column(pat["rule"], sub(f), ftype, child, plan,
+                           cond=cond, col=get(f))
+        elif closed and ctx.prefs.get("strip_unknown"):
+            plan.drops.append(sub(f))
+        elif closed and path is None:
+            _table_error(plan, schema, "object.unknown", {"label": f})
+        elif closed:
+            emit(get(f).isNull(), "object.unknown", {"label": sub(f)},
+                 path=sub(f))
+
+    def present(k: str) -> Column:
+        if sub(k) in child.conversions:
+            return child.conversions[sub(k)].isNotNull()
+        return get(k).isNotNull() if k in fields else F.lit(False)
+
+    for dep in schema._terms.get("dependencies") or []:
+        for pred, code, mctx in _dependency_preds(dep, present):
+            emit(pred, code, mctx,
+                 path=path if path is not None else dep.key or ",".join(dep.peers))
+    for a in schema._terms.get("asserts") or []:
+        ref: Ref = a["ref"]
+        pred = value_predicate(a["schema"], child,
+                               child.dtype_of(ref))(child.resolve(ref))
+        emit(pred, "object.assert", {
+            "ref": ref.key, "message": a["message"] or "pass the assertion test"},
+            path=path if path is not None else ref.key)
+
+
 def _emit_output(schema: Schema, name: str, conv: Column,
                  plan: CompiledPlan, ctx: _Ctx,
                  dtype: T.DataType | None = None) -> None:
@@ -1210,14 +1267,19 @@ def compile_table(schema: Schema, df: DataFrame, *,
         E.set_error_prefs(prev)
 
 
+def _table_error(plan: CompiledPlan, schema: Schema, code: str,
+                 mctx: dict) -> None:
+    """A static, table-level error of the root object ``schema``."""
+    plan.table_errors.append(E.render_static(
+        code, {"label": _label(schema, ""), **mctx},
+        overrides=schema._messages) or "")
+
+
 def _compile_table_inner(schema: Schema, df: DataFrame,
                          merged_prefs: dict,
                          context: dict) -> CompiledPlan:
     plan = CompiledPlan()
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    ctx = _Ctx(list(df.columns), {}, merged_prefs, context,
-               shared=dict(schema._terms.get("shared") or {}))
-
     if not isinstance(schema, ObjectSchema):
         raise CompileError("compile_table requires an object() schema; "
                            "use object().keys({column: schema})")
@@ -1232,20 +1294,17 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     # - multiple=False + two renames to one target → .multiple error.
     columns = list(df.columns)
     renamed_targets: set[str] = set()
-    main_label = _label(schema, "")
-
-    def table_error(code: str, mctx: dict, overrides=schema._messages) -> None:
-        plan.table_errors.append(E.render_static(
-            code, {"label": main_label, **mctx}, overrides=overrides) or "")
 
     def _apply_one(c: str, to: str, opts: dict) -> None:
         if c == to:
             return
         if to in renamed_targets and not opts.get("multiple"):
-            return table_error("object.rename.multiple", {"from": c, "to": to})
+            return _table_error(plan, schema, "object.rename.multiple",
+                                {"from": c, "to": to})
         if to in columns and not opts.get("override") \
                 and to not in renamed_targets:
-            return table_error("object.rename.override", {"from": c, "to": to})
+            return _table_error(plan, schema, "object.rename.override",
+                                {"from": c, "to": to})
         if to in renamed_targets:
             # multiple=True, second source to the same target: the
             # reference's semantics are LAST WINS (object.js:955-958 —
@@ -1293,98 +1352,33 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
             continue
         if frm in columns:
             _apply_one(frm, r["to"], r)
-    ctx.columns = columns
-    ctx.dtypes = dict(dtypes)
-
-    keys: dict[str, Schema] = dict(schema._terms.get("keys") or {})
-
-    # pattern keys: unknown columns whose NAME matches the regex
-    # validate against the pattern rule (reference:
-    # lib/types/object.js:340-370,972-1041)
-    pattern_cols: dict[str, Schema] = {}
-    for pat in schema._terms.get("patterns") or []:
-        rx = re.compile(pat["regex"])
-        for c in columns:
-            if c not in keys and c not in pattern_cols and rx.search(c):
-                pattern_cols[c] = pat["rule"]
-
     # key-count rules — static table-level verdicts (columns are fixed)
     # (reference: lib/types/object.js:278-313)
     for rule in schema._rules:
         if rule.name in ("length", "min", "max"):
             limit = rule.args["limit"]
             if not _CMP[rule.name](len(columns), limit):
-                table_error(f"object.{rule.name}", {"limit": limit})
+                _table_error(plan, schema, f"object.{rule.name}",
+                             {"limit": limit})
 
-    # unknown-column policy (reference: lib/types/object.js:970-1077) —
-    # a TABLE-level verdict, not per-row
-    allow_unknown = schema._flags.get("unknown", merged_prefs["allow_unknown"])
-    renamed_to = {to for _, to in plan.renames}
-    known = set(keys) | renamed_to | set(pattern_cols)
-    unknown_cols = [c for c in columns if c not in known]
-    if "keys" in schema._terms and not allow_unknown and unknown_cols:
-        if merged_prefs.get("strip_unknown"):
-            plan.drops.extend(unknown_cols)
-        else:
-            for c in unknown_cols:
-                table_error("object.unknown", {"label": c}, None)
-
-    # two passes so refs resolve against converted siblings regardless of
-    # declaration order (reference topo-sorts keys: lib/types/object.js:598-625)
-    order = _topo_order(keys)
-    for k in order:
-        if k in columns:
-            compile_column(keys[k], k, dtypes[k], ctx, plan)
-        else:
-            _compile_absent(keys[k], k, ctx, plan)
-
-    for c, rule_schema in pattern_cols.items():
-        compile_column(rule_schema, c, dtypes[c], ctx, plan)
-
-    # dependencies (reference: lib/types/object.js:724-872)
-    def column_present(k: str) -> Column:
-        return ctx.conversions.get(k, F.col(k)).isNotNull()
-
-    def table_check(path: str, code: str, pred: Column, mctx: dict) -> None:
-        msg = E.render_static(code, {"label": main_label, **mctx},
-                              overrides=schema._messages)
-        plan.checks.append(Check(ctx.next_seq(), path, code,
-                                 F.coalesce(pred, F.lit(False)), F.lit(msg)))
-
-    for dep in schema._terms.get("dependencies") or []:
-        for pred, code, mctx in _dependency_preds(dep, column_present):
-            table_check(dep.key or ",".join(dep.peers), code, pred, mctx)
-
-    # asserts (reference: lib/types/object.js:205-231)
-    for a in schema._terms.get("asserts") or []:
-        ref: Ref = a["ref"]
-        pred = value_predicate(a["schema"], ctx,
-                               ctx.dtype_of(ref))(ctx.resolve(ref))
-        table_check(ref.key, "object.assert", pred, {
-            "ref": ref.key,
-            "message": a["message"] or "pass the assertion test"})
+    ctx = _Ctx({}, merged_prefs, context,
+               shared=dict(schema._terms.get("shared") or {}),
+               dtypes=dtypes)
+    _object_keys(schema, None, {c: dtypes[c] for c in columns}, F.col, ctx,
+                 plan, _emitter(schema, "", F.lit(None), plan, None), None)
     return plan
 
 
 def _topo_order(keys: dict[str, Schema]) -> list[str]:
     """Order keys so ref-targets compile before referents
     (reference: lib/types/object.js:598-625 via @hapi/topo)."""
-    deps: dict[str, set[str]] = {}
-    for k, s in keys.items():
-        refs: set[str] = set()
-        def collect(sch: Schema):
-            for r in sch._valids.refs + sch._invalids.refs:
-                if r.kind == "value":
-                    refs.add(r.key)
-            for rule in sch._rules:
-                for v in rule.args.values():
-                    if isinstance(v, Ref) and v.kind == "value":
-                        refs.add(v.key)
-            for w in sch._terms.get("whens") or []:
-                if isinstance(w["ref"], Ref) and w["ref"].kind == "value":
-                    refs.add(w["ref"].key)
-        collect(s)
-        deps[k] = refs & set(keys)
+    def siblings(sch: Schema) -> set[str]:
+        refs = [*sch._valids.refs, *sch._invalids.refs,
+                *(v for rule in sch._rules for v in rule.args.values()),
+                *(w["ref"] for w in sch._terms.get("whens") or [])]
+        return {r.path[0] for r in refs if isinstance(r, Ref) and r.path
+                and r.kind == "value" and r.ancestor in (0, 1)} & set(keys)
+    deps = {k: siblings(s) for k, s in keys.items()}
     out: list[str] = []
     seen: set[str] = set()
     def visit(k: str, stack: tuple = ()):

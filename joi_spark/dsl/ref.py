@@ -1,11 +1,16 @@
 """References into sibling columns / global context.
 
-Models the reference's ``Joi.ref(key)`` (reference: lib/ref.js:22-72):
-- ``ref('other')``      → sibling column → compiles to ``F.col('other')``
-- ``ref('$name')``      → global context → compiles to ``F.lit(context[name])``
-- ``ref('.')``          → self value
-Ancestor paths (``...key``) are parsed but at table level every sibling is a
-column, so ancestors collapse to the row (reference: lib/ref.js:276-296).
+Models the reference's ``Joi.ref(key)`` (reference: lib/ref.js:22-72).
+A value ref resolves against the object that holds the key being
+validated (reference: lib/ref.js:276-296) — the table for a column, the
+struct for a struct field — and sees the converted value:
+- ``ref('b')``    → the sibling ``b`` (a column, or a field of the same struct);
+- ``ref('a.b')``  → field ``b`` of the sibling ``a``;
+- ``ref('...b')`` → ``b`` of the grandparent (each extra dot climbs one
+  object); ``ref('/b')`` → ``b`` of the root, the table;
+- ``ref('$name')`` → global context → compiles to ``F.lit(context[name])``.
+A ref to a key no value has resolves to null, as a missing key is
+undefined in the reference.
 """
 
 from __future__ import annotations

@@ -16,9 +16,11 @@ context like :class:`joi_spark.dsl.ref.Ref`.
 from __future__ import annotations
 
 import ast
+import operator
 import re
+from typing import Any, Callable
 
-_CONSTANTS = {
+CONSTANTS = {
     # reference: lib/template.js internals.constants
     "true": True, "false": False, "null": None,
     "second": 1000, "minute": 60 * 1000, "hour": 60 * 60 * 1000,
@@ -73,45 +75,49 @@ class Template:
 
 
 def _formula_column(expr: str, ctx):
-    """One ``{...}`` body → Column: name / constant / arithmetic."""
+    """One ``{...}`` body → Column: constants and numbers are literals,
+    ``$name`` a context value, any other (dotted) name a sibling ref."""
     from pyspark.sql import functions as F
     from joi_spark.dsl.ref import Ref
 
-    ops = {ast.Add: "__add__", ast.Sub: "__sub__",
-           ast.Mult: "__mul__", ast.Div: "__truediv__"}
-
-    def resolve_name(name: str):
+    def leaf(name: str):
         if name.startswith("__ctx_"):
             return ctx.resolve(Ref("$" + name[len("__ctx_"):]))
-        if name in _CONSTANTS:
-            return F.lit(_CONSTANTS[name])
+        if name in CONSTANTS:
+            return F.lit(CONSTANTS[name])
         return ctx.resolve(Ref(name))
 
+    # '$name' context prefix is not a python identifier
+    return evaluate(re.sub(r"\$(\w+)", r"__ctx_\1", expr), leaf, F.lit)
+
+
+_OPS = {ast.Add: operator.add, ast.Sub: operator.sub,
+        ast.Mult: operator.mul, ast.Div: operator.truediv}
+
+
+def evaluate(expr: str, leaf: Callable[[str], Any],
+             lit: Callable[[Any], Any] = lambda v: v):
+    """The formula walker of templates and messages (the @hapi/formula
+    subset, reference: lib/template.js:348-375): ``+ - * /``, unary
+    minus, parentheses, numeric literals and (dotted) names.  ``leaf``
+    resolves a name and ``lit`` wraps a number, so one walk gives a
+    Python value for a message or a Column for ``joi.x``."""
     def ev(n):
-        if isinstance(n, ast.BinOp) and type(n.op) in ops:
-            left, right = ev(n.left), ev(n.right)
-            return getattr(left, ops[type(n.op)])(right)
+        if isinstance(n, ast.BinOp) and type(n.op) in _OPS:
+            return _OPS[type(n.op)](ev(n.left), ev(n.right))
         if isinstance(n, ast.UnaryOp) and isinstance(n.op, ast.USub):
             return -ev(n.operand)
         if isinstance(n, ast.Constant) and isinstance(n.value, (int, float)):
-            return F.lit(n.value)
+            return lit(n.value)
+        path = []
+        while isinstance(n, ast.Attribute):
+            path.append(n.attr)
+            n = n.value
         if isinstance(n, ast.Name):
-            return resolve_name(n.id)
-        if isinstance(n, ast.Attribute):
-            # dotted path a.b → struct field ref
-            path = []
-            node = n
-            while isinstance(node, ast.Attribute):
-                path.append(node.attr)
-                node = node.value
-            if isinstance(node, ast.Name):
-                path.append(node.id)
-                return ctx.resolve(Ref(".".join(reversed(path))))
+            return leaf(".".join([n.id, *reversed(path)]))
         raise ValueError(f"unsupported template expression: {expr!r}")
 
-    # '$name' context prefix is not a python identifier
-    py = re.sub(r"\$(\w+)", r"__ctx_\1", expr)
-    return ev(ast.parse(py, mode="eval").body)
+    return ev(ast.parse(expr, mode="eval").body)
 
 
 def x(source: str) -> Template:

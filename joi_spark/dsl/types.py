@@ -238,6 +238,11 @@ class BooleanSchema(Schema):
         n._terms["falsy"] = list(n._terms.get("falsy") or []) + list(values)
         return n
 
+    def sensitive(self, enabled: bool = True):
+        # reference: lib/types/boolean.js — 'true'/'false', truthy and
+        # falsy strings match case-sensitively
+        return self._set_flag("sensitive", enabled or None)
+
 
 class DateSchema(Schema):
     """reference: lib/types/date.js"""

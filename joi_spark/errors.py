@@ -28,6 +28,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from joi_spark.dsl.ref import Ref
+from joi_spark.dsl.template import CONSTANTS, evaluate
 
 # --- message tables ----------------------------------------------------
 
@@ -290,45 +291,6 @@ def render_static(code: str, ctx: dict[str, Any], *,
     return _interpolate(template, ctx)
 
 
-_FORMULA_CONSTANTS = {
-    # reference: lib/template.js internals.constants
-    "true": True, "false": False, "null": None,
-    "second": 1000, "minute": 60 * 1000, "hour": 60 * 60 * 1000,
-    "day": 24 * 60 * 60 * 1000,
-}
-
-
-def _eval_formula(expr: str, ctx: dict[str, Any]):
-    """Arithmetic formula over error-context variables — the
-    driver-side realization of the reference's @hapi/formula templates
-    (lib/template.js:348-375): ``{#limit + 1}``, ``{#a * #b}``.
-    Supports + - * / unary-minus, numeric literals, and the template
-    constants.  Raises on anything unresolvable (caller leaves the
-    braces untouched, matching the reference's non-matching-brace
-    passthrough)."""
-    import ast
-    import operator as _op
-    ops = {ast.Add: _op.add, ast.Sub: _op.sub,
-           ast.Mult: _op.mul, ast.Div: _op.truediv}
-
-    def ev(n):
-        if isinstance(n, ast.BinOp) and type(n.op) in ops:
-            return ops[type(n.op)](ev(n.left), ev(n.right))
-        if isinstance(n, ast.UnaryOp) and isinstance(n.op, ast.USub):
-            return -ev(n.operand)
-        if isinstance(n, ast.Constant) and isinstance(n.value, (int, float)):
-            return n.value
-        if isinstance(n, ast.Name):
-            if n.id in ctx:
-                return ctx[n.id]
-            return _FORMULA_CONSTANTS[n.id]
-        raise KeyError(ast.dump(n))
-
-    # '#name' context-variable prefix is not a python identifier —
-    # context keys carry no '#', so strip it before parsing
-    return ev(ast.parse(expr.replace("#", ""), mode="eval").body)
-
-
 def _interpolate(template: str, ctx: dict[str, Any]) -> str:
     # The brace form controls ONLY html-escaping (reference:
     # template.js:68 raw = part[0] !== '{'; :185 Hoek.escapeHtml on
@@ -353,8 +315,11 @@ def _interpolate(template: str, ctx: dict[str, Any]) -> str:
                              wrap_arrays=wrap_pref)
         try:
             # single-brace formula: raw, like any {x} part
-            return stringify(_eval_formula(m.group(3), ctx),
-                             wrap_arrays=wrap_pref)
+            # '#name' context-variable prefix is not a python
+            # identifier, and context keys carry no '#'
+            value = evaluate(m.group(3).replace("#", ""),
+                             lambda k: ctx[k] if k in ctx else CONSTANTS[k])
+            return stringify(value, wrap_arrays=wrap_pref)
         except Exception:
             return m.group(0)   # non-evaluable braces pass through
     return _re.sub(

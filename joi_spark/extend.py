@@ -39,7 +39,9 @@ def extend(name: str, base: Callable[[], Schema] | None = None,
     ``rules[rname]`` is a dict with:
       - ``validate(col, ctx, *args, **kwargs) -> Column`` (required):
         boolean predicate, True = pass;
-      - ``message``: template for the rule's code (optional);
+      - ``message``: template for the rule's code, required unless
+        ``messages[code]`` or an already registered template gives one
+        (a rule without a template raises ``ValueError``);
       - ``code``: error code, default ``f"{name}.{rname}"``.
 
     The returned factory builds schemas whose ``type`` is ``name`` but
@@ -56,6 +58,9 @@ def extend(name: str, base: Callable[[], Schema] | None = None,
         code = spec.get("code", f"{name}.{rname}")
         if "message" in spec:
             msg_registry[code] = spec["message"]
+        elif code not in msg_registry and code not in E.MESSAGES:
+            raise ValueError(f"rule {rname!r} of {name!r} has no message "
+                             f"template for its code {code!r}")
 
         def make(rname=rname, spec=spec, code=code):
             def method(self, *args, **kwargs):

@@ -551,3 +551,49 @@ def test_unknown_rule_raises_compile_error(spark, kind):
                                          "rules": [{"name": "nope"}]})})
     with pytest.raises(CompileError, match="'nope'"):
         compile_table(schema, df)
+
+
+def test_boolean_sensitive(spark):
+    """``sensitive()`` matches 'true'/'false' and truthy/falsy strings
+    by case, and survives describe()/build()."""
+    schema = joi.object({"b": joi.boolean().truthy("on").sensitive()})
+    rebuilt = joi.build(schema.describe())
+    assert rebuilt.describe() == schema.describe()
+    df = spark.createDataFrame(
+        [(1, "on"), (2, "ON"), (3, "true"), (4, "TRUE")], "id bigint, b string")
+    for s in (schema, rebuilt):
+        res = joi.validate(df, s, order_by=["id"])
+        assert [(r["id"], r["code"]) for r in res.violations().collect()] \
+            == [(2, "boolean.base"), (4, "boolean.base")]
+    res = joi.validate(df, joi.object({"b": joi.boolean().truthy("on")}))
+    assert res.violations().count() == 0
+
+
+def test_extend_rule_without_template_raises():
+    rules = {"even": {"validate": lambda col, ctx: col % 2 == 0}}
+    with pytest.raises(ValueError, match="nomsgnum.even"):
+        joi.extend("nomsgnum", base=joi.number, rules=rules)
+    even = joi.extend("nomsgnum", base=joi.number, rules=rules,
+                      messages={"nomsgnum.even": '"{{#label}}" must be even'})
+    assert even().even()._rules[0].args["code"] == "nomsgnum.even"
+
+
+def test_precision_rounds_numeric_columns_in_convert_mode(spark):
+    """Convert mode rounds a double or decimal column to the precision
+    before the rules run; strict mode checks it."""
+    df = spark.createDataFrame([(1, 1.234, 2.5), (2, 1.236, 2.49)],
+                               "id bigint, n double, m double")
+    schema = joi.object({"n": joi.number().precision(2),
+                         "m": joi.number().precision(0).max(2)})
+    res = joi.validate(df, schema, order_by=["id"])
+    assert [(r["id"], r["path"], r["code"])
+            for r in res.violations().collect()] == [(1, "m", "number.max")]
+    assert [(r["n"], r["m"]) for r in res.value.orderBy("id").collect()] \
+        == [(1.23, 3.0), (1.24, 2.0)]
+    res = joi.validate(df, schema, order_by=["id"],
+                       prefs={"convert": False, "abort_early": False})
+    assert [(r["id"], r["path"], r["code"])
+            for r in res.violations().collect()] == [
+        (1, "n", "number.precision"), (1, "m", "number.precision"),
+        (1, "m", "number.max"), (2, "n", "number.precision"),
+        (2, "m", "number.precision"), (2, "m", "number.max")]

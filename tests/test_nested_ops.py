@@ -7,6 +7,7 @@ import re
 import pytest
 
 import joi_spark as joi
+from joi_spark.compiler import CompileError, compile_table
 
 
 def test_struct_column_keys(spark):
@@ -268,7 +269,7 @@ def test_absent_keys_run_the_sequence(spark):
     res = joi.validate(_meta_frame(spark), joi.object({
         "kind": joi.string(),
         "meta": joi.object({
-            "c": joi.string().when("kind", is_="a", then=joi.required()),
+            "c": joi.string().when("...kind", is_="a", then=joi.required()),
         }),
         "gone": joi.number().required().error("BAD"),
     }), order_by=["id"], prefs={"abort_early": False})
@@ -296,3 +297,97 @@ def test_absent_key_ref_to_undeclared_absent_column(spark):
     assert got == [(i, p, c) for i in (1, 2, 3, 4)
                    for p, c in (("gone", "any.required"),
                                 ("flat", "any.unknown"))]
+
+
+# --- one keys step for the table and struct objects ---------------------
+
+def _pairs(spark):
+    return spark.createDataFrame(
+        [(1, 9.0, (5.0, 4.0, 1.0)), (2, 0.0, (5.0, 6.0, 1.0))],
+        "id bigint, b double, meta struct<a:double, b:double, c:double>")
+
+
+def test_struct_child_ref_resolves_in_its_object(spark):
+    """``ref('b')`` in a struct child names the struct's own ``b``;
+    ``'...b'`` climbs to the table's ``b`` (reference: lib/ref.js)."""
+    schema = joi.object({
+        "id": joi.number(), "b": joi.number(),
+        "meta": joi.object({"a": joi.number().min(joi.ref("b")),
+                            "b": joi.number(),
+                            "c": joi.number().max(joi.ref("...b"))}),
+    })
+    res = joi.validate(_pairs(spark), schema, order_by=["id"],
+                       prefs={"abort_early": False})
+    got = [(r["id"], r["path"], r["code"], r["message"])
+           for r in res.violations().collect()]
+    assert got == [
+        (2, "meta.a", "number.min",
+         '"meta.a" must be larger than or equal to ref:b'),
+        (2, "meta.c", "number.max",
+         '"meta.c" must be less than or equal to ref:b'),
+    ]
+
+
+def test_struct_child_ref_sees_converted_sibling(spark):
+    """A struct child compiles after the sibling it refers to and sees
+    that sibling's converted value."""
+    df = spark.createDataFrame([(1, ("x", "X")), (2, ("X", "X"))],
+                               "id bigint, meta struct<a:string, b:string>")
+    schema = joi.object({"meta": joi.object({
+        "a": joi.string().valid(joi.ref("b")),
+        "b": joi.string().lowercase(),
+    })})
+    res = joi.validate(df, schema, order_by=["id"])
+    assert [(r["id"], r["path"], r["code"])
+            for r in res.violations().collect()] == [(2, "meta.a", "any.only")]
+
+
+def test_struct_assert(spark):
+    """``assert_()`` on a struct object checks per row and reports at
+    the object; its refs resolve among the object's keys."""
+    schema = joi.object({"meta": joi.object({
+        "a": joi.number(), "b": joi.number(),
+    }).assert_("a", joi.number().less(joi.ref("b")), "stay below b")})
+    res = joi.validate(_pairs(spark), schema, order_by=["id"])
+    got = [(r["id"], r["path"], r["code"], r["message"])
+           for r in res.violations().collect()]
+    assert got == [(1, "meta", "object.assert",
+                    '"meta" is invalid because "a" failed to stay below b')]
+
+
+def test_struct_rename_raises(spark):
+    schema = joi.object({"meta": joi.object({"z": joi.number()})
+                         .rename("a", "z")})
+    with pytest.raises(CompileError, match="rename"):
+        compile_table(schema, _pairs(spark))
+
+
+def test_allow_unknown_pref_flags_struct_fields(spark):
+    schema = joi.object({"id": joi.number(), "b": joi.number(),
+                         "meta": joi.object({"a": joi.number(),
+                                             "b": joi.number()})})
+    res = joi.validate(_pairs(spark), schema, order_by=["id"],
+                       prefs={"allow_unknown": False})
+    assert res.table_errors == []
+    assert [(r["id"], r["path"], r["code"], r["message"])
+            for r in res.violations().collect()] == [
+        (1, "meta.c", "object.unknown", '"meta.c" is not allowed'),
+        (2, "meta.c", "object.unknown", '"meta.c" is not allowed')]
+
+
+def test_pattern_only_table_flags_unknown_columns(spark):
+    """With patterns and no keys, ``unknown(False)`` still closes the
+    table, as it closes a struct."""
+    schema = joi.object().pattern("^[ib]", joi.number()).unknown(False)
+    res = joi.validate(_pairs(spark), schema)
+    assert res.table_errors == ['"meta" is not allowed']
+
+
+def test_table_dependency_on_absent_column(spark):
+    """A dependency peer the table lacks is absent on every row."""
+    schema = joi.object({"id": joi.number()}).with_("id", "nope")
+    res = joi.validate(_pairs(spark), schema, order_by=["id"])
+    assert [(r["id"], r["path"], r["code"], r["message"])
+            for r in res.violations().collect()] == [
+        (i, "id", "object.with", '"id" missing required peer "nope"')
+        for i in (1, 2)]
