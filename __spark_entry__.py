@@ -1856,11 +1856,13 @@ def oracle_sql() -> dict[str, str]:
             FROM events
             WHERE event_type IS NOT NULL
               -- the number branch parses only the engine's numeric
-              -- grammar (DuckDB's own cast also takes '1_000');
-              -- overflow to ±inf and |x| > 2^53-1 fail number.unsafe
+              -- grammar (DuckDB's own cast also takes '1_000') with
+              -- JavaScript's whitespace trimmed; overflow to ±inf
+              -- and |x| > 2^53-1 fail number.unsafe
               AND NOT coalesce(
                   regexp_matches(event_type, '""" + RX.NUMBER + """')
-                  AND abs(try_cast(event_type AS DOUBLE))
+                  AND abs(try_cast(regexp_extract(
+                          event_type, '""" + RX.NUMBER + """', 1) AS DOUBLE))
                       <= 9007199254740991, false)
               AND lower(event_type) NOT IN ('true', 'false')
         """,

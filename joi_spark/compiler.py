@@ -15,11 +15,11 @@ same sequence (the reference recurses into the full ``$_validate`` with
 the caller's prefs), and :func:`value_predicate` only folds its checks
 to pass/fail, so a value context cannot drift from the column check.
 An object's keys — children, pattern and unknown keys, dependencies,
-asserts — are one step, :func:`_object_keys`, for the table's columns
-and a struct's fields alike; a declared key with no column or struct
-field runs the sequence on a typed null, and refs resolve against the
-object that holds the key.  ``Check.seq`` numbers the checks of the
-whole plan in compile order.
+asserts — are one step, :func:`_object_keys`, for the table's columns,
+a struct's fields and a map's entries alike; a declared key with no
+column or struct field runs the sequence on a typed null, and refs
+resolve against the object that holds the key.  ``Check.seq`` numbers
+the checks of the whole plan in compile order.
 
 Each kind has one coerce and one rule table merged over ``any``'s
 (which holds ``custom``), as lib/extend.js:11-135 merges each type's
@@ -590,7 +590,8 @@ def _coerce_number(schema, col, dtype, convert):
     # only the reference's numeric-string grammar parses
     # (lib/types/number.js:28-63); '1d', '1_000', '0x10', 'NaN'
     # and 'Infinity' stay strings and fail number.base
-    conv = F.when(col.rlike(RX.NUMBER), col.try_cast("double"))
+    conv = F.when(col.rlike(RX.NUMBER),
+                  F.regexp_extract(col, RX.NUMBER, 1).try_cast("double"))
     checks.append(_parsed(conv, col, "number.base"))
     if safe:
         checks.append((F.coalesce(F.abs(conv) <= F.lit(float(MAX_SAFE_INTEGER)),
@@ -776,7 +777,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     :func:`value_predicate`).  ``cond`` guards every check (used by
     when/conditional schemas).
 
-    A struct value's keys step (:func:`_object_keys`) is one more step
+    An object value's keys step (:func:`_object_keys`) is one more step
     of this sequence, and a declared key with no column or field
     compiles here on a typed null (:func:`_compile_absent`): every
     check of a value comes from ``emit``."""
@@ -899,10 +900,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             emit(conv != F.lit(""), "string.empty", {}, guard=rule_guard)
             rule_guard = rule_guard & F.coalesce(conv != F.lit(""),
                                                  F.lit(True))
-    if schema.kind == "object" and isinstance(conv_dtype, T.StructType):
-        # children recurse only where the object is present
-        _object_keys(schema, name, {f.name: f.dataType for f in conv_dtype.fields},
-                     conv.getField, local, plan,
+    if schema.kind == "object":
+        # a struct or a map; children recurse only where it is present
+        _object_keys(schema, name, conv, conv_dtype, local, plan,
                      functools.partial(emit, guard=rule_guard),
                      rule_guard if cond is None else (cond & rule_guard))
 
@@ -954,32 +954,6 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     if schema.type == "array" and schema._flags.get("sparse") is False:
         emit(~F.exists(conv, lambda x: x.isNull()), "array.sparse", {},
              guard=rule_guard)
-
-    # map-column pattern keys (reference: lib/types/object.js:340-370,
-    # 1018-1035): map keys matching a pattern regex must carry values
-    # satisfying the pattern rule; with unknown(False), every key must
-    # match some pattern
-    if schema.kind == "object" and isinstance(dtype, T.MapType):
-        pats = schema._terms.get("patterns") or []
-
-        def _pattern_ok(rx, vp):
-            return lambda e: ~e["key"].rlike(rx) | vp(e["value"])
-
-        for pat in pats:
-            ok = F.forall(F.map_entries(conv),
-                          _pattern_ok(pat["regex"],
-                                      value_predicate(pat["rule"], local,
-                                                      conv_dtype.valueType)))
-            emit(ok, "object.pattern.match", {}, guard=rule_guard)
-        if pats and schema._flags.get("unknown") is False:
-            rxs = [p_["regex"] for p_ in pats]
-
-            def _known_ok(k):
-                return _balanced([k.rlike(r) for r in rxs],
-                                 operator.or_, F.lit(False))
-
-            emit(F.forall(F.map_keys(conv), _known_ok), "object.unknown", {},
-                 guard=rule_guard)
 
     # alternatives: first-match-wins degenerates to OR for pass/fail
     # (reference: lib/types/alternatives.js:33-91).  A lone branch
@@ -1108,26 +1082,33 @@ def _compile_absent(schema: Schema, name: str, ctx: _Ctx,
                    col=F.lit(None).cast(dtype))
 
 
-def _object_keys(schema: Schema, path: str | None, fields: dict[str, T.DataType],
-                 get: Callable[[str], Column], ctx: _Ctx, plan: CompiledPlan,
+def _object_keys(schema: Schema, path: str | None, value: Column | None,
+                 dtype: T.DataType, ctx: _Ctx, plan: CompiledPlan,
                  emit: Callable[..., None], cond: Column | None) -> None:
-    """The keys step of an object whose ``fields`` (name → Spark type)
-    ``get`` reads: a struct value at ``path``, or the table (``path``
-    None, ``get`` = ``F.col``), whose unknown columns are static table
-    errors where a struct's unknown fields are per-row checks.  In
-    order (reference: lib/types/object.js:114-142): children in ref
-    order, pattern fields (the first matching pattern wins), unknown
-    fields (the ``unknown`` flag, else ``prefs.allow_unknown``, once
-    keys or patterns are declared), dependencies, asserts.  Children,
+    """The keys step of an object ``value`` of Spark type ``dtype`` at
+    ``path``: a struct, a map, or the table (``path`` and ``value``
+    None, ``dtype`` the struct of its columns).  In order (reference:
+    lib/types/object.js:114-142): children in ref order, pattern keys
+    (the first matching pattern wins), unknown keys (the ``unknown``
+    flag, else ``prefs.allow_unknown``, once keys or patterns are
+    declared), dependencies, asserts.  An unknown column is a static
+    table error and an unknown struct field a per-row check at the
+    field; a map's undeclared keys vary per row, so each pattern and
+    the unknown policy are one per-row check at the map.  Children,
     dependencies and asserts resolve refs against this object's keys;
     an object-level check reports at the object, or on the table at
     the key it names."""
     def sub(k: str) -> str:
         return k if path is None else f"{path}.{k}"
 
+    get = F.col if value is None else value.getField
     child = dataclasses.replace(
         ctx, parent=() if path is None else tuple(path.split(".")))
     keys = schema._terms.get("keys") or {}
+    is_map = isinstance(dtype, T.MapType)
+    # a map has every declared key, null in a row that lacks it
+    fields = dict.fromkeys(keys, dtype.valueType) if is_map else {
+        f.name: f.dataType for f in dtype.fields}
     for k in _topo_order(keys):
         if k in fields:
             compile_column(keys[k], sub(k), fields[k], child, plan,
@@ -1151,11 +1132,31 @@ def _object_keys(schema: Schema, path: str | None, fields: dict[str, T.DataType]
         elif closed:
             emit(get(f).isNull(), "object.unknown", {"label": sub(f)},
                  path=sub(f))
+    if is_map:
+        def taken(k: Column, n: int) -> list[Column]:
+            # k is declared, or one of the first n patterns matches it
+            return ([k.isin(*keys)] if keys else []) + [
+                k.rlike(p["regex"]) for p in pats[:n]]
+
+        def ok(i: int) -> Callable[[Column], Column]:
+            # taken before pattern i, not pattern i's, or a valid value
+            vp = value_predicate(pats[i]["rule"], child, dtype.valueType)
+            return lambda e: _balanced(
+                [*taken(e["key"], i), ~e["key"].rlike(pats[i]["regex"]),
+                 vp(e["value"])], operator.or_, None)
+
+        for i in range(len(pats)):
+            emit(F.forall(F.map_entries(value), ok(i)),
+                 "object.pattern.match", {})
+        if closed and not ctx.prefs.get("strip_unknown"):
+            emit(F.forall(F.map_keys(value), lambda k: _balanced(
+                taken(k, len(pats)), operator.or_, F.lit(False))),
+                 "object.unknown", {})
 
     def present(k: str) -> Column:
         if sub(k) in child.conversions:
             return child.conversions[sub(k)].isNotNull()
-        return get(k).isNotNull() if k in fields else F.lit(False)
+        return get(k).isNotNull() if k in fields or is_map else F.lit(False)
 
     for dep in schema._terms.get("dependencies") or []:
         for pred, code, mctx in _dependency_preds(dep, present):
@@ -1253,9 +1254,6 @@ def compile_table(schema: Schema, df: DataFrame, *,
         # divergence, reject loudly instead of mis-rendering
         raise CompileError("errors.language must be a string "
                            "(ref-resolvable language is not supported)")
-    unknown = set(err) - {"language", "wrap_arrays", "escape_html"}
-    if unknown:
-        raise CompileError(f"unknown errors preferences: {sorted(unknown)}")
     prev = E.set_error_prefs({
         "language": lang,
         "wrap_arrays": err.get("wrap_arrays", True),
@@ -1364,8 +1362,9 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
     ctx = _Ctx({}, merged_prefs, context,
                shared=dict(schema._terms.get("shared") or {}),
                dtypes=dtypes)
-    _object_keys(schema, None, {c: dtypes[c] for c in columns}, F.col, ctx,
-                 plan, _emitter(schema, "", F.lit(None), plan, None), None)
+    _object_keys(schema, None, None,
+                 T.StructType([T.StructField(c, dtypes[c]) for c in columns]),
+                 ctx, plan, _emitter(schema, "", F.lit(None), plan, None), None)
     return plan
 
 

@@ -280,8 +280,8 @@ class ValidationResult:
         field's output and strip apply inside its top-level column
         (``withField`` / ``dropFields``); a declared key the input lacks
         is added only when its schema gives it a value."""
-        df = self.checked
-        cols = {c: F.col(c) for c in df.columns if c not in ("_violations", "_ok")}
+        df = self._renamed
+        cols = {c: F.col(c) for c in df.columns}
         plain = dict(cols)
 
         def split(path: str) -> tuple[str, str]:
@@ -300,7 +300,7 @@ class ValidationResult:
             top, field = split(path)
             if not field:
                 cols.pop(top, None)
-            elif top in cols:
+            elif top in cols and self._keeps(path, df.schema):
                 cols[top] = cols[top].dropFields(field)
         return df.select(*[v if v is plain.get(c) else v.alias(c)
                            for c, v in cols.items()])
@@ -308,10 +308,12 @@ class ValidationResult:
     def _keeps(self, path: str, frame: T.StructType) -> bool:
         """Is the output of a struct field or a missing key part of the
         table: the field exists or its declared schema gives it a value
-        (default, failover), and no enclosing object casts (to a map)?"""
+        (default, failover), and every enclosing value is a struct, or
+        missing, that does not cast to a map?  A map keeps its entries."""
         dtype, schema = frame, self.schema
         for i, part in enumerate(path.split(".")):
-            if i and schema is not None and "cast" in schema._flags:
+            if i and (schema is not None and "cast" in schema._flags or
+                      not isinstance(dtype, (T.StructType, type(None)))):
                 return False
             if schema is not None:
                 schema = (schema._terms.get("keys") or {}).get(part)
@@ -386,14 +388,13 @@ def validate(df: DataFrame, schema: Schema, *, prefs: dict | None = None,
     Spark-side analogue of ``schema.validate(value, prefs)``
     (reference: lib/base.js:573-576 → lib/validator.js:14-35).
     """
-    merged = {**DEFAULT_PREFS, **(prefs or {})}
-    if context:
-        merged["context"] = {**merged.get("context", {}), **context}
-    plan = compile_table(schema, df, prefs=merged, context=merged["context"])
+    from joi_spark import check_preferences
+    check_preferences(prefs or {})   # a typo'd pref raises, never no-ops
+    plan = compile_table(schema, df, prefs=prefs, context=context)
     if order_by is None:
         order_by = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-    return ValidationResult(df, plan, schema, order_by,
-                            abort_early=merged["abort_early"])
+    return ValidationResult(df, plan, schema, order_by, abort_early={
+        **DEFAULT_PREFS, **(prefs or {})}["abort_early"])
 
 
 class TableValidationError(AssertionError):

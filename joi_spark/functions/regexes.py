@@ -20,12 +20,12 @@ TOKEN = r"^\w+$"
 HEX = r"(?i)^[a-f0-9]+$"
 
 # numeric strings the number coerce parses — reference:
-# lib/types/number.js:28-63 (numberRx, case-insensitive).  Written so
-# Java and RE2 (the DuckDB oracle) accept the same strings: the
-# whitespace class names \x0B, which Java's \s has and RE2's lacks,
-# and \z ends the input where Java's $ would also match before a
-# final line terminator.
-NUMBER = r"(?i)^[\s\x0B]*[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:e[+-]?\d+)?[\s\x0B]*\z"
+# lib/types/number.js:28-63 (numberRx, case-insensitive); group 1 is
+# the number without JavaScript's \s, Unicode spaces included.  Java
+# and RE2 (the DuckDB oracle) read it alike: code points as \x{...},
+# and \z, as Java's $ also matches before a final line terminator.
+_S = r"[\t\n\x0B\f\r \x{A0}\x{1680}\x{2000}-\x{200A}\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}\x{FEFF}]"
+NUMBER = rf"(?i)^{_S}*([+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:e[+-]?\d+)?){_S}*\z"
 
 # base64 variants keyed (padding_required, url_safe)
 # reference: lib/types/string/index.js:14-25 (RFC 4648 §4/§5)

@@ -515,16 +515,18 @@ def test_rotation_tail_oracle_smoke(spark):
 
 def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
     """NaN, ±inf, unsafe-range numbers and strings outside the numeric
-    grammar ('1_000' DuckDB's cast takes, '1d'/'1f' Spark's cast takes)
-    fail the number branch in the engine (number.base / .unsafe), so
-    alternatives(number, boolean) reports them; the DuckDB oracle of
-    the ``alternatives_types`` query must agree row for row."""
+    grammar ('1_000' DuckDB's cast takes, '1d'/'1f' Spark's cast takes,
+    a Unicode space inside the number) fail the number branch in the
+    engine (number.base / .unsafe), so alternatives(number, boolean)
+    reports them, while Unicode-space padding is trimmed; the DuckDB
+    oracle of the ``alternatives_types`` query must agree row for row."""
     duckdb = pytest.importorskip("duckdb")
     import sys
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entry_mod
     vals = ["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "1.5", " 2 ",
-            "true", "FALSE", "view", None, "1_000", "1d", "1f", "0x10"]
+            "true", "FALSE", "view", None, "1_000", "1d", "1f", "0x10",
+            "\u00a05", "5\u2028", "\ufeff5", "\u00a0", "1\u00a02"]
     spark.createDataFrame(list(enumerate(vals)),
                           "event_id bigint, event_type string") \
          .coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
@@ -539,7 +541,7 @@ def test_alternatives_types_oracle_rejects_nan_and_inf(spark, tmp_path):
     assert got == want
     assert sorted(vals[r[0]] for r in got) == \
         sorted(["NaN", "nan", "inf", "Infinity", "-inf", "1e20", "view",
-                "1_000", "1d", "1f", "0x10"])
+                "1_000", "1d", "1f", "0x10", "\u00a0", "1\u00a02"])
 
 
 @pytest.mark.parametrize("kind", ["any", "string", "number", "boolean",

@@ -219,9 +219,10 @@ def test_errors_prefs_unknown_key_raises(spark):
     import joi_spark as joi
     df = spark.createDataFrame([(1, "x")], "id bigint, v string")
     s = joi.object({"v": joi.string()})
-    with pytest.raises(Exception, match="unknown errors preferences"):
-        joi.validate(df, s, prefs={"errors": {"bogus": 1}},
-                     order_by=["id"])
+    for prefs, msg in (({"errors": {"bogus": 1}}, "unknown errors preferences"),
+                       ({"abortEarly": False}, "unknown preferences")):
+        with pytest.raises(Exception, match=msg):
+            joi.validate(df, s, prefs=prefs, order_by=["id"])
 
 
 def test_no_defaults_pref_skips_default_and_failover(spark):

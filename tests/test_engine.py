@@ -151,14 +151,19 @@ def test_trim_converts(spark):
 
 
 def test_number_coercion_from_string(spark):
-    df = spark.createDataFrame([("c1", 0, "42"), ("c2", 0, "nope")],
+    """JavaScript's whitespace around the number is trimmed (Unicode
+    spaces too); inside the number, or alone, it fails number.base."""
+    vals = ["42", "nope", "\u00a042", "42\u2028", "\ufeff42", "\u00a0",
+            "1\u00a02"]
+    df = spark.createDataFrame([(f"c{i}", 0, v) for i, v in enumerate(vals)],
                                "conv_id string, turn_idx int, n string")
     schema = joi.object({"n": joi.number().min(10)})
     res = joi.validate(df, schema)
     v = {r["conv_id"]: r["code"] for r in res.violations().collect()}
-    assert v == {"c2": "number.base"}
+    assert v == {"c1": "number.base", "c5": "number.base",
+                 "c6": "number.base"}
     vals = {r["conv_id"]: r["n"] for r in res.value.collect()}
-    assert vals["c1"] == 42.0
+    assert [vals[f"c{i}"] for i in (0, 2, 3, 4)] == [42.0] * 4
 
 
 def test_forbidden(spark):
@@ -309,7 +314,9 @@ def test_user_column_named_c0_not_clobbered(spark):
     column of that name (ADVICE round 1, item 3): the value-splicing
     message must read the real column, not the boolean."""
     import joi_spark as joi
-    df = spark.createDataFrame([(1, "bad")], "id bigint, _c0 string")
+    df = spark.createDataFrame([(1, "bad", True, "x")],
+                               "id bigint, _c0 string, _ok boolean, "
+                               "_violations string")
     schema = joi.object({"_c0": joi.string().pattern("^g")})
     res = joi.validate(df, schema, order_by=["id"],
                       prefs={"abort_early": False})
@@ -318,6 +325,9 @@ def test_user_column_named_c0_not_clobbered(spark):
         [("_c0", "string.pattern.base")]
     assert rows[0]["message"] == \
         '"_c0" with value "bad" fails to match the required pattern: /^g/'
+    # the converted table keeps user columns named like engine columns
+    assert res.value.columns == df.columns
+    assert tuple(res.value.collect()[0]) == (1, "bad", True, "x")
 
 
 def test_annotate_positional_markers(spark):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import re
 
 import pytest
@@ -136,6 +137,54 @@ def test_map_pattern_keys(spark):
     assert got == [(2, "object.pattern.match"), (3, "object.unknown")]
     msg = {r["id"]: r["message"] for r in res.violations().collect()}
     assert msg[2] == '"props" keys failed to match pattern requirements'
+
+
+@pytest.mark.parametrize("kind", ["json", "map"])
+def test_map_object_keys(spark, kind):
+    """A map value — a map<string,string> column, or a JSON string the
+    object coerce parses to one — runs the struct's keys step: declared
+    keys by their own schema, the first matching pattern only, unknown
+    keys, dependencies and asserts over any key; undeclared keys report
+    at the object."""
+    def frame(rows):
+        if kind == "map":
+            return spark.createDataFrame(rows, "id bigint, props map<string,string>")
+        return spark.createDataFrame([(i, json.dumps(m)) for i, m in rows],
+                                     "id bigint, props string")
+
+    def got(schema, rows):
+        res = joi.validate(frame(rows), schema, order_by=["id"],
+                           prefs={"abort_early": False})
+        return [(r["id"], r["path"], r["code"])
+                for r in res.violations().collect()]
+
+    rows = [(1, {"a": "x"}), (2, {"a": "1", "zz": "q"}), (3, {"a": "7"}),
+            (4, {"q": "1"})]
+    declared = joi.object({"props": joi.object({
+        "a": joi.number(), "b": joi.string().required()}).unknown(False)})
+    assert got(declared, rows[:2]) == [
+        (1, "props.a", "number.base"), (1, "props.b", "any.required"),
+        (2, "props.b", "any.required"), (2, "props", "object.unknown")]
+    xor = joi.object({"props": joi.object().xor("a", "zz")})
+    assert got(xor, rows) == [(2, "props", "object.xor"),
+                              (4, "props", "object.missing")]
+    asserted = joi.object({"props": joi.object().assert_(
+        "a", joi.number().min(5), "a is at least five")})
+    assert got(asserted, rows) == [(1, "props", "object.assert"),
+                                   (2, "props", "object.assert")]
+    # ka is its own schema's alone, k1 the first pattern's alone
+    patterns = joi.object({"props": joi.object({"ka": joi.string()})
+                           .pattern("^k", joi.string().max(2))
+                           .pattern("^k1", joi.number())})
+    assert got(patterns, [(1, {"ka": "abc", "k1": "ab"}),
+                          (2, {"k2": "abc"})]) == [
+        (2, "props", "object.pattern.match")]
+    # a map's value type is fixed: child outputs do not rewrite it
+    defaulted = joi.object({"props": joi.object({
+        "zz": joi.string().default("d"), "a": joi.string().strip()})})
+    res = joi.validate(frame(rows), defaulted, order_by=["id"])
+    assert [r["props"] for r in res.value.orderBy("id").collect()] == \
+        [m for _, m in rows]
 
 
 def test_nested_struct_unknown_policy(spark):
