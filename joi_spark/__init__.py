@@ -129,7 +129,7 @@ version = "16.0.0-rc2"
 _KNOWN_PREFS = {"convert", "abort_early", "allow_unknown",
                 "strip_unknown", "presence", "no_defaults", "context",
                 "externals", "messages", "errors", "warnings"}
-_KNOWN_ERROR_PREFS = {"language", "wrap_arrays", "escape_html"}
+_KNOWN_ERRORS_KEYS = {"language", "wrap_arrays", "escape_html"}
 
 
 def check_preferences(prefs: dict) -> None:
@@ -142,7 +142,7 @@ def check_preferences(prefs: dict) -> None:
     if unknown:
         raise ValueError(f"unknown preferences: {sorted(unknown)}")
     err = prefs.get("errors") or {}
-    unknown = set(err) - _KNOWN_ERROR_PREFS
+    unknown = set(err) - _KNOWN_ERRORS_KEYS
     if unknown:
         raise ValueError(f"unknown errors preferences: {sorted(unknown)}")
     if prefs.get("presence") not in (None, "optional", "required",

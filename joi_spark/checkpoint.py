@@ -75,8 +75,7 @@ class CheckpointedRun:
                 st.getPath().getName().startswith(("_", "."))
                 for st in fs.listStatus(path)):
             return None
-        m = spark.read.parquet(self.manifest_path)
-        return m.filter(F.col("constraint_hash") == self.hash)
+        return self.manifest(spark)
 
     def pending(self, df: DataFrame) -> DataFrame:
         """Input minus completed partitions (broadcast anti-join on the
@@ -158,65 +157,67 @@ class CheckpointedRun:
             return {"completed_now": 0, "resumed": True}
         self._drop_violations(spark, [r[0] for r in rows if not (
             r["n_violations"] or r["n_warnings"])])
-        # the literal hash is added AFTER the sort: with it among the
-        # sort keys, the writer's own sort on its partition columns
+        # _overwrite adds the literal hash AFTER the sort: with it among
+        # the sort keys, the writer's own sort on its partition columns
         # replaces this one and the order_by order is lost
         viol = (res.violations(extra_cols=[self.partition_col], sort=False)
                 .repartition(self.partition_col)
-                .sortWithinPartitions(self.partition_col, *res.order_by, "seq")
-                .withColumn("constraint_hash", F.lit(self.hash)))
+                .sortWithinPartitions(self.partition_col, *res.order_by, "seq"))
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                               "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            viol.write.mode("overwrite") \
-                .partitionBy("constraint_hash", self.partition_col) \
-                .parquet(self.violations_path)
+            self._overwrite(viol, self.violations_path)
             if stats_columns:
                 from joi_spark.operators.stats import stats_manifest
-                st = (stats_manifest(pending, self.partition_col,
-                                     list(stats_columns))
-                      .withColumn("constraint_hash", F.lit(self.hash)))
-                st.write.mode("overwrite") \
-                  .partitionBy("constraint_hash", self.partition_col) \
-                  .parquet(self.stats_path)
+                self._overwrite(stats_manifest(pending, self.partition_col,
+                                               list(stats_columns)),
+                                self.stats_path)
             if sketch_columns:
                 from joi_spark.operators.sketches import cardinality_manifest
-                sk = (cardinality_manifest(pending, list(sketch_columns),
-                                           partition_col=self.partition_col)
-                      .withColumnRenamed("partition", self.partition_col)
-                      .withColumn("constraint_hash", F.lit(self.hash)))
-                sk.write.mode("overwrite") \
-                  .partitionBy("constraint_hash", self.partition_col) \
-                  .parquet(self.sketches_path)
+                self._overwrite(
+                    cardinality_manifest(pending, list(sketch_columns),
+                                         partition_col=self.partition_col)
+                    .withColumnRenamed("partition", self.partition_col),
+                    self.sketches_path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         verd.coalesce(1).write.mode("append").parquet(self.manifest_path)
         return {"completed_now": len(rows), "resumed": False}
 
+    def _overwrite(self, df: DataFrame, path: str) -> None:
+        """Write ``df`` under this constraint hash, partitioned by
+        ``(constraint_hash, partition_col)``; under dynamic overwrite
+        only the partitions ``df`` has rows for are replaced."""
+        df.withColumn("constraint_hash", F.lit(self.hash)).write \
+            .mode("overwrite") \
+            .partitionBy("constraint_hash", self.partition_col) \
+            .parquet(path)
+
+    def _read(self, spark: SparkSession, path: str) -> DataFrame:
+        """The rows at ``path`` under THIS constraint hash."""
+        return spark.read.parquet(path) \
+            .filter(F.col("constraint_hash") == self.hash)
+
     # -- outputs ------------------------------------------------------
     def manifest(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.manifest_path) \
-            .filter(F.col("constraint_hash") == self.hash)
+        return self._read(spark, self.manifest_path)
 
     def violations(self, spark: SparkSession) -> DataFrame:
         """Violation rows under THIS constraint hash — the lineage
         guarantee holds for violations, not just the manifest."""
-        return spark.read.parquet(self.violations_path) \
-            .filter(F.col("constraint_hash") == self.hash)
+        return self._read(spark, self.violations_path)
 
     def stats(self, spark: SparkSession) -> DataFrame:
         """Per-partition column-stats manifest rows under THIS hash
         (written when ``run(stats_columns=...)``); feed to
         :func:`~joi_spark.operators.stats.manifest_anomalies`."""
-        return spark.read.parquet(self.stats_path) \
-            .filter(F.col("constraint_hash") == self.hash)
+        return self._read(spark, self.stats_path)
 
     def sketches(self, spark: SparkSession) -> DataFrame:
         """Per-partition HLL sketch manifest rows under THIS hash
         (written when ``run(sketch_columns=...)``)."""
-        return spark.read.parquet(self.sketches_path) \
-            .filter(F.col("constraint_hash") == self.hash)
+        return self._read(spark, self.sketches_path)
 
     def global_cardinality(self, spark: SparkSession) -> DataFrame:
         """Whole-table distinct estimates folded from the persisted

@@ -80,13 +80,14 @@ class Check:
 
 @dataclass
 class CompiledPlan:
+    # the caller's prefs over the defaults, the root schema's over both
+    prefs: dict = field(default_factory=dict)
+    # output column -> input column, in output order (renames applied)
+    inputs: dict[str, str] = field(default_factory=dict)
     conversions: dict[str, Column] = field(default_factory=dict)
     checks: list[Check] = field(default_factory=list)
     outputs: dict[str, Column] = field(default_factory=dict)  # post-validate shaping
     drops: list[str] = field(default_factory=list)
-    renames: list[tuple[str, str]] = field(default_factory=list)
-    aliases: list[tuple[str, str]] = field(default_factory=list)  # rename(alias=True): keep source
-    pre_drops: list[str] = field(default_factory=list)  # rename(override=True): replaced targets
     table_errors: list[str] = field(default_factory=list)  # schema-level verdicts
 
 
@@ -746,14 +747,15 @@ def _emitter(schema: Schema, name: str, col: Column, plan: CompiledPlan,
         if error_flag is not None:
             # error() replaces EVERY error of this schema
             # (reference: lib/base.js:136-142)
-            msg = F.lit(E._interpolate(str(error_flag), mctx))
+            msg = F.lit(E._interpolate(str(error_flag), mctx, plan.prefs))
         elif dynamic_message is not None:
             msg = F.coalesce(dynamic_message.cast("string"),
-                             F.lit(E.render_static(code, mctx, overrides=ov)))
+                             F.lit(E.render_static(code, mctx, overrides=ov,
+                                                   prefs=plan.prefs)))
         else:
             msg = E.render_column(code, mctx,
                                   value_col if value_col is not None else col,
-                                  overrides=ov)
+                                  overrides=ov, prefs=plan.prefs)
         okc = F.coalesce(pred, F.lit(False))
         g = guard
         if cond is not None:
@@ -1241,12 +1243,19 @@ def _emit_output(schema: Schema, name: str, conv: Column,
 def compile_table(schema: Schema, df: DataFrame, *,
                   prefs: dict | None = None,
                   context: dict | None = None) -> CompiledPlan:
-    """Compile an object schema (keys = columns) against a DataFrame."""
-    merged_prefs = {**DEFAULT_PREFS, **(prefs or {}),
-                    **(schema._preferences or {})}
-    context = {**merged_prefs.get("context", {}), **(context or {})}
-    err = merged_prefs.get("errors") or {}
-    lang = err.get("language")
+    """Compile an object schema (keys = columns) against a DataFrame.
+
+    The prefs merge once, here, into ``plan.prefs`` — the caller's over
+    the defaults, the root schema's ``.prefs()`` over both (reference:
+    lib/validator.js:14-35) — and govern the checks, the messages and
+    the reporting of the result alike."""
+    if not isinstance(schema, ObjectSchema):
+        raise CompileError("compile_table requires an object() schema; "
+                           "use object().keys({column: schema})")
+    plan = CompiledPlan(prefs={**DEFAULT_PREFS, **(prefs or {}),
+                               **(schema._preferences or {})})
+    context = {**plan.prefs.get("context", {}), **(context or {})}
+    lang = (plan.prefs.get("errors") or {}).get("language")
     if lang is not None and not isinstance(lang, str):
         # the reference resolves a ref-valued language per VALUE at
         # error time (lib/errors.js:121-126); per-row language
@@ -1254,43 +1263,18 @@ def compile_table(schema: Schema, df: DataFrame, *,
         # divergence, reject loudly instead of mis-rendering
         raise CompileError("errors.language must be a string "
                            "(ref-resolvable language is not supported)")
-    prev = E.set_error_prefs({
-        "language": lang,
-        "wrap_arrays": err.get("wrap_arrays", True),
-        "escape_html": err.get("escape_html", False),
-        "messages": merged_prefs.get("messages") or None})
-    try:
-        return _compile_table_inner(schema, df, merged_prefs, context)
-    finally:
-        E.set_error_prefs(prev)
 
-
-def _table_error(plan: CompiledPlan, schema: Schema, code: str,
-                 mctx: dict) -> None:
-    """A static, table-level error of the root object ``schema``."""
-    plan.table_errors.append(E.render_static(
-        code, {"label": _label(schema, ""), **mctx},
-        overrides=schema._messages) or "")
-
-
-def _compile_table_inner(schema: Schema, df: DataFrame,
-                         merged_prefs: dict,
-                         context: dict) -> CompiledPlan:
-    plan = CompiledPlan()
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    if not isinstance(schema, ObjectSchema):
-        raise CompileError("compile_table requires an object() schema; "
-                           "use object().keys({column: schema})")
-
-    # renames first (reference: lib/types/object.js:886-967) — the engine
-    # applies them before the conversion stage, so compile against the
-    # post-rename column set.  Full option semantics:
+    # renames first (reference: lib/types/object.js:886-967), one after
+    # another on ``plan.inputs`` — the engine projects the input onto
+    # it before the checks, so compile against the post-rename columns:
     # - override=False + existing target → object.rename.override error,
     #   rename skipped (object.js:941-948);
     # - alias=True → SOURCE column is kept alongside the target
     #   (object.js:960-962: "if (!rename.options.alias) delete");
-    # - multiple=False + two renames to one target → .multiple error.
-    columns = list(df.columns)
+    # - multiple=False + two renames to one target → .multiple error;
+    #   multiple=True → LAST WINS (object.js:955-958: value[to]
+    #   overwritten, an earlier rename's source stays deleted).
+    plan.inputs = {c: c for c in df.columns}
     renamed_targets: set[str] = set()
 
     def _apply_one(c: str, to: str, opts: dict) -> None:
@@ -1299,45 +1283,18 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
         if to in renamed_targets and not opts.get("multiple"):
             return _table_error(plan, schema, "object.rename.multiple",
                                 {"from": c, "to": to})
-        if to in columns and not opts.get("override") \
+        if to in plan.inputs and not opts.get("override") \
                 and to not in renamed_targets:
             return _table_error(plan, schema, "object.rename.override",
                                 {"from": c, "to": to})
-        if to in renamed_targets:
-            # multiple=True, second source to the same target: the
-            # reference's semantics are LAST WINS (object.js:955-958 —
-            # value[to] overwritten, earlier source deleted).  Undo the
-            # earlier rename/alias so the engine never produces two
-            # columns named `to` (sequential withColumnRenamed would,
-            # and any later F.col(to) raises AMBIGUOUS_REFERENCE).
-            for i, (src, tgt) in enumerate(plan.renames):
-                if tgt == to:
-                    del plan.renames[i]
-                    plan.pre_drops.append(src)   # src exists in the raw df
-                    dtypes.pop(to, None)     # src stays dropped (deleted)
-                    if to in columns:
-                        columns.remove(to)
-                    break
-            else:
-                for i, (src, tgt) in enumerate(plan.aliases):
-                    if tgt == to:
-                        del plan.aliases[i]      # alias keeps src anyway
-                        if to in columns:
-                            columns.remove(to)
-                        break
+        if to in renamed_targets or not opts.get("alias"):
+            plan.inputs.pop(to, None)    # the old target is replaced
         renamed_targets.add(to)
         if opts.get("alias"):
-            plan.aliases.append((c, to))
-            dtypes[to] = dtypes[c]
-            if to not in columns:
-                columns.append(to)
-            return
-        plan.renames.append((c, to))
-        dtypes[to] = dtypes.pop(c)
-        if to in columns:
-            plan.pre_drops.append(to)  # override: target replaced
-            columns.remove(to)
-        columns[columns.index(c)] = to
+            plan.inputs[to] = plan.inputs[c]
+        else:                            # the target takes c's place
+            plan.inputs = {to if k == c else k: v
+                           for k, v in plan.inputs.items()}
 
     for r in schema._terms.get("renames") or []:
         frm = r["from"]
@@ -1345,27 +1302,37 @@ def _compile_table_inner(schema: Schema, df: DataFrame,
             # regex rename (reference: lib/types/object.js:898-938):
             # every matching column renames via pattern substitution
             rx = re.compile(frm)
-            for c in [c for c in columns if rx.search(c)]:
+            for c in [c for c in plan.inputs if rx.search(c)]:
                 _apply_one(c, rx.sub(r["to"], c), r)
             continue
-        if frm in columns:
+        if frm in plan.inputs:
             _apply_one(frm, r["to"], r)
     # key-count rules — static table-level verdicts (columns are fixed)
     # (reference: lib/types/object.js:278-313)
     for rule in schema._rules:
         if rule.name in ("length", "min", "max"):
             limit = rule.args["limit"]
-            if not _CMP[rule.name](len(columns), limit):
+            if not _CMP[rule.name](len(plan.inputs), limit):
                 _table_error(plan, schema, f"object.{rule.name}",
                              {"limit": limit})
 
-    ctx = _Ctx({}, merged_prefs, context,
+    types = {f.name: f.dataType for f in df.schema.fields}
+    dtypes = {out: types[src] for out, src in plan.inputs.items()}
+    ctx = _Ctx({}, plan.prefs, context,
                shared=dict(schema._terms.get("shared") or {}),
                dtypes=dtypes)
     _object_keys(schema, None, None,
-                 T.StructType([T.StructField(c, dtypes[c]) for c in columns]),
+                 T.StructType([T.StructField(c, t) for c, t in dtypes.items()]),
                  ctx, plan, _emitter(schema, "", F.lit(None), plan, None), None)
     return plan
+
+
+def _table_error(plan: CompiledPlan, schema: Schema, code: str,
+                 mctx: dict) -> None:
+    """A static, table-level error of the root object ``schema``."""
+    plan.table_errors.append(E.render_static(
+        code, {"label": _label(schema, ""), **mctx},
+        overrides=schema._messages, prefs=plan.prefs) or "")
 
 
 def _topo_order(keys: dict[str, Schema]) -> list[str]:

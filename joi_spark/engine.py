@@ -1,12 +1,16 @@
 """Execution runner: apply a CompiledPlan to a DataFrame.
 
-Four declarative stages (SURVEY.md §7): (1) rename + conversion
-projection, (2) one ``select`` computing every check predicate, (3)
+Four declarative stages (SURVEY.md §7): (1) one projection of the input
+onto the plan's output columns (``CompiledPlan.inputs``: renames,
+aliases and overrides in one ``select``), (2) one check frame with a
+boolean column per check predicate, which every output folds, (3)
 violation extraction — an array-of-structs built per row, filtered with
 higher-order functions, exploded; message columns are only evaluated for
 failing rows because they sit inside ``F.when(~pred, ...)`` — and (4)
 outputs: converted table, violations DataFrame (stable ``order_by``
-ordering), per-partition verdicts.
+ordering), per-partition verdicts.  What the outputs report —
+``abort_early``, the message prefs — is read from ``CompiledPlan.prefs``,
+merged once by the compiler.
 
 One code path serves every schema width: balanced folds keep the
 expression trees O(log n) deep, and on Spark 4.1 hundreds of checks
@@ -20,6 +24,7 @@ rows; no shuffle is introduced by validation itself.
 
 from __future__ import annotations
 
+import functools
 import operator
 from typing import Callable, Sequence
 
@@ -27,8 +32,7 @@ from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from joi_spark.compiler import (CompiledPlan, compile_table, DEFAULT_PREFS,
-                                _balanced)
+from joi_spark.compiler import CompiledPlan, compile_table, _balanced
 from joi_spark.dsl.base import Schema
 from joi_spark.dsl.manifest import manifest_hash
 
@@ -40,43 +44,53 @@ class ValidationResult:
     (reference: lib/base.js:573-576) — lazily-evaluated DataFrames."""
 
     def __init__(self, df: DataFrame, plan: CompiledPlan, schema: Schema,
-                 order_by: Sequence[str], abort_early: bool):
+                 order_by: Sequence[str]):
         self._df = df
         self.plan = plan
         self.schema = schema
         self.order_by = list(order_by)
-        self.abort_early = abort_early
         self.table_errors = list(plan.table_errors)
-        self._checked: DataFrame | None = None
 
-    # -- stage 2: renamed frame + cheap pass/fail booleans ------------
-    # Violation structs (messages!) are only materialized for FAILING
-    # rows — the filter runs on the plain boolean conjunction first,
-    # mirroring the reference's lazy message rendering
-    # (reference: lib/errors.js:60-78).  On a clean table the whole
-    # validation is one codegen'd conjunction, ~5× cheaper than
-    # building per-row arrays.
-    @property
+    # -- stages 1 and 2: the renamed frame and the check frame ---------
+    @functools.cached_property
     def _renamed(self) -> DataFrame:
-        df = self._df
-        if self.plan.pre_drops:             # rename(override=True): replaced
-            df = df.drop(*self.plan.pre_drops)
-        for frm, to in self.plan.aliases:   # rename(alias=True): keep source
-            df = df.withColumn(to, F.col(frm))
-        for frm, to in self.plan.renames:
-            df = df.withColumnRenamed(frm, to)
-        return df
+        """The input projected onto the plan's output columns — renames,
+        aliases and overrides in one ``select``.  Input names are quoted,
+        so a column named ``a.b`` passes through as itself."""
+        def src(name: str) -> Column:
+            return F.col("`" + name.replace("`", "``") + "`")
+        return self._df.select(*[
+            src(i) if o == i else src(i).alias(o)
+            for o, i in self.plan.inputs.items()])
 
-    def _ok_expr(self, severity: str = "error") -> Column:
-        return _balanced([c.predicate for c in self.plan.checks
-                          if c.severity == severity],
-                         operator.and_, F.lit(True))
+    @functools.cached_property
+    def _checks(self) -> DataFrame:
+        """The renamed frame plus one ``__joi_c{i}`` boolean per check
+        (True = passes; ``emit`` has coalesced every predicate).  Every
+        output folds these columns, so expensive predicates — regexes,
+        from_json, external UDFs — evaluate once per row.  This holds at
+        any width: on Spark 4.1 substituting the aliases into the
+        collapsed projections stays within driver memory at 840 checks
+        under get_spark defaults, and the balanced folds keep the trees
+        O(log n) deep.  The names are collision-proof: Spark's own
+        default headerless-CSV columns are _c0, _c1, ..., and
+        ``withColumns`` would silently REPLACE a user column of that
+        name, corrupting message rendering and order_by."""
+        return self._renamed.withColumns(
+            {f"__joi_c{i}": c.predicate
+             for i, c in enumerate(self.plan.checks)})
+
+    def _passes(self, *severities: str) -> list[Column]:
+        """The check-frame booleans of the checks of ``severities``."""
+        return [F.col(f"__joi_c{i}") for i, c in enumerate(self.plan.checks)
+                if c.severity in severities]
 
     def _violation_array(self) -> Column:
-        """Per-row array of failed-check structs, built from the
-        ``__joi_c{i}`` booleans that :meth:`violations` materializes (so
-        expensive predicates — regexes, from_json, external UDFs —
-        evaluate once)."""
+        """Per-row array of failed-check structs, built from the check
+        frame's booleans.  Message columns sit inside ``F.when(~pass,
+        ...)``, so they are only evaluated for failing rows, mirroring
+        the reference's lazy message rendering
+        (reference: lib/errors.js:60-78)."""
         entries = [F.when(~F.col(f"__joi_c{i}"),
                           F.struct(F.lit(c.seq).alias("seq"),
                                    F.lit(c.code).alias("code"),
@@ -92,19 +106,21 @@ class ValidationResult:
                 "message:string,severity:string>>")
         errors = F.filter(arr, lambda x: x["severity"] == F.lit("error"))
         warnings = F.filter(arr, lambda x: x["severity"] == F.lit("warn"))
-        if self.abort_early:
+        if self.plan.prefs["abort_early"]:
             # report first failing rule per row, matching the
             # reference's per-value abortEarly order
             # (reference: lib/validator.js:308-311; SURVEY.md §4)
             errors = F.slice(errors, 1, 1)
         return F.concat(errors, warnings)
 
-    @property
+    @functools.cached_property
     def checked(self) -> DataFrame:
-        """Input + ``_ok`` boolean (errors only; warnings don't fail)."""
-        if self._checked is None:
-            self._checked = self._renamed.withColumn("_ok", self._ok_expr())
-        return self._checked
+        """Input + ``_ok`` boolean (errors only; warnings don't fail).
+        On a clean table the whole validation is one codegen'd
+        conjunction, ~5× cheaper than building per-row arrays."""
+        ok = _balanced(self._passes("error"), operator.and_, F.lit(True))
+        return self._checks.withColumn("_ok", ok).drop(
+            *(f"__joi_c{i}" for i in range(len(self.plan.checks))))
 
     # -- outputs ---------------------------------------------------------
     def violations(self, include_warnings: bool = True,
@@ -115,27 +131,12 @@ class ValidationResult:
         prepends passthrough columns (e.g. the partition column);
         ``sort=False`` skips the global ordering (required for
         streaming sinks, where sorting is unsupported)."""
-        # materialize each check's boolean ONCE; the fail-filter and the
-        # violation array both reference the materialized columns, so
-        # expensive predicates (regex, from_json, external UDFs) are not
-        # re-evaluated per consumer.  This holds at any width: on
-        # Spark 4.1 substituting the aliases into the collapsed
-        # projections stays within driver memory at 840 checks under
-        # get_spark defaults, and the balanced fail filter keeps the
-        # tree O(log n) deep.
-        # collision-proof names: Spark's own default headerless-CSV
-        # columns are _c0, _c1, ... — withColumns would silently
-        # REPLACE a user column of that name, corrupting message
-        # rendering and order_by
-        checks = self.plan.checks
-        base = self._renamed.withColumns(
-            {f"__joi_c{i}": F.coalesce(c.predicate, F.lit(False))
-             for i, c in enumerate(checks)})
-        fail = _balanced([~F.col(f"__joi_c{i}")
-                          for i, c in enumerate(checks)
-                          if c.severity == "error" or include_warnings],
+        # the fail filter runs on the plain booleans first; violation
+        # structs (messages!) are only built for failing rows
+        severities = ("error", "warn") if include_warnings else ("error",)
+        fail = _balanced([~c for c in self._passes(*severities)],
                          operator.or_, F.lit(False))
-        v = (base
+        v = (self._checks
              .filter(fail)
              .withColumn("_violations", self._violation_array())
              .withColumn("_v", F.explode("_violations")))
@@ -343,19 +344,18 @@ class ValidationResult:
         method limit; Spark then runs that stage without whole-stage
         codegen, with the same results and still faster than counting
         from a per-row array."""
-        def fail_count(errors: bool) -> Column:
-            return _balanced([(~c.predicate).cast("long")
-                              for c in self.plan.checks
-                              if (c.severity == "error") == errors],
+        def fail_count(severity: str) -> Column:
+            return _balanced([(~c).cast("long")
+                              for c in self._passes(severity)],
                              operator.add, F.lit(0))
 
-        errors = fail_count(True)
-        if self.abort_early:
+        errors = fail_count("error")
+        if self.plan.prefs["abort_early"]:
             # violations() keeps only the first error per row
             errors = F.least(errors, F.lit(1))
-        counted = (self._renamed
+        counted = (self._checks
                    .withColumn("_ec", errors)
-                   .withColumn("_wc", fail_count(False)))
+                   .withColumn("_wc", fail_count("warn")))
         return (group(counted)
                 .agg(F.count(F.lit(1)).alias("n_rows"),
                      F.sum("_ec").alias("n_violations"),
@@ -393,8 +393,7 @@ def validate(df: DataFrame, schema: Schema, *, prefs: dict | None = None,
     plan = compile_table(schema, df, prefs=prefs, context=context)
     if order_by is None:
         order_by = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-    return ValidationResult(df, plan, schema, order_by, abort_early={
-        **DEFAULT_PREFS, **(prefs or {})}["abort_early"])
+    return ValidationResult(df, plan, schema, order_by)
 
 
 class TableValidationError(AssertionError):

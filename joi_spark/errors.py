@@ -224,30 +224,21 @@ def stringify(value: Any, wrap_arrays: bool = True) -> str:
 
 # --- rendering -----------------------------------------------------------
 
-# Error-rendering preferences from prefs["errors"] (reference:
-# lib/common.js:27-32 defaults), active for the duration of one
-# compile_table call (compilation is single-threaded driver work):
-# - language: messages()[lang][code] wins over flat messages()[code]
-#   (lib/errors.js:121-135);
-# - wrap_arrays: array values stringify with/without [ ]
+# Error rendering reads the merged validation prefs of one compile
+# (``CompiledPlan.prefs``; with none, the reference's defaults,
+# lib/common.js:27-32):
+# - errors.language: messages()[lang][code] wins over flat
+#   messages()[code] (lib/errors.js:121-135);
+# - errors.wrap_arrays: array values stringify with/without [ ]
 #   (lib/template.js:331);
-# - escape_html: single-brace (non-raw) substitutions HTML-escape
-#   (lib/template.js:185; double-brace is the raw form).
-_ERROR_PREFS: dict = {"language": None, "wrap_arrays": True,
-                      "escape_html": False, "messages": None}
+# - errors.escape_html: single-brace (non-raw) substitutions HTML-escape
+#   (lib/template.js:185; double-brace is the raw form);
+# - messages: a message table over the schema's messages().
 
-
-def set_error_prefs(new: dict) -> dict:
-    global _ERROR_PREFS
-    prev = _ERROR_PREFS
-    _ERROR_PREFS = {**prev, **new}
-    return prev
-
-
-def _lang_lookup(table: dict | None, code: str) -> str | None:
+def _lang_lookup(table: dict | None, code: str, lang: str | None
+                 ) -> str | None:
     if not table:
         return None
-    lang = _ERROR_PREFS["language"]
     if lang:
         sub = table.get(lang)
         if isinstance(sub, dict) and code in sub:
@@ -264,7 +255,8 @@ def _escape_html(s: str) -> str:
              .replace("'", "&#x27;").replace("`", "&#x60;"))
 
 
-def _override(overrides: dict | None, code: str) -> str | None:
+def _override(overrides: dict | None, code: str, prefs: dict | None
+              ) -> str | None:
     """Language-aware override lookup — the table analogue of the
     reference's Report.toString precedence (lib/errors.js:68-70):
     prefs.messages beats the schema's messages() table (both beat
@@ -274,24 +266,28 @@ def _override(overrides: dict | None, code: str) -> str | None:
         rule_tmpl = overrides.get(("rule", code))
         if isinstance(rule_tmpl, str):
             return rule_tmpl
-    return (_lang_lookup(_ERROR_PREFS["messages"], code)
-            or _lang_lookup(overrides, code))
+    prefs = prefs or {}
+    lang = (prefs.get("errors") or {}).get("language")
+    return (_lang_lookup(prefs.get("messages"), code, lang)
+            or _lang_lookup(overrides, code, lang))
 
 
 def render_static(code: str, ctx: dict[str, Any], *,
-                  overrides: dict[str, str] | None = None) -> str | None:
+                  overrides: dict[str, str] | None = None,
+                  prefs: dict | None = None) -> str | None:
     """Render a template whose placeholders are all schema-side.
 
     Returns None if the template needs the row value ({[.]}) — use
     :func:`render_column` for those.
     """
-    template = _override(overrides, code) or MESSAGES[code]
+    template = _override(overrides, code, prefs) or MESSAGES[code]
     if "{[.]}" in template:
         return None
-    return _interpolate(template, ctx)
+    return _interpolate(template, ctx, prefs)
 
 
-def _interpolate(template: str, ctx: dict[str, Any]) -> str:
+def _interpolate(template: str, ctx: dict[str, Any],
+                 prefs: dict | None) -> str:
     # The brace form controls ONLY html-escaping (reference:
     # template.js:68 raw = part[0] !== '{'; :185 Hoek.escapeHtml on
     # non-raw parts); array wrapping is governed by the errors.
@@ -302,10 +298,11 @@ def _interpolate(template: str, ctx: dict[str, Any]) -> str:
     # strings (labels, valids, rename from/to) containing {...}
     # cannot be evaluated as formulas (round-2 advice).
     import re as _re
+    err = (prefs or {}).get("errors") or {}
+    wrap_pref = err.get("wrap_arrays", True)
+    esc = _escape_html if err.get("escape_html") else (lambda s: s)
 
     def repl(m):
-        wrap_pref = _ERROR_PREFS["wrap_arrays"]
-        esc = _escape_html if _ERROR_PREFS["escape_html"] else (lambda s: s)
         if m.group(1) is not None:
             # double-brace: NON-raw — the form escapeHtml applies to
             return esc(stringify(ctx.get(m.group(1), ""),
@@ -327,10 +324,11 @@ def _interpolate(template: str, ctx: dict[str, Any]) -> str:
 
 
 def render_column(code: str, ctx: dict[str, Any], value_col: Column, *,
-                  overrides: dict[str, str] | None = None) -> Column:
+                  overrides: dict[str, str] | None = None,
+                  prefs: dict | None = None) -> Column:
     """Render to a Column; value placeholder {[.]} splices the row value."""
-    template = _override(overrides, code) or MESSAGES[code]
-    static = render_static(code, ctx, overrides=overrides)
+    template = _override(overrides, code, prefs) or MESSAGES[code]
+    static = render_static(code, ctx, overrides=overrides, prefs=prefs)
     if static is not None:
         return F.lit(static)
     parts = template.split("{[.]}")
@@ -343,5 +341,5 @@ def render_column(code: str, ctx: dict[str, Any], value_col: Column, *,
             cols.append(F.coalesce(value_col.cast("string"),
                                    F.lit("null")))
         if part:
-            cols.append(F.lit(_interpolate(part, ctx)))
+            cols.append(F.lit(_interpolate(part, ctx, prefs)))
     return F.concat(*cols)

@@ -208,6 +208,19 @@ def test_rename_alias_keeps_source(spark):
     res = joi.validate(df, schema, order_by=["id"])
     row = res.value.first()
     assert row["src"] == "hi" and row["dst"] == "HI"
+    # an alias of a renamed column reads the renamed input
+    df2 = spark.createDataFrame([(1, "va", "vz")],
+                                "id bigint, a string, z string")
+    for schema, (to, alias) in (
+            (joi.object().rename("a", "b").rename("b", "c", alias=True),
+             ("b", "c")),
+            (joi.object().rename("a", "z", override=True)
+                .rename("z", "w", alias=True), ("z", "w"))):
+        res = joi.validate(df2, schema, order_by=["id"])
+        assert res.table_errors == []
+        row = res.value.first()
+        assert row[to] == row[alias] == "va"
+        assert "a" not in res.value.columns
 
 
 def test_rename_multiple_last_wins(spark):

@@ -115,6 +115,18 @@ def test_abort_early_reports_first_rule_only(spark):
     codes = [r["code"] for r in res2.violations().collect()]
     assert codes == ["string.min", "string.max", "string.pattern.base"]
 
+    # a root schema's .prefs() governs reporting too, in violations and
+    # in verdicts (reference: lib/validator.js:14-35)
+    df3 = spark.createDataFrame([("c1", 0, "", "x")],
+                                "conv_id string, turn_idx int, a string, "
+                                "b string")
+    res3 = joi.validate(df3, joi.object({
+        "a": joi.string(), "b": joi.string().min(3)})
+        .prefs({"abort_early": False}))
+    assert [r["code"] for r in res3.violations().collect()] == \
+        ["string.empty", "string.min"]
+    assert res3.verdicts(["conv_id"]).first()["n_violations"] == 2
+
 
 def test_warn_channel(spark):
     df = spark.createDataFrame([("c1", 0, "ab")], "conv_id string, turn_idx int, s string")
