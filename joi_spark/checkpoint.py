@@ -163,34 +163,30 @@ class CheckpointedRun:
         viol = (res.violations(extra_cols=[self.partition_col], sort=False)
                 .repartition(self.partition_col)
                 .sortWithinPartitions(self.partition_col, *res.order_by, "seq"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._overwrite(viol, self.violations_path)
-            if stats_columns:
-                from joi_spark.operators.stats import stats_manifest
-                self._overwrite(stats_manifest(pending, self.partition_col,
-                                               list(stats_columns)),
-                                self.stats_path)
-            if sketch_columns:
-                from joi_spark.operators.sketches import cardinality_manifest
-                self._overwrite(
-                    cardinality_manifest(pending, list(sketch_columns),
-                                         partition_col=self.partition_col)
-                    .withColumnRenamed("partition", self.partition_col),
-                    self.sketches_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._overwrite(viol, self.violations_path)
+        if stats_columns:
+            from joi_spark.operators.stats import stats_manifest
+            self._overwrite(stats_manifest(pending, self.partition_col,
+                                           list(stats_columns)),
+                            self.stats_path)
+        if sketch_columns:
+            from joi_spark.operators.sketches import cardinality_manifest
+            self._overwrite(
+                cardinality_manifest(pending, list(sketch_columns),
+                                     partition_col=self.partition_col)
+                .withColumnRenamed("partition", self.partition_col),
+                self.sketches_path)
         verd.coalesce(1).write.mode("append").parquet(self.manifest_path)
         return {"completed_now": len(rows), "resumed": False}
 
     def _overwrite(self, df: DataFrame, path: str) -> None:
         """Write ``df`` under this constraint hash, partitioned by
-        ``(constraint_hash, partition_col)``; under dynamic overwrite
-        only the partitions ``df`` has rows for are replaced."""
+        ``(constraint_hash, partition_col)``.  The overwrite is dynamic
+        for this write alone: only the partitions ``df`` has rows for
+        are replaced, and the session's own setting is left as it is."""
         df.withColumn("constraint_hash", F.lit(self.hash)).write \
             .mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
             .partitionBy("constraint_hash", self.partition_col) \
             .parquet(path)
 

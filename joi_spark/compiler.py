@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from joi_spark import errors as E
-from joi_spark.dsl.base import Schema, Values
+from joi_spark.dsl.base import Schema, Values, merge_prefs
 from joi_spark.dsl.objects import Dependency, ObjectSchema
 from joi_spark.dsl.ref import Ref
 from joi_spark.functions import regexes as RX
@@ -84,9 +84,10 @@ class CompiledPlan:
     prefs: dict = field(default_factory=dict)
     # output column -> input column, in output order (renames applied)
     inputs: dict[str, str] = field(default_factory=dict)
-    conversions: dict[str, Column] = field(default_factory=dict)
     checks: list[Check] = field(default_factory=list)
-    outputs: dict[str, Column] = field(default_factory=dict)  # post-validate shaping
+    # top-level output columns: the shaped value (a struct's keys folded
+    # in) and the stripped columns, in compile order
+    outputs: dict[str, Column] = field(default_factory=dict)
     drops: list[str] = field(default_factory=list)
     table_errors: list[str] = field(default_factory=list)  # schema-level verdicts
 
@@ -114,7 +115,7 @@ class _Ctx:
     # converted values and their Spark types by dotted path (shadow
     # semantics, lib/validator.js:414-418); a table column not yet
     # compiled has its input type and no conversion
-    conversions: dict[str, Column]
+    converted: dict[str, Column]
     prefs: dict
     context: dict
     shared: dict = field(default_factory=dict)  # id → schema for link()
@@ -135,7 +136,7 @@ class _Ctx:
             key = ".".join(path[:i])
             if key not in self.dtypes:
                 continue
-            col, dtype = self.conversions.get(key, F.col(key)), self.dtypes[key]
+            col, dtype = self.converted.get(key, F.col(key)), self.dtypes[key]
             for part in path[i:]:
                 if isinstance(dtype, T.MapType):
                     dtype = dtype.valueType
@@ -540,11 +541,11 @@ def value_predicate(schema: Schema, ctx: _Ctx,
     into a throwaway plan, and the result is the AND of its guarded
     error-severity checks, so a value context accepts exactly what a
     column check accepts.  The throwaway plan and ``_Ctx`` keep the
-    caller's checks, conversions and outputs untouched.
+    caller's checks, converted values and outputs untouched.
     """
     def pred(col: Column) -> Column:
         plan = CompiledPlan()
-        scratch = dataclasses.replace(ctx, conversions=dict(ctx.conversions),
+        scratch = dataclasses.replace(ctx, converted=dict(ctx.converted),
                                       dtypes=dict(ctx.dtypes))
         compile_column(schema, "", dtype, scratch, plan, col=col)
         return _balanced([c.predicate for c in plan.checks
@@ -723,12 +724,13 @@ def _value_match(values: Values, conv: Column, insensitive: bool | None,
     return match
 
 
-def _emitter(schema: Schema, name: str, col: Column, plan: CompiledPlan,
-             cond: Column | None) -> Callable[..., None]:
+def _emitter(schema: Schema, name: str, col: Column, prefs: dict,
+             plan: CompiledPlan, cond: Column | None) -> Callable[..., None]:
     """``emit(pred, code, mctx, ...)`` appends one check of ``schema``'s
     value ``col`` at ``name`` to ``plan``: its message under the
-    schema's label, ``error()`` and ``messages()``, its predicate
-    passing where ``cond`` or ``guard`` does not hold."""
+    schema's label, ``error()`` and ``messages()`` and the value's
+    ``prefs``, its predicate passing where ``cond`` or ``guard`` does
+    not hold."""
     label = _label(schema, name)
     overrides = schema._messages
     error_flag = schema._flags.get("error")
@@ -747,15 +749,15 @@ def _emitter(schema: Schema, name: str, col: Column, plan: CompiledPlan,
         if error_flag is not None:
             # error() replaces EVERY error of this schema
             # (reference: lib/base.js:136-142)
-            msg = F.lit(E._interpolate(str(error_flag), mctx, plan.prefs))
+            msg = F.lit(E._interpolate(str(error_flag), mctx, prefs))
         elif dynamic_message is not None:
             msg = F.coalesce(dynamic_message.cast("string"),
                              F.lit(E.render_static(code, mctx, overrides=ov,
-                                                   prefs=plan.prefs)))
+                                                   prefs=prefs)))
         else:
             msg = E.render_column(code, mctx,
                                   value_col if value_col is not None else col,
-                                  overrides=ov, prefs=plan.prefs)
+                                  overrides=ov, prefs=prefs)
         okc = F.coalesce(pred, F.lit(False))
         g = guard
         if cond is not None:
@@ -770,19 +772,28 @@ def _emitter(schema: Schema, name: str, col: Column, plan: CompiledPlan,
 
 # ---------------------------------------------------------------------------
 
+class _Output(NamedTuple):
+    """A value's output (:func:`_emit_output`)."""
+    col: Column | None     # None: an absent key nothing gives a value
+    strip: bool
+
+
 def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
                    plan: CompiledPlan, *, cond: Column | None = None,
-                   col: Column | None = None) -> None:
+                   col: Column | None = None, absent: bool = False) -> _Output:
     """Emit conversion + checks for one value of Spark type ``dtype``:
     the column ``name`` unless ``col`` gives the value expression (a
     struct field, an array element, a map value — see
     :func:`value_predicate`).  ``cond`` guards every check (used by
-    when/conditional schemas).
+    when/conditional schemas).  Returns the value's output.
 
     An object value's keys step (:func:`_object_keys`) is one more step
     of this sequence, and a declared key with no column or field
-    compiles here on a typed null (:func:`_compile_absent`): every
-    check of a value comes from ``emit``."""
+    compiles here on a typed null, ``absent``: presence (``required``,
+    the ``presence`` pref, ``when``, ``error()``) decides as for any
+    other value, every value rule is vacuous, and it has an output only
+    where a default or failover gives it a value.  Every check of a
+    value comes from ``emit``."""
     col = F.col(name) if col is None else col
     if schema.type == "link":
         # late-bound schema reuse (reference: lib/types/link.js:35-59):
@@ -792,9 +803,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         target = ctx.shared.get(target_id)
         if target is None:
             raise CompileError(f"link('#{target_id}') has no shared() target")
-        compile_column(target, name, dtype, ctx, plan, cond=cond, col=col)
-        return
-    prefs = {**ctx.prefs, **(schema._preferences or {})}
+        return compile_column(target, name, dtype, ctx, plan, cond=cond,
+                              col=col, absent=absent)
+    prefs = merge_prefs(ctx.prefs, schema._preferences)
     convert = prefs["convert"]
     table = _RULES[schema.kind]
     for rule in schema._rules:
@@ -805,7 +816,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         raise CompileError("rename() applies to the table's columns only, "
                            "not to a nested object")
     local = dataclasses.replace(ctx, prefs=prefs)
-    emit = _emitter(schema, name, col, plan, cond)
+    emit = _emitter(schema, name, col, prefs, plan, cond)
+    shape = functools.partial(_emit_output, schema, name, plan=plan, ctx=local,
+                              absent=absent)
 
     # 1. coerce, then in convert mode the rules' convert forms in chain
     # order (reference: the string type's coerce, lib/types/string/
@@ -834,7 +847,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             if isinstance(empty, Schema) else (lambda c: c == F.lit(empty))
         conv = F.when(empty_pred(conv), F.lit(None)).otherwise(conv)
 
-    ctx.conversions[name] = conv
+    ctx.converted[name] = conv
     ctx.dtypes[name] = conv_dtype or dtype
     present = conv.isNotNull()
 
@@ -858,8 +871,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
     if conv_dtype is None:
         # the value can never have this type: only the base error can
         # fire, and later rules would not even type-check against it
-        _emit_output(schema, name, conv, plan, local, dtype)
-        return
+        return shape(conv, None)
 
     # 4. valids (reference: lib/validator.js:196-214)
     valid_match = None
@@ -877,8 +889,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             # only-mode: matching values skip rules; failing values report
             # just any.only (reference: lib/validator.js:196-214) — no
             # further checks compile for this column
-            _emit_output(schema, name, conv, plan, local, dtype)
-            return
+            return shape(conv, conv_dtype)
 
     rule_guard = (present & base_ok) if valid_match is None \
         else (present & base_ok & ~valid_match)
@@ -902,11 +913,12 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             emit(conv != F.lit(""), "string.empty", {}, guard=rule_guard)
             rule_guard = rule_guard & F.coalesce(conv != F.lit(""),
                                                  F.lit(True))
-    if schema.kind == "object":
-        # a struct or a map; children recurse only where it is present
-        _object_keys(schema, name, conv, conv_dtype, local, plan,
-                     functools.partial(emit, guard=rule_guard),
-                     rule_guard if cond is None else (cond & rule_guard))
+    # an object is a struct or a map; children recurse only where it is
+    # present
+    keys = _object_keys(schema, name, conv, conv_dtype, local, plan,
+                        functools.partial(emit, guard=rule_guard),
+                        rule_guard if cond is None else (cond & rule_guard)) \
+        if schema.kind == "object" else None
 
     # 7. rules in chain order (reference: lib/validator.js:260-320); a
     # rule with a convert form was applied in step 1 in convert mode
@@ -976,8 +988,11 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         # still passes (presence guard)
         emit(F.lit(False), "alternatives.base", {}, guard=rule_guard)
     if schema.type == "alternatives" and len(matches) == 1:
-        compile_column(matches[0], name, dtype, ctx, plan, col=conv,
-                       cond=rule_guard if cond is None else cond & rule_guard)
+        # the value is the branch's output (reference: alternatives.js
+        # returns the matching branch's result)
+        conv = compile_column(
+            matches[0], name, dtype, ctx, plan, col=conv,
+            cond=rule_guard if cond is None else cond & rule_guard).col
     if schema.type == "alternatives" and len(matches) >= 2:
         preds = [value_predicate(m, local, conv_dtype)(conv) for m in matches]
 
@@ -1062,7 +1077,7 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
             compile_column(sub, name, dtype, ctx, plan, cond=sub_cond,
                            col=col)
 
-    _emit_output(schema, name, conv, plan, local, dtype)
+    return shape(conv, conv_dtype, keys=keys)
 
 
 # the Spark type of a declared key that has no column or struct field:
@@ -1073,20 +1088,10 @@ _ABSENT_DTYPES = {"number": T.DoubleType(), "boolean": T.BooleanType(),
                   "object": T.MapType(T.StringType(), T.StringType())}
 
 
-def _compile_absent(schema: Schema, name: str, ctx: _Ctx,
-                    plan: CompiledPlan, cond: Column | None = None) -> None:
-    """A declared key that is never present: the value is a typed null
-    run through :func:`compile_column`, so presence (``required``, the
-    ``presence`` pref, ``when``, ``error()``) decides as for any other
-    value and every value rule is vacuous."""
-    dtype = _ABSENT_DTYPES.get(schema.kind, T.StringType())
-    compile_column(schema, name, dtype, ctx, plan, cond=cond,
-                   col=F.lit(None).cast(dtype))
-
-
 def _object_keys(schema: Schema, path: str | None, value: Column | None,
                  dtype: T.DataType, ctx: _Ctx, plan: CompiledPlan,
-                 emit: Callable[..., None], cond: Column | None) -> None:
+                 emit: Callable[..., None],
+                 cond: Column | None) -> dict[str, _Output]:
     """The keys step of an object ``value`` of Spark type ``dtype`` at
     ``path``: a struct, a map, or the table (``path`` and ``value``
     None, ``dtype`` the struct of its columns).  In order (reference:
@@ -1099,7 +1104,8 @@ def _object_keys(schema: Schema, path: str | None, value: Column | None,
     the unknown policy are one per-row check at the map.  Children,
     dependencies and asserts resolve refs against this object's keys;
     an object-level check reports at the object, or on the table at
-    the key it names."""
+    the key it names.  Returns the outputs of the keys it compiles and
+    strips, by key."""
     def sub(k: str) -> str:
         return k if path is None else f"{path}.{k}"
 
@@ -1111,12 +1117,15 @@ def _object_keys(schema: Schema, path: str | None, value: Column | None,
     # a map has every declared key, null in a row that lacks it
     fields = dict.fromkeys(keys, dtype.valueType) if is_map else {
         f.name: f.dataType for f in dtype.fields}
+    outs: dict[str, _Output] = {}
     for k in _topo_order(keys):
         if k in fields:
-            compile_column(keys[k], sub(k), fields[k], child, plan,
-                           cond=cond, col=get(k))
+            outs[k] = compile_column(keys[k], sub(k), fields[k], child, plan,
+                                     cond=cond, col=get(k))
         else:
-            _compile_absent(keys[k], sub(k), child, plan, cond)
+            t = _ABSENT_DTYPES.get(keys[k].kind, T.StringType())
+            outs[k] = compile_column(keys[k], sub(k), t, child, plan, cond=cond,
+                                     col=F.lit(None).cast(t), absent=True)
     pats = schema._terms.get("patterns") or []
     closed = ("keys" in schema._terms or pats) and not schema._flags.get(
         "unknown", ctx.prefs["allow_unknown"])
@@ -1125,10 +1134,10 @@ def _object_keys(schema: Schema, path: str | None, value: Column | None,
             continue
         pat = next((p for p in pats if re.search(p["regex"], f)), None)
         if pat is not None:
-            compile_column(pat["rule"], sub(f), ftype, child, plan,
-                           cond=cond, col=get(f))
+            outs[f] = compile_column(pat["rule"], sub(f), ftype, child, plan,
+                                     cond=cond, col=get(f))
         elif closed and ctx.prefs.get("strip_unknown"):
-            plan.drops.append(sub(f))
+            outs[f] = _Output(None, True)
         elif closed and path is None:
             _table_error(plan, schema, "object.unknown", {"label": f})
         elif closed:
@@ -1156,8 +1165,8 @@ def _object_keys(schema: Schema, path: str | None, value: Column | None,
                  "object.unknown", {})
 
     def present(k: str) -> Column:
-        if sub(k) in child.conversions:
-            return child.conversions[sub(k)].isNotNull()
+        if sub(k) in child.converted:
+            return child.converted[sub(k)].isNotNull()
         return get(k).isNotNull() if k in fields or is_map else F.lit(False)
 
     for dep in schema._terms.get("dependencies") or []:
@@ -1171,13 +1180,19 @@ def _object_keys(schema: Schema, path: str | None, value: Column | None,
         emit(pred, "object.assert", {
             "ref": ref.key, "message": a["message"] or "pass the assertion test"},
             path=path if path is not None else ref.key)
+    return outs
 
 
 def _emit_output(schema: Schema, name: str, conv: Column,
-                 plan: CompiledPlan, ctx: _Ctx,
-                 dtype: T.DataType | None = None) -> None:
-    """Output shaping: default → failover → cast → strip
-    (reference: lib/validator.js:351-430)."""
+                 dtype: T.DataType | None, *, plan: CompiledPlan, ctx: _Ctx,
+                 keys: dict[str, _Output] | None = None,
+                 absent: bool) -> _Output:
+    """Output shaping of the value ``conv`` of Spark type ``dtype``: its
+    ``keys``' outputs → default → failover → cast → strip (reference:
+    lib/validator.js:351-430).  A struct folds its keys' outputs in
+    (``withField``, ``dropFields``), a map keeps its entries.  An
+    ``absent`` key has an output only where a default or failover
+    gives it a value."""
     from joi_spark.dsl.template import Template
 
     def dynamic(v) -> Column:
@@ -1190,6 +1205,21 @@ def _emit_output(schema: Schema, name: str, conv: Column,
         return F.lit(v)
 
     out = conv
+    # the struct's fields as folded: name -> (value, Spark type, None
+    # where a key's output is not its conversion)
+    fields = None
+    if keys is not None and isinstance(dtype, T.StructType):
+        fields = {f.name: (conv.getField(f.name), f.dataType)
+                  for f in dtype.fields}
+        for k, o in keys.items():
+            if o.strip and k in fields:
+                out = out.dropFields(k)
+                del fields[k]
+            elif not o.strip and o.col is not None:
+                out = out.withField(k, o.col)
+                same = ctx.converted.get(f"{name}.{k}") is o.col
+                fields[k] = (o.col, ctx.dtypes[f"{name}.{k}"] if same else None)
+    folded = out
     no_defaults = ctx.prefs.get("no_defaults", False)
     if "default" in schema._flags and not no_defaults:
         # prefs.no_defaults skips default (and failover) application,
@@ -1202,6 +1232,8 @@ def _emit_output(schema: Schema, name: str, conv: Column,
             if c.path == name and c.severity == "error":
                 col_ok = col_ok & c.predicate
         out = F.when(col_ok, out).otherwise(dynamic(fo))
+    if absent and out is folded:
+        return _Output(None, schema._flags.get("result") == "strip")
     cast_to = schema._flags.get("cast")
     if cast_to:
         # reference cast targets: string/number/map/set
@@ -1218,24 +1250,21 @@ def _emit_output(schema: Schema, name: str, conv: Column,
         elif cast_to == "map" and schema.kind == "object":
             # struct → map (reference: lib/types/object.js:515-524 —
             # new Map(Object.entries(value))); a MapType column is
-            # already a map.  Heterogeneous field types unify to
-            # string (a Spark map needs one value type)
-            if isinstance(dtype, T.StructType):
-                vtypes = {f.dataType.simpleString() for f in dtype.fields}
-                entries: list[Column] = []
-                for f in dtype.fields:
-                    v = out.getField(f.name)
-                    entries += [F.lit(f.name),
-                                v if len(vtypes) == 1 else v.cast("string")]
-                out = F.when(out.isNotNull(), F.create_map(*entries))
+            # already a map.  Heterogeneous or unknown field types
+            # unify to string (a Spark map needs one value type)
+            if fields is not None:
+                vtypes = {t and t.simpleString() for _, t in fields.values()}
+                same = len(vtypes) == 1 and None not in vtypes
+                src, get = (conv, lambda f: fields[f][0]) if out is folded \
+                    else (out, out.getField)
+                out = F.when(src.isNotNull(), F.create_map(*[
+                    x for f in fields for x in (
+                        F.lit(f), get(f) if same else get(f).cast("string"))]))
         elif mapping.get(cast_to):
             out = out.cast(mapping[cast_to])
-    if schema._flags.get("result") == "strip":
-        plan.drops.append(name)
-    elif schema._flags.get("result") == "raw":
+    if schema._flags.get("result") == "raw":
         out = F.col(name)
-    plan.conversions[name] = conv
-    plan.outputs[name] = out
+    return _Output(out, schema._flags.get("result") == "strip")
 
 
 # ---------------------------------------------------------------------------
@@ -1252,8 +1281,8 @@ def compile_table(schema: Schema, df: DataFrame, *,
     if not isinstance(schema, ObjectSchema):
         raise CompileError("compile_table requires an object() schema; "
                            "use object().keys({column: schema})")
-    plan = CompiledPlan(prefs={**DEFAULT_PREFS, **(prefs or {}),
-                               **(schema._preferences or {})})
+    plan = CompiledPlan(prefs=merge_prefs(merge_prefs(DEFAULT_PREFS, prefs),
+                                          schema._preferences))
     context = {**plan.prefs.get("context", {}), **(context or {})}
     lang = (plan.prefs.get("errors") or {}).get("language")
     if lang is not None and not isinstance(lang, str):
@@ -1321,9 +1350,13 @@ def compile_table(schema: Schema, df: DataFrame, *,
     ctx = _Ctx({}, plan.prefs, context,
                shared=dict(schema._terms.get("shared") or {}),
                dtypes=dtypes)
-    _object_keys(schema, None, None,
-                 T.StructType([T.StructField(c, t) for c, t in dtypes.items()]),
-                 ctx, plan, _emitter(schema, "", F.lit(None), plan, None), None)
+    outs = _object_keys(
+        schema, None, None,
+        T.StructType([T.StructField(c, t) for c, t in dtypes.items()]),
+        ctx, plan, _emitter(schema, "", F.lit(None), plan.prefs, plan, None),
+        None)
+    plan.outputs = {k: o.col for k, o in outs.items() if o.col is not None}
+    plan.drops = [k for k, o in outs.items() if o.strip]
     return plan
 
 

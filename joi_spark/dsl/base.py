@@ -118,6 +118,18 @@ def _merge_messages(base: dict, over: dict) -> dict:
     return out
 
 
+def merge_prefs(target: dict | None, source: dict | None) -> dict:
+    """``source``'s prefs over ``target``'s; the ``errors`` dicts merge
+    key by key and the ``messages`` tables code by code instead of
+    replacing (reference: lib/common.js ``preferences``)."""
+    target, source = target or {}, source or {}
+    merged = {**target, **source}
+    for k in ("errors", "messages"):
+        if target.get(k) and source.get(k):
+            merged[k] = _merge_messages(target[k], source[k])
+    return merged
+
+
 def _describe_value(v: Any):
     if hasattr(v, "describe"):   # Ref, Schema, Dependency
         return v.describe()
@@ -438,13 +450,7 @@ class Schema:
         from joi_spark import check_preferences
         check_preferences(prefs)   # typo'd keys raise, never no-op
         n = self.clone()
-        merged = {**(n._preferences or {}), **prefs}
-        # nested errors dicts merge, they don't replace
-        # (reference: lib/common.js:147-151)
-        if "errors" in prefs and (n._preferences or {}).get("errors"):
-            merged["errors"] = {**n._preferences["errors"],
-                                **prefs["errors"]}
-        n._preferences = merged
+        n._preferences = merge_prefs(n._preferences, prefs)
         return n
 
     options = prefs
@@ -494,7 +500,7 @@ class Schema:
             for v in self._invalids.values + self._invalids.refs:
                 n._invalids.add(v)
             if self._preferences:
-                n._preferences = {**self._preferences, **(n._preferences or {})}
+                n._preferences = merge_prefs(self._preferences, n._preferences)
             n._messages = _merge_messages(self._messages, n._messages)
             return n
         n = self.clone()
@@ -512,7 +518,7 @@ class Schema:
         for v in src._invalids.values:
             n._invalids.add(v)
         if src._preferences:
-            n._preferences = {**(n._preferences or {}), **src._preferences}
+            n._preferences = merge_prefs(n._preferences, src._preferences)
         n._messages = _merge_messages(n._messages, src._messages)
         for k, v in src._terms.items():
             if isinstance(v, list):

@@ -7,8 +7,9 @@ boolean column per check predicate, which every output folds, (3)
 violation extraction — an array-of-structs built per row, filtered with
 higher-order functions, exploded; message columns are only evaluated for
 failing rows because they sit inside ``F.when(~pred, ...)`` — and (4)
-outputs: converted table, violations DataFrame (stable ``order_by``
-ordering), per-partition verdicts.  What the outputs report —
+outputs: the converted table (``value`` projects the plan's outputs),
+violations DataFrame (stable ``order_by`` ordering), per-partition
+verdicts.  What the outputs report —
 ``abort_early``, the message prefs — is read from ``CompiledPlan.prefs``,
 merged once by the compiler.
 
@@ -30,13 +31,18 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from joi_spark.compiler import CompiledPlan, compile_table, _balanced
 from joi_spark.dsl.base import Schema
 from joi_spark.dsl.manifest import manifest_hash
 
 VIOLATION_COLS = ("seq", "code", "path", "message", "severity")
+
+
+def _quoted(name: str) -> Column:
+    """The column ``name`` itself, even when it holds a dot or a
+    backtick."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 class ValidationResult:
@@ -57,10 +63,8 @@ class ValidationResult:
         """The input projected onto the plan's output columns — renames,
         aliases and overrides in one ``select``.  Input names are quoted,
         so a column named ``a.b`` passes through as itself."""
-        def src(name: str) -> Column:
-            return F.col("`" + name.replace("`", "``") + "`")
         return self._df.select(*[
-            src(i) if o == i else src(i).alias(o)
+            _quoted(i) if o == i else _quoted(i).alias(o)
             for o, i in self.plan.inputs.items()])
 
     @functools.cached_property
@@ -277,56 +281,16 @@ class ValidationResult:
 
     @property
     def value(self) -> DataFrame:
-        """The converted table — analogue of ``result.value``.  A struct
-        field's output and strip apply inside its top-level column
-        (``withField`` / ``dropFields``); a declared key the input lacks
-        is added only when its schema gives it a value."""
-        df = self._renamed
-        cols = {c: F.col(c) for c in df.columns}
-        plain = dict(cols)
-
-        def split(path: str) -> tuple[str, str]:
-            return (path, "") if path in cols else path.partition(".")[::2]
-
-        for path in sorted(self.plan.outputs, key=lambda p: p.count(".")):
-            (top, field), out = split(path), self.plan.outputs[path]
-            if path in self.plan.drops or not (
-                    path in cols or self._keeps(path, df.schema)):
-                continue
-            if not field:
-                cols[top] = out
-            elif top in cols:
-                cols[top] = cols[top].withField(field, out)
-        for path in self.plan.drops:
-            top, field = split(path)
-            if not field:
-                cols.pop(top, None)
-            elif top in cols and self._keeps(path, df.schema):
-                cols[top] = cols[top].dropFields(field)
-        return df.select(*[v if v is plain.get(c) else v.alias(c)
-                           for c, v in cols.items()])
-
-    def _keeps(self, path: str, frame: T.StructType) -> bool:
-        """Is the output of a struct field or a missing key part of the
-        table: the field exists or its declared schema gives it a value
-        (default, failover), and every enclosing value is a struct, or
-        missing, that does not cast to a map?  A map keeps its entries."""
-        dtype, schema = frame, self.schema
-        for i, part in enumerate(path.split(".")):
-            if i and (schema is not None and "cast" in schema._flags or
-                      not isinstance(dtype, (T.StructType, type(None)))):
-                return False
-            if schema is not None:
-                schema = (schema._terms.get("keys") or {}).get(part)
-            dtype = dtype[part].dataType if isinstance(dtype, T.StructType) \
-                and part in dtype.names else None
-        if dtype is not None:
-            return True
-        # a missing key gets a value from a default or failover, unless
-        # prefs.no_defaults left its output the bare (null) conversion
-        gives = schema is not None and not {"default", "failover"}.isdisjoint(
-            schema._flags)
-        return gives and self.plan.outputs[path] is not self.plan.conversions[path]
+        """The converted table — analogue of ``result.value``: one
+        ``select`` of each column's plan output (a struct's key outputs
+        folded in), other columns as they are, stripped columns left
+        out and declared keys the input lacks appended when their
+        schema gives them a value."""
+        plan = self.plan
+        names = [*plan.inputs, *(c for c in plan.outputs if c not in plan.inputs)]
+        return self._renamed.select(*[
+            plan.outputs[c].alias(c) if c in plan.outputs else _quoted(c)
+            for c in names if c not in plan.drops])
 
     converted = value
 

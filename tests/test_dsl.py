@@ -194,8 +194,8 @@ def test_errors_prefs_escape_html_and_wrap_arrays(spark):
     df = spark.createDataFrame([(1, "<bad&val>")], "id bigint, v string")
     s = joi.object({"v": joi.string().valid("a<b").messages(
         {"any.only": "bad {#valids} raw {{#valids}} val {[.]}"})})
-    def msg(prefs):
-        return joi.validate(df, s, prefs=prefs,
+    def msg(prefs, schema=s):
+        return joi.validate(df, schema, prefs=prefs,
                             order_by=["id"]).violations() \
                   .collect()[0]["message"]
     # double-brace (non-raw) substitutions escape; single-brace and
@@ -213,6 +213,12 @@ def test_errors_prefs_escape_html_and_wrap_arrays(spark):
                        order_by=["id"]).violations() \
              .collect()[0]["message"]
     assert got == "not in x, y or x, y"
+    # the errors prefs merge key by key, at the root and at a key
+    s3 = joi.object({"v": joi.string().valid("a", "b")})
+    assert msg({"errors": {"wrap_arrays": False}}, s3.prefs(
+        {"errors": {"language": "fr"}})) == '"v" must be one of a, b'
+    assert msg(None, joi.object({"v": joi.string().valid("a", "b").prefs(
+        {"errors": {"wrap_arrays": False}})})) == '"v" must be one of a, b'
 
 
 def test_errors_prefs_unknown_key_raises(spark):
@@ -255,6 +261,15 @@ def test_prefs_messages_precedence(spark):
     # prefs.messages is language-aware too
     assert msg(s, {"messages": {"english": {"string.min": "prefs en"}},
                    "errors": {"language": "english"}}) == "prefs en"
+    # a key's own prefs.messages render its messages
+    s3 = joi.object({"u": joi.string().min(4).prefs(
+        {"messages": {"string.min": "key prefs say short"}})})
+    assert msg(s3) == "key prefs say short"
+    # ... and merge code by code over the caller's
+    s4 = joi.object({"u": joi.string().min(4).prefs(
+        {"messages": {"any.only": "key prefs say only"}})})
+    assert msg(s4, {"messages": {"string.min": "caller says short"}}) \
+        == "caller says short"
 
 
 def test_externals_pref_skips_external_rules(spark):
@@ -334,6 +349,12 @@ def test_schema_prefs_validates_keys(spark):
           .prefs({"errors": {"escape_html": True}})
     assert s2._preferences["errors"] == {"wrap_arrays": False,
                                          "escape_html": True}
+    # so do concat's, whichever schema is retyped
+    esc = s.prefs({"errors": {"escape_html": True}})
+    for base in (s, joi.any_()):
+        wrap = base.prefs({"errors": {"wrap_arrays": False}})
+        assert wrap.concat(esc)._preferences["errors"] == \
+            s2._preferences["errors"]
 
 
 def test_manifest_round_trip_alternatives_and_string_options(spark):

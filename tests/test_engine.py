@@ -463,6 +463,36 @@ def test_value_applies_struct_field_outputs_and_missing_defaults(spark):
     assert rows[1]["gone"] == "g"
     bare = joi.validate(df, schema, order_by=["id"], prefs={"no_defaults": True})
     assert bare.value.columns == ["id", "meta"]
+    # a map cast lists the fields as the keys converted them
+    pair = spark.createDataFrame([(1, ("  x  ", 1))],
+                                 "id bigint, s struct<a:string,b:bigint>")
+    as_map = joi.object({"s": joi.object({"a": joi.string().trim(),
+                                          "b": joi.number()}).cast("map")})
+    got = joi.validate(pair, as_map, order_by=["id"]).value.collect()
+    assert got[0]["s"] == {"a": "x", "b": "1"}
+    # a key's output of another type than its conversion unifies to string
+    pq = spark.createDataFrame([(1, (("u",), ("v",)))],
+                               "id bigint, o struct<p:struct<x:string>,"
+                               "q:struct<x:string>>")
+    nested = joi.object({"o": joi.object({
+        "p": joi.object({"x": joi.string()}).cast("map"),
+        "q": joi.object({"x": joi.string()})}).cast("map")})
+    got = joi.validate(pq, nested, order_by=["id"]).value.collect()
+    assert got[0]["o"] == {"p": "{x -> u}", "q": "{v}"}
+    # an object-typed branch keeps the object's own key outputs
+    for o in (joi.alternatives(joi.object({"a": joi.string().trim()})),
+              joi.object({"a": joi.string().trim(), "b": joi.number()}).when(
+                  "b", is_=joi.number().min(0),
+                  then=joi.object({"a": joi.string(), "b": joi.number()}))):
+        got = joi.validate(pair.withColumnRenamed("s", "o"),
+                           joi.object({"id": joi.number(), "o": o}),
+                           order_by=["id"]).value.collect()
+        assert got[0]["o"].asDict() == {"a": "x", "b": 1}
+    # undeclared columns pass through under any name
+    odd = spark.createDataFrame([(1, "q", "e")], "`a.b` bigint, `c``d` string, e string")
+    out = joi.validate(odd, joi.object({"e": joi.string()}), order_by=[]).value
+    assert out.columns == ["a.b", "c`d", "e"]
+    assert [tuple(r) for r in out.collect()] == [(1, "q", "e")]
 
 
 def test_keys_empty_dict_allows_no_keys(spark):

@@ -372,8 +372,8 @@ def test_checkpoint_run_scans_input_twice(spark, tmp_path):
 
 # --- compiled-check golden ------------------------------------------------
 #
-# Every check, conversion and output the compiler emits for a catalogue
-# of schemas, rendered with ``str()`` and pinned in
+# Every check and output the compiler emits for a catalogue of
+# schemas, rendered with ``str()`` and pinned in
 # ``goldens/compiled_checks.json``.  A refactor of the compiler must
 # leave this file unchanged; a deliberate change of what compiles
 # regenerates it with ``python -m tests.test_plans`` from the repo root.
@@ -616,8 +616,6 @@ def _compiled_checks(spark) -> dict:
                 "checks": [[c.seq, c.path, c.code, c.severity,
                             _norm(c.predicate), _norm(c.message)]
                            for c in plan.checks],
-                "conversions": {k: _norm(v)
-                                for k, v in plan.conversions.items()},
                 "outputs": {k: _norm(v) for k, v in plan.outputs.items()},
                 "drops": plan.drops,
                 "table_errors": plan.table_errors,
