@@ -4,9 +4,9 @@ The analyzed-plan layer: ``compile_table(schema, df)`` walks the DSL tree
 once and emits a :class:`CompiledPlan` — (1) a conversion projection
 (coercions, reference: lib/validator.js:144-158), (2) an ordered list of
 :class:`Check` boolean predicates mirroring the reference's validation
-order (coerce → empty → presence → valids → invalids → base → rules;
-reference: lib/validator.js:112-320), and (3) output shaping (defaults,
-failover, cast, strip; reference: lib/validator.js:351-430).
+order (when → coerce → empty → presence → valids → invalids → base →
+rules; reference: lib/validator.js:112-320), and (3) output shaping
+(defaults, failover, cast, strip; reference: lib/validator.js:351-430).
 
 There is one per-value check sequence, :func:`compile_column`.  A nested
 value — alternatives branch, array item/ordered/has element, map-pattern
@@ -816,6 +816,9 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
         raise CompileError("rename() applies to the table's columns only, "
                            "not to a nested object")
     local = dataclasses.replace(ctx, prefs=prefs)
+    if schema._terms.get("whens"):
+        return _compile_when(schema, name, dtype, ctx, local, plan, cond=cond,
+                             col=col, absent=absent)
     emit = _emitter(schema, name, col, prefs, plan, cond)
     shape = functools.partial(_emit_output, schema, name, plan=plan, ctx=local,
                               absent=absent)
@@ -1023,61 +1026,60 @@ def compile_column(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
              guard=rule_guard, severity="error",
              value_col=conv, dynamic_message=msg_col)
 
-    # conditional whens (reference: lib/base.js:319-365) ----------------
-    for w in schema._terms.get("whens") or []:
-        ref_col = local.resolve(w["ref"])
-
-        def _is_pred(isv):
-            if isinstance(isv, Schema):
-                return value_predicate(isv, local,
-                                       local.dtype_of(w["ref"]))(ref_col)
-            if isinstance(isv, Ref):
-                return ref_col.eqNullSafe(local.resolve(isv))
-            return ref_col.eqNullSafe(F.lit(isv))
-
-        if w.get("switch"):
-            # case ladder, first-match-wins (reference:
-            # lib/base.js:344-355); a trailing otherwise (top-level or
-            # on the LAST case only — the reference asserts this) catches
-            # unmatched rows.  The reference's implicit last-case
-            # otherwise (lib/base.js:347-353 sets `last.otherwise =
-            # this`, the base schema) is equivalent here by
-            # construction: base-schema constraints are emitted
-            # unconditionally and branch constraints conditionally, so
-            # matched rows get base ∧ branch and unmatched rows get the
-            # base schema alone — exactly `otherwise = this`.
-            matched = F.lit(False)
-            final_otherwise = w.get("otherwise")
-            last = len(w["switch"]) - 1
-            for i, case in enumerate(w["switch"]):
-                p = _is_pred(case["is"])
-                branch = ~matched & F.coalesce(p, F.lit(False))
-                sub_cond = branch if cond is None else (cond & branch)
-                if case.get("then") is not None:
-                    compile_column(case["then"], name, dtype, ctx, plan,
-                                   cond=sub_cond, col=col)
-                if case.get("otherwise") is not None:
-                    if i != last:
-                        raise CompileError(
-                            'only the last switch case may define '
-                            '"otherwise" (reference: lib/base.js:347)')
-                    final_otherwise = case["otherwise"]
-                matched = matched | F.coalesce(p, F.lit(False))
-            if final_otherwise is not None:
-                sub_cond = ~matched if cond is None else (cond & ~matched)
-                compile_column(final_otherwise, name, dtype, ctx, plan,
-                               cond=sub_cond, col=col)
-            continue
-        is_pred = _is_pred(w["is"])
-        for branch, branch_cond in (("then", is_pred), ("otherwise", ~is_pred)):
-            sub = w.get(branch)
-            if sub is None:
-                continue
-            sub_cond = branch_cond if cond is None else (cond & branch_cond)
-            compile_column(sub, name, dtype, ctx, plan, cond=sub_cond,
-                           col=col)
-
     return shape(conv, conv_dtype, keys=keys)
+
+
+def _compile_when(schema: Schema, name: str, dtype: T.DataType, ctx: _Ctx,
+                  local: _Ctx, plan: CompiledPlan, *, cond: Column | None,
+                  col: Column, absent: bool) -> _Output:
+    """Resolve ``schema``'s first ``when`` as the reference does: pick a
+    case, then validate ``base.concat(branch)`` as one schema
+    (lib/base.js:319-365); ``is/then/otherwise`` is a one-case
+    ``switch``.  Each variant (the schema without this ``when`` with the
+    case's ``then``, else the ``otherwise``) compiles where its case is
+    the first match.  The value's conversion is the ``CASE`` ladder of
+    the variants' where their Spark types agree, else the no-match
+    variant's, and so is its output where each variant's output is its
+    conversion."""
+    w, *later = schema._terms["whens"]
+    base = schema.clone()
+    base._terms["whens"] = later
+    cases = w["switch"] or [w]
+    if any(c.get("otherwise") is not None for c in cases[:-1]):
+        raise CompileError('only the last switch case may define '
+                           '"otherwise" (reference: lib/base.js:347)')
+    otherwise = cases[-1].get("otherwise") or w.get("otherwise")
+    ref = local.resolve(w["ref"])
+    matched, arms = F.lit(False), []
+    for case in cases:
+        p = value_predicate(case["is"], local, local.dtype_of(w["ref"]))(ref) \
+            if isinstance(case["is"], Schema) else \
+            ref.eqNullSafe(local.resolve(case["is"]))
+        arms.append((~matched & p, case.get("then")))
+        matched = matched | p
+    rest = _balanced([~matched] + [c for c, b in arms if b is otherwise],
+                     operator.or_, None)
+    variants = []
+    for c, branch in [(c, b) for c, b in arms if b is not otherwise] + [
+            (rest, otherwise)]:
+        # alternatives().conditional(): the branch is the one match
+        variant = base if branch is None else base.try_(branch) \
+            if base.type == "alternatives" and branch.type not in (
+                "any", "alternatives") else base.concat(branch)
+        out = compile_column(variant, name, dtype, ctx, plan, col=col,
+                             cond=c if cond is None else cond & c,
+                             absent=absent)
+        variants.append((c, ctx.converted[name], ctx.dtypes[name],
+                         out.col is ctx.converted[name]))
+    *cased, (_, conv, conv_dtype, plain) = variants
+    ladder = None
+    for c, v, _, _ in [v for v in cased if v[2] == conv_dtype]:
+        ladder = F.when(c, v) if ladder is None else ladder.when(c, v)
+    ctx.converted[name] = conv if ladder is None else ladder.otherwise(conv)
+    # an output shaped past its conversion (struct keys, default, cast)
+    # has a Spark type the compiler does not track: keep the no-match one
+    return out._replace(col=ctx.converted[name]) if plain and all(
+        v[3] for v in cased) else out
 
 
 # the Spark type of a declared key that has no column or struct field:
@@ -1281,6 +1283,9 @@ def compile_table(schema: Schema, df: DataFrame, *,
     if not isinstance(schema, ObjectSchema):
         raise CompileError("compile_table requires an object() schema; "
                            "use object().keys({column: schema})")
+    if schema._terms.get("whens"):
+        raise CompileError("when() applies to a value, not to the table's "
+                           "root object")
     plan = CompiledPlan(prefs=merge_prefs(merge_prefs(DEFAULT_PREFS, prefs),
                                           schema._preferences))
     context = {**plan.prefs.get("context", {}), **(context or {})}

@@ -485,48 +485,35 @@ class Schema:
     # -- composition (reference: lib/base.js:386-481) ------------------
     def concat(self, other: "Schema") -> "Schema":
         """Merge ``other``'s constraints onto a copy of ``self``
-        (reference: lib/base.js:386-481).  When self is ``any`` and other
+        (reference: lib/base.js:386-481): flags, rules (``other``'s
+        replaces a non-multi rule of the same name), allowed and invalid
+        values, prefs, messages and terms; a key both objects declare
+        concatenates its two schemas.  When self is ``any`` and other
         is typed, the result takes other's type."""
         if self.type != "any" and other.type not in ("any", self.type):
             raise TypeError(
                 f"cannot concat type {other.type} onto {self.type}")
-        if self.type == "any" and other.type != "any":
-            # retype: start from other's class, merge self's state first
-            n = other.clone()
-            n._flags = {**self._flags, **n._flags}
-            n._rules = [r.clone() for r in self._rules] + n._rules
-            for v in self._valids.values + self._valids.refs:
-                n._valids.add(v)
-            for v in self._invalids.values + self._invalids.refs:
-                n._invalids.add(v)
-            if self._preferences:
-                n._preferences = merge_prefs(self._preferences, n._preferences)
-            n._messages = _merge_messages(self._messages, n._messages)
-            return n
-        n = self.clone()
-        src = other
-        for k, v in src._flags.items():
-            n._flags[k] = v
-        for r in src._rules:
+        n = self.allow(*other._valids.values, *other._valids.refs).invalid(
+            *other._invalids.values, *other._invalids.refs)
+        if self.type == "any":
+            n.__class__ = type(other)
+        n._flags.update(other._flags)
+        for r in other._rules:
             if r.name not in MULTI_RULES:
                 n._rules = [x for x in n._rules if x.name != r.name]
             n._rules.append(r.clone())
-        for v in src._valids.values:
-            n._valids.add(v)
-        for v in src._valids.refs:
-            n._valids.add(v)
-        for v in src._invalids.values:
-            n._invalids.add(v)
-        if src._preferences:
-            n._preferences = merge_prefs(n._preferences, src._preferences)
-        n._messages = _merge_messages(n._messages, src._messages)
-        for k, v in src._terms.items():
+        if other._preferences:
+            n._preferences = merge_prefs(n._preferences, other._preferences)
+        n._messages = _merge_messages(n._messages, other._messages)
+        for k, v in other._terms.items():
+            cur = n._terms.get(k)
             if isinstance(v, list):
-                n._terms[k] = list(n._terms.get(k) or []) + list(v)
+                n._terms[k] = list(cur or []) + list(v)
             elif isinstance(v, dict):
-                merged = dict(n._terms.get(k) or {})
-                merged.update(v)
-                n._terms[k] = merged
+                cur = cur or {}
+                n._terms[k] = {**cur, **{
+                    key: cur[key].concat(s) if k == "keys" and key in cur
+                    else s for key, s in v.items()}}
             else:
                 n._terms[k] = v
         return n

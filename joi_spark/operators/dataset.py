@@ -250,19 +250,14 @@ def conversation_sizes(df: DataFrame, *, conv_col: str = "conv_id",
     out = None
     if min_turns is not None:
         msg = E.render_static("array.min", {"label": conv_col, "limit": min_turns})
-        v = counts.filter(F.col("n_turns") < min_turns).select(
-            F.col(conv_col), F.col("n_turns"),
-            F.lit(seq).alias("seq"), F.lit("array.min").alias("code"),
-            F.lit(conv_col).alias("path"), F.lit(msg).alias("message"),
-            F.lit("error").alias("severity"))
-        out = v
+        out = counts.filter(F.col("n_turns") < min_turns).select(
+            *_violation_cols([conv_col, "n_turns"], seq, "array.min",
+                             conv_col, msg))
     if max_turns is not None:
         msg = E.render_static("array.max", {"label": conv_col, "limit": max_turns})
         v = counts.filter(F.col("n_turns") > max_turns).select(
-            F.col(conv_col), F.col("n_turns"),
-            F.lit(seq + 1).alias("seq"), F.lit("array.max").alias("code"),
-            F.lit(conv_col).alias("path"), F.lit(msg).alias("message"),
-            F.lit("error").alias("severity"))
+            *_violation_cols([conv_col, "n_turns"], seq + 1, "array.max",
+                             conv_col, msg))
         out = v if out is None else out.unionAll(v)
     return out
 

@@ -20,9 +20,12 @@ watermark horizon).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from joi_spark.compiler import _balanced
 from joi_spark.dsl.base import Schema
 from joi_spark.engine import validate
 
@@ -199,9 +202,8 @@ def stream_drift(stream_df: DataFrame, column: str,
         terms.append((p - q) * F.log(p / q))
     p_oov = F.col("_oov") / total + F.lit(EPS)
     terms.append((p_oov - F.lit(EPS)) * F.log(p_oov / F.lit(EPS)))
-    psi = terms[0]
-    for t in terms[1:]:
-        psi = psi + t
+    # balanced: a linear sum of ~top_k terms overflows the JVM stack
+    psi = _balanced(terms, operator.add, F.lit(0.0))
     return (win.withColumn("psi", psi)
                .withColumn("drifted", F.col("psi") > psi_threshold)
                .select("window", "n_rows", "psi", "drifted"))
@@ -236,10 +238,7 @@ def stream_dedup(stream_df: DataFrame, *,
     on the batch side (same fingerprint definition ⇒ the batch and
     streaming dedup decisions agree).
     """
-    fp = F.sha2(F.concat_ws(
-        "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                  for c in key_cols]), 256)
-    out = (stream_df.withColumn(fp_col, fp)
+    out = (stream_df.withColumn(fp_col, _fingerprint(key_cols))
                     .withWatermark(event_time_col, watermark_delay)
                     .dropDuplicatesWithinWatermark([fp_col]))
     if history is not None:
@@ -255,7 +254,11 @@ def corpus_fingerprints(df: DataFrame,
     sha256 fingerprints of an already-ingested corpus, same
     fingerprint definition as the stream side.  Write once, append
     per accepted batch."""
-    fp = F.sha2(F.concat_ws(
+    return df.select(_fingerprint(key_cols).alias(fp_col)).distinct()
+
+
+def _fingerprint(key_cols: tuple[str, ...]) -> Column:
+    """The sha256 fingerprint of ``key_cols`` for both dedup sides."""
+    return F.sha2(F.concat_ws(
         "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
                   for c in key_cols]), 256)
-    return df.select(fp.alias(fp_col)).distinct()

@@ -49,8 +49,10 @@ def test_conversation_heads(spark):
 def test_conversation_sizes(spark):
     df = spark.createDataFrame(
         [("a", i) for i in range(5)] + [("b", 0)], "conv_id string, turn_idx int")
-    v = D.conversation_sizes(df, min_turns=2, max_turns=4).collect()
-    got = {(r["conv_id"], r["code"]) for r in v}
+    out = D.conversation_sizes(df, min_turns=2, max_turns=4)
+    assert out.columns == ["conv_id", "n_turns", "seq", "code", "path",
+                           "message", "severity"]
+    got = {(r["conv_id"], r["code"]) for r in out.collect()}
     assert got == {("b", "array.min"), ("a", "array.max")}
 
 

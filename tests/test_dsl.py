@@ -101,6 +101,22 @@ def test_concat_any_retypes():
     assert c._flags.get("presence") == "required"
 
 
+def test_concat_keeps_terms_and_concatenates_keys():
+    """``concat`` has one merge path: a retyped ``any`` keeps its
+    ``when``s, and a key both objects declare concatenates its two
+    schemas."""
+    w = joi.any_().when("a", is_=1, then=joi.required())
+    c = w.concat(joi.string().min(1))
+    assert c.type == "string" and c._terms["whens"] == w._terms["whens"]
+    o = joi.object({"a": joi.string().trim(), "b": joi.number()}).concat(
+        joi.object({"a": joi.string().max(3), "c": joi.string()}))
+    assert list(o._terms["keys"]) == ["a", "b", "c"]
+    assert [r.name for r in o._terms["keys"]["a"]._rules] == ["trim", "max"]
+    assert list(joi.object().concat(o)._terms["keys"]) == ["a", "b", "c"]
+    v = joi.string().valid("x", "y").concat(joi.string().invalid("x"))
+    assert v._valids.values == ["y"] and v._invalids.values == ["x"]
+
+
 def test_compile_literal_dict():
     s = joi.compile({"a": "x", "b": [1, 2]})
     assert s.type == "object"

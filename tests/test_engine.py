@@ -241,6 +241,71 @@ def test_when_conditional(spark):
     assert v == {"c1": "any.required"}
 
 
+_S = "id bigint, s string"
+
+
+@pytest.mark.parametrize("keys, rows, ddl, want, value", [
+    # the branch's conversion is the value's
+    ({"s": joi.string().when("id", is_=1, then=joi.string().trim())},
+     [(1, "  x  ")], _S, [], [(1, "x")]),
+    # a ref reads the case's conversion on the rows of that case only
+    ({"s": joi.string().lowercase().when("id", is_=1,
+                                         then=joi.string().trim()),
+      "t": joi.string().valid(joi.ref("s"))},
+     [(1, "  X  ", "x"), (2, "  Y  ", "  y  ")], _S + ", t string", [],
+     [(1, "x", "x"), (2, "  y  ", "  y  ")]),
+    # one coerce: the base error is reported once
+    ({"s": joi.number().when("id", is_=1, then=joi.number().min(3))},
+     [(1, "abc")], _S, [(1, "number.base")], None),
+    # the branch's presence applies past the base's valids
+    ({"s": joi.string().valid("a", "b").when("id", is_=1,
+                                             then=joi.required())},
+     [(1, None)], _S, [(1, "any.required")], None),
+    # the branch's rule replaces the base's rule of the same name
+    ({"s": joi.string().max(10).when("id", is_=1, then=joi.string().max(5))},
+     [(1, "x" * 7), (1, "x" * 12)], _S,
+     [(1, "string.max"), (1, "string.max")], None),
+    # the branch's presence replaces the base's
+    ({"s": joi.string().forbidden().when("id", is_=1,
+                                         then=joi.string().required())},
+     [(1, "v"), (2, "w")], _S, [(2, "any.unknown")], None),
+    # alternatives().conditional(): the chosen branch is the one match
+    ({"s": joi.alternatives().conditional("id", is_=1,
+                                          then=joi.string().max(1),
+                                          otherwise=joi.string().min(3))},
+     [(1, "ab"), (2, "cd"), (3, "efg")], _S,
+     [(1, "string.max"), (2, "string.min")], None),
+    # an output shaped past its conversion keeps the no-match variant's
+    ({"o": joi.object({"a": joi.string(), "b": joi.string()}).when(
+        "id", is_=1, then=joi.object({"b": joi.string().strip()}))},
+     [(1, ("x", "y"))], "id bigint, o struct<a:string,b:string>", [],
+     [(1, ("x", "y"))]),
+], ids=["conversion", "ref", "one_base", "valid_required", "max_replaced",
+        "presence_replaced", "conditional", "shaped_output"])
+def test_when_validates_base_concat_branch(spark, keys, rows, ddl, want,
+                                           value):
+    """A ``when`` validates the value against ``base.concat(branch)``
+    of the case that matches (reference: lib/base.js:319-365)."""
+    res = joi.validate(spark.createDataFrame(rows, ddl),
+                       joi.object({"id": joi.number(), **keys}),
+                       order_by=["id"], prefs={"abort_early": False})
+    got = [(r["id"], r["code"]) for r in res.violations().collect()]
+    assert got == want
+    if value is not None:
+        assert [tuple(r) for r in res.value.orderBy("id").collect()] == value
+
+
+def test_root_when_raises(spark):
+    """A ``when`` on the table's root object has no value to resolve
+    against: it raises instead of being ignored."""
+    from joi_spark.compiler import CompileError
+    df = spark.createDataFrame([(1, None)], _S)
+    schema = joi.object({"id": joi.number(), "s": joi.string()}).when(
+        "$flag", is_=True, then=joi.object({"s": joi.string().required()}))
+    with pytest.raises(CompileError, match="root object"):
+        joi.validate(df, schema, context={"flag": True})
+
+
 def test_label_override(spark):
     df = spark.createDataFrame([("c1", 0, None)], "conv_id string, turn_idx int, s string")
     schema = joi.object({"s": joi.string().required().label("The Field")})

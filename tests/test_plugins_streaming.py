@@ -481,6 +481,50 @@ def test_stream_drift_equals_batch_psi(spark, stream_dirs):
     assert got[0][1] is False and got[1][1] is True
 
 
+def test_stream_drift_plans_a_full_size_baseline(spark, stream_dirs):
+    """A baseline at ``baseline_fractions``' default ``top_k`` (1000
+    categories) gives 1001 PSI terms; their sum must plan (a linear
+    fold overflowed the JVM stack) and equal batch psi() up to the
+    float summation order."""
+    import datetime
+    import os
+
+    import pytest
+
+    from joi_spark.operators.drift import baseline_fractions, psi
+    from joi_spark.streaming import stream_drift
+
+    src, ckpt = stream_dirs
+    cats = [f"k{i:04d}" for i in range(1000)]
+    t0 = datetime.datetime(2024, 6, 1, 0, 30)
+    t2 = datetime.datetime(2024, 6, 1, 3, 30)   # watermark sentinel
+    win = [v for i, v in enumerate(cats) for _ in range(1 + i % 3)]
+    batch = spark.createDataFrame(
+        [(t0, v) for v in win] + [(t2, cats[0])], "ts timestamp, role string")
+    batch.write.mode("overwrite").parquet(os.path.join(src, "ev"))
+    base = spark.createDataFrame([(v,) for v in cats], "role string")
+    baseline = baseline_fractions(base, "role")
+    assert baseline.count() == 1000
+
+    stream = spark.readStream.schema(batch.schema) \
+                  .parquet(os.path.join(src, "ev"))
+    out = stream_drift(stream, "role", baseline,
+                       window_duration="1 hour", watermark_delay="1 minute")
+    q = (out.writeStream.format("memory").queryName("drift_wide")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    got = [r["psi"] for r in spark.sql("SELECT * FROM drift_wide").collect()]
+
+    epochs = spark.createDataFrame([(0, v) for v in cats]
+                                   + [(1, v) for v in win],
+                                   "epoch bigint, role string")
+    want = psi(epochs, "role", baseline_epoch=0).collect()
+    assert len(got) == 1 and got[0] > 0
+    assert got[0] == pytest.approx(want[0]["psi"], rel=1e-12)
+
+
 def test_stream_dedup_equals_batch_dedup(spark, stream_dirs):
     """The kept fingerprint set of stream_dedup must equal the batch
     decision on the same rows: distinct fingerprints minus history —
